@@ -98,32 +98,6 @@ def _descore(node: ir.Node) -> ir.Node:
     return node
 
 
-def _index_tree(node: ir.Node, counter: Iterator[int]):
-    """Leaf-order bit indexing, identical scheme to the forward engine
-    (``SearchEngine._docs_bitmask``): leaves numbered in
-    ``ir.leaves`` order so driver and worker agree by construction."""
-    if isinstance(node, ir.And):
-        return ("and", [_index_tree(c, counter) for c in node.children])
-    if isinstance(node, ir.Or):
-        return ("or", [_index_tree(c, counter) for c in node.children])
-    if isinstance(node, ir.Not):
-        return ("not", _index_tree(node.child, counter))
-    return ("leaf", next(counter))
-
-
-def _tree_ok(t, bv: np.ndarray) -> np.ndarray:
-    kind, payload = t
-    if kind == "leaf":
-        return (bv & (1 << payload)) != 0
-    if kind == "not":
-        return ~_tree_ok(payload, bv)
-    parts = [_tree_ok(c, bv) for c in payload]
-    out = parts[0]
-    for v in parts[1:]:
-        out = (out & v) if kind == "and" else (out | v)
-    return out
-
-
 def _leaf_condition(leaf: ir.Node, cfg: HashSplitterConfig) -> Column:
     """Enumeration-leaf predicate over a ``term`` column — the same
     bounds the forward engine pushes into its postings scan
@@ -263,7 +237,9 @@ class Percolator:
                 all_qids.append(qid)
                 continue
             q_leaves = ir.leaves(node)
-            itrees[qid] = _index_tree(node, iter(range(len(q_leaves))))
+            # leaves numbered in ir.leaves order, the same scheme as the
+            # forward engine's bitmask evaluation
+            itrees[qid] = ir.bit_tree(node)
             for bit, leaf in enumerate(q_leaves):
                 bitval = 1 << bit
                 if isinstance(leaf, ir.TermEq):
@@ -271,7 +247,9 @@ class Percolator:
                 else:
                     enum_entries.append((leaf, qid, bitval))
                     seen_enum.setdefault(leaf, []).append((qid, bitval))
-            if bool(_tree_ok(itrees[qid], np.zeros(1, dtype=np.int64))[0]):
+            if bool(
+                ir.eval_bits(itrees[qid], lambda i: np.zeros(1, dtype=bool))[0]
+            ):
                 zero_qids.append(qid)
 
         terms = self._doc_terms(docs, id_col, text_col)
@@ -344,7 +322,11 @@ class Percolator:
                     ok = np.zeros(len(pdf), dtype=bool)
                     bits = pdf["bits"].to_numpy()
                     for qid, idx in pdf.groupby("qid").indices.items():
-                        ok[idx] = _tree_ok(local_trees[int(qid)], bits[idx])
+                        qbits = bits[idx]
+                        ok[idx] = ir.eval_bits(
+                            local_trees[int(qid)],
+                            lambda i: (qbits & (1 << i)) != 0,
+                        )
                     yield pdf.loc[ok, ["doc_id", "qid"]]
 
             accepted = masks.mapInPandas(eval_masks, schema=_MATCH_SCHEMA)

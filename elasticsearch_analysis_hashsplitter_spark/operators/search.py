@@ -29,10 +29,12 @@ from urllib.parse import unquote
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import HashSplitterConfig
 from ..functions.codec import (
@@ -241,6 +243,47 @@ def _decode_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             continue
         out = [decode_doc_ids(blob) for blob in pdf["docs"]]
         yield pd.DataFrame({"doc_id": np.concatenate(out)})
+
+
+def _hit_bits(blobs, bits) -> tuple[np.ndarray, np.ndarray]:
+    """Decode ``SearchEngine._hits_scan`` rows into parallel (doc_id,
+    leaf bits) arrays: every id of a block carries its block's bits."""
+    ids = [decode_doc_ids(blob) for blob in blobs]
+    if not ids:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
+    sizes = [x.size for x in ids]
+    return np.concatenate(ids), np.repeat(
+        np.asarray(bits, dtype=np.int64), sizes
+    )
+
+
+def _decode_bits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        ids, bits = _hit_bits(pdf["docs"], pdf["bits"])
+        yield pd.DataFrame({"doc_id": ids, "bits": bits})
+
+
+def _zero_bits_match(tree: tuple) -> bool:
+    """Whether a doc matching NO leaf satisfies an ``ir.bit_tree`` —
+    true only under MUST_NOT, e.g. ``Not(x)`` or ``Or(a, Not(b))``."""
+    return bool(ir.eval_bits(tree, lambda i: np.zeros(1, dtype=bool))[0])
+
+
+def _arrow_frame(
+    spark: SparkSession, schema: T.StructType, columns: dict | None = None
+) -> DataFrame:
+    """Driver-local rows (``columns``: name -> array; None = no rows) as
+    an Arrow-built frame. Spark plans it as a ``LocalRelation``, so
+    collecting it starts no job — a frame built from a Python list is a
+    Python RDD, and each collect of it starts one (0.41-0.48 s)."""
+    arrow_schema = to_arrow_schema(schema)
+    if columns is None:
+        table = arrow_schema.empty_table()
+    else:
+        table = pa.table(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 class _LruCache:
@@ -1353,7 +1396,7 @@ class SearchEngine:
                 np.asarray([doc_id], dtype=np.int64), self._deleted
             )[0]
         ):
-            return self.spark.createDataFrame([], schema)
+            return _arrow_frame(self.spark, T.StructType.fromDDL(schema))
         distinct = sorted(weights)
         n_docs = self.stats["n_docs"]
         avgdl = self.stats["avgdl"] or 1.0
@@ -2573,6 +2616,19 @@ class SearchEngine:
     #: driver, while a broadcast semi join of the id list is flat
     _DOC_IDS_INLINE_MAX = 1024
 
+    #: doc-set filters run on the driver (:meth:`_driver_doc_ids`) when
+    #: the index's total postings are at most this. Set at the measured
+    #: crossover of the broadest filters — a one-leaf scan decoding
+    #: every posting and the 29-leaf full range — on md5 indexes of
+    #: singleton blocks (the costliest decode per posting), driver and
+    #: distributed paths alternated on one index, median of 4 pairs,
+    #: local[4] on 4 vCPUs: at 24k postings the driver path ran 0.67 vs
+    #: 0.62 s and 1.24 vs 1.39 s, at 32k 1.13 vs 0.72 s and 1.78 vs
+    #: 1.49 s (it loses). Term and 1-char prefix filters win 3-4x at every size
+    #: measured (8k-64k), so the bound costs selective filters on
+    #: larger indexes their driver answer; batched decode would move it.
+    _DRIVER_DOCSET_MAX_POSTINGS = 24_000
+
     def _leaf_docs(self, leaf: ir.Node) -> DataFrame:
         if isinstance(leaf, ir.DocIds):
             # membership in the INDEX is part of the semantics (an id
@@ -2584,33 +2640,56 @@ class SearchEngine:
             ids = [int(i) for i in leaf.ids]
             if len(ids) <= self._DOC_IDS_INLINE_MAX:
                 return self._all_docs().where(F.col("doc_id").isin(ids))
-            id_df = self.spark.createDataFrame(
-                [(i,) for i in ids], "doc_id long"
+            id_df = _arrow_frame(
+                self.spark,
+                _DOC_SCHEMA,
+                {"doc_id": np.asarray(ids, dtype=np.int64)},
             )
             return self._all_docs().join(
                 F.broadcast(id_df), "doc_id", "left_semi"
             )
-        blocks = self.postings.where(self._leaf_condition(leaf))
-        return blocks.select("docs").mapInPandas(
+        return self._hits_scan(leaf).select("docs").mapInPandas(
             _decode_docs, schema=_DOC_SCHEMA
         ).dropDuplicates(["doc_id"])
 
     def docs(self, node: ir.Node) -> DataFrame:
         """Evaluate an IR tree to a distinct doc_id DataFrame.
 
-        Boolean trees (the C6 range shapes especially) are evaluated with
-        a *single* postings scan: every leaf contributes its predicate to
-        one OR'd scan condition, matching blocks are decoded once per
-        matching leaf into (doc_id, leaf bit), doc-level leaf-membership
-        bitmasks are built by one ``bit_or`` aggregation, and the boolean
-        tree is applied to the bitmask as a vectorized numpy expression.
-        This replaces N leaf scans + (N-1) doc-set joins with
-        1 scan + 1 shuffle, independent of tree shape.
+        Term-dictionary leaves and boolean trees of up to 63 of them
+        (the C6 range shapes especially) are evaluated with a *single*
+        postings scan (:meth:`_hits_scan`): every leaf contributes its
+        predicate to one OR'd scan condition, each matching block is
+        decoded once into (doc_id, leaf bits), per-doc bits are OR'd,
+        and the boolean tree is applied to the bits. That scan runs on
+        one of two paths:
+
+        * driver — when the index's total postings (``total_terms``, an
+          upper bound known since open) are at most
+          ``_DRIVER_DOCSET_MAX_POSTINGS``: the scan is collected as
+          Arrow in ONE JVM-only job, decoded, combined and masked on the
+          driver, and the answer comes back as a local (Arrow-built)
+          frame whose collect starts no job (:meth:`_driver_doc_ids`);
+        * distributed — above that bound, or for trees a doc matching no
+          leaf satisfies (pure-negative bools): 1 scan + 1 ``bit_or``
+          shuffle, the tree applied as a Catalyst predicate.
+
+        Either replaces N leaf scans + (N-1) doc-set joins, independent
+        of tree shape. Larger trees compose per-child frames by joins.
+
+        The driver path is EAGER: its one job runs inside this call, not
+        when the returned frame is collected. A caller building one plan
+        from several ``docs()`` frames (``MultiIndexEngine.docs``, one
+        per index) therefore runs those jobs one after another, before
+        its own plan runs, and a ``limit`` on the returned frame does
+        not shorten the decode (the bound caps it).
 
         Tombstoned docs (:meth:`delete_docs`) are masked once here, at
         the public boundary — the recursive evaluation below it stays
         unfiltered so an N-leaf tree pays one mask, not N.
         """
+        ids = self._driver_doc_ids(node)
+        if ids is not None:
+            return _arrow_frame(self.spark, _DOC_SCHEMA, {"doc_id": ids})
         return self._filter_live(self._docs_inner(node))
 
     def _all_docs(self) -> DataFrame:
@@ -2621,29 +2700,92 @@ class SearchEngine:
             F.col("doc_id").cast("long").alias("doc_id")
         )
 
+    @staticmethod
+    def _one_scan(node: ir.Node) -> bool:
+        """Whether :meth:`_hits_scan` covers the tree: up to 63 leaves,
+        all term-dictionary predicates."""
+        leaves = ir.leaves(node)
+        return len(leaves) <= 63 and not any(
+            # DocIds reads doc ids, not the term dictionary — it has no
+            # postings-scan predicate, so trees containing one use the
+            # join composition
+            isinstance(
+                x, (ir.MatchAll, ir.MatchNone, ir.ScoredTerms, ir.DocIds)
+            )
+            for x in leaves
+        )
+
+    def _hits_scan(self, node: ir.Node) -> DataFrame:
+        """The pruned postings block scan both doc-set paths execute:
+        every leaf of ``node`` ORs its term predicate into one scan
+        condition (pushed down to the term-sorted parquet), and the scan
+        projects only the ``docs`` blob plus ``bits`` — bit i set when
+        the block's term matches leaf i (``ir.leaves`` order), computed
+        by Catalyst so no Python code walks the leaves per block."""
+        conds = [self._leaf_condition(x) for x in ir.leaves(node)]
+        bits = reduce(
+            lambda a, b: a.bitwiseOR(b),
+            [
+                F.when(c, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
+                for i, c in enumerate(conds)
+            ],
+        )
+        return self.postings.where(reduce(lambda a, b: a | b, conds)).select(
+            "docs", bits.alias("bits")
+        )
+
+    def _driver_doc_ids(self, node: ir.Node) -> np.ndarray | None:
+        """Sorted live doc ids of ``node`` evaluated on the driver, or
+        None when the distributed path must run (see :meth:`docs`).
+
+        Small indexes put a filter's cost in fixed per-stage overhead,
+        not data: a handful of blocks, yet the distributed form pays a
+        Python decode stage, a shuffle and an evaluation stage. Here the
+        :meth:`_hits_scan` rows are collected as Arrow (one job, no
+        Python worker), decoded and OR'd per doc with numpy, and the
+        tree and the tombstone mask are applied to the arrays. The
+        driver decodes serially what the distributed path decodes on
+        every executor core, so the path pays off only while the decode
+        is small; ``_DRIVER_DOCSET_MAX_POSTINGS`` bounds it for every
+        filter, however broad.
+        """
+        node = ir.simplify(node)
+        if isinstance(node, ir.MatchNone):
+            return np.empty(0, dtype=np.int64)
+        if (
+            not self._one_scan(node)
+            or self.stats["total_terms"] > self._DRIVER_DOCSET_MAX_POSTINGS
+        ):
+            return None
+        tree = ir.bit_tree(node)
+        if _zero_bits_match(tree):
+            return None
+        hits = self._hits_scan(node).toArrow()
+        ids, bits = _hit_bits(
+            hits.column("docs").to_pylist(), hits.column("bits").to_numpy()
+        )
+        if ids.size:
+            order = np.argsort(ids, kind="stable")
+            ids, bits = ids[order], bits[order]
+            first = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+            ids, bits = ids[first], np.bitwise_or.reduceat(bits, first)
+            ids = ids[ir.eval_bits(tree, lambda i: (bits & (1 << i)) != 0)]
+        deleted = self._deleted
+        if deleted is not None and ids.size:
+            ids = ids[_live_mask(ids, deleted)]
+        return ids
+
     def _docs_inner(self, node: ir.Node) -> DataFrame:
         node = ir.simplify(node)
         if isinstance(node, ir.MatchNone):
-            return self.spark.createDataFrame([], _DOC_SCHEMA)
+            return _arrow_frame(self.spark, _DOC_SCHEMA)
         if isinstance(node, ir.MatchAll):
             return self._all_docs()
         if isinstance(node, ir.ScoredTerms):
             return self._scored_terms_docs(node)
         if isinstance(node, (ir.And, ir.Or, ir.Not)):
-            leaves = ir.leaves(node)
-            if (
-                len(leaves) <= 63
-                and not any(
-                    # DocIds reads doc ids, not the term dictionary —
-                    # it has no postings-scan predicate, so trees
-                    # containing one use the join composition below
-                    isinstance(
-                        x, (ir.MatchAll, ir.ScoredTerms, ir.DocIds)
-                    )
-                    for x in leaves
-                )
-            ):
-                return self._docs_bitmask(node, leaves)
+            if self._one_scan(node):
+                return self._docs_bitmask(node)
             if isinstance(node, ir.Not):
                 # complement of a tree too big for the bitmask path:
                 # one anti-join against the indexed doc set — the
@@ -2678,92 +2820,32 @@ class SearchEngine:
             )
         return self._leaf_docs(node)
 
-    def _docs_bitmask(self, node: ir.Node, leaves: list[ir.Node]) -> DataFrame:
-        # driver-side: rewrite the tree into an index form (leaves replaced
-        # by their bit position, in leaves-list order) so the worker-side
-        # evaluator is independent of Python object identity
-        counter = iter(range(len(leaves)))
-
-        def index_tree(n: ir.Node):
-            if isinstance(n, ir.And):
-                return ("and", [index_tree(c) for c in n.children])
-            if isinstance(n, ir.Or):
-                return ("or", [index_tree(c) for c in n.children])
-            if isinstance(n, ir.Not):
-                return ("not", index_tree(n.child))
-            return ("leaf", next(counter))
-
-        itree = index_tree(node)
-        conds = [self._leaf_condition(l) for l in leaves]
-        scan = self.postings.where(reduce(lambda a, b: a | b, conds)).select(
-            "docs",
-            F.array(
-                *[
-                    F.when(c, F.lit(i)).otherwise(F.lit(-1))
-                    for i, c in enumerate(conds)
-                ]
-            ).alias("leaf_hits"),
-        )
-
-        def decode_bits(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                doc_l, bit_l = [], []
-                for blob, hits in zip(pdf["docs"], pdf["leaf_hits"]):
-                    ids = decode_doc_ids(blob)
-                    mask = 0
-                    for h in hits:
-                        if h >= 0:
-                            mask |= 1 << int(h)
-                    doc_l.append(ids)
-                    bit_l.append(np.full(ids.size, mask, dtype=np.int64))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(doc_l),
-                        "bits": np.concatenate(bit_l),
-                    }
-                )
-
+    def _docs_bitmask(self, node: ir.Node) -> DataFrame:
+        tree = ir.bit_tree(node)
         masks = (
-            scan.mapInPandas(decode_bits, schema=_BITS_SCHEMA)
+            self._hits_scan(node)
+            .mapInPandas(_decode_bits, schema=_BITS_SCHEMA)
             .groupBy("doc_id")
             .agg(F.bit_or("bits").alias("bits"))
         )
-
-        def tree_ok(t, bv: np.ndarray) -> np.ndarray:
-            kind, payload = t
-            if kind == "leaf":
-                return (bv & (1 << payload)) != 0
-            if kind == "not":
-                return ~tree_ok(payload, bv)
-            parts = [tree_ok(c, bv) for c in payload]
-            out = parts[0]
-            for v in parts[1:]:
-                out = (out & v) if kind == "and" else (out | v)
-            return out
-
-        @F.pandas_udf(T.BooleanType())
-        def eval_tree(bits: pd.Series) -> pd.Series:
-            return pd.Series(tree_ok(itree, bits.to_numpy()))
-
         # Soundness: a doc hitting NO leaf never enters the scan, so the
         # bitmask evaluation only sees docs with >=1 bit set. With pure
         # AND/OR trees the all-zero vector can never match, so absent ==
         # rejected. MUST_NOT makes the zero vector satisfiable (e.g.
-        # Not(x), or Or(a, Not(b))): evaluate the tree on zero bits
-        # driver-side and, if it matches, widen to every indexed doc via
-        # one left join (absent docs evaluate with bits = 0) — exactly
-        # the match-all-minus iteration ES runs for pure-negative bools.
-        zero_matches = bool(tree_ok(itree, np.zeros(1, dtype=np.int64))[0])
-        if zero_matches:
+        # Not(x), or Or(a, Not(b))): if it matches, widen to every
+        # indexed doc via one left join (absent docs evaluate with
+        # bits = 0) — exactly the match-all-minus iteration ES runs for
+        # pure-negative bools.
+        if _zero_bits_match(tree):
             masks = self._all_docs().join(masks, "doc_id", "left").select(
                 "doc_id",
                 F.coalesce(F.col("bits"), F.lit(0)).alias("bits"),
             )
-        return masks.where(eval_tree("bits")).select("doc_id")
+
+        def hit(i: int) -> Column:
+            return F.col("bits").bitwiseAND(F.lit(1 << i).cast("long")) != 0
+
+        return masks.where(ir.eval_bits(tree, hit)).select("doc_id")
 
     def _scored_terms_docs(self, node: ir.ScoredTerms) -> DataFrame:
         terms = sorted(set(node.terms))
@@ -2806,14 +2888,17 @@ class SearchEngine:
         return hits.select("doc_id").dropDuplicates(["doc_id"])
 
     def count(self, node: ir.Node) -> int:
-        return self.docs(node).count()
+        ids = self._driver_doc_ids(node)
+        if ids is not None:
+            return int(ids.size)
+        return self._filter_live(self._docs_inner(node)).count()
 
     # ------------------------------------------------------------------
     # BM25 scored path
     # ------------------------------------------------------------------
     def _empty_scored(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
+        return _arrow_frame(
+            self.spark,
             T.StructType(
                 [
                     T.StructField("doc_id", T.LongType(), False),
@@ -4559,7 +4644,7 @@ def bm25_topk_batch(
         anchor_df_frac, anchor_ids_cutoff, global_stats=global_stats,
     )
     if agg is None:
-        return engine.spark.createDataFrame([], _BATCH_SCHEMA)
+        return _arrow_frame(engine.spark, _BATCH_SCHEMA)
     w = Window.partitionBy("qidx").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )

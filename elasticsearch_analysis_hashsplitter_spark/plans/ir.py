@@ -30,7 +30,10 @@ All lengths include the 1-char position prefix (the reference passes
 
 from __future__ import annotations
 
+import itertools
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 
 
 class Node:
@@ -229,3 +232,35 @@ def leaves(node: Node) -> list[Node]:
     if isinstance(node, Not):
         return leaves(node.child)
     return [node]
+
+
+def bit_tree(node: Node) -> tuple:
+    """The boolean shape of ``node`` with every leaf replaced by its bit
+    position in :func:`leaves` order: ``("and" | "or", [subtrees])``,
+    ``("not", subtree)`` or ``("leaf", i)``. Plain tuples, so the shape
+    ships to Spark workers independent of Python object identity."""
+    bits = itertools.count()
+
+    def walk(n: Node) -> tuple:
+        if isinstance(n, (And, Or)):
+            kind = "and" if isinstance(n, And) else "or"
+            return (kind, [walk(c) for c in n.children])
+        if isinstance(n, Not):
+            return ("not", walk(n.child))
+        return ("leaf", next(bits))
+
+    return walk(node)
+
+
+def eval_bits(tree: tuple, leaf):
+    """Evaluate a :func:`bit_tree` with ``leaf(i)`` standing for leaf i.
+    Leaf values combine only through ``~``, ``&`` and ``|``, so one walk
+    serves numpy bool arrays (driver and pandas kernels) and Spark
+    ``Column`` predicates (Catalyst) alike."""
+    kind, payload = tree
+    if kind == "leaf":
+        return leaf(payload)
+    if kind == "not":
+        return ~eval_bits(payload, leaf)
+    parts = [eval_bits(c, leaf) for c in payload]
+    return reduce(operator.and_ if kind == "and" else operator.or_, parts)

@@ -49,6 +49,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .avro_codec import read_container, write_container
 
@@ -306,7 +307,9 @@ def read_table(
     st = schema_to_spark(_current_schema(meta))
     paths = data_file_paths(table_path, snapshot_id)
     if not paths:
-        return spark.createDataFrame([], st)
+        # Arrow-built, so Spark plans a LocalRelation: collecting it
+        # starts no job (a list-built frame is a one-job Python RDD)
+        return spark.createDataFrame(to_arrow_schema(st).empty_table(), st)
     return spark.read.schema(st).parquet(*paths)
 
 

@@ -13,6 +13,7 @@ from elasticsearch_analysis_hashsplitter_spark.operators.build import (
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
 )
+from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
 
 CFG = HashSplitterConfig(
     chunk_length=4, token_mode="tokens", apply_input_cap=False
@@ -36,24 +37,54 @@ def disk_engine(spark, tmp_path_factory):
     return SearchEngine.open(spark, idx)
 
 
-def test_term_filter_pushes_down(disk_engine):
-    plan = _plan(disk_engine.chunk_term("Aspar"))
+def _docset_scan_plan(engine, monkeypatch, run) -> str:
+    """Plan of the postings block scan a doc-set query executes.
+
+    Both doc-set paths run ``SearchEngine._hits_scan``: the driver path
+    collects it as Arrow, the distributed path decodes it in a kernel.
+    On an index this small ``docs()`` takes the driver path and returns
+    a local relation whose plan no longer shows the scan, so the scan is
+    captured as ``run`` builds it — exactly one, the one it executed."""
+    scans = []
+    real = SearchEngine._hits_scan
+
+    def spy(self, node):
+        df = real(self, node)
+        scans.append(df)
+        return df
+
+    monkeypatch.setattr(SearchEngine, "_hits_scan", spy)
+    result = run()
+    # the driver path ran: the answer is local, the scan was collected
+    assert "LocalTableScan" in _plan(result)
+    assert len(scans) == 1
+    return _plan(scans[0])
+
+
+def test_term_filter_pushes_down(disk_engine, monkeypatch):
+    plan = _docset_scan_plan(
+        disk_engine, monkeypatch, lambda: disk_engine.chunk_term("Aspar")
+    )
     assert "PushedFilters" in plan
     assert "EqualTo(term,Aspar)" in plan
 
 
-def test_docset_path_prunes_blob_columns(disk_engine):
-    plan = _plan(disk_engine.chunk_term("Aspar"))
+def test_docset_path_prunes_blob_columns(disk_engine, monkeypatch):
+    plan = _docset_scan_plan(
+        disk_engine, monkeypatch, lambda: disk_engine.chunk_term("Aspar")
+    )
     # the doc-set path decodes only `docs`; tf/dl blobs must not be read
     scan = plan[plan.index("ReadSchema"):].splitlines()[0]
     assert "docs:binary" in scan
     assert "tfs" not in scan and "dls" not in scan
 
 
-def test_prefix_pushes_startswith(disk_engine):
+def test_prefix_pushes_startswith(disk_engine, monkeypatch):
     # 3 chars: not a whole chunk, so the compiler emits a TermPrefixLen
     # leaf (a 4-char prefix folds to an exact TermEq — also pushed)
-    plan = _plan(disk_engine.prefix("spa"))
+    plan = _docset_scan_plan(
+        disk_engine, monkeypatch, lambda: disk_engine.prefix("spa")
+    )
     assert "StringStartsWith(term," in plan
 
 
@@ -274,10 +305,6 @@ def test_ids_filter_pushes_into_docstats_scan(disk_engine):
     """DocIds evaluates on the doc-stats side, never the postings:
     the id list must reach the parquet scan as a pushed In filter and
     the postings files must not appear in the plan at all."""
-    from elasticsearch_analysis_hashsplitter_spark.plans import (
-        compile as qc,
-    )
-
     plan = _plan(disk_engine.docs(qc.ids_query([3, 7, 11])))
     assert "PushedFilters" in plan
     assert "In(doc_id" in plan
