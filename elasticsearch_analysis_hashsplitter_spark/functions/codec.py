@@ -113,3 +113,21 @@ def encode_counts(counts: np.ndarray) -> bytes:
 
 def decode_counts(blob: bytes) -> np.ndarray:
     return varbyte_decode(blob).astype(np.int64)
+
+
+def encode_block(term: str, doc_ids: np.ndarray, tfs: np.ndarray,
+                 dls: np.ndarray) -> dict:
+    """One posting-block row (``catalog.BLOCK_SCHEMA``) from a term's
+    docID-sorted, non-empty (doc_id, tf, dl) arrays: the docID span, df,
+    the prune bounds max_tf and min_dl, and the three encoded streams."""
+    return {
+        "term": term,
+        "min_doc": int(doc_ids[0]),
+        "max_doc": int(doc_ids[-1]),
+        "df": int(doc_ids.size),
+        "max_tf": int(tfs.max()),
+        "min_dl": int(dls.min()),
+        "docs": encode_doc_ids(doc_ids),
+        "tfs": encode_counts(tfs),
+        "dls": encode_counts(dls),
+    }

@@ -1,25 +1,21 @@
 """Distributed inverted-index build (the Spark-first analogue of Lucene's
 segment write + merge, SURVEY.md §2.5 E6 / §3.1).
 
-Pipeline (one wide shuffle):
+Pipeline (one wide shuffle, of encoded blocks):
 
   corpus (doc_id, content)
     -> pandas UDF: term->tf map per doc (Arrow-vectorized chunk tokenizer;
        tf aggregated inside the UDF so no (doc_id, term) groupBy shuffle)
-    -> explode map -> (term, doc_id, tf, dl)
-    -> repartitionByRange(num_partitions, term, doc_id)
-       + sortWithinPartitions(term, doc_id)
-    -> mapInPandas block builder: per-term docID-sorted blocks,
-       delta+varbyte blobs (term groups straddling Arrow batches are
-       carried over; term groups never straddle *partitions* because the
-       range exchange splits only between key values)
-    -> parquet, term-sorted files (min/max stats = term-dictionary seek)
-
-Skew: range partitioning on the composite key (term, doc_id) splits a hot
-term's postings across partitions; each fragment becomes valid block rows
-(disjoint docID ranges), so no salt+merge second pass is needed — the
-block layout *is* the merged form. This replaces the reference's
-single-node segment merge with a shuffle-merge (north_rule).
+    -> map-side segment builder: per input partition, flatten the term
+       arrays, sort by (term, doc_id) and encode delta+varbyte blocks
+    -> repartition(num_partitions, term): a term's fragments meet in one
+       reducer, moving ~1-2 bytes/posting instead of raw rows
+    -> segment merger: small fragments are decoded, merge-sorted and
+       re-encoded into full blocks; fragments of >= block_size/2 pass
+       through, so one term's blocks may have interleaved docID ranges
+       (the block format permits it: every block's min/max stays exact)
+    -> parquet postings + docstats, then one lexicon + stats pass
+       (:func:`refresh_stats`, shared with every later mutation)
 
 Resumability: the corpus can be built in ``n_slices`` deterministic
 doc-hash slices, each written + manifested atomically; a re-run skips
@@ -28,6 +24,7 @@ slices whose manifest entry exists (per-partition lineage + metrics).
 
 from __future__ import annotations
 
+import threading
 import time
 from collections.abc import Iterator
 
@@ -39,7 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import HashSplitterConfig
-from ..functions.codec import encode_counts, encode_doc_ids
+from ..functions.codec import (
+    decode_counts,
+    decode_doc_ids,
+    encode_block,
+)
 from ..functions.tokenize import JVM_WS_RUN_REGEX, term_counts_frame
 from ..sources import catalog
 
@@ -53,7 +54,7 @@ def run_jobs_concurrently(*thunks):
     back-fill executors freed by the earlier job's tail). Callers must
     only pass thunks whose jobs are independent — no thunk may read
     files another thunk writes. Returns the thunk results in order;
-    the first exception propagates after all threads finish."""
+    the first exception propagates after the running threads finish."""
     return run_jobs_pool(thunks, max_workers=len(thunks))
 
 
@@ -61,18 +62,38 @@ def run_jobs_pool(thunks, max_workers: int = 4):
     """:func:`run_jobs_concurrently` over a list, with a bounded pool —
     for fan-outs whose width follows the data (one thunk per victim
     slice): a few jobs in flight is enough to fill scheduler gaps
-    without flooding the cluster (guide §2.6)."""
+    without flooding the cluster (guide §2.6). After the first failure
+    no further thunk starts (its output would be discarded anyway);
+    thunks already running finish, then the exception propagates."""
     thunks = list(thunks)
     if not thunks:
         return []
     if len(thunks) == 1:
         return [thunks[0]()]
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    failed = threading.Event()
+
+    def guarded(thunk):
+        # a worker can dequeue the next thunk before the pool is shut
+        # down below, so each thunk also checks for an earlier failure
+        if failed.is_set():
+            return None
+        try:
+            return thunk()
+        except BaseException:
+            failed.set()
+            raise
 
     with ThreadPoolExecutor(
         max_workers=min(max_workers, len(thunks))
     ) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(guarded, t) for t in thunks]
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f in done and f.exception() is not None:
+                pool.shutdown(cancel_futures=True)
+                raise f.exception()
         return [f.result() for f in futures]
 
 
@@ -189,162 +210,6 @@ def dl_expr(cfg: HashSplitterConfig, text_col: str):
     return F.ceil(F.length(s) / F.lit(float(L))).cast("long")
 
 
-def _block_builder(block_size: int):
-    """O(n) streaming block builder over (term, doc_id)-sorted batches.
-
-    A term group open at a batch boundary is held as a *list* of frame
-    slices (never re-concatenated per batch — a giant term spanning many
-    Arrow batches costs linear, not quadratic, time) and is eagerly
-    drained into full blocks whenever it exceeds the block size, bounding
-    memory by O(block_size) per open term regardless of posting-list df.
-    """
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        open_term: str | None = None
-        open_frames: list[pd.DataFrame] = []
-        open_rows = 0
-        out_rows: list[dict] = []
-
-        def block_row(term, d, t, l) -> dict:
-            return {
-                "term": term,
-                "min_doc": int(d[0]),
-                "max_doc": int(d[-1]),
-                "df": int(d.size),
-                "max_tf": int(t.max()),
-                "min_dl": int(l.min()),
-                "docs": encode_doc_ids(d),
-                "tfs": encode_counts(t),
-                "dls": encode_counts(l),
-            }
-
-        def emit_group(term, d, t, l, final: bool) -> pd.DataFrame | None:
-            """Blocks from one term's sorted arrays; if not final, the
-            trailing partial block is returned as the new remainder."""
-            n = d.size
-            full_end = n if final else (n // block_size) * block_size
-            for b in range(0, full_end, block_size):
-                e = min(b + block_size, full_end)
-                out_rows.append(block_row(term, d[b:e], t[b:e], l[b:e]))
-            if final:
-                return None
-            rest = pd.DataFrame(
-                {"doc_id": d[full_end:], "tf": t[full_end:], "dl": l[full_end:]}
-            )
-            rest["term"] = term
-            return rest
-
-        def group_arrays(frames):
-            if len(frames) == 1:
-                g = frames[0]
-            else:
-                g = pd.concat(frames, ignore_index=True)
-            return (
-                g["doc_id"].to_numpy(dtype=np.int64),
-                g["tf"].to_numpy(dtype=np.int64),
-                g["dl"].to_numpy(dtype=np.int64),
-            )
-
-        def emit_closed_groups(done: pd.DataFrame) -> None:
-            terms = done["term"].to_numpy()
-            change = np.flatnonzero(terms[1:] != terms[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(terms)]))
-            doc_ids = done["doc_id"].to_numpy(dtype=np.int64)
-            tfs = done["tf"].to_numpy(dtype=np.int64)
-            dls = done["dl"].to_numpy(dtype=np.int64)
-            for s, e in zip(starts, ends):
-                emit_group(terms[s], doc_ids[s:e], tfs[s:e], dls[s:e], True)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if open_term is not None:
-                cut = int(pdf["term"].searchsorted(open_term, side="right"))
-                if cut > 0:
-                    open_frames.append(pdf.iloc[:cut])
-                    open_rows += cut
-                if cut == len(pdf):
-                    if open_rows >= 2 * block_size:  # eager drain
-                        d, t, l = group_arrays(open_frames)
-                        rest = emit_group(open_term, d, t, l, False)
-                        open_frames = [rest]
-                        open_rows = len(rest)
-                    if out_rows:
-                        yield pd.DataFrame(out_rows)
-                        out_rows = []
-                    continue
-                d, t, l = group_arrays(open_frames)
-                emit_group(open_term, d, t, l, True)
-                open_term, open_frames, open_rows = None, [], 0
-                pdf = pdf.iloc[cut:]
-            # hold back the final term group — it may continue next batch
-            last_term = pdf["term"].iat[-1]
-            cut2 = int(pdf["term"].searchsorted(last_term, side="left"))
-            done = pdf.iloc[:cut2]
-            if len(done):
-                emit_closed_groups(done)
-            open_term = last_term
-            open_frames = [pdf.iloc[cut2:]]
-            open_rows = len(pdf) - cut2
-            if out_rows:
-                yield pd.DataFrame(out_rows)
-                out_rows = []
-        if open_term is not None and open_rows:
-            d, t, l = group_arrays(open_frames)
-            emit_group(open_term, d, t, l, True)
-        if out_rows:
-            yield pd.DataFrame(out_rows)
-
-    return build
-
-
-def build_postings_blocks(
-    tokenized: DataFrame,
-    num_partitions: int,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    salt_buckets: int = 8,
-    partition_strategy: str = "hash_salt",
-) -> DataFrame:
-    """(doc_id, terms, tfs, dl) -> postings block rows (BLOCK_SCHEMA).
-
-    ``hash_salt`` (default): shuffle on ``(term, xxhash64(doc_id) %
-    salt_buckets)`` — deterministic (no sampling pass over the full
-    dataset, unlike repartitionByRange), and the salt splits a hot term's
-    postings across up to ``salt_buckets`` reducers (the north_star's
-    salted repartitioning for skew). Blocks of one term coming from
-    different salt buckets have interleaved docID ranges; the block
-    format permits that (consumers concat + the per-block min/max stays
-    exact), so no second-stage merge is needed.
-
-    ``range``: repartitionByRange on (term, doc_id) — globally
-    term-ordered files (strongest file-level pruning) at the cost of a
-    sampling pass; use for read-heavy indexes via ``compact_index``.
-    """
-    flat = tokenized.select(
-        "doc_id",
-        "dl",
-        F.explode(F.arrays_zip("terms", "tfs")).alias("z"),
-    ).select(
-        "doc_id",
-        "dl",
-        F.col("z.terms").alias("term"),
-        F.col("z.tfs").cast("long").alias("tf"),
-    )
-    if partition_strategy == "range":
-        shuffled = flat.repartitionByRange(num_partitions, "term", "doc_id")
-    else:
-        shuffled = flat.repartition(
-            num_partitions,
-            F.col("term"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)),
-        )
-    ranged = shuffled.sortWithinPartitions("term", "doc_id")
-    return ranged.mapInPandas(
-        _block_builder(block_size), schema=catalog.BLOCK_SCHEMA
-    )
-
-
 def _segment_builder(block_size: int):
     """Map-side segment build over the TOKENIZED rows (doc_id, dl,
     terms[], tfs[]): flatten the per-doc term arrays in-kernel
@@ -389,19 +254,10 @@ def _segment_builder(block_size: int):
         for s, e in zip(starts, ends):
             for b in range(s, e, block_size):
                 be = min(b + block_size, e)
-                d, t, l = doc_ids[b:be], tfs[b:be], dls[b:be]
                 rows.append(
-                    {
-                        "term": terms[s],
-                        "min_doc": int(d[0]),
-                        "max_doc": int(d[-1]),
-                        "df": int(d.size),
-                        "max_tf": int(t.max()),
-                        "min_dl": int(l.min()),
-                        "docs": encode_doc_ids(d),
-                        "tfs": encode_counts(t),
-                        "dls": encode_counts(l),
-                    }
+                    encode_block(
+                        terms[s], doc_ids[b:be], tfs[b:be], dls[b:be]
+                    )
                 )
         if rows:
             yield pd.DataFrame(rows)
@@ -416,8 +272,6 @@ def _segment_merger(block_size: int, min_merge_df: int):
     pass through — re-encoding them buys nothing)."""
 
     def merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.codec import decode_counts, decode_doc_ids
-
         groups: dict[str, list] = {}
         for pdf in batches:
             for rec in pdf.itertuples(index=False):
@@ -445,19 +299,7 @@ def _segment_merger(block_size: int, min_merge_df: int):
             d, t, l = d[order], t[order], l[order]
             for b in range(0, d.size, block_size):
                 be = min(b + block_size, d.size)
-                rows.append(
-                    {
-                        "term": term,
-                        "min_doc": int(d[b]),
-                        "max_doc": int(d[be - 1]),
-                        "df": int(be - b),
-                        "max_tf": int(t[b:be].max()),
-                        "min_dl": int(l[b:be].min()),
-                        "docs": encode_doc_ids(d[b:be]),
-                        "tfs": encode_counts(t[b:be]),
-                        "dls": encode_counts(l[b:be]),
-                    }
-                )
+                rows.append(encode_block(term, d[b:be], t[b:be], l[b:be]))
         if rows:
             yield pd.DataFrame(rows)
 
@@ -510,9 +352,10 @@ def build_index(
     num_partitions: int | None = None,
     block_size: int = DEFAULT_BLOCK_SIZE,
     n_slices: int = 1,
-    build_strategy: str = "segments",
 ) -> dict:
-    """Full index build; returns the stats dict (also persisted).
+    """Full index build; returns the persisted stats (see
+    :func:`refresh_stats`) plus this run's ``block_size``, ``n_slices``
+    and ``built_slices``.
 
     With ``n_slices > 1`` the corpus is split by ``pmod(xxhash64(doc_id))``
     and each slice is built + manifested independently: a rerun after a
@@ -549,14 +392,9 @@ def build_index(
         # thrash that anti-scales with cores (measured 2-5x slower at
         # local[32]). Instead docstats is a pure-JVM scan (dl_expr) when
         # the config allows, else a second tokenize pass.
-        if build_strategy == "segments":
-            blocks = build_postings_blocks_segmented(
-                part, max(1, num_partitions // n_slices), block_size
-            )
-        else:
-            blocks = build_postings_blocks(
-                part, max(1, num_partitions // n_slices), block_size
-            )
+        blocks = build_postings_blocks_segmented(
+            part, max(1, num_partitions // n_slices), block_size
+        )
         if dle is not None:
             stats_src = docs.select(
                 F.col(id_col).cast("long").alias("doc_id"),
@@ -596,58 +434,116 @@ def build_index(
         )
         built_slices += 1
 
-    # lexicon + global stats from the written postings (column-pruned scan:
-    # the binary blobs are never read)
-    postings = catalog.read_postings(spark, index_dir)
-    # term-sorted lexicon FILES via hash-repartition + in-partition sort:
-    # per-query point reads (`term IN (...)`) prune parquet row groups
-    # via min/max — at corpus scale the lexicon has billions of terms
-    # and an unsorted layout would scan them all. Hash instead of range
-    # partitioning (r6): repartitionByRange's sampling pass re-executes
-    # the full groupBy child, doubling the lexicon aggregation per
-    # build/refresh; the cost is file-LEVEL pruning (a point read now
-    # checks every file's footer instead of one), which stays cheap
-    # because row-group pruning inside each sorted file still bounds
-    # the actual reads.
-    lex_parts = max(1, num_partitions // 8)
+    stats = refresh_stats(spark, index_dir, cfg)
+    return {
+        **stats,
+        "block_size": block_size,
+        "n_slices": n_slices,
+        "built_slices": built_slices,
+    }
+
+
+def docstats_summary(docstats: DataFrame) -> dict:
+    """The scalar BM25 stats of a docstats frame — ``n_docs``, ``avgdl``
+    and ``total_terms`` — from one aggregation job."""
+    row = docstats.agg(
+        F.count("*").alias("n"),
+        F.avg("dl").alias("avgdl"),
+        F.sum("dl").alias("total"),
+    ).collect()[0]
+    return {
+        "n_docs": int(row["n"]),
+        "avgdl": float(row["avgdl"] or 0.0),
+        "total_terms": int(row["total"] or 0),
+    }
+
+
+def refresh_stats(spark: SparkSession, index_dir: str,
+                  cfg: HashSplitterConfig,
+                  rebuild_lexicon: bool = True) -> dict:
+    """Write the lexicon and ``stats.json`` from an index's postings and
+    docstats — the one writer behind a build and every later refresh
+    (the 'refresh' making appended or purged segments visible with
+    correct idf/avgdl). Returns the stats it wrote.
+
+    ``rebuild_lexicon=False`` skips the full-postings lexicon pass and
+    only rewrites the scalar stats — for intermediate states whose
+    caller runs a full refresh right after (``upsert_docs``: the purge
+    and the append would otherwise each pay the pass)."""
 
     def write_lexicon() -> None:
+        # column-pruned scan: the binary blobs are never read
+        postings = catalog.read_postings(spark, index_dir)
+        aggs = [F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")]
+        if "min_dl" in postings.columns:  # absent on pre-min_dl indexes
+            aggs.append(F.min("min_dl").alias("min_dl"))
+        # term-sorted lexicon FILES: the aggregation's own exchange
+        # already hash-partitions on term, so an in-partition sort is
+        # all it takes for per-query point reads (`term IN (...)`) to
+        # prune parquet row groups via min/max, and AQE coalescing sets
+        # the file count from the lexicon's actual size. An explicit
+        # repartition to any other count costs a second exchange (one
+        # more job per refresh). Hash instead of range partitioning
+        # (r6): repartitionByRange's sampling pass re-executes the full
+        # groupBy child, doubling the aggregation; the cost is
+        # file-LEVEL pruning (a point read checks every file's footer).
         (
             postings.groupBy("term")
-            .agg(
-                F.sum("df").alias("df"),
-                F.max("max_tf").alias("max_tf"),
-                F.min("min_dl").alias("min_dl"),
-            )
-            .repartition(lex_parts, "term")
+            .agg(*aggs)
             .sortWithinPartitions("term")
             .write.mode("overwrite")
             .parquet(catalog.lexicon_path(index_dir))
         )
 
-    docstats = catalog.read_docstats(spark, index_dir)
+    def summarize() -> dict:
+        return docstats_summary(catalog.read_docstats(spark, index_dir))
 
-    def agg_docstats():
-        return docstats.agg(
-            F.count("*").alias("n"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("total"),
-        ).collect()[0]
-
-    # the lexicon pass reads postings files, the scalar stats read
-    # docstats files — independent jobs, overlapped (guide §2.6)
-    _, agg = run_jobs_concurrently(write_lexicon, agg_docstats)
-    stats = {
-        "n_docs": int(agg["n"]),
-        "avgdl": float(agg["avgdl"] or 0.0),
-        "total_terms": int(agg["total"] or 0),
-        "config": cfg.to_json(),
-        "block_size": block_size,
-        "n_slices": n_slices,
-        "built_slices": built_slices,
-    }
+    if rebuild_lexicon:
+        # lexicon (postings scan) and scalar stats (docstats scan) are
+        # independent jobs — overlap them (guide §2.6)
+        _, stats = run_jobs_concurrently(write_lexicon, summarize)
+    else:
+        stats = summarize()
+    stats["config"] = cfg.to_json()
     catalog.write_stats(index_dir, stats)
     return stats
+
+
+def filter_blocks(blocks: DataFrame, keep) -> DataFrame:
+    """Drop postings out of every block by a doc-id predicate, in one
+    map-only decode -> mask -> re-encode pass (the tombstone purge and
+    :meth:`~.search.SearchEngine.doc_subset`). ``keep(ids)`` maps a
+    block's sorted int64 doc ids to a boolean mask. Blocks left empty
+    are dropped, untouched blocks pass through as they are, and the
+    rest get min/max_doc, df, max_tf and min_dl recomputed over the
+    survivors so every prune bound stays tight. ``blocks`` holds the
+    ``catalog.BLOCK_SCHEMA`` columns, without ``min_dl`` on indexes
+    built before it."""
+    cols = blocks.columns
+    schema = T.StructType([catalog.BLOCK_SCHEMA[c] for c in cols])
+
+    def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for row in pdf.itertuples(index=False):
+                d = decode_doc_ids(row.docs)
+                mask = keep(d)
+                if not mask.any():
+                    continue
+                if mask.all():
+                    rows.append(row._asdict())
+                    continue
+                rows.append(
+                    encode_block(
+                        row.term, d[mask],
+                        decode_counts(row.tfs)[mask],
+                        decode_counts(row.dls)[mask],
+                    )
+                )
+            if rows:
+                yield pd.DataFrame(rows, columns=cols)
+
+    return blocks.mapInPandas(rewrite, schema=schema)
 
 
 def verify_content_sha256(

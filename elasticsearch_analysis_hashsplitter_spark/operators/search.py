@@ -20,7 +20,6 @@ Spark-first physical strategy (SURVEY.md §3.2 "Spark equivalent"):
 
 from __future__ import annotations
 
-import math
 import re
 import threading
 from collections.abc import Iterator
@@ -37,12 +36,8 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import HashSplitterConfig
-from ..functions.codec import (
-    decode_counts,
-    decode_doc_ids,
-    encode_counts,
-    encode_doc_ids,
-)
+from ..functions import bm25
+from ..functions.codec import decode_counts, decode_doc_ids, encode_block
 from ..plans import compile as qc
 from ..plans import ir
 from ..plans.pattern import glob_to_regex, literal_prefix
@@ -218,15 +213,6 @@ def _block_ranges_frame_by_term(blocks: DataFrame, cap: int) -> DataFrame:
     return blocks.select("term", "min_doc", "max_doc").mapInPandas(
         partial, schema="term string, min_doc long, max_doc long"
     )
-
-
-def _bm25_idf(n_docs: int, df: int) -> float:
-    """Lucene BM25 idf: ``ln(1 + (N - df + 0.5) / (df + 0.5))`` — the
-    ONE definition every scorer, prune bound, explain breakdown, and
-    more_like_this term selection shares. Bit-equal score
-    reproducibility is pinned across plans, so the formula must never
-    fork between call sites."""
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 def _live_mask(ids: np.ndarray, deleted: np.ndarray) -> np.ndarray:
@@ -1375,8 +1361,8 @@ class SearchEngine:
         """Lucene ``Explanation`` parity: the per-term BM25 breakdown of
         one document's score for a bag of chunk terms — (term, weight,
         df, idf, tf, dl, contribution), one row per matched distinct
-        term, ``contribution = weight * idf * tf*(k1+1) /
-        (tf + k1*(1-b+b*dl/avgdl))``; ``sum(contribution)`` is exactly
+        term, ``contribution = weight * idf * bm25.norm(tf, dl)``;
+        ``sum(contribution)`` is exactly
         the score :meth:`bm25_topk` ranks by (same stale-stats
         semantics under tombstones — a deleted doc explains to zero
         rows, like asking Lucene about a masked docID).
@@ -1406,7 +1392,7 @@ class SearchEngine:
             t: (
                 weights[t],
                 dfs.get(t, 0),
-                _bm25_idf(n_docs, dfs.get(t, 0)),
+                bm25.idf(n_docs, dfs.get(t, 0)),
             )
             for t in distinct
         }
@@ -1435,8 +1421,8 @@ class SearchEngine:
                             "idf": idf,
                             "tf": tf,
                             "dl": dl,
-                            "contribution": w * idf * tf * (k1 + 1.0)
-                            / (tf + k1 * (1.0 - b + b * dl / avgdl)),
+                            "contribution": w * idf
+                            * bm25.norm(tf, dl, k1, b, avgdl),
                         }
                     )
             if rows:
@@ -1513,7 +1499,7 @@ class SearchEngine:
             df = dfs.get(t, 0)
             if df < max(min_doc_freq, 1):
                 continue
-            scored.append((-(tf[t] * _bm25_idf(n_docs, df)), t))
+            scored.append((-(tf[t] * bm25.idf(n_docs, df)), t))
         if not scored:
             return self._empty_scored()
         scored.sort()
@@ -1610,6 +1596,8 @@ class SearchEngine:
             DEFAULT_BLOCK_SIZE,
             adaptive_num_partitions,
             build_postings_blocks_segmented,
+            docstats_summary,
+            run_jobs_concurrently,
             tokenize_corpus,
         )
 
@@ -1629,11 +1617,9 @@ class SearchEngine:
         except Exception:
             pass
         tokenized = tokenize_corpus(docs, cfg, id_col, text_col)
-        # segmented strategy (r6, same as build_index's default): the
-        # term exchange moves encoded blocks, not raw exploded rows —
-        # ~10x less shuffle volume (guide §2.3), and the in-kernel
-        # flatten avoids the 35M-row JVM Generate + per-posting Arrow
-        # transfer of the old hash_salt path
+        # the build_index pipeline: the term exchange moves encoded
+        # blocks, not raw exploded rows — ~10x less shuffle volume
+        # (guide §2.3)
         blocks = build_postings_blocks_segmented(
             tokenized, num_partitions, block_size or DEFAULT_BLOCK_SIZE
         ).cache()
@@ -1643,22 +1629,10 @@ class SearchEngine:
         # blocks count fills the postings cache (tokenize + segment +
         # merge — the part every first query otherwise paid serially
         # after the agg)
-        from .build import run_jobs_concurrently
-
-        agg = run_jobs_concurrently(
-            lambda: docstats.agg(
-                F.count("*").alias("n"),
-                F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("total"),
-            ).collect()[0],
-            blocks.count,
+        stats = run_jobs_concurrently(
+            lambda: docstats_summary(docstats), blocks.count
         )[0]
-        stats = {
-            "n_docs": int(agg["n"]),
-            "avgdl": float(agg["avgdl"] or 0.0),
-            "total_terms": int(agg["total"] or 0),
-            "config": cfg.to_json(),
-        }
+        stats["config"] = cfg.to_json()
         return cls(spark, blocks, docstats, stats, cfg)
 
     def doc_subset(self, doc_pred, np_pred) -> "SearchEngine":
@@ -1682,13 +1656,10 @@ class SearchEngine:
         the tokenizer AND the term shuffle outright (guide §2.4); the
         blocks it emits are already per-term sorted runs.
         """
-        import pandas as pd  # noqa: PLC0415
-
-        from ..functions.codec import (
-            decode_counts,
-            decode_doc_ids,
-            encode_counts,
-            encode_doc_ids,
+        from .build import (
+            docstats_summary,
+            filter_blocks,
+            run_jobs_concurrently,
         )
 
         if self._deleted is not None:
@@ -1696,76 +1667,16 @@ class SearchEngine:
                 "doc_subset over a tombstoned engine would drop the "
                 "tombstones' stale-stats semantics; purge first"
             )
-        cols = [
-            c
-            for c in [
-                "term", "min_doc", "max_doc", "df", "max_tf", "min_dl",
-                "docs", "tfs", "dls",
-            ]
-            if c in self.postings.columns
-        ]
-        has_mdl = "min_dl" in cols
-        types = {
-            "term": "string", "min_doc": "long", "max_doc": "long",
-            "df": "long", "max_tf": "int", "min_dl": "long",
-            "docs": "binary", "tfs": "binary", "dls": "binary",
-        }
-        schema = ", ".join(f"{c} {types[c]}" for c in cols)
-
-        def subset(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out: dict[str, list] = {c: [] for c in cols}
-                for row in pdf.itertuples(index=False):
-                    d = decode_doc_ids(row.docs)
-                    keep = np_pred(d)
-                    if not keep.any():
-                        continue
-                    if keep.all():
-                        for c in cols:
-                            out[c].append(getattr(row, c))
-                        continue
-                    d = d[keep]
-                    tf = decode_counts(row.tfs)[keep]
-                    dl = decode_counts(row.dls)[keep]
-                    out["term"].append(row.term)
-                    out["min_doc"].append(int(d[0]))
-                    out["max_doc"].append(int(d[-1]))
-                    out["df"].append(int(d.size))
-                    out["max_tf"].append(int(tf.max()))
-                    if has_mdl:
-                        out["min_dl"].append(int(dl.min()))
-                    out["docs"].append(encode_doc_ids(d))
-                    out["tfs"].append(encode_counts(tf))
-                    out["dls"].append(encode_counts(dl))
-                if out["term"]:
-                    yield pd.DataFrame(out)[cols]
-
-        blocks = (
-            self.postings.select(*cols)
-            .mapInPandas(subset, schema=schema)
-            .cache()
-        )
+        blocks = filter_blocks(
+            catalog.block_columns(self.postings), np_pred
+        ).cache()
         docstats = self.docstats.where(doc_pred(F.col("doc_id"))).cache()
         # same concurrent-materialization shape as from_corpus: the
         # subset kernel fills the blocks cache while the stats agg runs
-        from .build import run_jobs_concurrently
-
-        agg = run_jobs_concurrently(
-            lambda: docstats.agg(
-                F.count("*").alias("n"),
-                F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("total"),
-            ).collect()[0],
-            blocks.count,
+        stats = run_jobs_concurrently(
+            lambda: docstats_summary(docstats), blocks.count
         )[0]
-        stats = {
-            "n_docs": int(agg["n"]),
-            "avgdl": float(agg["avgdl"] or 0.0),
-            "total_terms": int(agg["total"] or 0),
-            "config": self.cfg.to_json(),
-        }
+        stats["config"] = self.cfg.to_json()
         return type(self)(self.spark, blocks, docstats, stats, self.cfg)
 
     # ------------------------------------------------------------------
@@ -2943,26 +2854,17 @@ class SearchEngine:
             r["term"]: (r["df"], r["max_tf"], r["min_dl"]) for r in lex
         }
         avgdl = self.stats["avgdl"] or 1.0
-
-        def idf(t):
-            return _bm25_idf(n_docs, info.get(t, (0, 0, None))[0])
-
-        def ub(t):
-            # sound upper bound on the term's per-doc contribution: tf is
-            # maximized at max_tf and the dl-normalized denominator is
-            # minimized at the term's min_dl (BM25 decreases in dl); old
-            # indexes without min_dl fall back to the dl->0 limit
-            _, mtf, mdl = info.get(t, (0, 1, None))
-            mtf = mtf or 1
-            dl_term = 0.0 if mdl is None else b * mdl / avgdl
-            return (
-                weights[t] * idf(t) * mtf * (k1 + 1.0)
-                / (mtf + k1 * (1.0 - b + dl_term))
-            )
-
         present = [t for t in distinct if t in info]
         if not present:
             return self._empty_scored()
+        w_idf = {
+            t: weights[t] * bm25.idf(n_docs, info[t][0]) for t in present
+        }
+        # sound upper bound on each term's per-doc contribution
+        ub = {
+            t: w_idf[t] * bm25.bound(info[t][1], info[t][2], k1, b, avgdl)
+            for t in present
+        }
         min_df = min(info[t][0] for t in present)
         sum_df = sum(info[t][0] for t in present)
         if (
@@ -2980,7 +2882,7 @@ class SearchEngine:
             # mixes (any term with df <= n/2, the Zipf-normal case) keep
             # the pruned path below.
             return self.bm25_topk(list(terms), k, conjunctive=False)
-        by_ub = sorted(present, key=lambda t: (-ub(t), t))
+        by_ub = sorted(present, key=lambda t: (-ub[t], t))
         strongest = by_ub[0]
 
         # phase 1: exact top-k among docs containing the strongest term
@@ -2997,9 +2899,9 @@ class SearchEngine:
         for t in reversed(rest):  # lowest ub first
             # strict: a pruned doc at exactly theta could still win the
             # doc_id tie-break, so only prune when it cannot reach theta
-            if acc + ub(t) < theta:
+            if acc + ub[t] < theta:
                 non_essential.append(t)
-                acc += ub(t)
+                acc += ub[t]
             else:
                 break
         essential = [t for t in rest if t not in non_essential]
@@ -3054,19 +2956,14 @@ class SearchEngine:
             blocks = self.postings.where(
                 F.col("term").isin(essential + [strongest])
             )
-        blocks = self._block_max_prune(
-            blocks, present, weights, info, ub, theta, n_docs
-        )
+        blocks = self._block_max_prune(blocks, w_idf, ub, theta)
+        params = {t: (w_idf[t], i) for i, t in enumerate(present)}
         scored = self._score_blocks(
-            blocks, weights, info, n_docs,
-            cand_ids=cand_ids, cand_terms=cand_terms,
+            blocks, params, avgdl, cand_ids=cand_ids, cand_terms=cand_terms,
         )
         # candidates must touch an essential or strongest term (docs only
         # in non-essential terms are pruned by the theta bound)
-        ess_ids = {
-            i for i, t in enumerate(sorted(set(weights)))
-            if t in essential or t == strongest
-        }
+        ess_ids = {params[t][1] for t in cand_terms}
         agg = (
             scored.groupBy("doc_id")
             .agg(
@@ -3097,11 +2994,12 @@ class SearchEngine:
             F.col("score").desc(), F.col("doc_id").asc()
         ).limit(k)
 
-    def _block_max_prune(
-        self, blocks, present, weights, info, ub, theta, n_docs
-    ) -> DataFrame:
+    def _block_max_prune(self, blocks, w_idf, ub, theta) -> DataFrame:
         """Block-granular MaxScore: drop a block b of term t when
         ub_block(t, b) + sum_{t' != t} ub(t') < theta.
+
+        ``w_idf``/``ub``: term -> query weight and term upper bound
+        (``w_idf * bm25.bound``) for every present query term.
 
         Soundness: a doc appears in exactly one block per term, so any
         doc whose t-contribution lives in a dropped block has maximum
@@ -3118,67 +3016,43 @@ class SearchEngine:
             return blocks
         k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
         avgdl = self.stats["avgdl"] or 1.0
-        total_ub = sum(ub(t) for t in present)
-
-        def idf(t):
-            return _bm25_idf(n_docs, info.get(t, (0, 0, None))[0])
-
+        total_ub = sum(ub.values())
         w_idf_map = F.create_map(
-            *[
-                x
-                for t in present
-                for x in (F.lit(t), F.lit(weights[t] * idf(t)))
-            ]
+            *[x for t, w in w_idf.items() for x in (F.lit(t), F.lit(w))]
         )
         rest_map = F.create_map(
             *[
                 x
-                for t in present
-                for x in (F.lit(t), F.lit(total_ub - ub(t)))
+                for t, u in ub.items()
+                for x in (F.lit(t), F.lit(total_ub - u))
             ]
         )
-        mtf = F.col("max_tf").cast("double")
-        block_ub = (
-            w_idf_map[F.col("term")]
-            * mtf
-            * (k1 + 1.0)
-            / (
-                mtf
-                + k1
-                * (
-                    1.0
-                    - b
-                    + b * F.col("min_dl").cast("double") / F.lit(avgdl)
-                )
-            )
+        block_ub = w_idf_map[F.col("term")] * bm25.block_bound(
+            k1, b, avgdl, True
         )
         return blocks.where(
             block_ub + rest_map[F.col("term")] >= F.lit(float(theta))
         )
 
     def _score_blocks(
-        self, blocks, weights, info, n_docs,
+        self, blocks, params, avgdl,
         cand_ids: np.ndarray | None = None,
         cand_terms: set | None = None,
     ) -> DataFrame:
-        """Decode + per-posting BM25 contributions for the given blocks.
+        """Decode + per-posting BM25 contributions for the given blocks:
+        the single-query scoring kernel, shared by conjunctive, anchored,
+        min-should-match and disjunctive-rescore scoring.
+
+        ``params``: term -> (w_idf, term_idx); each posting contributes
+        ``w_idf * bm25.norm(tf, dl)`` under ``avgdl``.
 
         ``cand_ids`` (sorted) with ``cand_terms``: postings of terms
         OUTSIDE ``cand_terms`` are filtered to the candidate doc set
         before being emitted — sound whenever the caller discards
-        non-candidate docs after aggregation anyway (the disjunctive
-        is_cand filter), and it shrinks the shuffle from O(df_hot) to
-        O(|candidates|) per hot term."""
+        non-candidate docs after aggregation anyway (the conjunctive
+        anchor and the disjunctive is_cand filters), and it shrinks the
+        shuffle from O(df_hot) to O(|candidates|) per hot term."""
         k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        avgdl = self.stats["avgdl"] or 1.0
-        distinct = sorted(set(weights))
-        params = {
-            t: (
-                weights[t] * _bm25_idf(n_docs, info.get(t, (0, 0))[0]),
-                i,
-            )
-            for i, t in enumerate(distinct)
-        }
 
         def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -3191,10 +3065,7 @@ class SearchEngine:
                     w_idf, t_idx = params[term]
                     d = decode_doc_ids(dblob)
                     sel = None
-                    if (
-                        cand_ids is not None
-                        and term not in cand_terms
-                    ):
+                    if cand_ids is not None and term not in cand_terms:
                         if cand_ids.size == 0:
                             continue
                         pos = np.minimum(
@@ -3205,17 +3076,13 @@ class SearchEngine:
                         if not sel.any():
                             continue
                         d = d[sel]
-                    tf = decode_counts(tblob).astype(np.float64)
-                    dl = decode_counts(lblob).astype(np.float64)
+                    tf = decode_counts(tblob)
+                    dl = decode_counts(lblob)
                     if sel is not None:
-                        tf = tf[sel]
-                        dl = dl[sel]
-                    c = w_idf * tf * (k1 + 1.0) / (
-                        tf + k1 * (1.0 - b + b * dl / avgdl)
-                    )
+                        tf, dl = tf[sel], dl[sel]
                     docs_l.append(d)
                     idx_l.append(np.full(d.size, t_idx, dtype=np.int32))
-                    contrib_l.append(c)
+                    contrib_l.append(w_idf * bm25.norm(tf, dl, k1, b, avgdl))
                 if not docs_l:
                     continue
                 yield pd.DataFrame(
@@ -3363,7 +3230,7 @@ class SearchEngine:
             idf_dfs = global_stats["dfs"]
         params = {
             t: (
-                boost * weights[t] * _bm25_idf(n_docs, idf_dfs.get(t, 0)),
+                boost * weights[t] * bm25.idf(n_docs, idf_dfs.get(t, 0)),
                 i,
             )
             for i, t in enumerate(distinct)
@@ -3407,58 +3274,8 @@ class SearchEngine:
                     (F.col("term") == anchor) | overlap
                 )
 
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        anchor_term = anchor
-
-        def score_blocks(
-            batches: Iterator[pd.DataFrame],
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                docs_l, idx_l, contrib_l = [], [], []
-                for term, dblob, tblob, lblob in zip(
-                    pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"]
-                ):
-                    w_idf, t_idx = params[term]
-                    d = decode_doc_ids(dblob)
-                    sel = None
-                    if anchor_ids is not None and term != anchor_term:
-                        # posting-level candidate filter: only docs that
-                        # contain the anchor can satisfy the query
-                        if anchor_ids.size == 0:
-                            continue
-                        pos = np.minimum(
-                            np.searchsorted(anchor_ids, d),
-                            anchor_ids.size - 1,
-                        )
-                        sel = anchor_ids[pos] == d
-                        if not sel.any():
-                            continue
-                        d = d[sel]
-                    tf = decode_counts(tblob).astype(np.float64)
-                    dl = decode_counts(lblob).astype(np.float64)
-                    if sel is not None:
-                        tf = tf[sel]
-                        dl = dl[sel]
-                    c = w_idf * tf * (k1 + 1.0) / (
-                        tf + k1 * (1.0 - b + b * dl / avgdl)
-                    )
-                    docs_l.append(d)
-                    idx_l.append(np.full(d.size, t_idx, dtype=np.int32))
-                    contrib_l.append(c)
-                if not docs_l:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_l),
-                        "term_idx": np.concatenate(idx_l),
-                        "contrib": np.concatenate(contrib_l),
-                    }
-                )
-
-        scored = blocks.select("term", "docs", "tfs", "dls").mapInPandas(
-            score_blocks, schema=_SCORE_SCHEMA
+        scored = self._score_blocks(
+            blocks, params, avgdl, cand_ids=anchor_ids, cand_terms={anchor}
         )
         # Term-membership via a bit_or bitmask over the (local, dense)
         # term_idx instead of countDistinct: a distinct-aggregate
@@ -3737,17 +3554,7 @@ def _shard_split_fn(bounds: np.ndarray):
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
-                continue
-            shard_l: list[int] = []
-            term_l: list = []
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "min_doc", "max_doc", "df", "max_tf", "min_dl",
-                    "docs", "tfs", "dls",
-                )
-            }
+            rows = []
             for term, dblob, tblob, lblob in zip(
                 pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"]
             ):
@@ -3765,27 +3572,17 @@ def _shard_split_fn(bounds: np.ndarray):
                 ends = np.concatenate((cut, [d.size]))
                 for si in range(starts.size):
                     s, e = int(starts[si]), int(ends[si])
-                    if s >= e:
-                        continue
-                    ds, ts, ls = d[s:e], tf[s:e], dl[s:e]
-                    shard_l.append(si)
-                    term_l.append(term)
-                    cols["min_doc"].append(int(ds[0]))
-                    cols["max_doc"].append(int(ds[-1]))
-                    cols["df"].append(e - s)
-                    cols["max_tf"].append(int(ts.max()))
-                    cols["min_dl"].append(int(ls.min()))
-                    cols["docs"].append(encode_doc_ids(ds))
-                    cols["tfs"].append(encode_counts(ts))
-                    cols["dls"].append(encode_counts(ls))
-            if shard_l:
-                yield pd.DataFrame(
-                    {
-                        "shard": np.asarray(shard_l, dtype=np.int32),
-                        "term": term_l,
-                        **cols,
-                    }
-                )
+                    if s < e:
+                        rows.append(
+                            {
+                                "shard": si,
+                                **encode_block(
+                                    term, d[s:e], tf[s:e], dl[s:e]
+                                ),
+                            }
+                        )
+            if rows:
+                yield pd.DataFrame(rows)
 
     return fn
 
@@ -3856,10 +3653,9 @@ def _anchor_theta_collect(engine: SearchEngine, terms, k: int) -> list:
                 for tblob, lblob, dblob in zip(
                     sub["tfs"], sub["dls"], dblobs
                 ):
-                    tf = decode_counts(tblob).astype(np.float64)
-                    dl = decode_counts(lblob).astype(np.float64)
-                    n = tf * (k1 + 1.0) / (
-                        tf + k1 * (1.0 - b + b * dl / avgdl)
+                    n = bm25.norm(
+                        decode_counts(tblob), decode_counts(lblob),
+                        k1, b, avgdl,
                     )
                     if del_bc is not None:
                         n = n[_live_mask(decode_doc_ids(dblob),
@@ -3994,22 +3790,16 @@ def _batch_scores(
         r["term"]: (r["df"], r["max_tf"], r["min_dl"])
         for r in engine._term_stats(all_terms)
     }
-
-    def idf(t: str) -> float:
-        df = (
-            global_stats["dfs"].get(t, info[t][0])
-            if global_stats is not None
-            else info[t][0]
-        )
-        return _bm25_idf(n_docs, df)
-
-    def term_ub_factor(t: str) -> float:
-        # sound per-posting bound factor: tf at the term's max_tf, dl at
-        # its min_dl (dl->0 limit on pre-min_dl indexes)
-        _, mtf, mdl = info[t]
-        mtf = mtf or 1
-        dl_term = 0.0 if mdl is None else b * mdl / avgdl
-        return mtf * (k1 + 1.0) / (mtf + k1 * (1.0 - b + dl_term))
+    idf_dfs = global_stats["dfs"] if global_stats is not None else {}
+    idf = {
+        t: bm25.idf(n_docs, idf_dfs.get(t, df))
+        for t, (df, _, _) in info.items()
+    }
+    # sound per-posting bound factor of each term
+    ub_factor = {
+        t: bm25.bound(mtf, mdl, k1, b, avgdl)
+        for t, (_, mtf, mdl) in info.items()
+    }
 
     # Active queries: weights over terms present in the index. A
     # conjunctive query with an absent MUST term can match nothing (the
@@ -4117,11 +3907,11 @@ def _batch_scores(
                 continue
             anchors[qidx_of[q]] = max(
                 q_w[q],
-                key=lambda t: (q_w[q][t] * idf(t) * term_ub_factor(t), t),
+                key=lambda t: (q_w[q][t] * idf[t] * ub_factor[t], t),
             )
         if anchors:
             anchor_w_idf = {
-                qi: q_w[active[qi]][t] * idf(t)
+                qi: q_w[active[qi]][t] * idf[t]
                 for qi, t in anchors.items()
             }
             theta = _batch_anchor_theta(engine, anchors, anchor_w_idf, k)
@@ -4140,11 +3930,11 @@ def _batch_scores(
     for q in active:
         qi = qidx_of[q]
         total_ub = sum(
-            n * idf(t) * term_ub_factor(t) for t, n in q_w[q].items()
+            n * idf[t] * ub_factor[t] for t, n in q_w[q].items()
         )
         local_idx = {t: i for i, t in enumerate(sorted(q_w[q]))}
         for t, n in q_w[q].items():
-            ub_t = n * idf(t) * term_ub_factor(t)
+            ub_t = n * idf[t] * ub_factor[t]
             m = per_term.setdefault(
                 term_idx[t],
                 {
@@ -4158,7 +3948,7 @@ def _batch_scores(
                 },
             )
             m["q"].append(qi)
-            m["w"].append(n * idf(t))
+            m["w"].append(n * idf[t])
             m["midx"].append(
                 local_idx[t]
                 if use_mask
@@ -4263,14 +4053,7 @@ def _batch_scores(
             gmap = F.create_map(
                 *[x for t, v in sorted(g.items()) for x in (F.lit(t), F.lit(v))]
             )
-            mtf = F.col("max_tf").cast("double")
-            mdl = (
-                F.col("min_dl").cast("double") if has_mdl else F.lit(0.0)
-            )
-            f_block = (
-                mtf * (k1 + 1.0)
-                / (mtf + k1 * (1.0 - b + b * mdl / F.lit(avgdl)))
-            )
+            f_block = bm25.block_bound(k1, b, avgdl, has_mdl)
             blocks = blocks.where(
                 f_block >= F.coalesce(gmap[F.col("term")], F.lit(-1e300))
             )
@@ -4329,15 +4112,12 @@ def _batch_scores(
                     ok[ok] = his[i0[ok]] >= lo_r[ok]
                     mask[j, :] = ok
             else:
-                mtf_r = sub["max_tf"].to_numpy().astype(np.float64)
-                mdl_r = (
+                fb = bm25.norm(
+                    sub["max_tf"].to_numpy().astype(np.float64),
                     sub["min_dl"].to_numpy().astype(np.float64)
                     if has_mdl
-                    else np.zeros(nrows)
-                )
-                fb = (
-                    mtf_r * (k1 + 1.0)
-                    / (mtf_r + k1 * (1.0 - b + b * mdl_r / avgdl))
+                    else np.zeros(nrows),
+                    k1, b, avgdl,
                 )
                 mask = (
                     np.outer(w_arr, fb) + m["rest"][:, None]
@@ -4355,10 +4135,9 @@ def _batch_scores(
                 else:
                     sel = None
                 d = decode_doc_ids(dblob)
-                tf = decode_counts(tblob).astype(np.float64)
-                dl = decode_counts(lblob).astype(np.float64)
-                norm = tf * (k1 + 1.0) / (
-                    tf + k1 * (1.0 - b + b * dl / avgdl)
+                norm = bm25.norm(
+                    decode_counts(tblob), decode_counts(lblob),
+                    k1, b, avgdl,
                 )
                 # bulk queries (no posting filter): vectorized
                 # (query, posting) cross product

@@ -350,6 +350,13 @@ def recover_compaction(index_dir: str) -> bool:
     return was_unhealthy and healthy(index_dir)
 
 
+def block_columns(frame: DataFrame) -> DataFrame:
+    """``frame``'s posting-block columns in ``BLOCK_SCHEMA`` order,
+    without the ``slice`` partition column (``min_dl`` is absent on
+    indexes built before it)."""
+    return frame.select(*[c for c in BLOCK_SCHEMA.names if c in frame.columns])
+
+
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     # Slice subdirectories (slice=k) surface as a partition column via
     # parquet partition discovery; block consumers ignore it.

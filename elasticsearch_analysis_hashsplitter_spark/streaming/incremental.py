@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 from ..config import HashSplitterConfig
 from ..operators.build import (
     build_postings_blocks_segmented,
+    filter_blocks,
+    refresh_stats,
     run_jobs_concurrently,
     run_jobs_pool,
     tokenize_corpus,
@@ -138,59 +140,6 @@ def _write_segment(
     )
 
 
-def refresh_stats(spark: SparkSession, index_dir: str,
-                  cfg: HashSplitterConfig,
-                  rebuild_lexicon: bool = True) -> dict:
-    """Recompute global stats + lexicon after appended segments (the
-    'refresh' making new segments visible with correct idf/avgdl).
-
-    ``rebuild_lexicon=False`` skips the full-postings lexicon pass and
-    only rewrites the scalar stats — for intermediate states whose
-    caller runs a full refresh right after (``upsert_docs``: the purge
-    and the append would otherwise each pay the pass)."""
-    from ..operators.build import run_jobs_concurrently
-
-    def write_lexicon() -> None:
-        postings = catalog.read_postings(spark, index_dir)
-        aggs = [F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")]
-        if "min_dl" in postings.columns:  # absent on pre-min_dl indexes
-            aggs.append(F.min("min_dl").alias("min_dl"))
-        # term-sorted lexicon files (see build_index): point reads prune
-        # row groups; hash + in-partition sort, not repartitionByRange —
-        # the range sampler re-executes the whole aggregation (r6)
-        (
-            postings.groupBy("term")
-            .agg(*aggs)
-            .repartition(4, "term")
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(catalog.lexicon_path(index_dir))
-        )
-
-    def agg_docstats():
-        docstats = catalog.read_docstats(spark, index_dir)
-        return docstats.agg(
-            F.count("*").alias("n"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("total"),
-        ).collect()[0]
-
-    if rebuild_lexicon:
-        # lexicon (postings scan) and scalar stats (docstats scan) are
-        # independent jobs — overlap them (guide §2.6)
-        _, agg = run_jobs_concurrently(write_lexicon, agg_docstats)
-    else:
-        agg = agg_docstats()
-    stats = {
-        "n_docs": int(agg["n"]),
-        "avgdl": float(agg["avgdl"] or 0.0),
-        "total_terms": int(agg["total"] or 0),
-        "config": cfg.to_json(),
-    }
-    catalog.write_stats(index_dir, stats)
-    return stats
-
-
 def stream_index(
     spark: SparkSession,
     source_dir: str,
@@ -236,68 +185,17 @@ def stream_index(
     return writer.start()
 
 
-def _purge_blocks(postings: DataFrame, deleted, cols: list[str]) -> DataFrame:
-    """Drop tombstoned doc ids out of every posting block (vectorized
-    Arrow kernel; one decode+re-encode pass): per block, decode the
-    docID/tf/dl arrays, mask against the sorted delete set, skip blocks
-    left empty, and recompute the block's min_doc/max_doc/df/max_tf
-    (and min_dl when present) so every prune bound the query paths rely
-    on stays tight over the surviving postings."""
+def _purge_blocks(postings: DataFrame, deleted) -> DataFrame:
+    """Drop tombstoned doc ids out of every posting block:
+    :func:`filter_blocks` against the sorted delete set, broadcast once."""
     import numpy as np
-    import pandas as pd
 
-    from ..functions.codec import (
-        decode_counts,
-        decode_doc_ids,
-        encode_counts,
-        encode_doc_ids,
-    )
     from ..operators.search import _live_mask
 
-    has_mdl = "min_dl" in cols
-    spark = postings.sparkSession
-    del_bc = spark.sparkContext.broadcast(
+    del_bc = postings.sparkSession.sparkContext.broadcast(
         np.asarray(deleted, dtype=np.int64)
     )
-    types = {
-        "term": "string", "min_doc": "long", "max_doc": "long",
-        "df": "long", "max_tf": "int", "min_dl": "long",
-        "docs": "binary", "tfs": "binary", "dls": "binary",
-    }
-    schema = ", ".join(f"{c} {types[c]}" for c in cols)
-
-    def purge(batches):
-        dele = del_bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out: dict[str, list] = {c: [] for c in cols}
-            for row in pdf.itertuples(index=False):
-                d = decode_doc_ids(row.docs)
-                keep = _live_mask(d, dele)
-                if not keep.any():
-                    continue
-                if keep.all():
-                    for c in cols:
-                        out[c].append(getattr(row, c))
-                    continue
-                d = d[keep]
-                tf = decode_counts(row.tfs)[keep]
-                dl = decode_counts(row.dls)[keep]
-                out["term"].append(row.term)
-                out["min_doc"].append(int(d[0]))
-                out["max_doc"].append(int(d[-1]))
-                out["df"].append(int(d.size))
-                out["max_tf"].append(int(tf.max()))
-                if has_mdl:
-                    out["min_dl"].append(int(dl.min()))
-                out["docs"].append(encode_doc_ids(d))
-                out["tfs"].append(encode_counts(tf))
-                out["dls"].append(encode_counts(dl))
-            if out["term"]:
-                yield pd.DataFrame(out)[cols]
-
-    return postings.mapInPandas(purge, schema=schema)
+    return filter_blocks(postings, lambda ids: _live_mask(ids, del_bc.value))
 
 
 def compact_index(
@@ -306,7 +204,6 @@ def compact_index(
     out_dir: str,
     cfg: HashSplitterConfig,
     num_partitions: int = 8,
-    block_size: int | None = None,
     layout: str = "hash",
 ) -> dict:
     """Segment merge: rewrite all postings slices into one slice
@@ -333,15 +230,9 @@ def compact_index(
       partitions, serializing exactly the decode the cluster should
       parallelize — prefer it only for point-lookup-dominated indexes.
     """
-    from ..operators.build import DEFAULT_BLOCK_SIZE  # noqa: F401
-
     if layout not in ("hash", "range"):
         raise ValueError(f"layout: {layout!r} (expected 'hash' or 'range')")
-    src = catalog.read_postings(spark, index_dir)
-    cols = ["term", "min_doc", "max_doc", "df", "max_tf", "docs", "tfs", "dls"]
-    if "min_dl" in src.columns:  # pre-min_dl indexes remain compactable
-        cols.insert(5, "min_dl")
-    postings = src.select(*cols)
+    postings = catalog.block_columns(catalog.read_postings(spark, index_dir))
     deleted = catalog.read_deletes(index_dir)
     docstats = catalog.read_docstats(spark, index_dir).select(
         "doc_id", "dl", "content_sha256"
@@ -356,7 +247,7 @@ def compact_index(
         # the live corpus, and its deletes/ dir is empty. This is the
         # one decode pass compaction pays, and only on indexes that
         # actually hold tombstones.
-        postings = _purge_blocks(postings, deleted, cols)
+        postings = _purge_blocks(postings, deleted)
         import pandas as pd  # noqa: PLC0415
 
         dele_df = spark.createDataFrame(pd.DataFrame({"doc_id": deleted}))
@@ -454,11 +345,6 @@ def purge_index(
     deleted = catalog.read_deletes(index_dir)
     if not deleted.size:
         raise ValueError("purge_index: index holds no tombstones")
-    src = catalog.read_postings(spark, index_dir)
-    cols = ["term", "min_doc", "max_doc", "df", "max_tf", "docs", "tfs",
-            "dls"]
-    if "min_dl" in src.columns:
-        cols.insert(5, "min_dl")
     all_keys = [str(k) for k in catalog.list_postings_slices(index_dir)]
     docstats = catalog.read_docstats(spark, index_dir)
     dele_df = spark.createDataFrame(pd.DataFrame({"doc_id": deleted}))
@@ -477,7 +363,7 @@ def purge_index(
                        doc_src: str, doc_dst: str) -> None:
         sinks = [
             lambda: _purge_blocks(
-                spark.read.parquet(post_src).select(*cols), deleted, cols
+                catalog.block_columns(spark.read.parquet(post_src)), deleted
             ).write.mode("overwrite").parquet(post_dst)
         ]
         if os.path.isdir(doc_src):
@@ -718,6 +604,12 @@ def upsert_docs(
     afterwards; the ES analogue is that updates only become visible
     through a refresh anyway. (:func:`update_by_query` materializes its
     own update frame for exactly this reason.)
+
+    ``docs_df`` must not be derived from the index being upserted
+    (e.g. a frame over its postings or docstats): the batch is
+    tokenized while the purge swaps and removes the index directory,
+    so such a frame's reads race that swap. Materialize it first
+    (``localCheckpoint()``), as :func:`update_by_query` does.
 
     Returns ``{"upserted": total rows, "replaced": ids that existed,
     "stats": refreshed stats}``.

@@ -198,15 +198,15 @@ def test_block_max_prune_fires_and_stays_exact(narrow_setup):
         )
 
     present = [t for t in sorted(set(terms)) if t in info]
-    weights = {t: 1 for t in present}
+    w_idf = {
+        t: m.log(1.0 + (n_docs - info[t][0] + 0.5) / (info[t][0] + 0.5))
+        for t in present
+    }
+    ubs = {t: ub(t) for t in present}
     blocks = eng.postings.where(F.col("term").isin(present))
     n_all = blocks.count()
-    kept_low = eng._block_max_prune(
-        blocks, present, weights, info, ub, 1e-9, n_docs
-    ).count()
-    kept_high = eng._block_max_prune(
-        blocks, present, weights, info, ub, 1e9, n_docs
-    ).count()
+    kept_low = eng._block_max_prune(blocks, w_idf, ubs, 1e-9).count()
+    kept_high = eng._block_max_prune(blocks, w_idf, ubs, 1e9).count()
     assert kept_low == n_all          # tiny theta keeps everything
     assert kept_high == 0             # impossible theta prunes everything
     # a theta between the weakest and strongest block bound prunes SOME
@@ -214,9 +214,7 @@ def test_block_max_prune_fires_and_stays_exact(narrow_setup):
         ub(t) + sum(ub(x) for x in present if x != t) for t in present
     ]
     mid = sorted(per_block_tot)[len(per_block_tot) // 2]
-    kept_mid = eng._block_max_prune(
-        blocks, present, weights, info, ub, mid * 0.999, n_docs
-    ).count()
+    kept_mid = eng._block_max_prune(blocks, w_idf, ubs, mid * 0.999).count()
     assert 0 < kept_mid <= n_all
 
 

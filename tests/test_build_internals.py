@@ -1,9 +1,8 @@
 """Build internals: the Catalyst-only dl expression must equal the
-tokenizer's term count exactly (BM25 avgdl depends on it), and block rows
-must reconstruct the exact posting lists under both partition strategies."""
+tokenizer's term count exactly (BM25 avgdl depends on it), and the
+segmented build's block rows must reconstruct the exact posting lists."""
 
 import numpy as np
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -19,7 +18,7 @@ from elasticsearch_analysis_hashsplitter_spark.functions.tokenize import (
     term_freqs,
 )
 from elasticsearch_analysis_hashsplitter_spark.operators.build import (
-    build_postings_blocks,
+    build_postings_blocks_segmented,
     dl_expr,
     tokenize_corpus,
 )
@@ -108,10 +107,6 @@ def test_dl_expr_none_for_custom_pattern():
 
 
 def test_segmented_blocks_reconstruct_postings(spark):
-    from elasticsearch_analysis_hashsplitter_spark.operators.build import (
-        build_postings_blocks_segmented,
-    )
-
     rng = np.random.RandomState(3)
     texts = [
         " ".join(rng.choice(["alpha", "beta", "gamma", "delta"], size=20))
@@ -130,6 +125,7 @@ def test_segmented_blocks_reconstruct_postings(spark):
         dls = decode_counts(b["dls"])
         assert b["min_doc"] == ids[0] and b["max_doc"] == ids[-1]
         assert b["df"] == ids.size and b["max_tf"] == tfs.max()
+        assert np.all(np.diff(ids) > 0)  # strictly sorted, no dup docs
         for d, tf, dl in zip(ids, tfs, dls):
             key = int(d)
             assert key not in got.get(b["term"], {}), (b["term"], key)
@@ -143,44 +139,6 @@ def test_segmented_blocks_reconstruct_postings(spark):
     assert got == exp
 
 
-@pytest.mark.parametrize("strategy", ["range", "hash_salt"])
-def test_blocks_reconstruct_postings(spark, strategy):
-    rng = np.random.RandomState(3)
-    texts = [
-        " ".join(rng.choice(["alpha", "beta", "gamma", "delta"], size=20))
-        for _ in range(200)
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, content string"
-    )
-    blocks = build_postings_blocks(
-        tokenize_corpus(docs, TOK_CFG), 4, block_size=16,
-        partition_strategy=strategy,
-    ).collect()
-    got: dict[str, dict[int, int]] = {}
-    for b in blocks:
-        ids = decode_doc_ids(b["docs"])
-        tfs = decode_counts(b["tfs"])
-        dls = decode_counts(b["dls"])
-        assert b["min_doc"] == ids[0] and b["max_doc"] == ids[-1]
-        assert b["df"] == ids.size and b["max_tf"] == tfs.max()
-        assert np.all(np.diff(ids) > 0)  # strictly sorted, no dup docs
-        for d, tf, dl in zip(ids, tfs, dls):
-            got.setdefault(b["term"], {})[int(d)] = (int(tf), int(dl))
-    exp: dict[str, dict[int, int]] = {}
-    for i, t in enumerate(texts):
-        fr = term_freqs(t, TOK_CFG)
-        dl = sum(fr.values())
-        for term, tf in fr.items():
-            exp.setdefault(term, {})[i] = (tf, dl)
-    assert got == exp
-
-
-from elasticsearch_analysis_hashsplitter_spark.operators.build import (  # noqa: E402
-    build_postings_blocks_segmented,
-)
-
-
 def test_block_min_dl_matches_true_min(spark):
     """min_dl block metadata == the true minimum document length among
     the block's postings (drives the tightened MaxScore upper bound)."""
@@ -192,22 +150,13 @@ def test_block_min_dl_matches_true_min(spark):
         decode_counts,
     )
 
-    for strategy in ("hash_salt", "range"):
-        blocks = build_postings_blocks(
-            tokenize_corpus(docs, TOK_CFG), 4, block_size=8,
-            partition_strategy=strategy,
-        ).collect()
-        assert blocks
-        for b in blocks:
-            dls = decode_counts(bytes(b["dls"]))
-            assert b["min_dl"] == dls.min(), (strategy, b["term"])
-
     segs = build_postings_blocks_segmented(
         tokenize_corpus(docs, TOK_CFG), 4, block_size=8
     ).collect()
+    assert segs
     for b in segs:
         dls = decode_counts(bytes(b["dls"]))
-        assert b["min_dl"] == dls.min(), ("segments", b["term"])
+        assert b["min_dl"] == dls.min(), b["term"]
 
 
 def test_run_jobs_concurrently_order_and_errors():
@@ -236,3 +185,13 @@ def test_run_jobs_concurrently_order_and_errors():
         run_jobs_concurrently(lambda: 1, boom)
     with _pytest.raises(ValueError, match="sink failed"):
         run_jobs_pool([boom, lambda: 2], max_workers=2)
+
+    # after the first failure, queued thunks never start: their output
+    # would be discarded with the failed write
+    ran = []
+    with _pytest.raises(ValueError, match="sink failed"):
+        run_jobs_pool(
+            [boom] + [lambda i=i: ran.append(i) for i in range(5)],
+            max_workers=1,
+        )
+    assert ran == []

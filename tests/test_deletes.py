@@ -278,9 +278,9 @@ def test_maybe_compact_purges_and_carries_racing_tombstones(
     real = incremental.compact_index
 
     def racing(spark_, in_dir, out_dir, cfg, num_partitions=8,
-               block_size=None, layout="hash"):
+               layout="hash"):
         stats = real(spark_, in_dir, out_dir, cfg, num_partitions,
-                     block_size, layout)
+                     layout=layout)
         # a delete landing after the rewrite read the tombstones but
         # before the swap
         catalog.write_deletes(in_dir, [5])

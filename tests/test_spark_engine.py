@@ -258,8 +258,13 @@ def test_resume_after_partial_failure(spark, tmp_path):
 
 def test_block_splitting_heavy_term(spark):
     # one ultra-hot term across many docs; tiny block_size forces multi-block
+    import numpy as np
+
+    from elasticsearch_analysis_hashsplitter_spark.functions.codec import (
+        decode_doc_ids,
+    )
     from elasticsearch_analysis_hashsplitter_spark.operators.build import (
-        build_postings_blocks,
+        build_postings_blocks_segmented,
         tokenize_corpus,
     )
 
@@ -270,29 +275,17 @@ def test_block_splitting_heavy_term(spark):
         chunk_length=4, token_mode="tokens", apply_input_cap=False
     )
     tokenized = tokenize_corpus(docs, cfg)
-    # range strategy: globally ordered -> disjoint block doc-ranges
-    blocks = build_postings_blocks(
-        tokenized, 4, block_size=64, partition_strategy="range"
+    # map-side segments + shuffle-merge: a fragment of >= block_size/2
+    # passes through, so one term's block ranges may interleave — the
+    # postings after decode are what must be exact
+    blocks = build_postings_blocks_segmented(
+        tokenized, 4, block_size=64
     ).collect()
     hot = [b for b in blocks if b["term"] == "Ahot"]
     assert sum(b["df"] for b in hot) == 500
     assert len(hot) >= 500 // 64  # split into blocks
-    ivals = sorted((b["min_doc"], b["max_doc"]) for b in hot)
-    for (a1, b1), (a2, _) in zip(ivals, ivals[1:]):
-        assert b1 < a2
-    # hash_salt strategy (default): deterministic, no sampling pass; a hot
-    # term is split across salt buckets — same postings after decode
-    from elasticsearch_analysis_hashsplitter_spark.functions.codec import (
-        decode_doc_ids,
-    )
-    import numpy as np
-
-    blocks2 = build_postings_blocks(
-        tokenized, 4, block_size=64, salt_buckets=4
-    ).collect()
-    hot2 = [b for b in blocks2 if b["term"] == "Ahot"]
-    assert sum(b["df"] for b in hot2) == 500
+    assert all(b["df"] <= 64 for b in hot)
     all_ids = np.sort(
-        np.concatenate([decode_doc_ids(b["docs"]) for b in hot2])
+        np.concatenate([decode_doc_ids(b["docs"]) for b in hot])
     )
     assert np.array_equal(all_ids, np.arange(500))
