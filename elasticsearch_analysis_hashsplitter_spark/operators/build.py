@@ -72,13 +72,23 @@ def run_jobs_pool(thunks, max_workers: int = 4):
         return [thunks[0]()]
     from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+    from pyspark import SparkContext
+
     failed = threading.Event()
+    # Spark local properties (job description, job group,
+    # spark.scheduler.pool) are per thread: copy the caller's into each
+    # worker, as pyspark.InheritableThread does, so overlapped jobs keep
+    # the caller's tags and FAIR pool
+    sc = SparkContext._active_spark_context
+    props = None if sc is None else sc._jsc.sc().getLocalProperties().clone()
 
     def guarded(thunk):
         # a worker can dequeue the next thunk before the pool is shut
         # down below, so each thunk also checks for an earlier failure
         if failed.is_set():
             return None
+        if props is not None:
+            sc._jsc.sc().setLocalProperties(props.clone())
         try:
             return thunk()
         except BaseException:
@@ -322,13 +332,15 @@ def build_postings_blocks_segmented(
         in_parts = src.rdd.getNumPartitions()
     except Exception:
         in_parts = num_partitions
-    if in_parts < num_partitions:
+    cores = tokenized.sparkSession.sparkContext.defaultParallelism
+    if in_parts < min(num_partitions, cores):
         # a small source (single-file parquet read, tiny batch) would
         # otherwise run tokenize + segment-build as in_parts serial
         # tasks; round-robin the doc rows first — 1 compact row per doc,
         # far cheaper than the serialism (at scale maxPartitionBytes
         # already yields >= num_partitions input splits, so this is a
-        # no-op there)
+        # no-op there). An input that already fills every core gains
+        # nothing from it but one more exchange and job.
         src = src.repartition(num_partitions)
     segments = src.mapInPandas(
         _segment_builder(block_size), schema=catalog.BLOCK_SCHEMA
@@ -418,7 +430,7 @@ def build_index(
                 catalog.postings_path(index_dir, s)
             ),
             lambda: stats_src.write.mode("overwrite").parquet(
-                catalog.docstats_path(index_dir) + f"/slice={s}"
+                catalog.docstats_path(index_dir, s)
             ),
         )
         catalog.write_manifest(

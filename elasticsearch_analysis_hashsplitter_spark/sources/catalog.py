@@ -67,8 +67,17 @@ DOCSTATS_SCHEMA = T.StructType(
     ]
 )
 
+LEXICON_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType(), False),
+        T.StructField("df", T.LongType(), False),
+        T.StructField("max_tf", T.IntegerType(), False),
+        T.StructField("min_dl", T.LongType(), False),
+    ]
+)
 
-def postings_path(index_dir: str, slice_id: int | None = None) -> str:
+
+def postings_path(index_dir: str, slice_id: int | str | None = None) -> str:
     if slice_id is None:
         return os.path.join(index_dir, "postings")
     return os.path.join(index_dir, "postings", f"slice={slice_id}")
@@ -78,8 +87,10 @@ def lexicon_path(index_dir: str) -> str:
     return os.path.join(index_dir, "lexicon")
 
 
-def docstats_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "docstats")
+def docstats_path(index_dir: str, slice_id: int | str | None = None) -> str:
+    if slice_id is None:
+        return os.path.join(index_dir, "docstats")
+    return os.path.join(index_dir, "docstats", f"slice={slice_id}")
 
 
 def stats_file(index_dir: str) -> str:
@@ -357,18 +368,48 @@ def block_columns(frame: DataFrame) -> DataFrame:
     return frame.select(*[c for c in BLOCK_SCHEMA.names if c in frame.columns])
 
 
-def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    # Slice subdirectories (slice=k) surface as a partition column via
-    # parquet partition discovery; block consumers ignore it.
-    return spark.read.parquet(postings_path(index_dir))
+def _has_min_dl(path: str) -> bool:
+    """Whether every data directory under ``path`` holds ``min_dl``,
+    from one parquet footer per directory (one write each) read on the
+    driver — no Spark job."""
+    import pyarrow.parquet as pq
+
+    for root, _dirs, files in os.walk(path):
+        parts = [f for f in files
+                 if f.endswith(".parquet") and f[0] not in "._"]
+        if parts and "min_dl" not in pq.read_schema(
+            os.path.join(root, parts[0])
+        ).names:
+            return False
+    return True
+
+
+def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """``path``'s parquet under its known ``schema``, with no
+    schema-inference job. ``min_dl`` leaves the schema when files
+    written before it lack it: pinned, it would read as nulls there,
+    and the ``"min_dl" in columns`` checks would build null prune
+    bounds. Slice subdirectories (slice=k) still surface as a
+    partition column via parquet partition discovery."""
+    if "min_dl" in schema.names and not _has_min_dl(path):
+        schema = T.StructType([f for f in schema if f.name != "min_dl"])
+    return spark.read.schema(schema).parquet(path)
+
+
+def read_postings(spark: SparkSession, index_dir: str,
+                  slice_id: int | str | None = None) -> DataFrame:
+    """The whole index's posting blocks, or one slice's."""
+    return _read(spark, postings_path(index_dir, slice_id), BLOCK_SCHEMA)
 
 
 def read_lexicon(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(lexicon_path(index_dir))
+    return _read(spark, lexicon_path(index_dir), LEXICON_SCHEMA)
 
 
-def read_docstats(spark: SparkSession, index_dir: str) -> DataFrame:
-    return spark.read.parquet(docstats_path(index_dir))
+def read_docstats(spark: SparkSession, index_dir: str,
+                  slice_id: int | str | None = None) -> DataFrame:
+    """The whole index's docstats, or one slice's."""
+    return _read(spark, docstats_path(index_dir, slice_id), DOCSTATS_SCHEMA)
 
 
 def read_config(index_dir: str) -> HashSplitterConfig:

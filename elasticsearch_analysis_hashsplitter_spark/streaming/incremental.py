@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..config import HashSplitterConfig
 from ..operators.build import (
+    adaptive_num_partitions,
     build_postings_blocks_segmented,
     filter_blocks,
     refresh_stats,
@@ -57,18 +58,26 @@ def _write_segment(
     index_dir: str,
     id_col: str,
     text_col: str,
-    num_partitions: int,
+    num_partitions: int | None = None,
     on_duplicate: str = "append",
     slice_key: str | None = None,
     pre_tokenized: DataFrame | None = None,
+    n_rows: int | None = None,
 ) -> None:
     """``pre_tokenized``: an already-materialized tokenize_corpus frame
     over ``batch_df`` (upsert_docs starts tokenizing concurrently with
     its purge — the tokenizer never reads the index, so the two
     overlap); only valid with ``on_duplicate='append'`` since the
-    dedup path rewrites the batch before tokenizing."""
+    dedup path rewrites the batch before tokenizing. ``n_rows``: the
+    batch's row count when the caller knows it (no emptiness job);
+    ``num_partitions=None`` derives the segment's width from the batch
+    (:func:`adaptive_num_partitions`)."""
     if pre_tokenized is not None and on_duplicate != "append":
         raise ValueError("pre_tokenized requires on_duplicate='append'")
+    if n_rows == 0:
+        return
+    if num_partitions is None:
+        num_partitions = adaptive_num_partitions(batch_df)
     if on_duplicate == "skip_existing":
         # deterministic within-batch pick (NOT dropDuplicates, whose
         # choice is partition-order-dependent): the postings write and
@@ -113,20 +122,23 @@ def _write_segment(
         if pre_tokenized is not None
         else tokenize_corpus(batch_df, cfg, id_col, text_col).localCheckpoint()
     )
-    if tokenized.isEmpty():
+    if n_rows is None and tokenized.isEmpty():
         return
     if slice_key is None:
         slice_key = f"stream_{batch_id}"
     blocks = build_postings_blocks_segmented(tokenized, num_partitions)
     # both sinks read the materialized (checkpointed) batch — independent
-    # jobs, overlapped (guide §2.6); the manifest below still lands last
+    # jobs, overlapped (guide §2.6); the manifest below still lands last.
+    # The two sinks are unordered, so a crash can leave a docstats slice
+    # with no postings slice: slice membership is keyed on the postings
+    # listing and the manifest, never on docstats alone.
     run_jobs_concurrently(
         lambda: blocks.write.mode("overwrite").parquet(
-            catalog.postings_path(index_dir) + f"/slice={slice_key}"
+            catalog.postings_path(index_dir, slice_key)
         ),
         lambda: tokenized.select("doc_id", "dl", "content_sha256")
         .write.mode("overwrite")
-        .parquet(catalog.docstats_path(index_dir) + f"/slice={slice_key}"),
+        .parquet(catalog.docstats_path(index_dir, slice_key)),
     )
     catalog.write_manifest(
         index_dir,
@@ -149,7 +161,7 @@ def stream_index(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "content",
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
     trigger_available_now: bool = True,
     on_duplicate: str = "append",
 ):
@@ -157,6 +169,9 @@ def stream_index(
 
     Returns the StreamingQuery; callers should ``awaitTermination()`` and
     then :func:`refresh_stats`.
+
+    ``num_partitions``: each segment's shuffle width; ``None`` derives
+    it from the micro-batch's size (:func:`adaptive_num_partitions`).
 
     ``on_duplicate``: "append" (default — see module docstring for the
     double-count caveat) or "skip_existing" (first-write-wins: each batch
@@ -196,6 +211,34 @@ def _purge_blocks(postings: DataFrame, deleted) -> DataFrame:
         np.asarray(deleted, dtype=np.int64)
     )
     return filter_blocks(postings, lambda ids: _live_mask(ids, del_bc.value))
+
+
+def _rows_by_id(frame: DataFrame, ids, held: bool) -> DataFrame:
+    """``frame``'s rows whose ``doc_id`` is in ``ids`` (``held=True``:
+    the docstats probe mapping ids to their rows and slices) or is not
+    (``held=False``: the docstats purge); ``ids`` is sorted, unique,
+    non-empty int64. One map-only pass, no exchange: the id set is
+    broadcast once and tested with :func:`_purge_blocks`' searchsorted
+    mask, so the plan is the same size whatever the set's size."""
+    import numpy as np
+    import pyarrow as pa
+
+    from ..operators.search import _live_mask
+
+    ids_bc = frame.sparkSession.sparkContext.broadcast(
+        np.asarray(ids, dtype=np.int64)
+    )
+
+    def pick(batches):
+        for b in batches:
+            d = b.column("doc_id").to_numpy(zero_copy_only=False)
+            keep = _live_mask(d, ids_bc.value) != held
+            if keep.all():
+                yield b
+            elif keep.any():
+                yield b.filter(pa.array(keep))
+
+    return frame.mapInArrow(pick, frame.schema)
 
 
 def compact_index(
@@ -248,12 +291,7 @@ def compact_index(
         # one decode pass compaction pays, and only on indexes that
         # actually hold tombstones.
         postings = _purge_blocks(postings, deleted)
-        import pandas as pd  # noqa: PLC0415
-
-        dele_df = spark.createDataFrame(pd.DataFrame({"doc_id": deleted}))
-        docstats = docstats.join(
-            F.broadcast(dele_df), "doc_id", "left_anti"
-        )
+        docstats = _rows_by_id(docstats, deleted, held=False)
     shuffled = (
         postings.repartitionByRange(num_partitions, "term", "min_doc")
         if layout == "range"
@@ -317,7 +355,8 @@ def purge_index(
     * **Only victim slices are decoded.** Docs never span slices (each
       ingest/build/upsert batch writes its docs' postings AND docstats
       under one ``slice=`` key), so the slice-partitioned docstats give
-      EXACT tombstone→slice membership with one broadcast semi-join;
+      EXACT tombstone→slice membership from one map-only probe
+      (:func:`_rows_by_id`);
       slices holding no tombstoned doc are hardlinked into the output
       unchanged (metadata-only, byte-identical — pinned by inode in
       tests). A targeted update batch (e.g. re-ingesting yesterday's
@@ -335,8 +374,6 @@ def purge_index(
     compaction purge pass, minus the merge. Use :func:`purge_in_place`
     for the crash-safe in-place form.
     """
-    import pandas as pd
-
     if not refresh and rebuild_lexicon:
         raise ValueError(
             "refresh=False implies rebuild_lexicon=False (the carried "
@@ -347,37 +384,41 @@ def purge_index(
         raise ValueError("purge_index: index holds no tombstones")
     all_keys = [str(k) for k in catalog.list_postings_slices(index_dir)]
     docstats = catalog.read_docstats(spark, index_dir)
-    dele_df = spark.createDataFrame(pd.DataFrame({"doc_id": deleted}))
     if "slice" in docstats.columns:
-        victim_keys = {
-            str(r["slice"])
-            for r in docstats.join(F.broadcast(dele_df), "doc_id",
-                                   "left_semi")
-            .select(F.col("slice").cast("string"))
-            .distinct()
-            .collect()
-        }
+        keyed = docstats.select("doc_id", F.col("slice").cast("string"))
+        victim_keys = set(
+            _rows_by_id(keyed, deleted, held=True).toArrow()
+            .column("slice").to_pylist()
+        )
     else:  # legacy un-sliced docstats: no membership — purge every slice
         victim_keys = set(all_keys)
-    def rewrite_victim(k: str, post_src: str, post_dst: str,
-                       doc_src: str, doc_dst: str) -> None:
+
+    def rewrite_victim(k: str) -> None:
         sinks = [
             lambda: _purge_blocks(
-                catalog.block_columns(spark.read.parquet(post_src)), deleted
-            ).write.mode("overwrite").parquet(post_dst)
+                catalog.block_columns(
+                    catalog.read_postings(spark, index_dir, k)
+                ),
+                deleted,
+            ).write.mode("overwrite").parquet(
+                catalog.postings_path(out_dir, k)
+            )
         ]
-        if os.path.isdir(doc_src):
+        if os.path.isdir(catalog.docstats_path(index_dir, k)):
             sinks.append(
-                lambda: (
-                    spark.read.parquet(doc_src)
-                    .join(F.broadcast(dele_df), "doc_id", "left_anti")
-                    .write.mode("overwrite")
-                    .parquet(doc_dst)
+                lambda: _rows_by_id(
+                    catalog.read_docstats(spark, index_dir, k), deleted,
+                    held=False,
+                ).write.mode("overwrite").parquet(
+                    catalog.docstats_path(out_dir, k)
                 )
             )
         # the slice's postings rewrite and docstats filter are
         # independent sinks (guide §2.6); the manifest still lands
-        # strictly after both, preserving the completion marker
+        # strictly after both, preserving the completion marker. The
+        # sinks are unordered, so a crash can leave a docstats slice
+        # with no postings slice: slice membership is keyed on the
+        # postings listing and the manifest, never on docstats alone.
         run_jobs_concurrently(*sinks)
         catalog.write_manifest(
             out_dir, k,  # type: ignore[arg-type]
@@ -386,19 +427,14 @@ def purge_index(
 
     victim_thunks = []
     for k in all_keys:
-        post_src = catalog.postings_path(index_dir) + f"/slice={k}"
-        post_dst = catalog.postings_path(out_dir) + f"/slice={k}"
-        doc_src = catalog.docstats_path(index_dir) + f"/slice={k}"
-        doc_dst = catalog.docstats_path(out_dir) + f"/slice={k}"
         if k in victim_keys:
-            victim_thunks.append(
-                lambda k=k, ps=post_src, pd_=post_dst, ds=doc_src,
-                dd=doc_dst: rewrite_victim(k, ps, pd_, ds, dd)
-            )
+            victim_thunks.append(lambda k=k: rewrite_victim(k))
         else:
-            _link_tree(post_src, post_dst)
+            _link_tree(catalog.postings_path(index_dir, k),
+                       catalog.postings_path(out_dir, k))
+            doc_src = catalog.docstats_path(index_dir, k)
             if os.path.isdir(doc_src):
-                _link_tree(doc_src, doc_dst)
+                _link_tree(doc_src, catalog.docstats_path(out_dir, k))
             mf = catalog.manifest_file(index_dir, k)  # type: ignore[arg-type]
             if os.path.exists(mf):
                 dst_mf = catalog.manifest_file(out_dir, k)  # type: ignore[arg-type]
@@ -414,7 +450,7 @@ def purge_index(
     run_jobs_pool(victim_thunks, max_workers=4)
     if "slice" not in docstats.columns:
         # legacy layout: one un-sliced docstats table, filtered whole
-        docstats.join(F.broadcast(dele_df), "doc_id", "left_anti").write.mode(
+        _rows_by_id(docstats, deleted, held=False).write.mode(
             "overwrite"
         ).parquet(catalog.docstats_path(out_dir))
     if not rebuild_lexicon and os.path.isdir(catalog.lexicon_path(index_dir)):
@@ -564,7 +600,7 @@ def upsert_docs(
     cfg: HashSplitterConfig,
     id_col: str = "doc_id",
     text_col: str = "content",
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
 ) -> dict:
     """ES index/update parity for an on-disk index: every incoming row
     REPLACES the stored document with its id, or inserts it if absent.
@@ -584,19 +620,29 @@ def upsert_docs(
        updated corpus (that identity is the ``bm25_topk_upserted``
        correctness gate).
 
-    Cost model (why this is batch-oriented, like ES bulk): a pure-insert
-    batch pays only its own segment write — no collision, no purge. Any
-    replaced id pays one :func:`purge_index` pass, which decodes ONLY
-    the slices that actually hold replaced docs (exact membership from
-    the slice-partitioned docstats; untouched slices are hardlinked,
-    and the rewrite is shuffle-free) — so a batch replacing docs from
-    one ingest segment rewrites that segment, not the index. Callers
-    should still batch updates rather than loop per doc. Segment count
-    grows by one per upsert batch; ``maybe_compact`` remains the merge
-    policy. Not transactional (neither is an ES bulk): a crash between
-    the purge and the append leaves collided ids
-    deleted-but-not-yet-reindexed; re-running the same upsert completes
-    it.
+    Cost model (why this is batch-oriented, like ES bulk): at ~0.25 s a
+    Spark job, the job count, not the data, sets an upsert's time:
+
+    * batch ids: 1 job (0 for a local relation), collected once and
+      held on the driver at 8 B/id like the tombstone set; the row
+      count and the duplicate check run there in numpy;
+    * collision probe: 1 map-only docstats job (:func:`_rows_by_id`);
+    * tokenize: 1 job, overlapped with the purge;
+    * purge, only when ids collide or tombstones are pending: 1 probe
+      for the victim slices plus ~2 jobs per victim slice — it decodes
+      ONLY the slices holding purged docs (the rest are hardlinked, the
+      rewrite is shuffle-free), so replacing docs from one ingest
+      segment rewrites that segment, not the index;
+    * segment write: 3 jobs; ``num_partitions=None`` derives its width
+      from the batch (:func:`adaptive_num_partitions`);
+    * :func:`refresh_stats`: 4 jobs.
+
+    An insert-only batch costs 10 jobs, an empty one only the purge and
+    the refresh. Segment count grows by one per upsert batch;
+    ``maybe_compact`` remains the merge policy. Not transactional
+    (neither is an ES bulk): a crash between the purge and the append
+    leaves collided ids deleted-but-not-yet-reindexed; re-running the
+    same upsert completes it.
 
     Reader contract (same as ``maybe_compact``): any purge swaps the
     index directory, so a ``SearchEngine`` opened BEFORE the upsert
@@ -614,56 +660,31 @@ def upsert_docs(
     Returns ``{"upserted": total rows, "replaced": ids that existed,
     "stats": refreshed stats}``.
     """
+    import numpy as np
+
     from ..operators.search import SearchEngine  # noqa: PLC0415 (lazy: avoid cycle)
 
     catalog.recover_compaction(index_dir)
-    ids = docs_df.select(F.col(id_col).cast("long").alias("doc_id"))
+    ids = docs_df.select(F.col(id_col).cast("long")).toArrow().column(0)
+    if ids.null_count:
+        raise ValueError(f"null {id_col} within the upsert batch")
+    ids = ids.to_numpy(zero_copy_only=False)
+    n_rows = int(ids.size)
+    uniq, counts = np.unique(ids, return_counts=True)
+    if uniq.size != n_rows:
+        raise ValueError(
+            f"duplicate {id_col}={int(uniq[counts > 1][0])} within the "
+            "upsert batch: which row should win is ambiguous — dedupe first"
+        )
     eng = SearchEngine.open(spark, index_dir)
     limit = eng.max_deleted_in_memory - eng.deleted_count
-
-    # one pass for batch size + dup check (the per-id probe is an
-    # error-path-only second job)
-    def probe_batch():
-        return ids.agg(
-            F.count("*").alias("n"),
-            F.countDistinct("doc_id").alias("nd"),
-        ).collect()[0]
-
-    def probe_collisions():
-        # ONE aggregation job, not distinct().limit().collect():
-        # CollectLimit runs 1/4/16/... partition waves as sequential
-        # jobs (the r2 bench finding). collect_set dedups the ids
-        # (append-mode re-ingest can leave several docstats rows per
-        # doc_id — one tombstone per id, never per row); the slice
-        # keeps the driver transfer bounded at limit+1 — enough to
-        # either hold the complete set (<= limit) or prove overflow.
-        row = (
-            catalog.read_docstats(spark, index_dir)
-            .select("doc_id")
-            .join(F.broadcast(ids), "doc_id", "left_semi")
-            .agg(
-                F.slice(
-                    F.collect_set("doc_id"), 1, limit + 1
-                ).alias("collided")
-            )
-            .collect()[0]
-        )
-        return list(row["collided"] or [])
-
-    # the two probes read disjoint inputs (the batch vs docstats) —
-    # overlapped (guide §2.6)
-    agg, collided = run_jobs_concurrently(probe_batch, probe_collisions)
-    if agg["n"] != agg["nd"]:
-        dup = (
-            ids.groupBy("doc_id").count().where(F.col("count") > 1)
-            .limit(1).collect()
-        )
-        raise ValueError(
-            f"duplicate {id_col}={dup[0]['doc_id']} within the upsert "
-            "batch: which row should win is ambiguous — dedupe first"
-        )
-    n_rows = int(agg["n"])
-    if len(collided) > limit:
+    # docstats can hold several rows per doc_id (append-mode
+    # re-ingest): one tombstone per id, never per row
+    collided = np.unique(
+        _rows_by_id(eng.docstats.select("doc_id"), uniq, held=True)
+        .toArrow().column(0).to_numpy()
+    ) if n_rows else uniq
+    if collided.size > limit:
         raise ValueError(
             f"upsert batch replaces more than {limit} existing docs; "
             "split the batch (the purge's tombstone set is driver-held)"
@@ -675,12 +696,14 @@ def upsert_docs(
         # checkpoint. A crash after the purge with the tokenize failed
         # is the same documented window as before (ids deleted, not
         # yet reindexed; re-running the upsert completes it).
+        if not n_rows:
+            return None
         return tokenize_corpus(
             docs_df, cfg, id_col, text_col
         ).localCheckpoint()
 
     def delete_and_purge():
-        if collided:
+        if collided.size:
             eng.delete_docs(collided)
         if catalog.read_deletes(index_dir).size:
             # purge BEFORE the re-ingest: a tombstone masks its doc_id
@@ -716,11 +739,12 @@ def upsert_docs(
         num_partitions,
         slice_key=f"upsert_{n}",
         pre_tokenized=pre_tok,
+        n_rows=n_rows,
     )
     stats = refresh_stats(spark, index_dir, cfg)
     return {
         "upserted": n_rows,
-        "replaced": len(collided),
+        "replaced": int(collided.size),
         "stats": stats,
     }
 
@@ -734,7 +758,7 @@ def update_by_query(
     cfg: HashSplitterConfig,
     id_col: str = "doc_id",
     text_col: str = "content",
-    num_partitions: int = 8,
+    num_partitions: int | None = None,
 ) -> dict:
     """ES ``_update_by_query``: reindex every live doc matching an IR
     tree with transformed content. The ES script is a Catalyst
@@ -751,6 +775,9 @@ def update_by_query(
     consistent with every other query path (a tombstoned doc is never
     revived), and the updated index scores like a fresh build over the
     transformed corpus.
+
+    ``num_partitions`` is passed to :func:`upsert_docs`: ``None``
+    derives the appended segment's width from the update batch.
 
     Returns the :func:`upsert_docs` dict plus ``matched`` (0-matches
     short-circuits without touching the index).
