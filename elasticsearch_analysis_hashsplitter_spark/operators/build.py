@@ -332,15 +332,13 @@ def build_postings_blocks_segmented(
         in_parts = src.rdd.getNumPartitions()
     except Exception:
         in_parts = num_partitions
-    cores = tokenized.sparkSession.sparkContext.defaultParallelism
-    if in_parts < min(num_partitions, cores):
+    if in_parts < num_partitions:
         # a small source (single-file parquet read, tiny batch) would
         # otherwise run tokenize + segment-build as in_parts serial
         # tasks; round-robin the doc rows first — 1 compact row per doc,
         # far cheaper than the serialism (at scale maxPartitionBytes
         # already yields >= num_partitions input splits, so this is a
-        # no-op there). An input that already fills every core gains
-        # nothing from it but one more exchange and job.
+        # no-op there)
         src = src.repartition(num_partitions)
     segments = src.mapInPandas(
         _segment_builder(block_size), schema=catalog.BLOCK_SCHEMA

@@ -371,10 +371,14 @@ def block_columns(frame: DataFrame) -> DataFrame:
 def _has_min_dl(path: str) -> bool:
     """Whether every data directory under ``path`` holds ``min_dl``,
     from one parquet footer per directory (one write each) read on the
-    driver — no Spark job."""
+    driver — no Spark job. Hidden ``_``/``.`` entries are skipped as
+    Spark's file listing skips them: a writer's ``_temporary`` attempt
+    directory (in flight, or left by a crash) may hold a part file with
+    no footer yet."""
     import pyarrow.parquet as pq
 
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if d[0] not in "._"]
         parts = [f for f in files
                  if f.endswith(".parquet") and f[0] not in "._"]
         if parts and "min_dl" not in pq.read_schema(

@@ -62,20 +62,17 @@ def _write_segment(
     on_duplicate: str = "append",
     slice_key: str | None = None,
     pre_tokenized: DataFrame | None = None,
-    n_rows: int | None = None,
 ) -> None:
     """``pre_tokenized``: an already-materialized tokenize_corpus frame
     over ``batch_df`` (upsert_docs starts tokenizing concurrently with
     its purge — the tokenizer never reads the index, so the two
     overlap); only valid with ``on_duplicate='append'`` since the
-    dedup path rewrites the batch before tokenizing. ``n_rows``: the
-    batch's row count when the caller knows it (no emptiness job);
+    dedup path rewrites the batch before tokenizing, and the caller
+    must not pass an empty batch (no emptiness job is run for it).
     ``num_partitions=None`` derives the segment's width from the batch
     (:func:`adaptive_num_partitions`)."""
     if pre_tokenized is not None and on_duplicate != "append":
         raise ValueError("pre_tokenized requires on_duplicate='append'")
-    if n_rows == 0:
-        return
     if num_partitions is None:
         num_partitions = adaptive_num_partitions(batch_df)
     if on_duplicate == "skip_existing":
@@ -117,13 +114,13 @@ def _write_segment(
     # localCheckpoint materializes the tokenized batch once (eagerly);
     # the emptiness check and both writes then read the materialized
     # partitions, so tokenize/dedup run exactly once per batch.
-    tokenized = (
-        pre_tokenized
-        if pre_tokenized is not None
-        else tokenize_corpus(batch_df, cfg, id_col, text_col).localCheckpoint()
-    )
-    if n_rows is None and tokenized.isEmpty():
-        return
+    tokenized = pre_tokenized
+    if tokenized is None:
+        tokenized = tokenize_corpus(
+            batch_df, cfg, id_col, text_col
+        ).localCheckpoint()
+        if tokenized.isEmpty():
+            return
     if slice_key is None:
         slice_key = f"stream_{batch_id}"
     blocks = build_postings_blocks_segmented(tokenized, num_partitions)
@@ -200,45 +197,51 @@ def stream_index(
     return writer.start()
 
 
-def _purge_blocks(postings: DataFrame, deleted) -> DataFrame:
+def _purge_blocks(postings: DataFrame, del_bc) -> DataFrame:
     """Drop tombstoned doc ids out of every posting block:
-    :func:`filter_blocks` against the sorted delete set, broadcast once."""
-    import numpy as np
-
+    :func:`filter_blocks` against the broadcast sorted delete set."""
     from ..operators.search import _live_mask
 
-    del_bc = postings.sparkSession.sparkContext.broadcast(
-        np.asarray(deleted, dtype=np.int64)
-    )
     return filter_blocks(postings, lambda ids: _live_mask(ids, del_bc.value))
 
 
-def _rows_by_id(frame: DataFrame, ids, held: bool) -> DataFrame:
-    """``frame``'s rows whose ``doc_id`` is in ``ids`` (``held=True``:
-    the docstats probe mapping ids to their rows and slices) or is not
-    (``held=False``: the docstats purge); ``ids`` is sorted, unique,
-    non-empty int64. One map-only pass, no exchange: the id set is
-    broadcast once and tested with :func:`_purge_blocks`' searchsorted
-    mask, so the plan is the same size whatever the set's size."""
-    import numpy as np
+def _without_ids(frame: DataFrame, ids_bc) -> DataFrame:
+    """``frame`` minus its rows whose ``doc_id`` is in the broadcast
+    sorted id set (the docstats half of a purge): one map-only pass."""
     import pyarrow as pa
 
     from ..operators.search import _live_mask
 
-    ids_bc = frame.sparkSession.sparkContext.broadcast(
-        np.asarray(ids, dtype=np.int64)
-    )
-
-    def pick(batches):
+    def keep(batches):
         for b in batches:
             d = b.column("doc_id").to_numpy(zero_copy_only=False)
-            keep = _live_mask(d, ids_bc.value) != held
-            if keep.all():
-                yield b
-            elif keep.any():
-                yield b.filter(pa.array(keep))
+            yield b.filter(pa.array(_live_mask(d, ids_bc.value)))
 
-    return frame.mapInArrow(pick, frame.schema)
+    return frame.mapInArrow(keep, frame.schema)
+
+
+def _keys_of_ids(frame: DataFrame, ids_bc, key: str):
+    """The distinct ``key`` values (an Arrow array) of ``frame``'s rows
+    whose ``doc_id`` is in the broadcast sorted id set: batch ids →
+    indexed ids, tombstones → their slices. One map-only job with no
+    exchange, so the plan is the same size whatever the set's size;
+    each batch is deduped before it leaves the executor."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    from ..operators.search import _live_mask
+
+    def hits(batches):
+        for b in batches:
+            d = b.column("doc_id").to_numpy(zero_copy_only=False)
+            held = pa.array(~_live_mask(d, ids_bc.value))
+            yield pa.RecordBatch.from_arrays(
+                [pc.unique(b.column(key).filter(held))], [key]
+            )
+
+    out = frame.mapInArrow(hits, T.StructType([frame.schema[key]]))
+    return pc.unique(out.toArrow().column(0))
 
 
 def compact_index(
@@ -290,8 +293,9 @@ def compact_index(
         # the live corpus, and its deletes/ dir is empty. This is the
         # one decode pass compaction pays, and only on indexes that
         # actually hold tombstones.
-        postings = _purge_blocks(postings, deleted)
-        docstats = _rows_by_id(docstats, deleted, held=False)
+        del_bc = spark.sparkContext.broadcast(deleted)
+        postings = _purge_blocks(postings, del_bc)
+        docstats = _without_ids(docstats, del_bc)
     shuffled = (
         postings.repartitionByRange(num_partitions, "term", "min_doc")
         if layout == "range"
@@ -356,7 +360,7 @@ def purge_index(
       ingest/build/upsert batch writes its docs' postings AND docstats
       under one ``slice=`` key), so the slice-partitioned docstats give
       EXACT tombstone→slice membership from one map-only probe
-      (:func:`_rows_by_id`);
+      (:func:`_keys_of_ids`);
       slices holding no tombstoned doc are hardlinked into the output
       unchanged (metadata-only, byte-identical — pinned by inode in
       tests). A targeted update batch (e.g. re-ingesting yesterday's
@@ -382,14 +386,12 @@ def purge_index(
     deleted = catalog.read_deletes(index_dir)
     if not deleted.size:
         raise ValueError("purge_index: index holds no tombstones")
+    del_bc = spark.sparkContext.broadcast(deleted)
     all_keys = [str(k) for k in catalog.list_postings_slices(index_dir)]
     docstats = catalog.read_docstats(spark, index_dir)
     if "slice" in docstats.columns:
         keyed = docstats.select("doc_id", F.col("slice").cast("string"))
-        victim_keys = set(
-            _rows_by_id(keyed, deleted, held=True).toArrow()
-            .column("slice").to_pylist()
-        )
+        victim_keys = set(_keys_of_ids(keyed, del_bc, "slice").to_pylist())
     else:  # legacy un-sliced docstats: no membership — purge every slice
         victim_keys = set(all_keys)
 
@@ -399,16 +401,15 @@ def purge_index(
                 catalog.block_columns(
                     catalog.read_postings(spark, index_dir, k)
                 ),
-                deleted,
+                del_bc,
             ).write.mode("overwrite").parquet(
                 catalog.postings_path(out_dir, k)
             )
         ]
         if os.path.isdir(catalog.docstats_path(index_dir, k)):
             sinks.append(
-                lambda: _rows_by_id(
-                    catalog.read_docstats(spark, index_dir, k), deleted,
-                    held=False,
+                lambda: _without_ids(
+                    catalog.read_docstats(spark, index_dir, k), del_bc
                 ).write.mode("overwrite").parquet(
                     catalog.docstats_path(out_dir, k)
                 )
@@ -450,7 +451,7 @@ def purge_index(
     run_jobs_pool(victim_thunks, max_workers=4)
     if "slice" not in docstats.columns:
         # legacy layout: one un-sliced docstats table, filtered whole
-        _rows_by_id(docstats, deleted, held=False).write.mode(
+        _without_ids(docstats, del_bc).write.mode(
             "overwrite"
         ).parquet(catalog.docstats_path(out_dir))
     if not rebuild_lexicon and os.path.isdir(catalog.lexicon_path(index_dir)):
@@ -626,19 +627,21 @@ def upsert_docs(
     * batch ids: 1 job (0 for a local relation), collected once and
       held on the driver at 8 B/id like the tombstone set; the row
       count and the duplicate check run there in numpy;
-    * collision probe: 1 map-only docstats job (:func:`_rows_by_id`);
+    * collision probe: 1 map-only docstats job (:func:`_keys_of_ids`);
     * tokenize: 1 job, overlapped with the purge;
     * purge, only when ids collide or tombstones are pending: 1 probe
       for the victim slices plus ~2 jobs per victim slice — it decodes
       ONLY the slices holding purged docs (the rest are hardlinked, the
       rewrite is shuffle-free), so replacing docs from one ingest
       segment rewrites that segment, not the index;
-    * segment write: 3 jobs; ``num_partitions=None`` derives its width
-      from the batch (:func:`adaptive_num_partitions`);
+    * segment write: 3 jobs, plus 1 when the batch has fewer
+      partitions than the segment (a round-robin exchange);
+      ``num_partitions=None`` derives the segment's width from the
+      batch (:func:`adaptive_num_partitions`);
     * :func:`refresh_stats`: 4 jobs.
 
-    An insert-only batch costs 10 jobs, an empty one only the purge and
-    the refresh. Segment count grows by one per upsert batch;
+    An insert-only batch costs 10-11 jobs, an empty one only the purge
+    and the refresh. Segment count grows by one per upsert batch;
     ``maybe_compact`` remains the merge policy. Not transactional
     (neither is an ES bulk): a crash between the purge and the append
     leaves collided ids deleted-but-not-yet-reindexed; re-running the
@@ -680,10 +683,10 @@ def upsert_docs(
     limit = eng.max_deleted_in_memory - eng.deleted_count
     # docstats can hold several rows per doc_id (append-mode
     # re-ingest): one tombstone per id, never per row
-    collided = np.unique(
-        _rows_by_id(eng.docstats.select("doc_id"), uniq, held=True)
-        .toArrow().column(0).to_numpy()
-    ) if n_rows else uniq
+    collided = np.sort(_keys_of_ids(
+        eng.docstats.select("doc_id"), spark.sparkContext.broadcast(uniq),
+        "doc_id",
+    ).to_numpy()) if n_rows else uniq
     if collided.size > limit:
         raise ValueError(
             f"upsert batch replaces more than {limit} existing docs; "
@@ -729,18 +732,11 @@ def upsert_docs(
         and catalog.manifest_exists(index_dir, f"upsert_{n}")  # type: ignore[arg-type]
     ):
         n += 1
-    _write_segment(
-        docs_df,
-        n,
-        cfg,
-        index_dir,
-        id_col,
-        text_col,
-        num_partitions,
-        slice_key=f"upsert_{n}",
-        pre_tokenized=pre_tok,
-        n_rows=n_rows,
-    )
+    if n_rows:  # an empty batch pays only the purge and the refresh
+        _write_segment(
+            docs_df, n, cfg, index_dir, id_col, text_col, num_partitions,
+            slice_key=f"upsert_{n}", pre_tokenized=pre_tok,
+        )
     stats = refresh_stats(spark, index_dir, cfg)
     return {
         "upserted": n_rows,

@@ -87,7 +87,10 @@ def test_insert_only_upsert_job_budget(spark, tmp_path):
     batch = _df(spark, {1000 + i: f"data newz{i % 4}" for i in range(50)})
     n, res = _jobs(spark, lambda: upsert_docs(spark, idx, batch, CFG))
     assert res["replaced"] == 0 and res["upserted"] == 50
-    assert n <= 10, n
+    # 10 where shuffle partitions equal the cores (the benchmark's
+    # local[4] with 4); this session's 8 add the segment builder's
+    # round-robin of the 4-partition batch up to 8 partitions (1 job)
+    assert n <= 11, n
     assert res["stats"]["n_docs"] == len(DOCS) + 50
 
 
@@ -167,6 +170,51 @@ def test_collisions_past_limit_refused(spark, tmp_path, monkeypatch):
     # refused before any write: no tombstone, no segment
     assert catalog.read_deletes(idx).tolist() == [150]
     assert catalog.list_postings_slices(idx) == ["0"]
+
+
+def _leave_crashed_attempt(index_dir: str, key: str) -> None:
+    """What a segment write killed mid-task leaves: a truncated part
+    file (no footer) under the committer's hidden ``_temporary``
+    attempt directory of ``slice=<key>``, and no manifest."""
+    src = catalog.postings_path(index_dir, "0")
+    part = next(f for f in sorted(os.listdir(src)) if f.endswith(".parquet"))
+    with open(os.path.join(src, part), "rb") as fh:
+        head = fh.read()[:64]
+    for root in (catalog.postings_path(index_dir, key),
+                 catalog.docstats_path(index_dir, key)):
+        att = os.path.join(root, "_temporary", "0", "_temporary",
+                           "attempt_0_0000_m_000000_0")
+        os.makedirs(att)
+        with open(os.path.join(att, part), "wb") as fh:
+            fh.write(head)
+
+
+def test_open_and_upsert_survive_crashed_segment_write(spark, tmp_path):
+    """A crashed (or in-flight) segment write must not break ``open``,
+    and re-running the upsert reuses the orphan key and completes."""
+    idx = _build(spark, str(tmp_path / "idx"))
+    _leave_crashed_attempt(idx, "upsert_0")
+    eng = SearchEngine.open(spark, idx)
+    assert "min_dl" in eng.postings.columns
+    assert eng.term("zephyr").count() == sum(
+        "zephyr" in t.split() for t in DOCS.values()
+    )
+    eng.delete_docs([3])  # a pending tombstone: the purge runs too
+    res = upsert_docs(
+        spark, idx, _df(spark, {7: "zephyr again", 900: "zephyr"}), CFG
+    )
+    assert res["replaced"] == 1 and res["upserted"] == 2
+    assert res["stats"]["n_docs"] == len(DOCS)  # 3 purged, 900 added
+    assert catalog.manifest_exists(idx, "upsert_0")
+    assert catalog.list_postings_slices(idx) == ["0", "upsert_0"]
+    assert not os.path.exists(
+        os.path.join(catalog.postings_path(idx, "upsert_0"), "_temporary")
+    )
+    eng = SearchEngine.open(spark, idx)
+    assert sorted(r["doc_id"] for r in eng.term("zephyr").collect()) == sorted(
+        [i for i, t in DOCS.items() if "zephyr" in t.split() and i != 3]
+        + [7, 900]
+    )
 
 
 def _drop_min_dl(postings_dir: str) -> None:
