@@ -170,9 +170,8 @@ def qps_warm_run(
     if postings_cached:
         eng.postings = eng.postings.persist()
         eng.postings.count()  # materialize the cache
-    if eng.lexicon is not None:
-        eng.lexicon = eng.lexicon.persist()
-        eng.lexicon.count()
+    eng.lexicon = eng.lexicon.persist()
+    eng.lexicon.count()
     tokens = [str(_VOCAB[(11 * i + 3) % len(_VOCAB)]) for i in range(n_queries)]
     qmap = {
         f"q{i}": list(qc.field_query(t, TOK_CFG).terms)
@@ -328,8 +327,7 @@ def qps_warm_run(
     eng.disable_serving_layout()
     if postings_cached:
         eng.postings.unpersist()
-    if eng.lexicon is not None:
-        eng.lexicon.unpersist()
+    eng.lexicon.unpersist()
     return out
 
 

@@ -468,6 +468,19 @@ def docstats_summary(docstats: DataFrame) -> dict:
     }
 
 
+def lexicon_frame(postings: DataFrame) -> DataFrame:
+    """The lexicon of a posting-block frame: one ``(term, df, max_tf,
+    min_dl)`` row per term (``min_dl`` only when the blocks carry it —
+    pre-min_dl indexes lack it). Written by :func:`refresh_stats`, and
+    the in-memory lexicon of engines with no ``lexicon/`` directory. A
+    ``term IN (...)`` filter on it pushes below the aggregate, so a
+    point read scans only the queried terms' blocks."""
+    aggs = [F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")]
+    if "min_dl" in postings.columns:
+        aggs.append(F.min("min_dl").alias("min_dl"))
+    return postings.groupBy("term").agg(*aggs)
+
+
 def refresh_stats(spark: SparkSession, index_dir: str,
                   cfg: HashSplitterConfig,
                   rebuild_lexicon: bool = True) -> dict:
@@ -482,11 +495,7 @@ def refresh_stats(spark: SparkSession, index_dir: str,
     and the append would otherwise each pay the pass)."""
 
     def write_lexicon() -> None:
-        # column-pruned scan: the binary blobs are never read
-        postings = catalog.read_postings(spark, index_dir)
-        aggs = [F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")]
-        if "min_dl" in postings.columns:  # absent on pre-min_dl indexes
-            aggs.append(F.min("min_dl").alias("min_dl"))
+        # column-pruned scan: the binary blobs are never read.
         # term-sorted lexicon FILES: the aggregation's own exchange
         # already hash-partitions on term, so an in-partition sort is
         # all it takes for per-query point reads (`term IN (...)`) to
@@ -498,8 +507,7 @@ def refresh_stats(spark: SparkSession, index_dir: str,
         # groupBy child, doubling the aggregation; the cost is
         # file-LEVEL pruning (a point read checks every file's footer).
         (
-            postings.groupBy("term")
-            .agg(*aggs)
+            lexicon_frame(catalog.read_postings(spark, index_dir))
             .sortWithinPartitions("term")
             .write.mode("overwrite")
             .parquet(catalog.lexicon_path(index_dir))

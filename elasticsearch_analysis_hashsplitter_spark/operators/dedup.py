@@ -93,14 +93,6 @@ def _shingles_from_tokens(toks, n: int):
     return F.array_distinct(F.transform(idx, _one))
 
 
-def shingles_col(text_col: str, n: int):
-    """Semantic definition (used by small-input tests/oracles). Hot
-    paths go through :func:`_shingle_rows` / :func:`_shingle_sizes`,
-    which pre-project the token array — see
-    :func:`_shingles_from_tokens` for why inlining this is quadratic."""
-    return _shingles_from_tokens(tokens_col(text_col), n)
-
-
 def _parallelize_source(df: DataFrame) -> DataFrame:
     """Round-robin a few-split source up to the cluster's default
     parallelism (guide §2.5 input-skew remedy: one small parquet file

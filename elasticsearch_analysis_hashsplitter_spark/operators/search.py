@@ -10,10 +10,12 @@ Spark-first physical strategy (SURVEY.md §3.2 "Spark equivalent"):
 * Matching blocks are decoded by an Arrow-batched mapInPandas kernel;
   doc-set algebra (BooleanFilter AND/OR, SURVEY §2.5 E2) is joins/unions
   on doc_id.
-* BM25 scoring decodes (tf, dl) streams embedded in the blocks — no join
-  against docstats — and prunes blocks of non-rarest terms by docID-range
-  overlap with the rarest term's blocks (block-max/WAND-style skipping:
-  a conjunctive candidate must appear in the rarest term's postings).
+* BM25 scoring has one planner and one kernel (:func:`_batch_scores`;
+  a single query is a batch of one): it decodes (tf, dl) streams
+  embedded in the blocks — no join against docstats — and prunes blocks
+  of non-rarest terms by docID overlap with the rarest term (a
+  conjunctive candidate must appear in the rarest term's postings), or,
+  for a disjunctive top-k, by a block-max bound against the k-th score.
   Final top-k is ORDER BY score DESC, doc_id ASC LIMIT k, which Spark
   executes as per-partition top-k + driver merge (TakeOrderedAndProject).
 """
@@ -42,6 +44,7 @@ from ..plans import compile as qc
 from ..plans import ir
 from ..plans.pattern import glob_to_regex, literal_prefix
 from ..sources import catalog
+from .build import lexicon_frame
 
 _DOC_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType(), False)])
 
@@ -52,15 +55,6 @@ _BITS_SCHEMA = T.StructType(
     ]
 )
 
-_SCORE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term_idx", T.IntegerType(), False),
-        T.StructField("contrib", T.DoubleType(), False),
-    ]
-)
-
-
 #: max intervals rendered into ONE Catalyst OR-predicate. Driver-side
 #: analysis + codegen cost grows with expression size: measured ~2.5 s
 #: PER QUERY at 256 intervals vs negligible at 32 (the predicate runs
@@ -69,25 +63,14 @@ _SCORE_SCHEMA = T.StructType(
 #: numpy arrays carry no plan cost.
 _EXPR_RANGE_CAP = 32
 
-
-def _overlap_condition(ranges: list) -> Column | None:
-    """[{min_doc, max_doc}] -> a docID-overlap Column, re-coarsened to
-    <= _EXPR_RANGE_CAP intervals so the expression stays cheap to
-    analyze. Coarsening only widens intervals — sound for pruning."""
-    if not ranges:
-        return None
-    ivs = _coarsen_intervals(
-        np.fromiter((r["min_doc"] for r in ranges), dtype=np.int64),
-        np.fromiter((r["max_doc"] for r in ranges), dtype=np.int64),
-        _EXPR_RANGE_CAP,
-    )
-    return reduce(
-        lambda a, c: a | c,
-        [
-            (F.col("max_doc") >= lo) & (F.col("min_doc") <= hi)
-            for lo, hi in ivs
-        ],
-    )
+#: anchor tiers of the conjunctive prune (see :func:`_batch_scores`):
+#: an anchor with at most this many postings filters the other terms'
+#: postings by its exact doc ids (at most 256 KB of ids per anchor)...
+_ANCHOR_IDS_CUTOFF = 32768
+#: ...a denser anchor with df <= this fraction of the docs prunes by
+#: its block ranges, and a denser one prunes nothing (its ranges cover
+#: ~the whole docID space)
+_ANCHOR_DF_FRAC = 0.25
 
 
 def _coarsen_intervals(
@@ -123,70 +106,17 @@ def _coarsen_intervals(
     ]
 
 
-def _block_ranges_frame(blocks: DataFrame, cap: int) -> DataFrame:
-    """Per-Arrow-batch partial coarsening of block metadata: each batch
-    (a within-partition chunk, so batches never cross partitions) emits
-    <= ``cap`` covering intervals. No Window, no shuffle — every task
-    coarsens its own metadata independently."""
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ivs = _coarsen_intervals(
-                pdf["min_doc"].to_numpy(), pdf["max_doc"].to_numpy(), cap
-            )
-            yield pd.DataFrame(
-                {
-                    "min_doc": np.fromiter(
-                        (lo for lo, _ in ivs), dtype=np.int64
-                    ),
-                    "max_doc": np.fromiter(
-                        (hi for _, hi in ivs), dtype=np.int64
-                    ),
-                }
-            )
-
-    return blocks.select("min_doc", "max_doc").mapInPandas(
-        partial, schema="min_doc long, max_doc long"
-    )
-
-
-def _collect_block_ranges(blocks: DataFrame, cap: int = 256) -> list:
-    """Driver-bounded (min_doc, max_doc) covering intervals for block
-    skipping: ALWAYS returns <= ``cap`` intervals whose union covers
-    every input block, so callers never have to abandon the prune.
-
-    A hot term has ~1e6 block rows at 100x scale; instead of collecting
-    them all (or giving up past a cap, which turns WAND-style skipping
-    off exactly where it matters), coarsening runs in TWO levels (r3
-    advisor — the previous global-ntile Window pulled every metadata row
-    of the queried terms through a single task): (1) each Arrow batch
-    coarsens its own rows to <= cap intervals in parallel, fully inside
-    the scan tasks; (2) the driver merges the <= cap * n_batches partial
-    intervals (16-byte metadata structs — ~60k rows collected even for a
-    2.4M-block term at default batch size; treeAggregate territory only
-    past ~1e9 blocks per term set) and re-coarsens to <= cap with the
-    same largest-gap rule. Both levels only widen intervals — a superset
-    is sound for an overlap prune, it just prunes a little less.
-    """
-    rows = _block_ranges_frame(blocks, cap).collect()
-    if not rows:
-        return []
-    ivs = _coarsen_intervals(
-        np.fromiter((r["min_doc"] for r in rows), dtype=np.int64),
-        np.fromiter((r["max_doc"] for r in rows), dtype=np.int64),
-        cap,
-    )
-    return [{"min_doc": lo, "max_doc": hi} for lo, hi in ivs]
-
-
 def _block_ranges_frame_by_term(blocks: DataFrame, cap: int) -> DataFrame:
-    """Per-term variant of :func:`_block_ranges_frame`: each Arrow batch
-    coarsens every term's rows separately to <= cap intervals, so one
-    job yields covering ranges for MANY terms at once (the batch-query
-    path needs one range set per distinct anchor term — per-term
-    collection jobs would serialize on the scheduler)."""
+    """First level of the block-range coarsening behind
+    :meth:`SearchEngine._ranges_for_each_term`: each Arrow batch (a
+    within-partition chunk) coarsens every term's block metadata rows
+    separately to <= ``cap`` covering intervals. No Window, no shuffle —
+    every scan task coarsens its own rows, and one job yields ranges
+    for MANY terms at once (per-term collection jobs would serialize on
+    the scheduler). A hot term has ~1e6 block rows at 100x scale; only
+    <= cap intervals per (batch, term) reach the driver, which merges
+    them with the same largest-gap rule. Both levels only widen
+    intervals — a superset is sound for an overlap prune."""
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -368,7 +298,13 @@ class SearchEngine:
         self.docstats = docstats
         self.stats = stats
         self.cfg = cfg
-        self.lexicon = lexicon
+        #: per-term (df, max_tf, min_dl) — the on-disk lexicon, or the
+        #: same aggregation over the postings when there is none
+        #: (from_corpus / doc_subset engines, indexes with no
+        #: ``lexicon/`` directory)
+        self.lexicon = (
+            lexicon if lexicon is not None else lexicon_frame(postings)
+        )
         # Let AQE coalesce the shuffle feeding a persist(): by default
         # (canChangeCachedPlanOutputPartitioning=false) a cached
         # aggregate pins spark.sql.shuffle.partitions as its layout, so
@@ -389,16 +325,15 @@ class SearchEngine:
         #: billions of terms); LRU eviction, chosen by the r5
         #: cache-policy replay — see :class:`_LruCache`.
         self._term_stats_cache = _LruCache(100_000)
-        #: driver-side block-range cache for the WAND-style prunes,
-        #: keyed by the sorted term set the ranges were collected over.
-        #: Safe because an engine instance serves a fixed file-listing
-        #: snapshot (InMemoryFileIndex at open time) — appended segments
-        #: need a re-open either way. <= 256 intervals per entry.
+        #: driver-side block-range cache for the conjunctive anchor
+        #: prune, keyed by anchor term. Safe because an engine instance
+        #: serves a fixed file-listing snapshot (InMemoryFileIndex at
+        #: open time) — appended segments need a re-open either way.
+        #: <= 256 intervals per entry.
         self._block_ranges_cache = _LruCache(10_000)
         #: exact doc-id sets of LOW-df terms (anchor posting filters).
-        #: Bounded: only terms with df <= the caller's cutoff are ever
-        #: stored, LRU past 256 entries (~64 MB worst case at the
-        #: default 32k-id cutoff).
+        #: Bounded: only terms with df <= ``_ANCHOR_IDS_CUTOFF`` are
+        #: ever stored, LRU past 256 entries (~64 MB worst case).
         self._term_docs_cache = _LruCache(256)
         #: guards the three driver-side caches above: serve() makes one
         #: engine concurrently used, and an unsynchronized
@@ -461,13 +396,15 @@ class SearchEngine:
         #: layout (caught by the r5 scaling probe).
         self._layout_epoch = 0
         #: cost-based switch for disjunctive queries: below this TOTAL
-        #: posting count the exhaustive single-pass OR beats the
-        #: two-phase MaxScore machinery (bootstrap + rescore decode the
-        #: lists twice and pay two extra driver jobs — measured 0.84 s
-        #: two-phase vs 0.58 s single-pass for a rare-OR-hot pair over
-        #: ~0.36M postings). At corpus scale hot disjunctions clear the
-        #: cutoff immediately and keep the pruned path. Tests that
-        #: exercise the pruning machinery set this to 0.
+        #: posting count the exhaustive single-pass OR beats the theta
+        #: prune, whose anchor bootstrap is one more driver job over
+        #: the anchor terms' postings. The value dates from a two-phase
+        #: OR prune (0.84 s pruned vs 0.58 s single-pass for a
+        #: rare-OR-hot pair over ~0.36M postings) and has not been
+        #: re-measured for the theta prune. At corpus scale hot
+        #: disjunctions clear the cutoff immediately and keep the
+        #: pruned path. Tests that exercise the pruning machinery set
+        #: this to 0.
         self.disjunctive_exhaustive_cutoff = 1_000_000
         #: tombstoned doc ids (sorted unique int64 numpy array, or None
         #: when the index has none) — the Lucene liveDocs analogue
@@ -499,7 +436,7 @@ class SearchEngine:
         #: refuses and points at compact_index, which purges the
         #: tombstones and empties the set.
         self.max_deleted_in_memory = 16_000_000
-        #: same cost-based switch for the CONJUNCTIVE batch prune:
+        #: same cost-based switch for the CONJUNCTIVE anchor prune:
         #: below this total posting count across all query terms the
         #: anchor machinery (id-fetch job + per-block masks + the
         #: kernel's per-query filtering) costs more than the shuffle
@@ -512,36 +449,21 @@ class SearchEngine:
         #: machinery set this to 0.
         self.conjunctive_exhaustive_cutoff = 600_000
 
-    def _ranges_for_terms(self, terms: list[str]) -> list:
-        """Cached :func:`_collect_block_ranges` over the blocks of the
-        given terms — repeated hot queries on a serving engine skip the
-        collection job entirely."""
-        key = tuple(sorted(set(terms)))
-        with self._cache_lock:
-            hit = self._block_ranges_cache.get(key)
-        if hit is not None:
-            return hit
-        ranges = _collect_block_ranges(
-            self.postings.where(F.col("term").isin(list(key)))
-        )
-        with self._cache_lock:
-            self._block_ranges_cache[key] = ranges
-        return ranges
-
     def _ranges_for_each_term(
         self, terms, cap: int = 256
     ) -> dict[str, list]:
-        """term -> covering intervals, for many terms in ONE collection
-        job (the batch-query path needs one range set per distinct
-        anchor term). Cache entries use the same ``(term,)`` keys as
-        :meth:`_ranges_for_terms`, so batch and single-query serving
-        warm each other."""
+        """term -> <= ``cap`` covering block intervals (sorted,
+        disjoint), for many terms in ONE collection job (the
+        conjunctive prune needs one range set per distinct anchor
+        term): :func:`_block_ranges_frame_by_term` coarsens inside the
+        scan tasks, the driver merges the partial intervals. Cached per
+        term, so repeated hot queries skip the job."""
         want = sorted(set(terms))
         with self._cache_lock:
             found = {
-                t: self._block_ranges_cache[(t,)]
+                t: self._block_ranges_cache[t]
                 for t in want
-                if (t,) in self._block_ranges_cache
+                if t in self._block_ranges_cache
             }
         missing = [t for t in want if t not in found]
         if missing:
@@ -566,18 +488,17 @@ class SearchEngine:
                 ]
             with self._cache_lock:
                 for t, v in fresh.items():
-                    self._block_ranges_cache[(t,)] = v
+                    self._block_ranges_cache[t] = v
             found.update(fresh)
         # built from locals, never re-read from the instance cache: an
         # LRU eviction (here or in a concurrent thread) must not be
         # able to evict a term between its probe and this return
         return {t: found[t] for t in want}
 
-    def _term_doc_ids_many(
-        self, terms, cutoff: int = 32768
-    ) -> dict[str, np.ndarray]:
+    def _term_doc_ids_many(self, terms) -> dict[str, np.ndarray]:
         """Exact sorted doc-id arrays for the given LOW-df terms (df <=
-        ``cutoff``), all cache misses fetched in ONE decode job.
+        ``_ANCHOR_IDS_CUTOFF``), all cache misses fetched in ONE decode
+        job.
 
         This is the posting-level anchor filter: block-granularity
         ranges cannot skip anything for the classic rare-AND-hot
@@ -594,7 +515,7 @@ class SearchEngine:
         eligible = [
             r["term"]
             for r in self._term_stats(list(terms))
-            if r["df"] <= cutoff
+            if r["df"] <= _ANCHOR_IDS_CUTOFF
         ]
         with self._cache_lock:
             found = {
@@ -635,10 +556,11 @@ class SearchEngine:
                     "(missing stats.json — was build_index run?)"
                 )
         stats = catalog.read_stats(index_dir)
-        try:
-            lexicon = catalog.read_lexicon(spark, index_dir)
-        except Exception:
-            lexicon = None
+        lexicon = (
+            catalog.read_lexicon(spark, index_dir)
+            if os.path.isdir(catalog.lexicon_path(index_dir))
+            else None
+        )
         eng = cls(
             spark,
             catalog.read_postings(spark, index_dir),
@@ -1468,10 +1390,10 @@ class SearchEngine:
 
         Scale shape: the analyze + select half is driver-side over ONE
         document (exactly ES's coordinating-node work); df stats are
-        cached lexicon point-reads; the query half is the standard
-        exhaustive disjunctive plan — one scan + one shuffle. The
-        MaxScore-pruned path must not run here: its theta would bound
-        the k-th score INCLUDING the excluded source doc, which is
+        cached lexicon point-reads; the query half is the untruncated
+        disjunctive plan (:meth:`bm25_scores`) — one scan + one
+        shuffle. The theta prune must not run here: its theta would
+        bound the k-th score INCLUDING the excluded source doc, which is
         near-guaranteed to rank first.
         """
         from ..functions.tokenize import analyze
@@ -1514,9 +1436,8 @@ class SearchEngine:
 
     def _term_stats(self, terms: list[str]) -> list:
         """(term, df, max_tf, min_dl) rows for a few query terms — from
-        the driver-side cache when warm, else the pre-aggregated lexicon
-        table (pruned point reads), else a pushdown aggregation over the
-        block metadata columns. Absent terms are cached as absent, so a
+        the driver-side cache when warm, else pruned point reads of the
+        lexicon. Absent terms are cached as absent, so a
         repeated miss costs no job either. ``min_dl`` is None on indexes
         built before the column existed (bounds fall back to the dl->0
         limit)."""
@@ -1529,30 +1450,13 @@ class SearchEngine:
             }
         missing = [t for t in distinct_terms if t not in snap]
         if missing:
-            src = self.lexicon if self.lexicon is not None else self.postings
-            has_mdl = "min_dl" in src.columns
-            if self.lexicon is not None:
-                cols = ["term", "df", "max_tf"] + (
-                    ["min_dl"] if has_mdl else []
-                )
-                rows = (
-                    self.lexicon.where(F.col("term").isin(missing))
-                    .select(*cols)
-                    .collect()
-                )
-            else:
-                aggs = [
-                    F.sum("df").alias("df"),
-                    F.max("max_tf").alias("max_tf"),
-                ]
-                if has_mdl:
-                    aggs.append(F.min("min_dl").alias("min_dl"))
-                rows = (
-                    self.postings.where(F.col("term").isin(missing))
-                    .groupBy("term")
-                    .agg(*aggs)
-                    .collect()
-                )
+            has_mdl = "min_dl" in self.lexicon.columns
+            cols = ["term", "df", "max_tf"] + (["min_dl"] if has_mdl else [])
+            rows = (
+                self.lexicon.where(F.col("term").isin(missing))
+                .select(*cols)
+                .collect()
+            )
             found = {
                 r["term"]: (
                     r["df"],
@@ -1791,40 +1695,35 @@ class SearchEngine:
         filter: ir.Node | None = None,
     ) -> DataFrame:
         """Disjunctive BM25 top-k (docs matching ANY chunk term of the
-        analyzed value), with MaxScore/block-max pruning.
+        analyzed value): :meth:`bm25_topk` with ``conjunctive=False``,
+        block-max pruned by the k-th-score bound theta (see
+        :func:`_batch_scores`).
 
         ``after``: search_after pagination. Later pages run the
-        exhaustive single-pass OR — the MaxScore theta is a bound on
-        the GLOBAL k-th score, so page-N docs are exactly the ones the
-        pruned plan is entitled to drop.
+        exhaustive single-pass OR — theta is a bound on the GLOBAL k-th
+        score, so page-N docs are exactly the ones the pruned plan is
+        entitled to drop.
 
         ``must_not`` / ``filter`` / ``min_should_match`` (ES bool
         must_not, the filtered-query shape, and
         minimum_number_should_match) also run the exhaustive
-        single-pass OR: the MaxScore theta bootstrap bounds the k-th
-        score of the UNCONSTRAINED disjunction, and each constraint
-        can push the true k-th among qualifying docs below that bound —
-        a pruned plan could drop a qualifying hit, so it must not run.
-        The exhaustive plan is still one scan + one shuffle."""
+        single-pass OR: theta bounds the k-th score of the
+        UNCONSTRAINED disjunction, and each constraint can push the
+        true k-th among qualifying docs below that bound — a pruned
+        plan could drop a qualifying hit, so it must not run. The
+        exhaustive plan is still one scan + one shuffle."""
         node = qc.field_query(value, self.cfg, scored=True)
         if isinstance(node, ir.MatchNone):
             return self._empty_scored()
-        if (
-            after is not None
-            or must_not is not None
-            or filter is not None
-            or min_should_match > 1
-        ):
-            return self.bm25_topk(
-                list(node.terms),
-                k,
-                conjunctive=False,
-                after=after,
-                must_not=must_not,
-                min_should_match=min_should_match,
-                filter=filter,
-            )
-        return self.bm25_topk_disjunctive(list(node.terms), k)
+        return self.bm25_topk(
+            list(node.terms),
+            k,
+            conjunctive=False,
+            after=after,
+            must_not=must_not,
+            min_should_match=min_should_match,
+            filter=filter,
+        )
 
     def match_all(self, k: int = 10, boost: float = 1.0) -> DataFrame:
         """ES ``match_all`` — every live indexed doc at a constant
@@ -2769,7 +2668,7 @@ class SearchEngine:
             if len(terms) <= 63:
                 # bitmask membership in ONE aggregation — countDistinct
                 # on the term STRING compiled to a double exchange with
-                # strings in the wide leg (see bm25_scores)
+                # strings in the wide leg (see _batch_scores)
                 tmap = F.create_map(
                     *[
                         x
@@ -2818,292 +2717,12 @@ class SearchEngine:
             ),
         )
 
-    def bm25_topk_disjunctive(self, terms: list[str], k: int = 10) -> DataFrame:
-        """Exact disjunctive (OR) BM25 top-k with distributed MaxScore /
-        block-max pruning (north_star's WAND-style skipping, re-expressed
-        for batch execution):
-
-        1. bootstrap: exact scores for docs containing the highest-
-           upper-bound ("strongest") term -> threshold theta = k-th score;
-        2. non-essential set S = maximal low-ub suffix with
-           sum(ub) <= theta: docs appearing ONLY in S terms cannot beat
-           theta, so S contributes no candidates;
-        3. essential terms decode fully; S terms decode only blocks whose
-           docID ranges overlap essential blocks (their contribution to
-           candidate docs) — common low-idf terms' long posting lists are
-           mostly skipped;
-        4. exact rescoring of all candidates, merge with bootstrap top-k.
-
-        All bounds are sound (ub maximizes tf at max_tf and minimizes the
-        dl-normalized denominator at the term's min_dl; pre-min_dl
-        indexes fall back to the dl->0 limit), so the result is exactly
-        the true top-k.
-        """
-        if not terms:
-            return self._empty_scored()
-        weights: dict[str, int] = {}
-        for t in terms:
-            weights[t] = weights.get(t, 0) + 1
-        distinct = sorted(weights)
-        n_docs = self.stats["n_docs"]
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        lex = self._term_stats(distinct)
-        if not lex:
-            return self._empty_scored()
-        info = {
-            r["term"]: (r["df"], r["max_tf"], r["min_dl"]) for r in lex
-        }
-        avgdl = self.stats["avgdl"] or 1.0
-        present = [t for t in distinct if t in info]
-        if not present:
-            return self._empty_scored()
-        w_idf = {
-            t: weights[t] * bm25.idf(n_docs, info[t][0]) for t in present
-        }
-        # sound upper bound on each term's per-doc contribution
-        ub = {
-            t: w_idf[t] * bm25.bound(info[t][1], info[t][2], k1, b, avgdl)
-            for t in present
-        }
-        min_df = min(info[t][0] for t in present)
-        sum_df = sum(info[t][0] for t in present)
-        if (
-            len(present) == 1
-            or min_df > 0.5 * n_docs
-            or sum_df <= self.disjunctive_exhaustive_cutoff
-        ):
-            # Every term is dense: nearly every doc is a candidate, theta
-            # lands near the global k-th score, and neither the MaxScore
-            # S-partition nor the block-range overlap can drop much — but
-            # the two-phase machinery still decodes the posting lists
-            # TWICE (bootstrap + rescore). One exact single-pass
-            # aggregation is strictly faster here (measured 2x on the
-            # every-term-hot 4M probe) and identical in result; sparse
-            # mixes (any term with df <= n/2, the Zipf-normal case) keep
-            # the pruned path below.
-            return self.bm25_topk(list(terms), k, conjunctive=False)
-        by_ub = sorted(present, key=lambda t: (-ub[t], t))
-        strongest = by_ub[0]
-
-        # phase 1: exact top-k among docs containing the strongest term
-        boot = self.bm25_topk(
-            list(terms), k, conjunctive=False, _anchor=strongest
-        )
-        boot_rows = boot.collect()
-        theta = boot_rows[-1]["score"] if len(boot_rows) >= k else -1.0
-
-        # phase 2: MaxScore partition on the remaining terms
-        rest = by_ub[1:]
-        non_essential: list[str] = []
-        acc = 0.0
-        for t in reversed(rest):  # lowest ub first
-            # strict: a pruned doc at exactly theta could still win the
-            # doc_id tie-break, so only prune when it cannot reach theta
-            if acc + ub[t] < theta:
-                non_essential.append(t)
-                acc += ub[t]
-            else:
-                break
-        essential = [t for t in rest if t not in non_essential]
-        if not essential:
-            return boot  # no doc outside the strongest term can beat theta
-
-        cand_ids = None
-        cand_terms = set(essential) | {strongest}
-        if non_essential:
-            # Candidate set = docs touching an essential-or-strongest
-            # term (docs only in non-essential terms are pruned by the
-            # theta bound). When that set is RARE and the non-essential
-            # terms are much hotter (the reference's hash-OR use case),
-            # block-granularity ranges skip nothing — a rare term's one
-            # block spans the whole docID space — so fetch the
-            # candidates' EXACT doc ids and posting-filter the
-            # non-essential decode before the shuffle, exactly like the
-            # conjunctive anchor filter. Otherwise: docID-range overlap
-            # with the essential+strongest blocks (every candidate lies
-            # inside some collected range, so every retained candidate's
-            # non-essential contributions stay complete — the soundness
-            # condition; essential-only ranges mis-ranked docs holding
-            # strongest + non-essential terms but no essential term).
-            cand_df = sum(info[t][0] for t in cand_terms)
-            if cand_df <= 32768 and min(
-                info[t][0] for t in non_essential
-            ) >= 4 * cand_df:
-                id_map = self._term_doc_ids_many(sorted(cand_terms))
-                if len(id_map) == len(cand_terms):
-                    cand_ids = (
-                        np.unique(np.concatenate(list(id_map.values())))
-                        if id_map
-                        else None
-                    )
-            if cand_ids is not None:
-                ranges = [
-                    {"min_doc": lo, "max_doc": hi}
-                    for lo, hi in _coarsen_intervals(
-                        cand_ids, cand_ids, 256
-                    )
-                ]
-            else:
-                ranges = self._ranges_for_terms(sorted(cand_terms))
-            cond = F.col("term").isin(essential + [strongest])
-            overlap = _overlap_condition(ranges)
-            if overlap is not None:
-                cond = cond | (
-                    F.col("term").isin(non_essential) & overlap
-                )
-            blocks = self.postings.where(cond)
-        else:
-            blocks = self.postings.where(
-                F.col("term").isin(essential + [strongest])
-            )
-        blocks = self._block_max_prune(blocks, w_idf, ub, theta)
-        params = {t: (w_idf[t], i) for i, t in enumerate(present)}
-        scored = self._score_blocks(
-            blocks, params, avgdl, cand_ids=cand_ids, cand_terms=cand_terms,
-        )
-        # candidates must touch an essential or strongest term (docs only
-        # in non-essential terms are pruned by the theta bound)
-        ess_ids = {params[t][1] for t in cand_terms}
-        agg = (
-            scored.groupBy("doc_id")
-            .agg(
-                F.sum("contrib").alias("score"),
-                F.max(
-                    F.col("term_idx").isin([int(i) for i in ess_ids])
-                ).alias("is_cand"),
-            )
-            .where(F.col("is_cand"))
-            .select("doc_id", "score")
-        )
-        # rescoring bypasses bm25_scores, so it masks tombstones itself
-        # (the bootstrap half came through bm25_scores already live)
-        agg = self._filter_live(agg)
-        # merge with the bootstrap top-k (exact scores): max(score) per doc
-        # keeps the exact value even if a rescoring path were ever partial
-        if boot_rows:
-            boot_df = self.spark.createDataFrame(
-                [(r["doc_id"], r["score"]) for r in boot_rows],
-                "doc_id long, score double",
-            )
-            agg = (
-                agg.unionByName(boot_df)
-                .groupBy("doc_id")
-                .agg(F.max("score").alias("score"))
-            )
-        return agg.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(k)
-
-    def _block_max_prune(self, blocks, w_idf, ub, theta) -> DataFrame:
-        """Block-granular MaxScore: drop a block b of term t when
-        ub_block(t, b) + sum_{t' != t} ub(t') < theta.
-
-        ``w_idf``/``ub``: term -> query weight and term upper bound
-        (``w_idf * bm25.bound``) for every present query term.
-
-        Soundness: a doc appears in exactly one block per term, so any
-        doc whose t-contribution lives in a dropped block has maximum
-        possible total score < theta; the final top-k consists entirely
-        of scores >= theta (the exact bootstrap top-k is merged back), so
-        such docs can neither enter it nor displace anything — their
-        possibly-understated aggregate scores are harmless. Ties at
-        exactly theta are kept (a theta-tying doc can win the doc_id
-        tie-break). The per-block bound uses the block's own max_tf and
-        min_dl through a pure Catalyst expression, so pruned blocks are
-        filtered before any decode; pre-min_dl indexes skip the prune.
-        """
-        if theta <= 0 or "min_dl" not in blocks.columns:
-            return blocks
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-        avgdl = self.stats["avgdl"] or 1.0
-        total_ub = sum(ub.values())
-        w_idf_map = F.create_map(
-            *[x for t, w in w_idf.items() for x in (F.lit(t), F.lit(w))]
-        )
-        rest_map = F.create_map(
-            *[
-                x
-                for t, u in ub.items()
-                for x in (F.lit(t), F.lit(total_ub - u))
-            ]
-        )
-        block_ub = w_idf_map[F.col("term")] * bm25.block_bound(
-            k1, b, avgdl, True
-        )
-        return blocks.where(
-            block_ub + rest_map[F.col("term")] >= F.lit(float(theta))
-        )
-
-    def _score_blocks(
-        self, blocks, params, avgdl,
-        cand_ids: np.ndarray | None = None,
-        cand_terms: set | None = None,
-    ) -> DataFrame:
-        """Decode + per-posting BM25 contributions for the given blocks:
-        the single-query scoring kernel, shared by conjunctive, anchored,
-        min-should-match and disjunctive-rescore scoring.
-
-        ``params``: term -> (w_idf, term_idx); each posting contributes
-        ``w_idf * bm25.norm(tf, dl)`` under ``avgdl``.
-
-        ``cand_ids`` (sorted) with ``cand_terms``: postings of terms
-        OUTSIDE ``cand_terms`` are filtered to the candidate doc set
-        before being emitted — sound whenever the caller discards
-        non-candidate docs after aggregation anyway (the conjunctive
-        anchor and the disjunctive is_cand filters), and it shrinks the
-        shuffle from O(df_hot) to O(|candidates|) per hot term."""
-        k1, b = self.cfg.bm25_k1, self.cfg.bm25_b
-
-        def score_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                docs_l, idx_l, contrib_l = [], [], []
-                for term, dblob, tblob, lblob in zip(
-                    pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"]
-                ):
-                    w_idf, t_idx = params[term]
-                    d = decode_doc_ids(dblob)
-                    sel = None
-                    if cand_ids is not None and term not in cand_terms:
-                        if cand_ids.size == 0:
-                            continue
-                        pos = np.minimum(
-                            np.searchsorted(cand_ids, d),
-                            cand_ids.size - 1,
-                        )
-                        sel = cand_ids[pos] == d
-                        if not sel.any():
-                            continue
-                        d = d[sel]
-                    tf = decode_counts(tblob)
-                    dl = decode_counts(lblob)
-                    if sel is not None:
-                        tf, dl = tf[sel], dl[sel]
-                    docs_l.append(d)
-                    idx_l.append(np.full(d.size, t_idx, dtype=np.int32))
-                    contrib_l.append(w_idf * bm25.norm(tf, dl, k1, b, avgdl))
-                if not docs_l:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_l),
-                        "term_idx": np.concatenate(idx_l),
-                        "contrib": np.concatenate(contrib_l),
-                    }
-                )
-
-        return blocks.select("term", "docs", "tfs", "dls").mapInPandas(
-            score_fn, schema=_SCORE_SCHEMA
-        )
-
     def bm25_topk(
         self,
         terms: list[str],
         k: int = 10,
         conjunctive: bool = True,
         boost: float = 1.0,
-        _anchor: str | None = None,
         after: tuple | None = None,
         global_stats: dict | None = None,
         must_not: ir.Node | None = None,
@@ -3114,11 +2733,9 @@ class SearchEngine:
 
         Lucene-style BM25 (north_rule): idf = ln(1+(N-df+0.5)/(df+0.5)),
         tf-norm with k1/b from config. Term multiplicity adds weight.
-        Ties break on doc_id asc.
-
-        ``_anchor`` (internal, disjunctive bootstrap): restrict candidates
-        to docs containing the given term, but score them with ALL terms
-        — exact scores for that candidate subset.
+        Ties break on doc_id asc. Planned as a batch of one by
+        :func:`_batch_scores`; an unconstrained read hands it ``k``,
+        so a disjunctive query may prune by the k-th-score bound.
 
         ``after=(score, doc_id)``: ES search_after — only hits strictly
         after the cursor in the (score desc, doc_id asc) total order
@@ -3132,24 +2749,27 @@ class SearchEngine:
         ``must_not``: ES bool must_not in scored context — excluded
         docs are filtered, never scored (Lucene MUST_NOT contributes
         nothing to the score). The anti-join runs on the
-        candidate-sized aggregate; the conjunctive prunes
-        (anchor-id / block-range) stay sound because they are
-        membership-NECESSARY conditions, independent of which
-        candidates the exclusion later removes.
+        candidate-sized aggregate; the conjunctive anchor prune stays
+        sound because it is a membership-NECESSARY condition,
+        independent of which candidates the exclusion later removes.
 
         ``min_should_match``: disjunctive only — a doc must match at
         least that many DISTINCT query terms (Lucene
         minimumNumberShouldMatch over term clauses; chunk terms of one
         analyzed value are always distinct thanks to the position
         prefix, so distinct-term counting is clause counting).
+
+        ``after``, ``must_not``, ``filter`` and ``min_should_match``
+        each score untruncated (no theta): theta bounds the k-th score
+        of the unconstrained query, and a constraint can push the true
+        k-th among qualifying docs below it.
         """
-        scores = self.bm25_scores(
-            terms,
-            conjunctive,
-            boost,
-            _anchor,
-            global_stats=global_stats,
-            min_should_match=min_should_match,
+        constrained = (
+            after is not None or must_not is not None or filter is not None
+        )
+        scores = self._scores(
+            terms, None if constrained else k, conjunctive, boost,
+            global_stats, min_should_match,
         )
         if must_not is not None:
             ex = ir.simplify(must_not)
@@ -3186,13 +2806,12 @@ class SearchEngine:
         terms: list[str],
         conjunctive: bool = True,
         boost: float = 1.0,
-        _anchor: str | None = None,
         global_stats: dict | None = None,
         min_should_match: int = 1,
     ) -> DataFrame:
         """Aggregated (doc_id, score) for a bag of chunk terms —
-        :meth:`bm25_topk` without the final top-k truncation. The
-        building block for cross-field scoring
+        :meth:`bm25_topk` without the final top-k truncation (so never
+        theta-pruned). The building block for cross-field scoring
         (:meth:`~..multifield.MultiFieldEngine.search_scored` sums
         per-field score frames BEFORE ranking, which a truncated top-k
         could not support).
@@ -3206,140 +2825,27 @@ class SearchEngine:
         block pruning — keeps using this index's own stats, exactly as
         a Lucene shard executes a dfs-phase query: global weights,
         local postings."""
+        return self._scores(
+            terms, None, conjunctive, boost, global_stats, min_should_match
+        )
+
+    def _scores(
+        self, terms, k, conjunctive, boost, global_stats, min_should_match
+    ) -> DataFrame:
+        """One query's live (doc_id, score) frame from the batch planner
+        (``k`` None: untruncated)."""
         if min_should_match > 1 and conjunctive:
             raise ValueError(
                 "min_should_match applies to disjunctive scoring only"
             )
-        if not terms:
+        agg, _, _ = _batch_scores(
+            self, {"q": list(terms)}, k, conjunctive, prune=True,
+            global_stats=global_stats, boost=boost,
+            min_should_match=min_should_match,
+        )
+        if agg is None:
             return self._empty_scored()
-        weights: dict[str, int] = {}
-        for t in terms:
-            weights[t] = weights.get(t, 0) + 1
-        distinct = sorted(weights)
-        n_docs = self.stats["n_docs"]
-        avgdl = self.stats["avgdl"] or 1.0
-
-        # term-level stats: tiny driver-side lookup (few terms per query)
-        dfs = {r["term"]: r["df"] for r in self._term_stats(distinct)}
-        if conjunctive and len(dfs) < len(distinct):
-            return self._empty_scored()  # a MUST term is absent entirely
-        idf_dfs = dfs
-        if global_stats is not None:
-            n_docs = global_stats["n_docs"]
-            avgdl = global_stats["avgdl"] or 1.0
-            idf_dfs = global_stats["dfs"]
-        params = {
-            t: (
-                boost * weights[t] * bm25.idf(n_docs, idf_dfs.get(t, 0)),
-                i,
-            )
-            for i, t in enumerate(distinct)
-        }
-
-        blocks = self.postings.where(F.col("term").isin(distinct))
-        anchor = _anchor
-        if anchor is None and conjunctive and len(distinct) > 1 and dfs:
-            # a conjunctive hit must occur in the rarest term's postings
-            anchor = min(distinct, key=lambda t: dfs.get(t, float("inf")))
-        anchor_ids = None
-        if anchor is not None and len(distinct) > 1 and dfs:
-            # Candidates must occur in the anchor term's postings.
-            # Low-df anchor vs much-hotter other terms: fetch its EXACT
-            # doc ids (tiny, cached) — other terms' decoded postings are
-            # filtered to the candidate set inside the kernel, before
-            # the shuffle, and the Catalyst block filter uses intervals
-            # over the ids themselves (a rare anchor's single block
-            # spans the whole docID space, so block-granularity ranges
-            # alone skip nothing on the classic rare-AND-hot
-            # conjunction). Balanced-df queries skip the id fetch — the
-            # filter can only drop the df gap, so when every term is
-            # ~anchor-sized the extra driver job cannot pay for itself.
-            # High-df anchor: block-granularity range overlap as before.
-            if max(dfs.values()) >= 4 * dfs.get(anchor, 1):
-                anchor_ids = self._term_doc_ids_many([anchor]).get(
-                    anchor
-                )
-            if anchor_ids is not None:
-                ranges = [
-                    {"min_doc": lo, "max_doc": hi}
-                    for lo, hi in _coarsen_intervals(
-                        anchor_ids, anchor_ids, 256
-                    )
-                ]
-            else:
-                ranges = self._ranges_for_terms([anchor])
-            overlap = _overlap_condition(ranges)
-            if overlap is not None:
-                blocks = blocks.where(
-                    (F.col("term") == anchor) | overlap
-                )
-
-        scored = self._score_blocks(
-            blocks, params, avgdl, cand_ids=anchor_ids, cand_terms={anchor}
-        )
-        # Term-membership via a bit_or bitmask over the (local, dense)
-        # term_idx instead of countDistinct: a distinct-aggregate
-        # compiles to TWO exchanges (partial on (doc_id, term_idx),
-        # re-exchange on doc_id), doubling the shuffle of every scored
-        # query; bit_or folds into the single doc_id aggregation and the
-        # anchor test reads the same mask. Duplicate-safe (a re-ingested
-        # doc's repeated term sets the same bit). Fallback to
-        # countDistinct only past 63 distinct terms (a > 252-char value).
-        need_msm = (not conjunctive) and min_should_match > 1
-        if need_msm and min_should_match > len(distinct):
-            return self._empty_scored()  # unsatisfiable n-of-m
-        need_membership = (
-            (conjunctive and len(distinct) > 1)
-            or (_anchor is not None)
-            or need_msm
-        )
-        aggs = [F.sum("contrib").alias("score")]
-        use_mask = need_membership and len(distinct) <= 63
-        if use_mask:
-            aggs.append(
-                F.expr(
-                    "bit_or(shiftleft(CAST(1 AS BIGINT), term_idx))"
-                ).alias("tmask")
-            )
-        elif need_membership:
-            aggs.append(F.countDistinct("term_idx").alias("n_terms"))
-            if _anchor is not None:
-                aggs.append(
-                    F.max(
-                        F.col("term_idx") == params[_anchor][1]
-                    ).alias("has_anchor")
-                )
-        agg = scored.groupBy("doc_id").agg(*aggs)
-        if use_mask:
-            if conjunctive and len(distinct) > 1:
-                agg = agg.where(
-                    F.col("tmask") == (1 << len(distinct)) - 1
-                )
-            if need_msm:
-                # Lucene minimumNumberShouldMatch: popcount of the
-                # distinct-term membership mask, same single aggregation
-                agg = agg.where(
-                    F.bit_count("tmask") >= min_should_match
-                )
-            if _anchor is not None:
-                agg = agg.where(
-                    F.shiftright(
-                        F.col("tmask"), params[_anchor][1]
-                    ).bitwiseAND(1)
-                    == 1
-                )
-        elif need_membership:
-            if conjunctive and len(distinct) > 1:
-                agg = agg.where(F.col("n_terms") == len(distinct))
-            if need_msm:
-                agg = agg.where(F.col("n_terms") >= min_should_match)
-            if _anchor is not None:
-                agg = agg.where(F.col("has_anchor"))
-        # tombstone mask AFTER the aggregation (candidate-sized frame)
-        # and BEFORE any caller's top-k; the disjunctive bootstrap runs
-        # through here too, so its theta is the k-th LIVE score — lower
-        # than a stale theta, hence still a sound prune threshold.
-        return self._filter_live(agg.select("doc_id", "score"))
+        return agg.select("doc_id", "score")
 
 
 class ServeCoalescer:
@@ -3691,20 +3197,22 @@ def _anchor_theta_collect(engine: SearchEngine, terms, k: int) -> list:
 def _batch_scores(
     engine: SearchEngine,
     queries: dict[str, list[str]],
-    k: int,
+    k: int | None,
     conjunctive: bool,
     prune: bool,
-    anchor_df_frac: float,
-    anchor_ids_cutoff: int,
     source: DataFrame | None = None,
     local_topk: bool = False,
     global_stats: dict | None = None,
+    boost: float = 1.0,
+    min_should_match: int = 1,
 ):
-    """Shared front half of the batch-retrieval paths: per-query prune
-    metadata, pruned block scan, the vectorized scoring kernel, and the
-    (qidx, doc_id, score) aggregation with the conjunction filter
-    applied. Returns ``(agg_frame | None, active_query_ids, qidx_of)``
-    — ``None`` when no query can match anything. Consumed by
+    """The scored-read planner — every BM25 read, a batch or a single
+    query (a batch of one, :meth:`SearchEngine.bm25_topk` /
+    :meth:`SearchEngine.bm25_scores`): per-query prune metadata, pruned
+    block scan, the vectorized scoring kernel, and the (qidx, doc_id,
+    score) aggregation with the membership filter applied. Returns
+    ``(agg_frame | None, active_query_ids, qidx_of)`` — ``None`` when
+    no query can match anything. Also consumed by
     :func:`bm25_topk_batch` (Window rank, DataFrame out — the gate /
     analytics surface) and :func:`bm25_topk_batch_collect` (partition
     top-k combine + driver merge — the serving surface).
@@ -3719,7 +3227,8 @@ def _batch_scores(
     shuffle-free stage (schema ``qidx, doc_id, score``), and the
     caller merges. Same prune machinery either way: the sub-block
     stats were recomputed at split time, so range masks and block-max
-    thresholds stay sound.
+    thresholds stay sound. ``min_should_match`` applies to the shuffle
+    plan only.
 
     Per-query jobs pay scheduler + Python-worker round-trips per query;
     at serving scale (training-data mining, dedup-by-search) the right
@@ -3727,60 +3236,67 @@ def _batch_scores(
     (query, doc) pairs in the same vectorized kernel, and ranks with one
     window. Throughput scales with cluster size instead of query count.
 
-    Block skipping (r3 judge: this kernel previously decoded EVERY block
-    of every query term — an exhaustive scan of the cross product on the
-    engine's headline serving metric, while the single-query paths
-    pruned). The single-query prunes generalize with a max-over-queries
-    bound per term — a block survives iff SOME query still needs it:
+    Block skipping, with a max-over-queries bound per term — a block
+    survives iff SOME query still needs it:
 
     * conjunctive: per query, candidates must contain the rarest
       ("anchor") term, so term t's block is decoded for q only if t is
       q's anchor or the block's docID range overlaps q's anchor ranges
       (collected for ALL anchors in one job via
-      :meth:`SearchEngine._ranges_for_each_term`, shared with the
-      single-query cache). A coarse Catalyst prefilter (anchor terms OR
-      the union of all anchor ranges) prunes I/O before the kernel's
-      exact per-query masks prune the (query x posting) emit.
-    * disjunctive: per-query theta from a shuffle-free anchor-only
-      bootstrap (:func:`_batch_anchor_theta`), then the block-max bound:
-      term t's block survives for q iff
+      :meth:`SearchEngine._ranges_for_each_term`). A coarse Catalyst
+      prefilter (anchor terms OR the union of all anchor ranges) prunes
+      I/O before the kernel's exact per-query masks prune the (query x
+      posting) emit. Membership is local, so this prune also runs under
+      ``global_stats`` and with no ``k``.
+    * disjunctive (needs ``k``): per-query theta from a shuffle-free
+      anchor-only bootstrap (:func:`_batch_anchor_theta`), then the
+      block-max bound: term t's block survives for q iff
       ``w_qt*idf_t*f(block max_tf, min_dl) + sum_ub(q, t'!=t) >=
       theta_q``. The max-over-queries form pushes into Catalyst as a
       single per-term threshold ``f_block >= g_t`` with
       ``g_t = min_q (theta_q - rest_ub)/(w_qt*idf_t)``; the kernel then
-      re-applies the exact per-query mask. Same soundness argument as
-      :meth:`SearchEngine.bm25_topk_disjunctive`: any doc whose
-      contribution is dropped has max possible score < theta_q <= the
-      true k-th score, and every true top-k doc's blocks all survive, so
-      the output is exactly the unpruned top-k (pinned by the
-      forced-prune rank-identity test).
+      re-applies the exact per-query mask. Soundness: a doc appears in
+      exactly one block per term, so any doc whose contribution is
+      dropped has max possible score < theta_q <= the true k-th score,
+      and every true top-k doc's blocks all survive — the top-k is
+      exactly the unpruned one (pinned by the forced-prune
+      rank-identity tests); only scores BELOW it may be understated,
+      which is why theta needs a truncating caller. ``k=None``
+      (untruncated reads) or 0, ``global_stats`` (the bounds are
+      engine-local), ``min_should_match > 1`` (theta bounds the
+      unconstrained disjunction) and ``boost <= 0`` turn it off.
 
-    ``queries``: query_id -> bag of chunk terms (weights by repetition).
+    ``queries``: query_id -> bag of chunk terms (weights by repetition,
+    times ``boost``). ``min_should_match``: a disjunctive match must
+    hold at least that many distinct query terms.
 
-    Cost-based stand-down (r4 judge): the conjunctive anchor machinery
-    only engages past ``engine.conjunctive_exhaustive_cutoff`` TOTAL
-    postings across the batch's terms — below it the anchor-id fetch
+    Cost-based stand-down (r4 judge): each prune only engages past
+    ``engine.conjunctive_exhaustive_cutoff`` /
+    ``engine.disjunctive_exhaustive_cutoff`` TOTAL postings across the
+    batch's terms — below it the anchor-id fetch (or theta bootstrap)
     job plus the kernel's per-block per-query masks cost more than the
     shuffle rows they save (official r4 qps_selective: pruned 0.95x
     exhaustive at ~1.4M total postings), while the 4M rare-AND-hot
-    probe (>> cutoff) keeps its 5x. Mirrors
-    ``disjunctive_exhaustive_cutoff`` on the OR path.
+    probe (>> cutoff) keeps its 5x.
     """
-    spark = engine.spark
-    n_docs = engine.stats["n_docs"]
+    n_local = engine.stats["n_docs"]
+    n_docs = n_local
     avgdl = engine.stats["avgdl"] or 1.0
     if global_stats is not None:
         # dfs_query_then_fetch weights (see bm25_scores): n/avgdl/df
-        # come from the coordinator. The prune machinery's theta
-        # bootstrap and block-max bounds are engine-local and would mix
-        # weight systems, so cross-index batches run the exhaustive
-        # scan — still one shuffle, and the per-shard corpus is 1/N of
-        # the alias. Term PRESENCE stays local (a conjunctive query
-        # missing a term in this shard matches nothing here — docs
-        # never span shards).
-        prune = False
+        # come from the coordinator. Term PRESENCE stays local (a
+        # conjunctive query missing a term in this shard matches
+        # nothing here — docs never span shards).
         n_docs = global_stats["n_docs"]
         avgdl = global_stats["avgdl"] or 1.0
+    use_theta = (
+        not conjunctive
+        and k is not None
+        and k > 0
+        and global_stats is None
+        and min_should_match <= 1
+        and boost > 0
+    )
     k1, b = engine.cfg.bm25_k1, engine.cfg.bm25_b
 
     all_terms = sorted({t for ts in queries.values() for t in ts})
@@ -3802,19 +3318,24 @@ def _batch_scores(
     }
 
     # Active queries: weights over terms present in the index. A
-    # conjunctive query with an absent MUST term can match nothing (the
-    # old kernel scored it anyway and the n_terms check discarded every
-    # row); skip it up front — identical output, zero work.
+    # conjunctive query with an absent MUST term, or a query with fewer
+    # present terms than min_should_match, can match nothing; skip it up
+    # front — identical output, zero work.
     qids = sorted(queries)
-    q_w: dict[str, dict[str, int]] = {}
+    q_w: dict[str, dict[str, float]] = {}
     for qid in qids:
-        w: dict[str, int] = {}
+        reps: dict[str, int] = {}
         for t in queries[qid]:
-            w[t] = w.get(t, 0) + 1
-        present = {t: n for t, n in w.items() if t in info}
-        if not present or (conjunctive and len(present) < len(w)):
+            reps[t] = reps.get(t, 0) + 1
+        present = {t: n for t, n in reps.items() if t in info}
+        if (
+            not present
+            or (conjunctive and len(present) < len(reps))
+            or len(present) < min_should_match
+        ):
             continue
-        q_w[qid] = present
+        # query-side weight of each term: repetitions x boost x idf
+        q_w[qid] = {t: boost * n * idf[t] for t, n in present.items()}
     active = [q for q in qids if q in q_w]
     if not active:
         return None, [], {}
@@ -3825,46 +3346,53 @@ def _batch_scores(
     q_ranges: list = [None] * len(active)  # qidx -> (los, his) arrays
     q_ids: list = [None] * len(active)  # qidx -> exact anchor doc ids
     theta: dict[int, float] = {}
-    if prune and conjunctive:
+    if not (conjunctive or use_theta):
+        prune = False
+    if prune:
         # cost-based stand-down: when the whole batch's postings are
         # few, one exhaustive pass (already single-shuffle via the
-        # bitmask aggregation) beats paying the anchor-id fetch job and
-        # the kernel's per-block masks — leave ``anchors`` empty so the
-        # scan shape is byte-identical to prune=False
+        # bitmask aggregation) beats paying the anchor-id fetch or
+        # theta job and the kernel's per-block masks — leave
+        # ``anchors`` empty so the scan shape is byte-identical to
+        # prune=False
         total_postings = sum(
             info[t][0] for t in {t for q in active for t in q_w[q]}
         )
-        if total_postings <= engine.conjunctive_exhaustive_cutoff:
+        cutoff = (
+            engine.conjunctive_exhaustive_cutoff
+            if conjunctive
+            else engine.disjunctive_exhaustive_cutoff
+        )
+        if total_postings <= cutoff:
             prune = False
     if prune and conjunctive:
-        # Three anchor tiers per query (selectivity decides; a hot
-        # anchor's ranges cover the whole docID space and masks are pure
-        # overhead — measured +18% on a 64-query all-hot batch):
-        #   df <= anchor_ids_cutoff: posting-level filter on the
+        # Three anchor tiers per multi-term query (selectivity decides;
+        # a hot anchor's ranges cover the whole docID space and masks
+        # are pure overhead — measured +18% on a 64-query all-hot
+        # batch):
+        #   df <= _ANCHOR_IDS_CUTOFF: posting-level filter on the
         #     anchor's EXACT doc ids (see _term_doc_ids_many — block
         #     ranges skip nothing for rare-AND-hot conjunctions);
-        #   df <= anchor_df_frac * n: block-granularity range masks;
+        #   df <= _ANCHOR_DF_FRAC * n: block-granularity range masks;
         #   denser: unpruned.
         id_qs: dict[int, str] = {}
         for q in active:
+            if len(q_w[q]) < 2:
+                continue  # nothing to prune against its own anchor
             at = min(q_w[q], key=lambda t: (info[t][0], t))
             qi = qidx_of[q]
             if (
-                info[at][0] <= anchor_ids_cutoff
-                and len(q_w[q]) > 1
+                info[at][0] <= _ANCHOR_IDS_CUTOFF
                 # the posting filter can only drop the df gap: skip the
-                # id fetch for balanced-df queries (same rule as the
-                # single-query path)
+                # id fetch for balanced-df queries
                 and max(info[t][0] for t in q_w[q]) >= 4 * info[at][0]
             ):
                 anchors[qi] = at
                 id_qs[qi] = at
-            elif info[at][0] <= anchor_df_frac * n_docs:
+            elif info[at][0] <= _ANCHOR_DF_FRAC * n_local:
                 anchors[qi] = at
         if id_qs:
-            ids_map = engine._term_doc_ids_many(
-                set(id_qs.values()), cutoff=anchor_ids_cutoff
-            )
+            ids_map = engine._term_doc_ids_many(set(id_qs.values()))
             for qi, at in id_qs.items():
                 q_ids[qi] = ids_map.get(at)
                 if q_ids[qi] is not None:
@@ -3895,24 +3423,22 @@ def _batch_scores(
                     ),
                 )
     elif prune:
-        # Dense-query exemption (same rule as the single-query fast
-        # path, measured there and re-measured here — 2.06 s exhaustive
-        # vs 3.05 s "pruned" for 8 all-dense queries at 1M files): when
-        # every term of a query has df > n/2, nearly every doc is a
-        # candidate and theta lands too low to drop blocks, so the
-        # bootstrap is pure overhead. Only sparse-mix queries get a
-        # theta; if none qualify the bootstrap job is skipped entirely.
+        # Dense-query exemption (measured 2.06 s exhaustive vs 3.05 s
+        # "pruned" for 8 all-dense queries at 1M files): when every
+        # term of a query has df > n/2, nearly every doc is a candidate
+        # and theta lands too low to drop blocks, so the bootstrap is
+        # pure overhead. Only sparse-mix queries get a theta; if none
+        # qualify the bootstrap job is skipped entirely.
         for q in active:
-            if min(info[t][0] for t in q_w[q]) > 0.5 * n_docs:
+            if min(info[t][0] for t in q_w[q]) > 0.5 * n_local:
                 continue
             anchors[qidx_of[q]] = max(
                 q_w[q],
-                key=lambda t: (q_w[q][t] * idf[t] * ub_factor[t], t),
+                key=lambda t: (q_w[q][t] * ub_factor[t], t),
             )
         if anchors:
             anchor_w_idf = {
-                qi: q_w[active[qi]][t] * idf[t]
-                for qi, t in anchors.items()
+                qi: q_w[active[qi]][t] for qi, t in anchors.items()
             }
             theta = _batch_anchor_theta(engine, anchors, anchor_w_idf, k)
 
@@ -3922,19 +3448,22 @@ def _batch_scores(
     # broadcast mapping, so the public schema is unchanged.
     term_list = sorted({t for q in active for t in q_w[q]})
     term_idx = {t: i for i, t in enumerate(term_list)}
-    # conjunction check via a per-query-LOCAL bit position -> one
-    # bit_or aggregation instead of countDistinct's double exchange
-    # (see bm25_scores); global-term-id fallback past 63 terms/query
-    use_mask = conjunctive and max(len(q_w[q]) for q in active) <= 63
+    # Term membership (the conjunction, min_should_match) via a
+    # per-query-LOCAL bit position -> one bit_or aggregation instead of
+    # countDistinct: a distinct-aggregate compiles to TWO exchanges
+    # (partial on (doc_id, term), re-exchange on doc_id), doubling the
+    # shuffle. Duplicate-safe (a re-ingested doc's repeated term sets
+    # the same bit). countDistinct on the global term id only past 63
+    # terms in a query (a > 252-char value).
+    need_members = conjunctive or min_should_match > 1
+    use_mask = need_members and max(len(q_w[q]) for q in active) <= 63
     per_term: dict[int, dict] = {}
     for q in active:
         qi = qidx_of[q]
-        total_ub = sum(
-            n * idf[t] * ub_factor[t] for t, n in q_w[q].items()
-        )
+        total_ub = sum(w * ub_factor[t] for t, w in q_w[q].items())
         local_idx = {t: i for i, t in enumerate(sorted(q_w[q]))}
-        for t, n in q_w[q].items():
-            ub_t = n * idf[t] * ub_factor[t]
+        for t, w in q_w[q].items():
+            ub_t = w * ub_factor[t]
             m = per_term.setdefault(
                 term_idx[t],
                 {
@@ -3948,11 +3477,11 @@ def _batch_scores(
                 },
             )
             m["q"].append(qi)
-            m["w"].append(n * idf[t])
+            m["w"].append(w)
             m["midx"].append(
                 local_idx[t]
                 if use_mask
-                else (term_idx[t] if conjunctive else 0)
+                else (term_idx[t] if need_members else 0)
             )
             # always-pass: q doesn't range-prune, or t IS q's anchor
             m["pass"].append(qi not in anchors or anchors[qi] == t)
@@ -4317,13 +3846,13 @@ def _batch_scores(
         schema="qidx int, doc_id long, midx int, contrib double",
     )
     agg_exprs = [F.sum("contrib").alias("score")]
-    if conjunctive and use_mask:
+    if use_mask:
         agg_exprs.append(
             F.expr(
                 "bit_or(shiftleft(CAST(1 AS BIGINT), midx))"
             ).alias("tmask")
         )
-    elif conjunctive:
+    elif need_members:
         agg_exprs.append(F.countDistinct("midx").alias("n_terms"))
     agg = scored.groupBy("qidx", "doc_id").agg(*agg_exprs)
     if conjunctive and use_mask:
@@ -4344,6 +3873,10 @@ def _batch_scores(
             ]
         )
         agg = agg.where(F.col("n_terms") == need[F.col("qidx")])
+    elif need_members:
+        # Lucene minimumNumberShouldMatch: distinct matched terms
+        matched = F.bit_count("tmask") if use_mask else F.col("n_terms")
+        agg = agg.where(matched >= min_should_match)
     # tombstone mask on the candidate-sized aggregate, before the
     # caller's rank/top-k (the sharded plan masked inside its kernel)
     agg = engine._filter_live(agg)
@@ -4351,8 +3884,7 @@ def _batch_scores(
 
 
 def _batch_plan_key(
-    engine, queries, k, conjunctive, prune, frac, cutoff,
-    global_stats=None,
+    engine, queries, k, conjunctive, prune, global_stats=None,
 ):
     # the stand-down knobs are part of the compiled plan's shape; the
     # deletes epoch too — a plan compiled before a delete_docs call
@@ -4371,8 +3903,6 @@ def _batch_plan_key(
         k,
         conjunctive,
         prune,
-        frac,
-        cutoff,
         engine.conjunctive_exhaustive_cutoff,
         engine.disjunctive_exhaustive_cutoff,
         engine._deletes_epoch,
@@ -4386,8 +3916,6 @@ def bm25_topk_batch(
     k: int = 10,
     conjunctive: bool = True,
     prune: bool = True,
-    anchor_df_frac: float = 0.25,
-    anchor_ids_cutoff: int = 32768,
     global_stats: dict | None = None,
 ) -> DataFrame:
     """Bulk retrieval: top-k for MANY queries in ONE scoring job (design
@@ -4396,7 +3924,7 @@ def bm25_topk_batch(
     Returns (query_id, doc_id, score, rank) with rank 1..k per query,
     ordering identical to :meth:`SearchEngine.bm25_topk` per query.
     ``global_stats`` scores with coordinator (dfs) weights — the
-    multi-index batch path; forces the exhaustive scan (see
+    multi-index batch path; turns the theta prune off (see
     :func:`_batch_scores`).
 
     Repeated identical calls return the SAME DataFrame object from a
@@ -4411,16 +3939,14 @@ def bm25_topk_batch(
     from pyspark.sql import Window
 
     key = _batch_plan_key(
-        engine, queries, k, conjunctive, prune,
-        anchor_df_frac, anchor_ids_cutoff, global_stats,
+        engine, queries, k, conjunctive, prune, global_stats
     )
     with engine._cache_lock:
         hit = engine._batch_plan_cache.get(key)
     if hit is not None:
         return hit
     agg, active, qidx_of = _batch_scores(
-        engine, queries, k, conjunctive, prune,
-        anchor_df_frac, anchor_ids_cutoff, global_stats=global_stats,
+        engine, queries, k, conjunctive, prune, global_stats=global_stats
     )
     if agg is None:
         return _arrow_frame(engine.spark, _BATCH_SCHEMA)
@@ -4448,8 +3974,6 @@ def bm25_topk_batch_collect(
     k: int = 10,
     conjunctive: bool = True,
     prune: bool = True,
-    anchor_df_frac: float = 0.25,
-    anchor_ids_cutoff: int = 32768,
 ) -> dict:
     """Serving-path variant of :func:`bm25_topk_batch`: identical scored
     aggregation, but the final per-query top-k runs as a per-partition
@@ -4473,8 +3997,7 @@ def bm25_topk_batch_collect(
     """
     if engine.sharded is not None:
         key = ("sharded-collect", engine._layout_epoch) + _batch_plan_key(
-            engine, queries, k, conjunctive, prune,
-            anchor_df_frac, anchor_ids_cutoff,
+            engine, queries, k, conjunctive, prune
         )
         with engine._cache_lock:
             hit = engine._batch_plan_cache.get(key)
@@ -4483,7 +4006,6 @@ def bm25_topk_batch_collect(
         else:
             frame, active, qidx_of = _batch_scores(
                 engine, queries, k, conjunctive, prune,
-                anchor_df_frac, anchor_ids_cutoff,
                 source=engine.sharded, local_topk=True,
             )
             if frame is not None:
@@ -4496,8 +4018,7 @@ def bm25_topk_batch_collect(
         return _merge_topk_pdf(frame.toPandas(), active, qidx_of, k)
 
     agg, active, qidx_of = _batch_scores(
-        engine, queries, k, conjunctive, prune,
-        anchor_df_frac, anchor_ids_cutoff,
+        engine, queries, k, conjunctive, prune
     )
     if agg is None:
         return {}

@@ -382,14 +382,3 @@ def range_filter(
         )
 
     return simplify(top)
-
-
-def range_query(
-    lower: str | None,
-    upper: str | None,
-    include_lower: bool,
-    include_upper: bool,
-    cfg: HashSplitterConfig,
-) -> Node:
-    """C5: constant-score wrapper over range_filter (:532-538)."""
-    return range_filter(lower, upper, include_lower, include_upper, cfg)

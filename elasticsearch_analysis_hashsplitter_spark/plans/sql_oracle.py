@@ -50,26 +50,6 @@ chunks AS (
 )"""
 
 
-def chunks_cte_value(cfg: HashSplitterConfig, value_sql: str,
-                     docs_table: str = "documents",
-                     id_col: str = "doc_id") -> str:
-    """chunks CTE for token_mode='value' over a derived value expression
-    (e.g. ``md5(text)`` as a synthetic fixed-size hash field)."""
-    L = cfg.chunk_length
-    return f"""
-vals AS (SELECT {id_col} AS doc_id, {value_sql} AS v FROM {docs_table}),
-chunks AS (
-  SELECT doc_id,
-         substr({_q(cfg.prefixes)}, ((i - 1) % {cfg.prefix_count}) + 1, 1)
-           || substr(v, (i - 1) * {L} + 1, {L}) AS term
-  FROM (
-    SELECT doc_id, v,
-           unnest(generate_series(1, CAST(ceil(length(v) / {L}.0) AS INT))) AS i
-    FROM vals
-  ) t
-)"""
-
-
 def docs_select(node: ir.Node, cfg: HashSplitterConfig,
                 all_docs_sql: str = "SELECT DISTINCT doc_id FROM chunks") -> str:
     """Render an IR node as a SELECT of matching doc_ids over ``chunks``."""

@@ -51,7 +51,7 @@ BLOCK_SCHEMA = T.StructType(
         T.StructField("max_tf", T.IntegerType(), False),
         # block-min document length: BM25 contribution grows as dl
         # shrinks, so min_dl yields a SOUND per-term upper bound that is
-        # much tighter than the dl->0 limit (MaxScore prunes more)
+        # much tighter than the dl->0 limit (the block-max prune prunes more)
         T.StructField("min_dl", T.LongType(), False),
         T.StructField("docs", T.BinaryType(), False),
         T.StructField("tfs", T.BinaryType(), False),
@@ -147,17 +147,6 @@ def write_manifest(index_dir: str, slice_id: int, entry: dict[str, Any]) -> None
 
 def manifest_exists(index_dir: str, slice_id: int) -> bool:
     return os.path.exists(manifest_file(index_dir, slice_id))
-
-
-def read_manifests(index_dir: str) -> list[dict[str, Any]]:
-    mdir = os.path.join(index_dir, "manifest")
-    if not os.path.isdir(mdir):
-        return []
-    out = []
-    for name in sorted(os.listdir(mdir)):
-        with open(os.path.join(mdir, name)) as f:
-            out.append(json.load(f))
-    return out
 
 
 def list_postings_slices(index_dir: str) -> list[str]:

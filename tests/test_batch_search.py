@@ -140,7 +140,7 @@ def test_batch_forced_prune_rank_identity(narrow_eng, conjunctive):
         single = (
             eng.bm25_topk(_NARROW_QS[qid], k=5)
             if conjunctive
-            else eng.bm25_topk_disjunctive(_NARROW_QS[qid], k=5)
+            else eng.bm25_topk(_NARROW_QS[qid], k=5, conjunctive=False)
         ).collect()
         assert [d for d, _ in got[qid]] == [r["doc_id"] for r in single]
 
@@ -200,7 +200,7 @@ def test_batch_theta_is_sound_lower_bound(narrow_eng):
         theta = search_mod._batch_anchor_theta(
             eng, {0: anchor}, {0: w[anchor] * idf_a}, k
         )[0]
-        true = eng.bm25_topk_disjunctive(terms, k).collect()
+        true = eng.bm25_topk(terms, k, conjunctive=False).collect()
         if len(true) >= k:
             assert theta <= true[-1]["score"] + 1e-9, qid
 

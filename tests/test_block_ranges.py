@@ -1,9 +1,13 @@
-"""Block-range coarsening: `_collect_block_ranges` must ALWAYS return
-<= cap covering intervals (never abandon the prune past a block-count
-cap — at 100x scale a hot term has thousands of block rows and that is
-exactly where WAND-style skipping matters), and queries driven through
-artificially tiny caps must stay rank- and score-identical to the
-unpruned oracle (coarser intervals prune less, never wrong)."""
+"""Block-range coarsening: `SearchEngine._ranges_for_each_term` must
+ALWAYS return <= cap covering intervals per term (never abandon the
+prune past a block-count cap — at 100x scale a hot term has thousands
+of block rows and that is exactly where WAND-style skipping matters),
+and queries driven through artificially tiny caps must stay rank- and
+score-identical to the unpruned oracle (coarser intervals prune less,
+never wrong)."""
+
+import threading
+from types import SimpleNamespace
 
 import numpy as np
 import pytest
@@ -12,7 +16,6 @@ from elasticsearch_analysis_hashsplitter_spark.config import HashSplitterConfig
 from elasticsearch_analysis_hashsplitter_spark.operators import search as search_mod
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
-    _collect_block_ranges,
 )
 
 from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
@@ -47,8 +50,16 @@ def narrow(spark):
     eng = SearchEngine.from_corpus(
         df, CFG, num_partitions=4, block_size=4
     )
-    eng.disjunctive_exhaustive_cutoff = 0  # force the pruned path
+    eng.disjunctive_exhaustive_cutoff = 0  # force the pruned paths
+    eng.conjunctive_exhaustive_cutoff = 0
     return eng, OracleIndex(docs, CFG)
+
+
+def _ranges(eng, term, cap):
+    """One term's coarsened ranges at ``cap`` (ranges are cached per
+    term regardless of cap, so each cap collects afresh)."""
+    eng._block_ranges_cache.clear()
+    return eng._ranges_for_each_term([term], cap=cap)[term]
 
 
 def test_ranges_capped_and_covering(narrow):
@@ -63,7 +74,7 @@ def test_ranges_capped_and_covering(narrow):
     ]
     assert len(raw) > 8, "fixture must produce many blocks per term"
     for cap in (2, 4, 8):
-        ivs = _collect_block_ranges(blocks, cap=cap)
+        ivs = _ranges(eng, term, cap)
         assert 1 <= len(ivs) <= cap
         # covering: every block interval fully inside some returned one
         for lo, hi in raw:
@@ -87,7 +98,7 @@ def test_small_block_count_returns_exact_ranges(narrow):
         (r["min_doc"], r["max_doc"])
         for r in blocks.select("min_doc", "max_doc").collect()
     )
-    ivs = _collect_block_ranges(blocks, cap=256)
+    ivs = _ranges(eng, "Azeph", 256)
     assert len(ivs) <= len(raw)
     lows = {lo for lo, _ in raw}
     highs = {hi for _, hi in raw}
@@ -105,18 +116,23 @@ def test_range_collection_plan_is_windowless(spark):
     the assertion sees only the collection's own operators, not cached
     index-build lineage.)"""
     blocks = spark.createDataFrame(
-        [(i * 10, i * 10 + 5) for i in range(100)],
-        "min_doc long, max_doc long",
+        [("t", i * 10, i * 10 + 5) for i in range(100)],
+        "term string, min_doc long, max_doc long",
     )
-    frame = search_mod._block_ranges_frame(blocks, 8)
+    frame = search_mod._block_ranges_frame_by_term(blocks, 8)
     plan = frame._sc._jvm.PythonSQLUtils.explainString(
         frame._jdf.queryExecution(), "formatted"
     )
     assert "Window" not in plan
     assert "ntile" not in plan
     assert "Exchange" not in plan
-    # end-to-end through the same path: capped + covering
-    ivs = search_mod._collect_block_ranges(blocks, cap=8)
+    # end-to-end through the same path (the driver merge over this
+    # frame's rows): capped + covering
+    holder = SimpleNamespace(
+        postings=blocks, _cache_lock=threading.RLock(),
+        _block_ranges_cache={},
+    )
+    ivs = SearchEngine._ranges_for_each_term(holder, ["t"], cap=8)["t"]
     assert 1 <= len(ivs) <= 8
     assert ivs[0]["min_doc"] == 0 and ivs[-1]["max_doc"] == 995
 
@@ -152,22 +168,25 @@ def test_tiny_caps_stay_exact(narrow, monkeypatch, cap, query, k):
     eng, orc = narrow
     eng._block_ranges_cache.clear()  # ranges cached per engine; each
     # parametrized cap must collect its own coarsening
-    orig = _collect_block_ranges
-    monkeypatch.setattr(
-        search_mod,
-        "_collect_block_ranges",
-        lambda blocks, cap=cap: orig(blocks, cap=cap),
-    )
+    orig = SearchEngine._ranges_for_each_term
+    used = []
+
+    def capped(self, terms, cap=cap):
+        used.append(cap)
+        return orig(self, terms, cap=cap)
+
+    monkeypatch.setattr(SearchEngine, "_ranges_for_each_term", capped)
     terms = list(qc.field_query(query, CFG).terms)
     for conj in (True, False):
         want = orc.bm25_topk(terms, k, conjunctive=conj)
-        if conj:
-            got = eng.bm25_topk(terms, k).collect()
-        else:
-            got = eng.bm25_topk_disjunctive(terms, k).collect()
+        got = eng.bm25_topk(terms, k, conjunctive=conj).collect()
         assert [r["doc_id"] for r in got] == [d for d, _ in want]
         for r, (_, s) in zip(got, want):
             assert r["score"] == pytest.approx(s, abs=1e-9)
+    if query == "zephyr":
+        # balanced-df rare chunks: the anchor prunes by block ranges
+        # (the other queries anchor on exact ids, or are too dense)
+        assert used == [cap]
 
 
 def test_coarsen_intervals_properties():

@@ -1,5 +1,5 @@
-"""Disjunctive BM25 (MaxScore/block-max path) must be exactly the true
-top-k: rank- and score-identical to the pure oracle's unpruned
+"""Disjunctive BM25 (the theta/block-max pruned path) must be exactly
+the true top-k: rank- and score-identical to the pure oracle's unpruned
 evaluation, across corpora engineered so the pruning branches actually
 trigger (strong rare terms, weak common terms)."""
 
@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_analysis_hashsplitter_spark.config import HashSplitterConfig
+from elasticsearch_analysis_hashsplitter_spark.operators import search as search_mod
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
 )
@@ -45,7 +46,7 @@ def setup(spark):
         list(docs.items()), "doc_id long, content string"
     )
     eng = SearchEngine.from_corpus(df, CFG, num_partitions=4)
-    eng.disjunctive_exhaustive_cutoff = 0  # force the pruned two-phase path
+    eng.disjunctive_exhaustive_cutoff = 0  # force the theta-pruned path
     orc = OracleIndex(docs, CFG)
     return eng, orc
 
@@ -66,7 +67,7 @@ def test_disjunctive_rank_identity(setup, query, k):
     expected = orc.bm25_topk(terms, k=k, conjunctive=False)
     got = [
         (r["doc_id"], r["score"])
-        for r in eng.bm25_topk_disjunctive(terms, k=k).collect()
+        for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
     ]
     assert [d for d, _ in got] == [d for d, _ in expected], query
     for (gd, gs), (_, es) in zip(got, expected):
@@ -88,7 +89,7 @@ def test_small_k_triggers_pruning_correctly(setup):
     expected = orc.bm25_topk(terms, k=1, conjunctive=False)
     got = [
         (r["doc_id"], r["score"])
-        for r in eng.bm25_topk_disjunctive(terms, k=1).collect()
+        for r in eng.bm25_topk(terms, k=1, conjunctive=False).collect()
     ]
     assert [d for d, _ in got] == [d for d, _ in expected]
 
@@ -108,7 +109,7 @@ def narrow_setup(spark):
         list(docs.items()), "doc_id long, content string"
     )
     eng = SearchEngine.from_corpus(df, CFG, num_partitions=4, block_size=1)
-    eng.disjunctive_exhaustive_cutoff = 0  # force the pruned two-phase path
+    eng.disjunctive_exhaustive_cutoff = 0  # force the theta-pruned path
     orc = OracleIndex(docs, CFG)
     return eng, orc
 
@@ -128,7 +129,7 @@ def test_disjunctive_exact_with_narrow_blocks(narrow_setup, query, k):
     expected = orc.bm25_topk(terms, k=k, conjunctive=False)
     got = [
         (r["doc_id"], r["score"])
-        for r in eng.bm25_topk_disjunctive(terms, k=k).collect()
+        for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
     ]
     assert [d for d, _ in got] == [d for d, _ in expected], query
     for (gd, gs), (_, es) in zip(got, expected):
@@ -161,7 +162,7 @@ def test_disjunctive_strongest_plus_nonessential_doc(spark):
         expected = orc.bm25_topk(terms, k=k, conjunctive=False)
         got = [
             (r["doc_id"], r["score"])
-            for r in eng.bm25_topk_disjunctive(terms, k=k).collect()
+            for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
         ]
         assert [d for d, _ in got] == [d for d, _ in expected], k
         for (gd, gs), (_, es) in zip(got, expected):
@@ -169,53 +170,44 @@ def test_disjunctive_strongest_plus_nonessential_doc(spark):
 
 
 def test_block_max_prune_fires_and_stays_exact(narrow_setup):
-    """The block-granular MaxScore filter actually removes blocks on a
-    narrow-block index (block_size=1: every posting its own block) while
-    the returned top-k stays exact (covered by the identity tests; this
-    one proves the prune isn't a no-op)."""
+    """The block-max filter (the batch planner's per-term ``f_block``
+    threshold, which a single disjunctive top-k reaches as a batch of
+    one) actually removes blocks on a narrow-block index (block_size=1:
+    every posting its own block) while the returned top-k stays exact
+    (covered by the identity tests too; this one proves the prune
+    isn't a no-op)."""
     eng, orc = narrow_setup
-    terms = list(qc.field_query("zephyr data", CFG).terms)
-    # reproduce the internal setup: theta from the bootstrap
-    boot = eng.bm25_topk(terms, 5, conjunctive=False, _anchor=None)
-    # run the full disjunctive path first (exactness asserted elsewhere)
-    got = eng.bm25_topk_disjunctive(terms, k=5)
-    assert got.count() == 5
+    # one rare chunk + one common chunk: theta (the anchor's 5th-best
+    # contribution) clears the common term's bound, so the rare term's
+    # weak postings cannot reach the top-k
+    terms = list(qc.field_query("zeph data", CFG).terms)
+    got = [
+        (r["doc_id"], r["score"])
+        for r in eng.bm25_topk(terms, k=5, conjunctive=False).collect()
+    ]
+    expected = orc.bm25_topk(terms, k=5, conjunctive=False)
+    assert [d for d, _ in got] == [d for d, _ in expected]
+    for (gd, gs), (_, es) in zip(got, expected):
+        assert gs == pytest.approx(es, rel=1e-9), gd
 
-    # directly: with a high theta every block prunes, with theta<=0 none
-    lex = eng._term_stats(sorted(set(terms)))
-    info = {r["term"]: (r["df"], r["max_tf"], r["min_dl"]) for r in lex}
-    import math as m
-
-    n_docs = eng.stats["n_docs"]
-    k1, b = eng.cfg.bm25_k1, eng.cfg.bm25_b
-    avgdl = eng.stats["avgdl"] or 1.0
-
-    def ub(t):
-        df, mtf, mdl = info[t]
-        idf = m.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-        return idf * mtf * (k1 + 1.0) / (
-            mtf + k1 * (1.0 - b + b * mdl / avgdl)
+    def plan(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
         )
 
-    present = [t for t in sorted(set(terms)) if t in info]
-    w_idf = {
-        t: m.log(1.0 + (n_docs - info[t][0] + 0.5) / (info[t][0] + 0.5))
-        for t in present
-    }
-    ubs = {t: ub(t) for t in present}
-    blocks = eng.postings.where(F.col("term").isin(present))
-    n_all = blocks.count()
-    kept_low = eng._block_max_prune(blocks, w_idf, ubs, 1e-9).count()
-    kept_high = eng._block_max_prune(blocks, w_idf, ubs, 1e9).count()
-    assert kept_low == n_all          # tiny theta keeps everything
-    assert kept_high == 0             # impossible theta prunes everything
-    # a theta between the weakest and strongest block bound prunes SOME
-    per_block_tot = [
-        ub(t) + sum(ub(x) for x in present if x != t) for t in present
-    ]
-    mid = sorted(per_block_tot)[len(per_block_tot) // 2]
-    kept_mid = eng._block_max_prune(blocks, w_idf, ubs, mid * 0.999).count()
-    assert 0 < kept_mid <= n_all
+    def mass(df):
+        return df.agg(F.sum("score")).first()[0]
+
+    pruned, _, _ = search_mod._batch_scores(eng, {"q": terms}, 5, False, True)
+    full, _, _ = search_mod._batch_scores(eng, {"q": terms}, 5, False, False)
+    # the f_block threshold reaches the scan as a filter on block
+    # metadata; the unpruned plan never compares max_tf at all
+    assert "(max_tf#" in plan(pruned)
+    assert "(max_tf#" not in plan(full)
+    # with one posting per block, every dropped block drops a posting's
+    # contribution: the aggregate's score mass shrinks (only scores
+    # below the top-k may be understated)
+    assert mass(pruned) < mass(full) - 1e-6
 
 
 def test_pre_min_dl_index_still_exact(spark):
@@ -229,6 +221,7 @@ def test_pre_min_dl_index_still_exact(spark):
     )
     eng = SearchEngine.from_corpus(df, CFG, num_partitions=4, block_size=1)
     eng.postings = eng.postings.drop("min_dl")
+    eng.lexicon = eng.lexicon.drop("min_dl")
     eng._term_stats_cache.clear()
     orc = OracleIndex(docs, CFG)
     for query, k in [("zephyr data", 5), ("zephyr quixotic data", 5)]:
@@ -236,7 +229,7 @@ def test_pre_min_dl_index_still_exact(spark):
         expected = orc.bm25_topk(terms, k=k, conjunctive=False)
         got = [
             (r["doc_id"], r["score"])
-            for r in eng.bm25_topk_disjunctive(terms, k=k).collect()
+            for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
         ]
         assert [d for d, _ in got] == [d for d, _ in expected], query
         for (gd, gs), (_, es) in zip(got, expected):

@@ -1,7 +1,7 @@
 """The BM25 kernel (functions/bm25.py): one saturation expression that
 gives bit-identical values as a Python float, a numpy array and a
 Catalyst Column; bounds that dominate every posting they bound in
-floating point; and block-max prunes that read the same function."""
+floating point; and a block-max prune that reads the same function."""
 
 import numpy as np
 import pytest
@@ -93,9 +93,10 @@ def test_bound_dominates_every_posting(kernel_eng):
 
 
 def test_block_max_prunes_read_the_kernel_bound(kernel_eng, monkeypatch):
-    """The single-query block-max prune and the batch f_block threshold
-    both build their Catalyst bound from ``bm25.block_bound`` — and the
-    pruned answers stay identical to the exhaustive ones."""
+    """The block-max prune — the batch f_block threshold, which single
+    queries reach as a batch of one — builds its Catalyst bound from
+    ``bm25.block_bound``, and the pruned answers stay identical to the
+    exhaustive ones."""
     eng = kernel_eng
     calls = []
     orig = bm25.block_bound
@@ -106,22 +107,21 @@ def test_block_max_prunes_read_the_kernel_bound(kernel_eng, monkeypatch):
 
     monkeypatch.setattr(bm25, "block_bound", spy)
 
-    terms = ["Azeph", "Adata", "Acode"]
-    w_idf = {t: 1.0 for t in terms}
-    ub = {t: 1.0 for t in terms}
-    blocks = eng.postings.where(F.col("term").isin(terms))
-    assert eng._block_max_prune(blocks, w_idf, ub, 1e9).count() == 0
-    assert len(calls) == 1
-
     # a one-term query anchors on its own term: theta > 0 and no other
     # term's bound, so the batch prune pushes an f_block threshold
     qs = {"q": ["Azeph"]}
     pruned = bm25_topk_batch(eng, qs, k=2, conjunctive=False, prune=True)
-    assert len(calls) == 2
+    assert len(calls) == 1
     full = bm25_topk_batch(eng, qs, k=2, conjunctive=False, prune=False)
+    assert len(calls) == 1
+    single = eng.bm25_topk(qs["q"], k=2, conjunctive=False)
+    assert len(calls) == 2
 
     def ranked(frame):
         rows = sorted(frame.collect(), key=lambda r: r["rank"])
         return [(r["doc_id"], r["score"]) for r in rows]
 
     assert ranked(pruned) == ranked(full)
+    assert [(r["doc_id"], r["score"]) for r in single.collect()] == (
+        ranked(full)
+    )

@@ -90,9 +90,8 @@ def main():
 
         def fresh_engine():
             e = SearchEngine.open(spark, idx)
-            if e.lexicon is not None:
-                e.lexicon = e.lexicon.persist()
-                e.lexicon.count()
+            e.lexicon = e.lexicon.persist()
+            e.lexicon.count()
             return e
 
         eng = fresh_engine()
@@ -180,9 +179,8 @@ def main():
         out["compact_plain_seconds"] = round(time.time() - t0, 1)
 
         purged = SearchEngine.open(spark, out_purged)
-        if purged.lexicon is not None:
-            purged.lexicon = purged.lexicon.persist()
-            purged.lexicon.count()
+        purged.lexicon = purged.lexicon.persist()
+        purged.lexicon.count()
         purged.search(tokens[0], 10).collect()
         bm25_topk_batch(purged, qmap, k=10).count()
         out["battery_post_purge_seconds"] = round(battery(purged), 2)

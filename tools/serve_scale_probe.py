@@ -124,9 +124,8 @@ def main():
         t0 = time.time()
         eng = SearchEngine.open(spark, idx)
         out["open_seconds"] = round(time.time() - t0, 2)
-        if eng.lexicon is not None:
-            eng.lexicon = eng.lexicon.persist()
-            eng.lexicon.count()
+        eng.lexicon = eng.lexicon.persist()
+        eng.lexicon.count()
 
         tokens = [
             str(_VOCAB[(11 * i + 3) % len(_VOCAB)])

@@ -95,9 +95,8 @@ def main():
 
         def opened(path):
             e = SearchEngine.open(spark, path)
-            if e.lexicon is not None:
-                e.lexicon = e.lexicon.persist()
-                e.lexicon.count()
+            e.lexicon = e.lexicon.persist()
+            e.lexicon.count()
             return e
 
         tokens = [
