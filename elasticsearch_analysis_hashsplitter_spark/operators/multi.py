@@ -165,12 +165,9 @@ class MultiIndexEngine:
         after: tuple | None = None,
     ) -> DataFrame:
         """Disjunctive BM25 top-k across all indexes (docs matching ANY
-        analyzed chunk term). Each index runs its single scan + single
-        shuffle OR plan. With ``dfs`` it is unpruned: the theta prune's
-        bounds are engine-local and would mix weight systems with the
-        global weights. Without ``dfs`` each index may prune by its own
-        k-th score — its local top-k is exact, and the merge needs no
-        more."""
+        analyzed chunk term). Each index runs its exhaustive single
+        scan + single shuffle OR plan (:meth:`SearchEngine.search_any`
+        never theta-prunes)."""
         node = qc.field_query(value, self.cfg, scored=True)
         if isinstance(node, ir.MatchNone):
             return self._empty()

@@ -395,16 +395,17 @@ class SearchEngine:
         #: parquet on every call instead of scanning the persisted
         #: layout (caught by the r5 scaling probe).
         self._layout_epoch = 0
-        #: cost-based switch for disjunctive queries: below this TOTAL
-        #: posting count the exhaustive single-pass OR beats the theta
-        #: prune, whose anchor bootstrap is one more driver job over
-        #: the anchor terms' postings. The value dates from a two-phase
-        #: OR prune (0.84 s pruned vs 0.58 s single-pass for a
-        #: rare-OR-hot pair over ~0.36M postings) and has not been
-        #: re-measured for the theta prune. At corpus scale hot
-        #: disjunctions clear the cutoff immediately and keep the
-        #: pruned path. Tests that exercise the pruning machinery set
-        #: this to 0.
+        #: cost-based switch for the disjunctive theta prune of BATCH
+        #: reads (single reads never theta-prune, see
+        #: :meth:`bm25_scores`): below this TOTAL posting count the
+        #: exhaustive single-pass OR beats the prune, whose anchor
+        #: bootstrap is one more driver job over the anchor terms'
+        #: postings. Measured on the generated code corpus (local[4]):
+        #: a 4-query hash-OR-hot batch at 20k docs (~0.17M postings)
+        #: ran 0.81 s stood down vs 1.12 s pruned; single rare-OR-hot
+        #: reads at 200k docs (1.2-1.4M postings) ran 1.20-1.24 s
+        #: exhaustive vs 1.80 s pruned. Tests that exercise the
+        #: pruning machinery set this to 0.
         self.disjunctive_exhaustive_cutoff = 1_000_000
         #: tombstoned doc ids (sorted unique int64 numpy array, or None
         #: when the index has none) — the Lucene liveDocs analogue
@@ -1696,22 +1697,13 @@ class SearchEngine:
     ) -> DataFrame:
         """Disjunctive BM25 top-k (docs matching ANY chunk term of the
         analyzed value): :meth:`bm25_topk` with ``conjunctive=False``,
-        block-max pruned by the k-th-score bound theta (see
-        :func:`_batch_scores`).
+        one exhaustive scan + one shuffle OR — single reads do not
+        theta-prune (see :meth:`bm25_scores`).
 
-        ``after``: search_after pagination. Later pages run the
-        exhaustive single-pass OR — theta is a bound on the GLOBAL k-th
-        score, so page-N docs are exactly the ones the pruned plan is
-        entitled to drop.
-
-        ``must_not`` / ``filter`` / ``min_should_match`` (ES bool
-        must_not, the filtered-query shape, and
-        minimum_number_should_match) also run the exhaustive
-        single-pass OR: theta bounds the k-th score of the
-        UNCONSTRAINED disjunction, and each constraint can push the
-        true k-th among qualifying docs below that bound — a pruned
-        plan could drop a qualifying hit, so it must not run. The
-        exhaustive plan is still one scan + one shuffle."""
+        ``after``: search_after pagination. ``must_not`` / ``filter`` /
+        ``min_should_match``: ES bool must_not, the filtered-query
+        shape and minimum_number_should_match, applied on the
+        candidate-sized aggregate."""
         node = qc.field_query(value, self.cfg, scored=True)
         if isinstance(node, ir.MatchNone):
             return self._empty_scored()
@@ -2134,12 +2126,9 @@ class SearchEngine:
         ``max_pages`` bounds runaway iteration (None = to exhaustion).
 
         Every page runs the SAME scorer plan (the exhaustive
-        single-pass aggregation): mixing the theta-pruned disjunctive
-        plan for page 1 with the exhaustive plan for later pages would
-        let the cursor's boundary score differ in the last ulp between
-        the two float-summation orders and drop or repeat a boundary
-        doc — rank identity between the plans is pinned, bit identity
-        is not.
+        single-pass aggregation): two plans with different
+        float-summation orders could let the cursor's boundary score
+        differ in the last ulp and drop or repeat a boundary doc.
 
         Snapshot consistency: segment APPENDS can't be observed
         (an opened engine's file set is immutable; new segments require
@@ -2733,9 +2722,8 @@ class SearchEngine:
 
         Lucene-style BM25 (north_rule): idf = ln(1+(N-df+0.5)/(df+0.5)),
         tf-norm with k1/b from config. Term multiplicity adds weight.
-        Ties break on doc_id asc. Planned as a batch of one by
-        :func:`_batch_scores`; an unconstrained read hands it ``k``,
-        so a disjunctive query may prune by the k-th-score bound.
+        Ties break on doc_id asc. The scores are :meth:`bm25_scores`
+        (a batch of one through :func:`_batch_scores`), ranked here.
 
         ``after=(score, doc_id)``: ES search_after — only hits strictly
         after the cursor in the (score desc, doc_id asc) total order
@@ -2758,18 +2746,9 @@ class SearchEngine:
         minimumNumberShouldMatch over term clauses; chunk terms of one
         analyzed value are always distinct thanks to the position
         prefix, so distinct-term counting is clause counting).
-
-        ``after``, ``must_not``, ``filter`` and ``min_should_match``
-        each score untruncated (no theta): theta bounds the k-th score
-        of the unconstrained query, and a constraint can push the true
-        k-th among qualifying docs below it.
         """
-        constrained = (
-            after is not None or must_not is not None or filter is not None
-        )
-        scores = self._scores(
-            terms, None if constrained else k, conjunctive, boost,
-            global_stats, min_should_match,
+        scores = self.bm25_scores(
+            terms, conjunctive, boost, global_stats, min_should_match
         )
         if must_not is not None:
             ex = ir.simplify(must_not)
@@ -2810,8 +2789,8 @@ class SearchEngine:
         min_should_match: int = 1,
     ) -> DataFrame:
         """Aggregated (doc_id, score) for a bag of chunk terms —
-        :meth:`bm25_topk` without the final top-k truncation (so never
-        theta-pruned). The building block for cross-field scoring
+        :meth:`bm25_topk` without the final top-k truncation. The
+        building block for cross-field scoring
         (:meth:`~..multifield.MultiFieldEngine.search_scored` sums
         per-field score frames BEFORE ranking, which a truncated top-k
         could not support).
@@ -2824,22 +2803,20 @@ class SearchEngine:
         structural — conjunctive-membership checks, anchor selection,
         block pruning — keeps using this index's own stats, exactly as
         a Lucene shard executes a dfs-phase query: global weights,
-        local postings."""
-        return self._scores(
-            terms, None, conjunctive, boost, global_stats, min_should_match
-        )
+        local postings.
 
-    def _scores(
-        self, terms, k, conjunctive, boost, global_stats, min_should_match
-    ) -> DataFrame:
-        """One query's live (doc_id, score) frame from the batch planner
-        (``k`` None: untruncated)."""
+        Planned as a batch of one by :func:`_batch_scores` with no
+        ``k``, so only the conjunctive anchor prune can run: a
+        disjunctive read is always the exhaustive single-pass OR (the
+        theta prune costs a bootstrap job and, measured above its
+        cutoff, dropped nothing — see ``disjunctive_exhaustive_cutoff``).
+        """
         if min_should_match > 1 and conjunctive:
             raise ValueError(
                 "min_should_match applies to disjunctive scoring only"
             )
         agg, _, _ = _batch_scores(
-            self, {"q": list(terms)}, k, conjunctive, prune=True,
+            self, {"q": list(terms)}, None, conjunctive, prune=True,
             global_stats=global_stats, boost=boost,
             min_should_match=min_should_match,
         )
@@ -3207,7 +3184,7 @@ def _batch_scores(
     min_should_match: int = 1,
 ):
     """The scored-read planner — every BM25 read, a batch or a single
-    query (a batch of one, :meth:`SearchEngine.bm25_topk` /
+    query (a batch of one with ``k=None``,
     :meth:`SearchEngine.bm25_scores`): per-query prune metadata, pruned
     block scan, the vectorized scoring kernel, and the (qidx, doc_id,
     score) aggregation with the membership filter applied. Returns
@@ -3227,8 +3204,8 @@ def _batch_scores(
     shuffle-free stage (schema ``qidx, doc_id, score``), and the
     caller merges. Same prune machinery either way: the sub-block
     stats were recomputed at split time, so range masks and block-max
-    thresholds stay sound. ``min_should_match`` applies to the shuffle
-    plan only.
+    thresholds stay sound. The sharded plan needs ``k`` and takes no
+    ``min_should_match``.
 
     Per-query jobs pay scheduler + Python-worker round-trips per query;
     at serving scale (training-data mining, dedup-by-search) the right
@@ -3261,10 +3238,12 @@ def _batch_scores(
       and every true top-k doc's blocks all survive — the top-k is
       exactly the unpruned one (pinned by the forced-prune
       rank-identity tests); only scores BELOW it may be understated,
-      which is why theta needs a truncating caller. ``k=None``
-      (untruncated reads) or 0, ``global_stats`` (the bounds are
-      engine-local), ``min_should_match > 1`` (theta bounds the
-      unconstrained disjunction) and ``boost <= 0`` turn it off.
+      which is why theta needs a truncating caller — the batch reads
+      (:func:`bm25_topk_batch`, :func:`bm25_topk_batch_collect`).
+      ``k=None`` (single and untruncated reads) or 0, ``global_stats``
+      (the bounds are engine-local), ``min_should_match > 1`` (theta
+      bounds the unconstrained disjunction) and ``boost <= 0`` turn it
+      off.
 
     ``queries``: query_id -> bag of chunk terms (weights by repetition,
     times ``boost``). ``min_should_match``: a disjunctive match must
@@ -3279,6 +3258,11 @@ def _batch_scores(
     exhaustive at ~1.4M total postings), while the 4M rare-AND-hot
     probe (>> cutoff) keeps its 5x.
     """
+    if local_topk and (k is None or min_should_match > 1):
+        raise ValueError(
+            "the sharded local top-k plan needs k and takes no "
+            "min_should_match"
+        )
     n_local = engine.stats["n_docs"]
     n_docs = n_local
     avgdl = engine.stats["avgdl"] or 1.0

@@ -1,5 +1,5 @@
 """Batched multi-query BM25: per-query results must be identical to the
-single-query path (rank and score)."""
+pure-Python oracle's unpruned evaluation (rank and score)."""
 
 import pytest
 
@@ -9,7 +9,10 @@ from elasticsearch_analysis_hashsplitter_spark.operators.search import (
 )
 from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
 
+from .oracle import OracleIndex
 from .test_spark_engine import SMALL_CORPUS, TOKEN_CFG, _corpus_df
+
+ORC = OracleIndex(dict(enumerate(SMALL_CORPUS)), TOKEN_CFG)
 
 
 @pytest.fixture(scope="module")
@@ -37,13 +40,10 @@ def test_batch_matches_single(eng):
     for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
         by_q.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     for qid, terms in qs.items():
-        single = [
-            (r["doc_id"], r["score"])
-            for r in eng.bm25_topk(terms, k=5).collect()
-        ]
+        want = ORC.bm25_topk(terms, k=5)
         got = by_q.get(qid, [])
-        assert [d for d, _ in got] == [d for d, _ in single], qid
-        for (_, gs), (_, es) in zip(got, single):
+        assert [d for d, _ in got] == [d for d, _ in want], qid
+        for (_, gs), (_, es) in zip(got, want):
             assert gs == pytest.approx(es, rel=1e-9), qid
 
 
@@ -55,14 +55,13 @@ def test_batch_disjunctive(eng):
     batch = bm25_topk_batch(eng, qs, k=5, conjunctive=False)
     rows = sorted(batch.collect(), key=lambda r: (r["query_id"], r["rank"]))
     for qid, terms in qs.items():
-        single = [
-            (r["doc_id"], r["score"])
-            for r in eng.bm25_topk(terms, k=5, conjunctive=False).collect()
-        ]
+        want = ORC.bm25_topk(terms, k=5, conjunctive=False)
         got = [
             (r["doc_id"], r["score"]) for r in rows if r["query_id"] == qid
         ]
-        assert [d for d, _ in got] == [d for d, _ in single], qid
+        assert [d for d, _ in got] == [d for d, _ in want], qid
+        for (_, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, rel=1e-9), qid
 
 
 def test_batch_empty(eng):
@@ -85,16 +84,24 @@ _RNG = np.random.RandomState(13)
 _COMMON = ["data", "code", "line", "file"]
 
 
-@pytest.fixture(scope="module")
-def narrow_eng(spark):
+def _narrow_docs() -> dict[int, str]:
     docs = {}
     for i in range(150):
         toks = list(_RNG.choice(_COMMON, size=_RNG.randint(4, 20)))
         if i % 11 == 0:
             toks.append("zephyr")
         docs[i] = " ".join(toks)
+    return docs
+
+
+_NARROW_DOCS = _narrow_docs()
+_NARROW_ORC = OracleIndex(_NARROW_DOCS, TOKEN_CFG)
+
+
+@pytest.fixture(scope="module")
+def narrow_eng(spark):
     df = spark.createDataFrame(
-        list(docs.items()), "doc_id long, content string"
+        list(_NARROW_DOCS.items()), "doc_id long, content string"
     )
     eng = SearchEngine.from_corpus(df, TOKEN_CFG, num_partitions=4,
                                    block_size=4)
@@ -136,13 +143,11 @@ def test_batch_forced_prune_rank_identity(narrow_eng, conjunctive):
         assert [d for d, _ in got[qid]] == [d for d, _ in want[qid]], qid
         for (_, gs), (_, es) in zip(got[qid], want[qid]):
             assert gs == pytest.approx(es, rel=1e-12), qid
-        # and identical to the single-query path
-        single = (
-            eng.bm25_topk(_NARROW_QS[qid], k=5)
-            if conjunctive
-            else eng.bm25_topk(_NARROW_QS[qid], k=5, conjunctive=False)
-        ).collect()
-        assert [d for d, _ in got[qid]] == [r["doc_id"] for r in single]
+        # and identical to the oracle
+        want_orc = _NARROW_ORC.bm25_topk(
+            _NARROW_QS[qid], k=5, conjunctive=conjunctive
+        )
+        assert [d for d, _ in got[qid]] == [d for d, _ in want_orc]
 
 
 def test_batch_conjunctive_plan_has_range_prefilter(narrow_eng):
@@ -242,8 +247,8 @@ def test_anchor_theta_driver_rows_bounded(narrow_eng, spark):
 def test_batch_random_query_shapes_match_single(narrow_eng):
     """Seeded-random query bags over the narrow-block fixture: every
     shape (rare/hot mixes, duplicates for weighting, absent terms,
-    single-term, 1..4 terms) must match the single-query path doc-for-
-    doc in both modes with pruning on. Guards the batch kernel's mode
+    single-term, 1..4 terms) must match the oracle doc-for-doc in both
+    modes with pruning on. Guards the batch kernel's mode
     dispatch (exact-id / range / theta / stand-down) across shapes no
     hand-written case covers."""
     eng = narrow_eng
@@ -263,12 +268,10 @@ def test_batch_random_query_shapes_match_single(narrow_eng):
                 (r["doc_id"], r["score"])
             )
         for qid, terms in qmaps.items():
-            single = (
-                eng.bm25_topk(terms, k=4, conjunctive=conj)
-            ).collect()
+            want = _NARROW_ORC.bm25_topk(terms, k=4, conjunctive=conj)
             got = by_q.get(qid, [])
-            assert [d for d, _ in got] == [
-                r["doc_id"] for r in single
-            ], (conj, qid, terms)
-            for (_, gs), r in zip(got, single):
-                assert gs == pytest.approx(r["score"], rel=1e-9)
+            assert [d for d, _ in got] == [d for d, _ in want], (
+                conj, qid, terms,
+            )
+            for (_, gs), (_, ws) in zip(got, want):
+                assert gs == pytest.approx(ws, rel=1e-9)

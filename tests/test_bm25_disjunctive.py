@@ -1,7 +1,9 @@
-"""Disjunctive BM25 (the theta/block-max pruned path) must be exactly
-the true top-k: rank- and score-identical to the pure oracle's unpruned
-evaluation, across corpora engineered so the pruning branches actually
-trigger (strong rare terms, weak common terms)."""
+"""Disjunctive BM25 (the theta/block-max pruned path of the batch
+reads) must be exactly the true top-k: rank- and score-identical to the
+pure oracle's unpruned evaluation, across corpora engineered so the
+pruning branches actually trigger (strong rare terms, weak common
+terms). Single reads never theta-prune; ``test_search_any_api`` checks
+that path."""
 
 import numpy as np
 import pytest
@@ -11,6 +13,7 @@ from elasticsearch_analysis_hashsplitter_spark.config import HashSplitterConfig
 from elasticsearch_analysis_hashsplitter_spark.operators import search as search_mod
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
+    bm25_topk_batch,
 )
 from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
 
@@ -23,6 +26,15 @@ CFG = HashSplitterConfig(
 RNG = np.random.RandomState(99)
 COMMON = ["data", "code", "line", "file"]
 RARE = ["zephyr", "quixotic"]
+
+
+def _pruned_topk(eng, terms, k):
+    """A disjunctive batch of one: the read that theta-prunes."""
+    rows = bm25_topk_batch(eng, {"q": terms}, k=k, conjunctive=False)
+    return [
+        (r["doc_id"], r["score"])
+        for r in sorted(rows.collect(), key=lambda r: r["rank"])
+    ]
 
 
 def _corpus():
@@ -65,10 +77,7 @@ def test_disjunctive_rank_identity(setup, query, k):
     eng, orc = setup
     terms = list(qc.field_query(query, CFG).terms)
     expected = orc.bm25_topk(terms, k=k, conjunctive=False)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
-    ]
+    got = _pruned_topk(eng, terms, k)
     assert [d for d, _ in got] == [d for d, _ in expected], query
     for (gd, gs), (_, es) in zip(got, expected):
         assert gs == pytest.approx(es, rel=1e-9), (query, gd)
@@ -87,10 +96,7 @@ def test_small_k_triggers_pruning_correctly(setup):
     eng, orc = setup
     terms = list(qc.field_query("quixotic data code", CFG).terms)
     expected = orc.bm25_topk(terms, k=1, conjunctive=False)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in eng.bm25_topk(terms, k=1, conjunctive=False).collect()
-    ]
+    got = _pruned_topk(eng, terms, 1)
     assert [d for d, _ in got] == [d for d, _ in expected]
 
 
@@ -127,10 +133,7 @@ def test_disjunctive_exact_with_narrow_blocks(narrow_setup, query, k):
     eng, orc = narrow_setup
     terms = list(qc.field_query(query, CFG).terms)
     expected = orc.bm25_topk(terms, k=k, conjunctive=False)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
-    ]
+    got = _pruned_topk(eng, terms, k)
     assert [d for d, _ in got] == [d for d, _ in expected], query
     for (gd, gs), (_, es) in zip(got, expected):
         assert gs == pytest.approx(es, rel=1e-9), (query, gd)
@@ -156,14 +159,12 @@ def test_disjunctive_strongest_plus_nonessential_doc(spark):
         list(docs.items()), "doc_id long, content string"
     )
     eng = SearchEngine.from_corpus(df, CFG, num_partitions=4, block_size=1)
+    eng.disjunctive_exhaustive_cutoff = 0  # force the theta-pruned path
     orc = OracleIndex(docs, CFG)
     terms = list(qc.field_query("zzzz bbbb cccc", CFG).terms)
     for k in (1, 2, 3, 5):
         expected = orc.bm25_topk(terms, k=k, conjunctive=False)
-        got = [
-            (r["doc_id"], r["score"])
-            for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
-        ]
+        got = _pruned_topk(eng, terms, k)
         assert [d for d, _ in got] == [d for d, _ in expected], k
         for (gd, gs), (_, es) in zip(got, expected):
             assert gs == pytest.approx(es, rel=1e-9), (k, gd)
@@ -171,20 +172,16 @@ def test_disjunctive_strongest_plus_nonessential_doc(spark):
 
 def test_block_max_prune_fires_and_stays_exact(narrow_setup):
     """The block-max filter (the batch planner's per-term ``f_block``
-    threshold, which a single disjunctive top-k reaches as a batch of
-    one) actually removes blocks on a narrow-block index (block_size=1:
-    every posting its own block) while the returned top-k stays exact
-    (covered by the identity tests too; this one proves the prune
-    isn't a no-op)."""
+    threshold) actually removes blocks on a narrow-block index
+    (block_size=1: every posting its own block) while the returned
+    top-k stays exact (covered by the identity tests too; this one
+    proves the prune isn't a no-op)."""
     eng, orc = narrow_setup
     # one rare chunk + one common chunk: theta (the anchor's 5th-best
     # contribution) clears the common term's bound, so the rare term's
     # weak postings cannot reach the top-k
     terms = list(qc.field_query("zeph data", CFG).terms)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in eng.bm25_topk(terms, k=5, conjunctive=False).collect()
-    ]
+    got = _pruned_topk(eng, terms, 5)
     expected = orc.bm25_topk(terms, k=5, conjunctive=False)
     assert [d for d, _ in got] == [d for d, _ in expected]
     for (gd, gs), (_, es) in zip(got, expected):
@@ -223,14 +220,12 @@ def test_pre_min_dl_index_still_exact(spark):
     eng.postings = eng.postings.drop("min_dl")
     eng.lexicon = eng.lexicon.drop("min_dl")
     eng._term_stats_cache.clear()
+    eng.disjunctive_exhaustive_cutoff = 0  # force the theta-pruned path
     orc = OracleIndex(docs, CFG)
     for query, k in [("zephyr data", 5), ("zephyr quixotic data", 5)]:
         terms = list(qc.field_query(query, CFG).terms)
         expected = orc.bm25_topk(terms, k=k, conjunctive=False)
-        got = [
-            (r["doc_id"], r["score"])
-            for r in eng.bm25_topk(terms, k=k, conjunctive=False).collect()
-        ]
+        got = _pruned_topk(eng, terms, k)
         assert [d for d, _ in got] == [d for d, _ in expected], query
         for (gd, gs), (_, es) in zip(got, expected):
             assert gs == pytest.approx(es, rel=1e-9), (query, gd)

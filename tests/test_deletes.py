@@ -97,19 +97,24 @@ def test_scores_stale_and_ranks_promote(spark):
 
 def test_disjunctive_prune_sound_under_deletes(spark):
     """Force the theta prune (cutoff 0) and check the pruned
-    disjunctive top-k is rank-identical to the exhaustive single-pass
-    OR after deletes — i.e. theta bootstrapped from LIVE docs only."""
+    disjunctive batch top-k is rank-identical to the exhaustive
+    single-pass OR after deletes — i.e. theta bootstrapped from LIVE
+    docs only."""
     eng = _engine(spark)
     full = _topk(eng.bm25_topk(["Ajoin", "Ascan"], k=24, conjunctive=False))
     # delete the strongest-term docs most likely to anchor theta
     victims = [d for d, _ in full[:2]]
     eng.delete_docs(victims)
-    # below the default cutoff the disjunction runs unpruned
+    eng.disjunctive_exhaustive_cutoff = 0
+    rows = bm25_topk_batch(
+        eng, {"q": ["Ajoin", "Ascan"]}, k=5, conjunctive=False
+    ).collect()
+    pruned = [
+        (r["doc_id"], r["score"]) for r in sorted(rows, key=lambda r: r["rank"])
+    ]
     exhaustive = _topk(
         eng.bm25_topk(["Ajoin", "Ascan"], k=5, conjunctive=False)
     )
-    eng.disjunctive_exhaustive_cutoff = 0
-    pruned = _topk(eng.bm25_topk(["Ajoin", "Ascan"], k=5, conjunctive=False))
     assert [d for d, _ in pruned] == [d for d, _ in exhaustive]
     for (_, ps), (_, es) in zip(pruned, exhaustive):
         assert ps == pytest.approx(es, rel=1e-9)

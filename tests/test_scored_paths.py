@@ -4,13 +4,14 @@ batch planner (``_batch_scores``) as a batch of one.
 Every clause the single-query reads carry — ``boost``,
 ``min_should_match``, ``must_not``, ``filter``, ``after``, tombstones
 and cross-index ``global_stats`` — is checked against a pure-Python
-BM25 evaluation on both sides of the two cost-based stand-downs: the
+BM25 evaluation on both sides of the cost-based stand-downs: the
 "exhaustive" engine keeps the default cutoffs (this corpus stays below
 them, so no prune runs), the "pruned" engine forces both cutoffs to 0
-(the conjunctive anchor prune in its exact-id, block-range and dense
-tiers; the disjunctive theta / block-max prune). A job-count test pins
-what the batch planner saves a warm conjunctive read: no anchor fetch
-below the cutoff.
+(the conjunctive anchor prune runs in its exact-id, block-range and
+dense tiers; single disjunctive reads still never theta-prune — that
+prune belongs to the batch reads). A job-count test pins what the
+batch planner saves a warm conjunctive read: no anchor fetch below the
+cutoff.
 """
 
 import numpy as np
@@ -141,12 +142,12 @@ def test_search_and_search_any_match_oracle(base, side, monkeypatch):
               _oracle(orc, value, conjunctive=False)[:6],
               ("search_any", value))
     # which prunes ran: the anchor tiers leave their driver caches
-    # behind, the theta prune calls its bootstrap
+    # behind; no single read bootstraps a theta, whatever the cutoff
     pruned = side == "pruned"
     assert ("Azeph" in eng._term_docs_cache) == pruned  # exact ids
     assert ("Ajoin" in eng._block_ranges_cache) == pruned  # ranges
     assert "Adata" not in eng._block_ranges_cache  # dense: no prune
-    assert bool(thetas) == pruned
+    assert not thetas
 
 
 @pytest.mark.parametrize("side", SIDES)
@@ -221,7 +222,8 @@ def test_tombstones_masked_with_stale_scores(base, side):
 def test_global_stats_across_indexes_equal_one_index(base, side):
     """dfs_query_then_fetch over an even/odd doc split scores exactly
     like the single merged index: global weights, local postings (the
-    anchor prune stays on, the theta prune turns off)."""
+    anchor prune stays on). Without dfs each index scores with its own
+    stats, and the merge is the per-index top-k's."""
     eng, orc = base
     parts = [
         _fresh(
@@ -232,12 +234,35 @@ def test_global_stats_across_indexes_equal_one_index(base, side):
         for r in (0, 1)
     ]
     multi = MultiIndexEngine(parts, ["even", "odd"])
+    local_orcs = [
+        OracleIndex({d: v for d, v in DOCS.items() if d % 2 == r}, CFG)
+        for r in (0, 1)
+    ]
     for value in VALUES:
         _same(_rows(multi.search(value, k=6)),
               _oracle(orc, value)[:6], ("search", value))
         _same(_rows(multi.search_any(value, k=6)),
               _oracle(orc, value, conjunctive=False)[:6],
               ("search_any", value))
+        local = sorted(
+            (x for o in local_orcs
+             for x in _oracle(o, value, conjunctive=False)[:6]),
+            key=lambda x: (-x[1], x[0]),
+        )
+        _same(_rows(multi.search_any(value, k=6, dfs=False)), local[:6],
+              ("search_any dfs=False", value))
+
+
+def test_sharded_plan_rejects_untruncated_and_min_should_match(base):
+    """The doc-sharded local top-k needs ``k`` and has no
+    min_should_match check: both shapes are refused, not misanswered."""
+    eng, _ = base
+    for k, msm in ((None, 1), (5, 2)):
+        with pytest.raises(ValueError):
+            search_mod._batch_scores(
+                eng, {"q": _terms("zeph quix spar")}, k, False, True,
+                local_topk=True, min_should_match=msm,
+            )
 
 
 def test_warm_search_with_cold_anchor_costs_two_jobs(base):

@@ -18,6 +18,7 @@ from elasticsearch_analysis_hashsplitter_spark.operators.build import (
 )
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
+    bm25_topk_batch,
 )
 from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
 from elasticsearch_analysis_hashsplitter_spark.sources import catalog
@@ -259,7 +260,11 @@ def test_pre_min_dl_index_reads_without_null_bounds(spark, tmp_path):
     # through the block-max prune, which null min_dl bounds would empty
     for query, k in (("zephyr quixo", 3), ("zephyr data", 5), ("zephyr", 3)):
         terms = list(qc.field_query(query, CFG, scored=True).terms)
+        pruned = bm25_topk_batch(
+            eng, {"q": terms}, k=k, conjunctive=False
+        ).orderBy("rank")
         for conj, got in (
+            (False, pruned),
             (False, eng.search_any(query, k=k)),
             (True, eng.search(query, k=k)),
         ):
