@@ -55,6 +55,13 @@ _BITS_SCHEMA = T.StructType(
     ]
 )
 
+_SCORED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("score", T.DoubleType(), False),
+    ]
+)
+
 #: max intervals rendered into ONE Catalyst OR-predicate. Driver-side
 #: analysis + codegen cost grows with expression size: measured ~2.5 s
 #: PER QUERY at 256 intervals vs negligible at 32 (the predicate runs
@@ -151,6 +158,36 @@ def _live_mask(ids: np.ndarray, deleted: np.ndarray) -> np.ndarray:
     liveDocs bitset test, applied to decoded posting arrays."""
     pos = np.minimum(np.searchsorted(deleted, ids), deleted.size - 1)
     return deleted[pos] != ids
+
+
+def _reduce_scores(q, d, mi, c, need, deleted):
+    """Per-(qidx, doc_id) scores from the scoring kernel's (qidx,
+    doc_id, midx, contrib) posting rows — the one numpy reduction of
+    both plans that score without a shuffle (the driver plan and the
+    doc-sharded local top-k of :func:`_batch_scores`).
+
+    Contributions sum in local-term (``midx``) order, so a score does
+    not depend on the order blocks arrive in. A group survives when it
+    holds at least ``need[qidx]`` distinct terms (every term of a
+    conjunction, ``min_should_match`` of a disjunction) and its doc is
+    not in ``deleted`` (sorted tombstones, or None). Returns (qidx,
+    doc_id, score) sorted by (qidx, doc_id)."""
+    if not q.size:
+        return q, d, c
+    order = np.lexsort((mi, d, q))
+    q, d, mi, c = q[order], d[order], mi[order], c[order]
+    new = np.empty(q.size, dtype=bool)
+    new[0] = True
+    new[1:] = (q[1:] != q[:-1]) | (d[1:] != d[:-1])
+    starts = np.flatnonzero(new)
+    # a doc re-ingested without a purge repeats a term: count it once
+    distinct = new.copy()
+    distinct[1:] |= mi[1:] != mi[:-1]
+    gq, gd = q[starts], d[starts]
+    keep = np.add.reduceat(distinct.astype(np.int64), starts) >= need[gq]
+    if deleted is not None:
+        keep &= _live_mask(gd, deleted)
+    return gq[keep], gd[keep], np.add.reduceat(c, starts)[keep]
 
 
 def _decode_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -2416,17 +2453,29 @@ class SearchEngine:
     _DOC_IDS_INLINE_MAX = 1024
 
     #: doc-set filters run on the driver (:meth:`_driver_doc_ids`) when
-    #: the index's total postings are at most this. Set at the measured
-    #: crossover of the broadest filters — a one-leaf scan decoding
-    #: every posting and the 29-leaf full range — on md5 indexes of
-    #: singleton blocks (the costliest decode per posting), driver and
-    #: distributed paths alternated on one index, median of 4 pairs,
-    #: local[4] on 4 vCPUs: at 24k postings the driver path ran 0.67 vs
-    #: 0.62 s and 1.24 vs 1.39 s, at 32k 1.13 vs 0.72 s and 1.78 vs
-    #: 1.49 s (it loses). Term and 1-char prefix filters win 3-4x at every size
-    #: measured (8k-64k), so the bound costs selective filters on
-    #: larger indexes their driver answer; batched decode would move it.
-    _DRIVER_DOCSET_MAX_POSTINGS = 24_000
+    #: the index's total postings are at most this, and exhaustive
+    #: scored reads (:func:`_batch_scores`) when their own terms'
+    #: postings are. Set at the measured crossover of the broadest
+    #: filters — a one-leaf scan decoding every posting and the 29-leaf
+    #: full range — on md5 indexes of singleton blocks (the costliest
+    #: decode per posting), driver and distributed paths alternated on
+    #: one index, median of 4 pairs, local[4] on 4 vCPUs: at 24k
+    #: postings the driver path ran 0.67 vs 0.62 s and 1.24 vs 1.39 s,
+    #: at 32k 1.13 vs 0.72 s and 1.78 vs 1.49 s (it loses). Term and
+    #: 1-char prefix filters win 3-4x at every size measured (8k-64k),
+    #: so the bound costs selective filters on larger indexes their
+    #: driver answer; batched decode would move it.
+    #: Scored reads cross over later on both block shapes, so the
+    #: filter crossover binds: served batches (bm25_topk_batch_collect,
+    #: k=10, warm term stats, driver vs distributed exhaustive
+    #: alternated, median of 4 after a warm-up, local[4] on 4 vCPUs) on
+    #: a 30k-md5 index of singleton blocks ran 1.61 vs 2.41 s at 2.9k
+    #: summed df (250 queries), 6.76 vs 6.96 s at 11.5k, 10.5 vs 12.9 s
+    #: at 22.7k and 14.2 vs 17.9 s at 33.7k (3000 queries); one
+    #: disjunctive read of 1-20 hot words on 6k generated code files
+    #: (large blocks) ran 0.09-0.13 vs 0.55-0.71 s from 10k to 135k
+    #: summed df.
+    _DRIVER_MAX_POSTINGS = 24_000
 
     def _leaf_docs(self, leaf: ir.Node) -> DataFrame:
         if isinstance(leaf, ir.DocIds):
@@ -2464,7 +2513,8 @@ class SearchEngine:
 
         * driver — when the index's total postings (``total_terms``, an
           upper bound known since open) are at most
-          ``_DRIVER_DOCSET_MAX_POSTINGS``: the scan is collected as
+          ``_DRIVER_MAX_POSTINGS`` (the bound scored reads share, on
+          their own terms' postings): the scan is collected as
           Arrow in ONE JVM-only job, decoded, combined and masked on the
           driver, and the answer comes back as a local (Arrow-built)
           frame whose collect starts no job (:meth:`_driver_doc_ids`);
@@ -2545,7 +2595,7 @@ class SearchEngine:
         tree and the tombstone mask are applied to the arrays. The
         driver decodes serially what the distributed path decodes on
         every executor core, so the path pays off only while the decode
-        is small; ``_DRIVER_DOCSET_MAX_POSTINGS`` bounds it for every
+        is small; ``_DRIVER_MAX_POSTINGS`` bounds it for every
         filter, however broad.
         """
         node = ir.simplify(node)
@@ -2553,7 +2603,7 @@ class SearchEngine:
             return np.empty(0, dtype=np.int64)
         if (
             not self._one_scan(node)
-            or self.stats["total_terms"] > self._DRIVER_DOCSET_MAX_POSTINGS
+            or self.stats["total_terms"] > self._DRIVER_MAX_POSTINGS
         ):
             return None
         tree = ir.bit_tree(node)
@@ -2696,15 +2746,7 @@ class SearchEngine:
     # BM25 scored path
     # ------------------------------------------------------------------
     def _empty_scored(self) -> DataFrame:
-        return _arrow_frame(
-            self.spark,
-            T.StructType(
-                [
-                    T.StructField("doc_id", T.LongType(), False),
-                    T.StructField("score", T.DoubleType(), False),
-                ]
-            ),
-        )
+        return _arrow_frame(self.spark, _SCORED_SCHEMA)
 
     def bm25_topk(
         self,
@@ -2725,11 +2767,20 @@ class SearchEngine:
         Ties break on doc_id asc. The scores are :meth:`bm25_scores`
         (a batch of one through :func:`_batch_scores`), ranked here.
 
+        A read whose terms hold at most ``_DRIVER_MAX_POSTINGS``
+        postings is scored on the driver (one JVM-only Arrow scan, no
+        shuffle — see :func:`_batch_scores`) and ranked with numpy;
+        ``after`` and every ``must_not``/``filter`` tree
+        :meth:`_driver_doc_ids` answers apply as numpy masks, and the
+        result is a local frame whose collect starts no job. That path
+        is EAGER, like :meth:`docs`' driver path: its job runs inside
+        this call. Larger reads return a lazy distributed plan.
+
         ``after=(score, doc_id)``: ES search_after — only hits strictly
         after the cursor in the (score desc, doc_id asc) total order
-        enter the top-k. A Catalyst predicate on the candidate-sized
-        aggregate, so page N costs the same one scan + one shuffle as
-        page 1 (never OFFSET's sort-everything-and-drop).
+        enter the top-k. A predicate on the candidate-sized aggregate,
+        so page N costs the same as page 1 (never OFFSET's
+        sort-everything-and-drop).
 
         ``global_stats``: see :meth:`bm25_scores` — cross-index
         (dfs_query_then_fetch) scoring weights.
@@ -2747,27 +2798,53 @@ class SearchEngine:
         analyzed value are always distinct thanks to the position
         prefix, so distinct-term counting is clause counting).
         """
-        scores = self.bm25_scores(
+        scores = self._scores(
             terms, conjunctive, boost, global_stats, min_should_match
         )
-        if must_not is not None:
-            ex = ir.simplify(must_not)
-            if not isinstance(ex, ir.MatchNone):
-                scores = scores.join(
-                    self._docs_inner(ex), "doc_id", "left_anti"
+        ex = None if must_not is None else ir.simplify(must_not)
+        if isinstance(ex, ir.MatchNone):
+            ex = None
+        # ES filtered query {query, filter}: the filter restricts
+        # membership but never contributes to the score (Lucene
+        # FilteredQuery). Candidate-sized semi-join, same soundness
+        # argument as must_not.
+        fl = None if filter is None else ir.simplify(filter)
+        if isinstance(fl, ir.MatchAll):
+            fl = None
+        if scores is None or isinstance(fl, ir.MatchNone):
+            return self._empty_scored()
+        if isinstance(scores, tuple):
+            # driver-scored: ``after`` and every clause the driver
+            # answers (:meth:`_driver_doc_ids`) are numpy masks; a
+            # clause it cannot answer joins the local frame below
+            d, s = scores
+            keep = np.ones(d.size, dtype=bool)
+            if after is not None:
+                a_s, a_d = float(after[0]), int(after[1])
+                keep &= (s < a_s) | ((s == a_s) & (d > a_d))
+                after = None
+            ids = None if ex is None else self._driver_doc_ids(ex)
+            if ids is not None:
+                keep &= ~np.isin(d, ids)
+                ex = None
+            ids = None if fl is None else self._driver_doc_ids(fl)
+            if ids is not None:
+                keep &= np.isin(d, ids)
+                fl = None
+            d, s = d[keep], s[keep]
+            if ex is None and fl is None:
+                top = np.lexsort((d, -s))[:k]
+                return _arrow_frame(
+                    self.spark, _SCORED_SCHEMA,
+                    {"doc_id": d[top], "score": s[top]},
                 )
-        if filter is not None:
-            # ES filtered query {query, filter}: the filter restricts
-            # membership but never contributes to the score (Lucene
-            # FilteredQuery). Candidate-sized semi-join, same soundness
-            # argument as must_not.
-            fl = ir.simplify(filter)
-            if isinstance(fl, ir.MatchNone):
-                return self._empty_scored()
-            if not isinstance(fl, ir.MatchAll):
-                scores = scores.join(
-                    self._docs_inner(fl), "doc_id", "left_semi"
-                )
+            scores = _arrow_frame(
+                self.spark, _SCORED_SCHEMA, {"doc_id": d, "score": s}
+            )
+        if ex is not None:
+            scores = scores.join(self._docs_inner(ex), "doc_id", "left_anti")
+        if fl is not None:
+            scores = scores.join(self._docs_inner(fl), "doc_id", "left_semi")
         if after is not None:
             s, d = float(after[0]), int(after[1])
             scores = scores.where(
@@ -2810,7 +2887,27 @@ class SearchEngine:
         disjunctive read is always the exhaustive single-pass OR (the
         theta prune costs a bootstrap job and, measured above its
         cutoff, dropped nothing — see ``disjunctive_exhaustive_cutoff``).
+        An exhaustive read within ``_DRIVER_MAX_POSTINGS`` is scored on
+        the driver, eagerly, and comes back as a local frame.
         """
+        scores = self._scores(
+            terms, conjunctive, boost, global_stats, min_should_match
+        )
+        if scores is None:
+            return self._empty_scored()
+        if isinstance(scores, tuple):
+            return _arrow_frame(
+                self.spark, _SCORED_SCHEMA,
+                {"doc_id": scores[0], "score": scores[1]},
+            )
+        return scores
+
+    def _scores(
+        self, terms, conjunctive, boost, global_stats, min_should_match
+    ):
+        """:meth:`bm25_scores` before it becomes a frame: None when
+        nothing can match, (doc_id, score) arrays when the read ran on
+        the driver, else the distributed (doc_id, score) frame."""
         if min_should_match > 1 and conjunctive:
             raise ValueError(
                 "min_should_match applies to disjunctive scoring only"
@@ -2821,7 +2918,9 @@ class SearchEngine:
             min_should_match=min_should_match,
         )
         if agg is None:
-            return self._empty_scored()
+            return None
+        if isinstance(agg, tuple):
+            return agg[1], agg[2]
         return agg.select("doc_id", "score")
 
 
@@ -2830,8 +2929,10 @@ class ServeCoalescer:
     :meth:`SearchEngine.serve`: client threads enqueue (value, future)
     pairs; a single dispatcher thread blocks for the first request,
     drains everything else queued within ``window_ms`` (or up to
-    ``max_batch``), runs ONE :func:`bm25_topk_batch_collect` job for
-    the whole batch, and resolves each client's future. While a batch
+    ``max_batch``), runs ONE :func:`bm25_topk_batch_collect` call for
+    the whole batch — one Spark job (the Arrow scan) when the batch's
+    postings fit the driver plan of :func:`_batch_scores`, a scan and a
+    shuffle above it — and resolves each client's future. While a batch
     executes, newly arriving requests accumulate — the next batch
     starts the moment the current one resolves, so the pipeline never
     idles and batch size adapts to load (1 under light load, up to
@@ -3188,11 +3289,29 @@ def _batch_scores(
     :meth:`SearchEngine.bm25_scores`): per-query prune metadata, pruned
     block scan, the vectorized scoring kernel, and the (qidx, doc_id,
     score) aggregation with the membership filter applied. Returns
-    ``(agg_frame | None, active_query_ids, qidx_of)`` — ``None`` when
-    no query can match anything. Also consumed by
-    :func:`bm25_topk_batch` (Window rank, DataFrame out — the gate /
-    analytics surface) and :func:`bm25_topk_batch_collect` (partition
-    top-k combine + driver merge — the serving surface).
+    ``(scores | None, active_query_ids, qidx_of)`` — ``None`` when no
+    query can match anything. Also consumed by
+    :func:`bm25_topk_batch` (rank, DataFrame out — the gate / analytics
+    surface) and :func:`bm25_topk_batch_collect` (per-query top-k +
+    driver merge — the serving surface).
+
+    ``scores`` comes from one of three plans:
+
+    * driver — when no prune runs (the cost-based stand-down below, or
+      ``prune=False``), the plan is not the sharded one, and the
+      active queries' terms hold at most
+      ``SearchEngine._DRIVER_MAX_POSTINGS`` postings (their lexicon
+      ``df`` sum — known from the term-stats cache, so the test costs
+      no job): the blocks are collected with ``toArrow()`` in ONE
+      JVM-only job, the same ``_score_pdf`` kernel scores them and
+      :func:`_reduce_scores` sums, membership-checks and
+      tombstone-masks them. ``scores`` is then a tuple of numpy arrays
+      ``(qidx, doc_id, score)`` sorted by (qidx, doc_id). EAGER: the
+      job runs inside this call.
+    * distributed — otherwise: the kernel runs in ``mapInPandas`` and
+      one shuffle aggregates (qidx, doc_id); ``scores`` is that lazy
+      frame.
+    * doc-sharded — see below.
 
     ``source``/``local_topk`` select the doc-sharded serving plan
     (:meth:`SearchEngine.enable_serving_layout`): with ``source`` set
@@ -3330,6 +3449,11 @@ def _batch_scores(
     q_ranges: list = [None] * len(active)  # qidx -> (los, his) arrays
     q_ids: list = [None] * len(active)  # qidx -> exact anchor doc ids
     theta: dict[int, float] = {}
+    # postings of the batch's terms: the lexicon df sums, already in
+    # ``info`` (term-stats cache), so sizing the read costs no job
+    total_postings = sum(
+        info[t][0] for t in {t for q in active for t in q_w[q]}
+    )
     if not (conjunctive or use_theta):
         prune = False
     if prune:
@@ -3339,9 +3463,6 @@ def _batch_scores(
         # theta job and the kernel's per-block masks — leave
         # ``anchors`` empty so the scan shape is byte-identical to
         # prune=False
-        total_postings = sum(
-            info[t][0] for t in {t for q in active for t in q_w[q]}
-        )
         cutoff = (
             engine.conjunctive_exhaustive_cutoff
             if conjunctive
@@ -3349,6 +3470,13 @@ def _batch_scores(
         )
         if total_postings <= cutoff:
             prune = False
+    # the exhaustive plan of a small read runs on the driver (see the
+    # return below); the pruned and the sharded plans stay distributed
+    on_driver = (
+        source is None
+        and not prune
+        and total_postings <= engine._DRIVER_MAX_POSTINGS
+    )
     if prune and conjunctive:
         # Three anchor tiers per multi-term query (selectivity decides;
         # a hot anchor's ranges cover the whole docID space and masks
@@ -3416,10 +3544,15 @@ def _batch_scores(
         for q in active:
             if min(info[t][0] for t in q_w[q]) > 0.5 * n_local:
                 continue
-            anchors[qidx_of[q]] = max(
-                q_w[q],
-                key=lambda t: (q_w[q][t] * ub_factor[t], t),
-            )
+            ub = {t: w * ub_factor[t] for t, w in q_w[q].items()}
+            at = max(ub, key=lambda t: (ub[t], t))
+            # theta_q <= ub_at, and a block of t survives while its
+            # bound plus the other terms' summed bounds reach theta_q:
+            # when those of at's siblings alone reach ub_at (a word of
+            # several chunk terms), no block can drop — skip the query
+            if sum(ub.values()) - ub[at] >= ub[at]:
+                continue
+            anchors[qidx_of[q]] = at
         if anchors:
             anchor_w_idf = {
                 qi: q_w[active[qi]][t] for qi, t in anchors.items()
@@ -3433,12 +3566,13 @@ def _batch_scores(
     term_list = sorted({t for q in active for t in q_w[q]})
     term_idx = {t: i for i, t in enumerate(term_list)}
     # Term membership (the conjunction, min_should_match) via a
-    # per-query-LOCAL bit position -> one bit_or aggregation instead of
+    # per-query-LOCAL term index ``midx`` (sorted-term order) -> on the
+    # shuffle plan, a bit position in one bit_or aggregation instead of
     # countDistinct: a distinct-aggregate compiles to TWO exchanges
     # (partial on (doc_id, term), re-exchange on doc_id), doubling the
     # shuffle. Duplicate-safe (a re-ingested doc's repeated term sets
-    # the same bit). countDistinct on the global term id only past 63
-    # terms in a query (a > 252-char value).
+    # the same bit). countDistinct only past 63 terms in a query (a >
+    # 252-char value).
     need_members = conjunctive or min_should_match > 1
     use_mask = need_members and max(len(q_w[q]) for q in active) <= 63
     per_term: dict[int, dict] = {}
@@ -3462,11 +3596,7 @@ def _batch_scores(
             )
             m["q"].append(qi)
             m["w"].append(w)
-            m["midx"].append(
-                local_idx[t]
-                if use_mask
-                else (term_idx[t] if need_members else 0)
-            )
+            m["midx"].append(local_idx[t])
             # always-pass: q doesn't range-prune, or t IS q's anchor
             m["pass"].append(qi not in anchors or anchors[qi] == t)
             # exact-id posting filter applies to q's NON-anchor terms
@@ -3583,9 +3713,10 @@ def _batch_scores(
 
     def _score_pdf(pdf: pd.DataFrame):
         """Per-Arrow-batch scoring body shared by the shuffle plan
-        (score_fn) and the doc-sharded local plan (score_local_fn):
-        returns concatenated (qidx, doc_id, midx, contrib) arrays, or
-        None when no posting of this batch survives the masks."""
+        (score_fn), the doc-sharded local plan (score_local_fn) and the
+        driver plan: returns concatenated (qidx, doc_id, midx, contrib)
+        arrays, or None when no posting of this batch survives the
+        masks."""
         qidx_l, docs_l, tidx_l, contrib_l = [], [], [], []
         for term, sub in pdf.groupby("term", sort=False):
             ti = term_idx[term]
@@ -3728,16 +3859,28 @@ def _batch_scores(
                 }
             )
 
+    # membership each (query, doc) group needs, for _reduce_scores
+    need = np.asarray(
+        [len(q_w[q]) if conjunctive else min_should_match for q in active],
+        dtype=np.int64,
+    )
+    if on_driver:
+        # one JVM-only Arrow collect of the blocks (no Python worker, no
+        # shuffle), then the same kernel and reduction on the driver.
+        # EAGER: the job runs here, inside the caller's call
+        r = _score_pdf(blocks.select(*cols).toArrow().to_pandas())
+        if r is None:
+            r = (
+                np.empty(0, dtype=np.int32), np.empty(0, dtype=np.int64),
+                np.empty(0, dtype=np.int32), np.empty(0, dtype=np.float64),
+            )
+        return _reduce_scores(*r, need, engine._deleted), active, qidx_of
+
     if local_topk:
         # doc-sharded plan: all of a doc's postings are in this
         # partition, so aggregate + conjunction-check + top-k locally.
         # Per-task memory is the shard's slice of the query terms'
         # postings — the same rows the shuffle plan would move.
-        need_arr = np.zeros(len(active), dtype=np.int64)
-        for q in active:
-            need_arr[qidx_of[q]] = (
-                ((1 << len(q_w[q])) - 1) if use_mask else len(q_w[q])
-            )
         # tombstones must be masked INSIDE the task, before the local
         # top-k — a deleted doc could otherwise displace a live one
         # from a shard's k rows and no later filter could recover it
@@ -3746,57 +3889,14 @@ def _batch_scores(
         def score_local_fn(
             batches: Iterator[pd.DataFrame],
         ) -> Iterator[pd.DataFrame]:
-            qs, ds, ms, cs = [], [], [], []
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                r = _score_pdf(pdf)
-                if r is not None:
-                    qs.append(r[0])
-                    ds.append(r[1])
-                    ms.append(r[2])
-                    cs.append(r[3])
-            if not ds:
+            rs = [_score_pdf(pdf) for pdf in batches if len(pdf)]
+            rs = [r for r in rs if r is not None]
+            if not rs:
                 return
-            q = np.concatenate(qs)
-            d = np.concatenate(ds)
-            mi = np.concatenate(ms)
-            c = np.concatenate(cs)
-            order = np.lexsort((d, q))
-            q, d, mi, c = q[order], d[order], mi[order], c[order]
-            new = np.empty(q.size, dtype=bool)
-            new[0] = True
-            new[1:] = (q[1:] != q[:-1]) | (d[1:] != d[:-1])
-            starts = np.flatnonzero(new)
-            score = np.add.reduceat(c, starts)
-            gq, gd = q[starts], d[starts]
-            if conjunctive:
-                if use_mask:
-                    bits = np.int64(1) << mi.astype(np.int64)
-                    got = np.bitwise_or.reduceat(bits, starts)
-                else:
-                    # >63-terms fallback: distinct-midx count per
-                    # (q, doc) group — dedupe sorted (group, midx)
-                    # pairs, then sum the "first of pair" flags per
-                    # group (groups stay contiguous + in order under
-                    # the stable secondary sort)
-                    gi = np.cumsum(new) - 1
-                    o2 = np.lexsort((mi, gi))
-                    g2, m2 = gi[o2], mi[o2]
-                    first = np.empty(g2.size, dtype=bool)
-                    first[0] = True
-                    first[1:] = (g2[1:] != g2[:-1]) | (m2[1:] != m2[:-1])
-                    gstart = np.flatnonzero(
-                        np.concatenate(([True], g2[1:] != g2[:-1]))
-                    )
-                    got = np.add.reduceat(
-                        first.astype(np.int64), gstart
-                    )
-                keep = got == need_arr[gq]
-                gq, gd, score = gq[keep], gd[keep], score[keep]
-            if del_bc is not None and gq.size:
-                keep = _live_mask(gd, del_bc.value)
-                gq, gd, score = gq[keep], gd[keep], score[keep]
+            gq, gd, score = _reduce_scores(
+                *(np.concatenate(x) for x in zip(*rs)),
+                need, None if del_bc is None else del_bc.value,
+            )
             if not gq.size:
                 return
             qb = np.flatnonzero(
@@ -3870,8 +3970,9 @@ def _batch_scores(
 def _batch_plan_key(
     engine, queries, k, conjunctive, prune, global_stats=None,
 ):
-    # the stand-down knobs are part of the compiled plan's shape; the
-    # deletes epoch too — a plan compiled before a delete_docs call
+    # the stand-down knobs and the driver bound are part of the
+    # compiled plan's shape; the deletes epoch too — a plan compiled
+    # before a delete_docs call
     # embeds the OLD tombstone mask (literal/broadcast/kernel closure)
     # and must never serve afterwards. Coordinator (dfs) weights embed
     # in the kernel closures, so they key the plan too.
@@ -3889,6 +3990,7 @@ def _batch_plan_key(
         prune,
         engine.conjunctive_exhaustive_cutoff,
         engine.disjunctive_exhaustive_cutoff,
+        engine._DRIVER_MAX_POSTINGS,
         engine._deletes_epoch,
         gs_key,
     )
@@ -3934,19 +4036,36 @@ def bm25_topk_batch(
     )
     if agg is None:
         return _arrow_frame(engine.spark, _BATCH_SCHEMA)
-    w = Window.partitionBy("qidx").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    ranked = (
-        agg.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-    qmap = engine.spark.createDataFrame(
-        [(qidx_of[q], q) for q in active], "qidx int, query_id string"
-    )
-    out = ranked.join(F.broadcast(qmap), "qidx").select(
-        "query_id", "doc_id", "score", "rank"
-    )
+    if isinstance(agg, tuple):
+        # driver-scored: rank in numpy — (qidx, score desc, doc_id asc)
+        q, d, s = agg
+        order = np.lexsort((d, -s, q))
+        q = q[order]
+        rank = np.arange(q.size) - np.searchsorted(q, q) + 1
+        top = order[rank <= k]
+        out = _arrow_frame(
+            engine.spark, _BATCH_SCHEMA,
+            {
+                "query_id": np.asarray(active, dtype=object)[agg[0][top]],
+                "doc_id": d[top],
+                "score": s[top],
+                "rank": rank[rank <= k].astype(np.int32),
+            },
+        )
+    else:
+        w = Window.partitionBy("qidx").orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        )
+        ranked = (
+            agg.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k)
+        )
+        qmap = engine.spark.createDataFrame(
+            [(qidx_of[q], q) for q in active], "qidx int, query_id string"
+        )
+        out = ranked.join(F.broadcast(qmap), "qidx").select(
+            "query_id", "doc_id", "score", "rank"
+        )
     with engine._cache_lock:
         engine._batch_plan_cache[key] = out
     return out
@@ -3978,6 +4097,11 @@ def bm25_topk_batch_collect(
     the identical driver merge finishes. Repeated batches reuse the
     compiled plan from the engine's plan cache — the serving
     steady-state pays only execution.
+
+    A batch that runs no prune and whose terms hold at most
+    ``SearchEngine._DRIVER_MAX_POSTINGS`` postings is scored on the
+    driver (:func:`_batch_scores`) and goes straight to the driver
+    merge: one Arrow scan job, no combine stage and no shuffle.
     """
     if engine.sharded is not None:
         key = ("sharded-collect", engine._layout_epoch) + _batch_plan_key(
@@ -4006,6 +4130,11 @@ def bm25_topk_batch_collect(
     )
     if agg is None:
         return {}
+    if isinstance(agg, tuple):
+        return _merge_topk_pdf(
+            pd.DataFrame(dict(zip(("qidx", "doc_id", "score"), agg))),
+            active, qidx_of, k,
+        )
 
     def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         accd: dict[int, np.ndarray] = {}

@@ -150,11 +150,14 @@ def test_batch_forced_prune_rank_identity(narrow_eng, conjunctive):
         assert [d for d, _ in got[qid]] == [d for d, _ in want_orc]
 
 
-def test_batch_conjunctive_plan_has_range_prefilter(narrow_eng):
+def test_batch_conjunctive_plan_has_range_prefilter(narrow_eng, monkeypatch):
     """The coarse Catalyst prefilter must reach the scan: the pruned
     plan filters on block docID metadata (min_doc/max_doc) before any
     decode; the unpruned plan never reads those columns at all."""
     eng = narrow_eng
+    # the unpruned side is the distributed exhaustive plan, not the
+    # driver plan that small exhaustive reads take
+    monkeypatch.setattr(eng, "_DRIVER_MAX_POSTINGS", 0)
     qs = {"q": ["Azeph", "Adata"]}
 
     def plan(df):

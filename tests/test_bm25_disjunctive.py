@@ -170,13 +170,16 @@ def test_disjunctive_strongest_plus_nonessential_doc(spark):
             assert gs == pytest.approx(es, rel=1e-9), (k, gd)
 
 
-def test_block_max_prune_fires_and_stays_exact(narrow_setup):
+def test_block_max_prune_fires_and_stays_exact(narrow_setup, monkeypatch):
     """The block-max filter (the batch planner's per-term ``f_block``
     threshold) actually removes blocks on a narrow-block index
     (block_size=1: every posting its own block) while the returned
     top-k stays exact (covered by the identity tests too; this one
     proves the prune isn't a no-op)."""
     eng, orc = narrow_setup
+    # the unpruned side is the distributed exhaustive plan, not the
+    # driver plan that small exhaustive reads take
+    monkeypatch.setattr(eng, "_DRIVER_MAX_POSTINGS", 0)
     # one rare chunk + one common chunk: theta (the anchor's 5th-best
     # contribution) clears the common term's bound, so the rare term's
     # weak postings cannot reach the top-k
@@ -235,3 +238,35 @@ def test_pre_min_dl_index_still_exact(spark):
         ]
         exp_conj = orc.bm25_topk(terms, k=k, conjunctive=True)
         assert [d for d, _ in conj] == [d for d, _ in exp_conj], query
+
+
+def test_theta_bootstrap_skipped_where_it_cannot_prune(
+    narrow_setup, monkeypatch
+):
+    """theta_q is at most the anchor's own bound, and a block survives
+    while its bound plus the other terms' bounds reach theta_q. A word
+    longer than one chunk (``zephyr``) splits into sibling chunk terms
+    of near-equal idf whose bounds alone reach the anchor's, so no
+    block can drop: the bootstrap job is skipped, same answer. A
+    one-chunk rare word (``zeph``) still bootstraps and prunes."""
+    eng, orc = narrow_setup
+    boots = []
+    orig = search_mod._anchor_theta_collect
+    monkeypatch.setattr(
+        search_mod, "_anchor_theta_collect",
+        lambda *a: boots.append(a[1]) or orig(*a),
+    )
+    for query, k in (("zephyr data", 1), ("zephyr data", 5)):
+        terms = list(qc.field_query(query, CFG).terms)
+        expected = orc.bm25_topk(terms, k=k, conjunctive=False)
+        got = _pruned_topk(eng, terms, k)
+        assert [d for d, _ in got] == [d for d, _ in expected], (query, k)
+        for (gd, gs), (_, es) in zip(got, expected):
+            assert gs == pytest.approx(es, rel=1e-9), (query, gd)
+    assert not boots
+    terms = list(qc.field_query("zeph data", CFG).terms)
+    pruned, _, _ = search_mod._batch_scores(eng, {"q": terms}, 5, False, True)
+    assert boots
+    assert "(max_tf#" in pruned._sc._jvm.PythonSQLUtils.explainString(
+        pruned._jdf.queryExecution(), "formatted"
+    )

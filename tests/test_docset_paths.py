@@ -1,7 +1,7 @@
 """The two doc-set (filter) paths of ``SearchEngine.docs``.
 
 Up to a size bound (the index's total postings against
-``SearchEngine._DRIVER_DOCSET_MAX_POSTINGS``) the one-scan bitmask
+``SearchEngine._DRIVER_MAX_POSTINGS``) the one-scan bitmask
 evaluation runs on the driver: the pruned postings scan is collected as
 Arrow in one job and the answer is a local frame. Above it the same scan
 runs distributed (decode kernel + ``bit_or`` shuffle + Catalyst tree
@@ -104,7 +104,7 @@ def test_driver_and_distributed_paths_agree(base_engine, monkeypatch,
         driver = _ids(eng.docs(node))
         assert eng.count(node) == len(driver), name
         with monkeypatch.context() as m:
-            m.setattr(eng, "_DRIVER_DOCSET_MAX_POSTINGS", 0)
+            m.setattr(eng, "_DRIVER_MAX_POSTINGS", 0)
             if not isinstance(node, ir.MatchNone):
                 assert eng._driver_doc_ids(node) is None, name
             distributed = _ids(eng.docs(node))

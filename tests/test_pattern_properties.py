@@ -5,7 +5,7 @@ valid; normalization is idempotent in the '*'-free domain."""
 
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from elasticsearch_analysis_hashsplitter_spark.config import (
@@ -16,6 +16,7 @@ from elasticsearch_analysis_hashsplitter_spark.functions.tokenize import (
     term_freqs,
 )
 from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
+from elasticsearch_analysis_hashsplitter_spark.plans import ir
 from elasticsearch_analysis_hashsplitter_spark.plans.pattern import (
     glob_to_regex,
     normalize_pattern,
@@ -40,13 +41,21 @@ def value_and_mask(draw):
 
 
 @given(value_and_mask())
+@example(("0000000000000000", [True] * 16))
 @settings(max_examples=150, deadline=None)
 def test_masked_pattern_matches_own_value(vm):
     value, mask = vm
     pattern = "".join("?" if m else c for c, m in zip(value, mask))
     idx = OracleIndex({0: value}, CFG)
     node = qc.wildcard_query(pattern, CFG)
-    assert 0 in idx.docs(node), (value, pattern)
+    if all(mask):
+        # the reference skips every all-'?' chunk and MUSTs the rest
+        # into a BooleanQuery; with no chunk left that query has no
+        # clause, and a clause-less BooleanQuery matches nothing
+        assert isinstance(node, ir.MatchNone), pattern
+        assert 0 not in idx.docs(node), pattern
+    else:
+        assert 0 in idx.docs(node), (value, pattern)
 
 
 @given(value_and_mask(), st.integers(min_value=1, max_value=15))

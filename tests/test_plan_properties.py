@@ -88,7 +88,9 @@ def test_prefix_pushes_startswith(disk_engine, monkeypatch):
     assert "StringStartsWith(term," in plan
 
 
-def test_topk_is_take_ordered(disk_engine):
+def test_topk_is_take_ordered(disk_engine, monkeypatch):
+    # the distributed plan: small reads otherwise score on the driver
+    monkeypatch.setattr(disk_engine, "_DRIVER_MAX_POSTINGS", 0)
     plan = _plan(disk_engine.search("spark", k=5))
     assert "TakeOrderedAndProject" in plan
 

@@ -3,15 +3,17 @@ batch planner (``_batch_scores``) as a batch of one.
 
 Every clause the single-query reads carry — ``boost``,
 ``min_should_match``, ``must_not``, ``filter``, ``after``, tombstones
-and cross-index ``global_stats`` — is checked against a pure-Python
-BM25 evaluation on both sides of the cost-based stand-downs: the
-"exhaustive" engine keeps the default cutoffs (this corpus stays below
-them, so no prune runs), the "pruned" engine forces both cutoffs to 0
-(the conjunctive anchor prune runs in its exact-id, block-range and
-dense tiers; single disjunctive reads still never theta-prune — that
-prune belongs to the batch reads). A job-count test pins what the
-batch planner saves a warm conjunctive read: no anchor fetch below the
-cutoff.
+and cross-index ``global_stats`` — and the batch reads
+(``bm25_topk_batch``, ``bm25_topk_batch_collect``, ``ServeCoalescer``)
+are checked against a pure-Python BM25 evaluation on each of the
+planner's three plans: the "driver" engine keeps every default (this
+corpus stays below the prune cutoffs and ``_DRIVER_MAX_POSTINGS``, so
+reads score on the driver); the "exhaustive" engine sets
+``_DRIVER_MAX_POSTINGS`` to 0 (the distributed exhaustive plan); the
+"pruned" engine also forces both prune cutoffs to 0 (the conjunctive
+anchor prune runs in its exact-id, block-range and dense tiers; single
+disjunctive reads still never theta-prune — that prune belongs to the
+batch reads). Job-count tests pin what each side costs a warm read.
 """
 
 import numpy as np
@@ -24,6 +26,9 @@ from elasticsearch_analysis_hashsplitter_spark.operators.multi import (
 )
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
+    ServeCoalescer,
+    bm25_topk_batch,
+    bm25_topk_batch_collect,
 )
 from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
 
@@ -34,7 +39,7 @@ CFG = HashSplitterConfig(
     chunk_length=4, token_mode="tokens", apply_input_cap=False
 )
 N_DOCS = 240
-SIDES = ["exhaustive", "pruned"]
+SIDES = ["driver", "exhaustive", "pruned"]
 
 
 def _corpus() -> dict[int, str]:
@@ -78,6 +83,8 @@ def _fresh(eng: SearchEngine, side: str) -> SearchEngine:
         eng.spark, eng.postings, eng.docstats, eng.stats, eng.cfg,
         eng.lexicon,
     )
+    if side != "driver":
+        out._DRIVER_MAX_POSTINGS = 0
     if side == "pruned":
         out.conjunctive_exhaustive_cutoff = 0
         out.disjunctive_exhaustive_cutoff = 0
@@ -266,9 +273,9 @@ def test_sharded_plan_rejects_untruncated_and_min_should_match(base):
 
 
 def test_warm_search_with_cold_anchor_costs_two_jobs(base):
-    """A warm conjunctive read below the prune cutoff pays the scan and
-    the top-k: 2 jobs, with no anchor id/range fetch for a term whose
-    ids were never fetched."""
+    """A warm conjunctive read below the prune cutoff on the distributed
+    plan pays the scan and the top-k: 2 jobs, with no anchor id/range
+    fetch for a term whose ids were never fetched."""
     eng, orc = base
     eng = _fresh(eng, "exhaustive")
     eng.search("data code", k=5).collect()  # warm workers and codegen
@@ -278,6 +285,96 @@ def test_warm_search_with_cold_anchor_costs_two_jobs(base):
     assert n <= 2
     _same([(r["doc_id"], r["score"]) for r in rows],
           _oracle(orc, "zeph data")[:5], "zeph data")
+
+
+def test_warm_driver_reads_cost_one_job(base):
+    """Under ``_DRIVER_MAX_POSTINGS`` a warm read (term stats cached)
+    costs exactly its Arrow scan: ``search``, ``search_any`` and a
+    served batch of one each run 1 job, and the returned frame collects
+    with none."""
+    eng, orc = base
+    eng = _fresh(eng, "driver")
+    value = "zeph data"
+    eng.search(value, k=5).collect()  # warm term stats and workers
+    for conj, read in ((True, eng.search), (False, eng.search_any)):
+        n, frame = _jobs(eng.spark, lambda: read(value, k=5))
+        assert n == 1, conj
+        n, rows = _jobs(eng.spark, frame.collect)
+        assert n == 0, conj
+        _same([(r["doc_id"], r["score"]) for r in rows],
+              _oracle(orc, value, conjunctive=conj)[:5], conj)
+    coal = ServeCoalescer(eng, k=5)
+    try:
+        coal.request(value)  # warm the coalescer's lane
+        n, got = _jobs(eng.spark, lambda: coal.request(value))
+    finally:
+        coal.close()
+    assert n == 1
+    _same(got, _oracle(orc, value)[:5], "serve")
+
+
+@pytest.mark.parametrize("side", SIDES)
+def test_batch_reads_and_coalescer_match_oracle(base, side):
+    eng, orc = base
+    eng = _fresh(eng, side)
+    qmap = {v: _terms(v) for v in VALUES}
+    for conj in (True, False):
+        want = {v: _oracle(orc, v, conjunctive=conj)[:6] for v in VALUES}
+        ranked: dict = {}
+        for r in sorted(
+            bm25_topk_batch(eng, qmap, k=6, conjunctive=conj).collect(),
+            key=lambda r: (r["query_id"], r["rank"]),
+        ):
+            ranked.setdefault(r["query_id"], []).append(
+                (r["doc_id"], r["score"])
+            )
+        collected = bm25_topk_batch_collect(eng, qmap, k=6,
+                                            conjunctive=conj)
+        for v in VALUES:
+            # a query matching nothing is absent from both answers
+            _same(ranked.get(v, []), want[v], ("batch", v, conj))
+            _same(collected.get(v, []), want[v], ("collect", v, conj))
+    coal = ServeCoalescer(eng, k=6)
+    try:
+        for v in VALUES:
+            _same(coal.request(v), _oracle(orc, v)[:6], ("serve", v))
+    finally:
+        coal.close()
+    # tombstones reach the batch reads too
+    victims = {d for v in VALUES for d, _ in _oracle(orc, v)[:2]}
+    eng.delete_docs(sorted(victims))
+    live = lambda d: d not in victims  # noqa: E731
+    collected = bm25_topk_batch_collect(eng, qmap, k=6)
+    for v in VALUES:
+        _same(collected.get(v, []), _oracle(orc, v, keep=live)[:6],
+              ("collect, deleted", v))
+
+
+@pytest.mark.parametrize("side", SIDES)
+def test_query_past_63_terms(spark, side):
+    """A value of more than 63 distinct chunk terms leaves the bitmask
+    membership for the distinct-term count: conjunctive, disjunctive
+    and min_should_match reads still match the oracle."""
+    big = "".join(f"{i:04d}" for i in range(80))
+    docs = {0: big, 1: big[:160], 2: "spark join window",
+            3: big[:40] + " spark"}
+    eng = _fresh(
+        SearchEngine.from_corpus(
+            spark.createDataFrame(
+                list(docs.items()), "doc_id long, content string"
+            ),
+            CFG, num_partitions=2,
+        ),
+        side,
+    )
+    orc = OracleIndex(docs, CFG)
+    assert len(set(_terms(big))) > 63
+    _same(_rows(eng.search(big, k=5)), _oracle(orc, big)[:5], "and")
+    for msm in (1, 2, 30):
+        want = _oracle(orc, big, conjunctive=False, msm=msm)
+        assert want, msm
+        _same(_rows(eng.search_any(big, k=5, min_should_match=msm)),
+              want[:5], ("or", msm))
 
 
 def test_open_without_lexicon_dir_aggregates_postings(spark, tmp_path):

@@ -13,6 +13,7 @@ import pytest
 from elasticsearch_analysis_hashsplitter_spark.config import HashSplitterConfig
 from elasticsearch_analysis_hashsplitter_spark.operators.build import (
     build_index,
+    docstats_summary,
     refresh_stats,
     run_jobs_pool,
 )
@@ -72,6 +73,41 @@ def _jobs(spark, fn):
     counter = _Jobs(spark.sparkContext)
     out = fn()
     return counter.since(), out
+
+
+def test_docstats_summary_one_job_equals_aggregate(spark, tmp_path):
+    """The per-partition (count, sum(dl)) pass gives the dict the global
+    ``avg``/``sum`` aggregate gave, bit for bit, in one job instead of
+    an aggregate's map stage plus its collect."""
+    from pyspark.sql import functions as F
+
+    import pandas as pd
+
+    idx = _build(spark, str(tmp_path / "idx"))
+    docstats = catalog.read_docstats(spark, idx)
+    for ds in (
+        docstats,
+        docstats.where("dl < 0"),  # no rows
+        # many partitions, lengths far from the small-int fast paths
+        spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(3000),
+                          "dl": [7 + (i * 7919) % 100003
+                                 for i in range(3000)]}),
+            "doc_id long, dl long",
+        ),
+    ):
+        row = ds.agg(
+            F.count("*").alias("n"),
+            F.avg("dl").alias("avgdl"),
+            F.sum("dl").alias("total"),
+        ).collect()[0]
+        n, got = _jobs(spark, lambda: docstats_summary(ds))
+        assert n == 1
+        assert got == {
+            "n_docs": int(row["n"]),
+            "avgdl": float(row["avgdl"] or 0.0),
+            "total_terms": int(row["total"] or 0),
+        }
 
 
 def test_open_starts_no_job(spark, tmp_path):
