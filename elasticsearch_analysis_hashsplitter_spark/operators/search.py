@@ -2465,16 +2465,20 @@ class SearchEngine:
     #: 1-char prefix filters win 3-4x at every size measured (8k-64k),
     #: so the bound costs selective filters on larger indexes their
     #: driver answer; batched decode would move it.
-    #: Scored reads cross over later on both block shapes, so the
-    #: filter crossover binds: served batches (bm25_topk_batch_collect,
-    #: k=10, warm term stats, driver vs distributed exhaustive
-    #: alternated, median of 4 after a warm-up, local[4] on 4 vCPUs) on
+    #: For scored reads 24k is only a lower bound, borrowed from the
+    #: filters: no scored crossover was found, the driver winning at
+    #: every size probed on both block shapes. Served batches
+    #: (bm25_topk_batch_collect, k=10, warm term stats, driver vs
+    #: distributed exhaustive alternated, median of 4 after a warm-up,
+    #: local[4] on 4 vCPUs) on
     #: a 30k-md5 index of singleton blocks ran 1.61 vs 2.41 s at 2.9k
     #: summed df (250 queries), 6.76 vs 6.96 s at 11.5k, 10.5 vs 12.9 s
     #: at 22.7k and 14.2 vs 17.9 s at 33.7k (3000 queries); one
     #: disjunctive read of 1-20 hot words on 6k generated code files
     #: (large blocks) ran 0.09-0.13 vs 0.55-0.71 s from 10k to 135k
-    #: summed df.
+    #: summed df. No benchmark workload reads above the bound, so the
+    #: distributed scored plan and the scored crossover stay unmeasured
+    #: end to end (ROADMAP item 2).
     _DRIVER_MAX_POSTINGS = 24_000
 
     def _leaf_docs(self, leaf: ir.Node) -> DataFrame:
@@ -2769,12 +2773,12 @@ class SearchEngine:
 
         A read whose terms hold at most ``_DRIVER_MAX_POSTINGS``
         postings is scored on the driver (one JVM-only Arrow scan, no
-        shuffle — see :func:`_batch_scores`) and ranked with numpy;
-        ``after`` and every ``must_not``/``filter`` tree
-        :meth:`_driver_doc_ids` answers apply as numpy masks, and the
-        result is a local frame whose collect starts no job. That path
-        is EAGER, like :meth:`docs`' driver path: its job runs inside
-        this call. Larger reads return a lazy distributed plan.
+        shuffle — see :func:`_batch_scores`) and ranked with numpy,
+        ``after`` applying as a numpy mask; the result is a local frame
+        whose collect starts no job. A ``must_not``/``filter`` clause
+        joins that local frame instead. That path is EAGER, like
+        :meth:`docs`' driver path: its job runs inside this call.
+        Larger reads return a lazy distributed plan.
 
         ``after=(score, doc_id)``: ES search_after — only hits strictly
         after the cursor in the (score desc, doc_id asc) total order
@@ -2814,24 +2818,15 @@ class SearchEngine:
         if scores is None or isinstance(fl, ir.MatchNone):
             return self._empty_scored()
         if isinstance(scores, tuple):
-            # driver-scored: ``after`` and every clause the driver
-            # answers (:meth:`_driver_doc_ids`) are numpy masks; a
-            # clause it cannot answer joins the local frame below
+            # driver-scored: ``after`` is a numpy mask and the top-k a
+            # numpy sort; a must_not/filter clause joins the local
+            # frame below
             d, s = scores
-            keep = np.ones(d.size, dtype=bool)
             if after is not None:
                 a_s, a_d = float(after[0]), int(after[1])
-                keep &= (s < a_s) | ((s == a_s) & (d > a_d))
+                keep = (s < a_s) | ((s == a_s) & (d > a_d))
+                d, s = d[keep], s[keep]
                 after = None
-            ids = None if ex is None else self._driver_doc_ids(ex)
-            if ids is not None:
-                keep &= ~np.isin(d, ids)
-                ex = None
-            ids = None if fl is None else self._driver_doc_ids(fl)
-            if ids is not None:
-                keep &= np.isin(d, ids)
-                fl = None
-            d, s = d[keep], s[keep]
             if ex is None and fl is None:
                 top = np.lexsort((d, -s))[:k]
                 return _arrow_frame(
