@@ -101,7 +101,7 @@ def _descore(node: ir.Node) -> ir.Node:
 def _leaf_condition(leaf: ir.Node, cfg: HashSplitterConfig) -> Column:
     """Enumeration-leaf predicate over a ``term`` column — the same
     bounds the forward engine pushes into its postings scan
-    (``SearchEngine._leaf_condition``), here applied to document terms."""
+    (``SearchEngine._leaf_sql``), here applied to document terms."""
     term = F.col("term")
     if isinstance(leaf, ir.TermPrefixLen):
         c = F.length(term).between(leaf.min_len, leaf.max_len)

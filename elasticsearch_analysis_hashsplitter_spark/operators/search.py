@@ -224,6 +224,15 @@ def _zero_bits_match(tree: tuple) -> bool:
     return bool(ir.eval_bits(tree, lambda i: np.zeros(1, dtype=bool))[0])
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal that reads the same under
+    every parser setting (``spark.sql.parser.escapedStringLiterals``
+    changes what a backslash means): its UTF-8 bytes as a binary
+    literal, cast to string. The optimizer folds the cast, so the scan
+    still pushes ``term = 'x'`` and ``StringStartsWith`` to parquet."""
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
 def _arrow_frame(
     spark: SparkSession, schema: T.StructType, columns: dict | None = None
 ) -> DataFrame:
@@ -2413,37 +2422,34 @@ class SearchEngine:
     # ------------------------------------------------------------------
     # Doc-set evaluation (filter paths)
     # ------------------------------------------------------------------
-    def _leaf_condition(self, leaf: ir.Node) -> Column:
-        term = F.col("term")
+    def _leaf_sql(self, leaf: ir.Node) -> str:
+        """The leaf's predicate over ``term`` as Spark SQL text: a
+        filter read builds its whole scan from two strings instead of a
+        few py4j round trips per Column operation, which cost more than
+        the scan job itself on a small index."""
         if isinstance(leaf, ir.TermEq):
-            return term == leaf.term
+            return f"term = {_sql_str(leaf.term)}"
         if isinstance(leaf, ir.TermPrefixLen):
-            c = F.length(term).between(leaf.min_len, leaf.max_len)
+            c = f"length(term) BETWEEN {leaf.min_len} AND {leaf.max_len}"
             if leaf.prefix:
-                c = term.startswith(leaf.prefix) & c
+                c = f"startswith(term, {_sql_str(leaf.prefix)}) AND {c}"
             return c
         if isinstance(leaf, ir.TermRangeLen):
-            c = F.length(term).between(leaf.min_len, leaf.max_len)
+            c = f"length(term) BETWEEN {leaf.min_len} AND {leaf.max_len}"
             if leaf.lower is not None:
-                c = c & (
-                    (term >= leaf.lower)
-                    if leaf.include_lower
-                    else (term > leaf.lower)
-                )
+                op = ">=" if leaf.include_lower else ">"
+                c += f" AND term {op} {_sql_str(leaf.lower)}"
             if leaf.upper is not None:
-                c = c & (
-                    (term <= leaf.upper)
-                    if leaf.include_upper
-                    else (term < leaf.upper)
-                )
+                op = "<=" if leaf.include_upper else "<"
+                c += f" AND term {op} {_sql_str(leaf.upper)}"
             return c
         if isinstance(leaf, ir.TermPattern):
             rx = "^" + glob_to_regex(leaf.pattern, self.cfg) + "$"
             pre = literal_prefix(leaf.pattern, self.cfg)
-            c = term.rlike(rx)
+            c = f"term RLIKE {_sql_str(rx)}"
             if pre:
                 # literal-prefix pushdown: sargable on the term-sorted files
-                c = term.startswith(pre) & c
+                c = f"startswith(term, {_sql_str(pre)}) AND {c}"
             return c
         raise TypeError(f"not a leaf: {leaf!r}")
 
@@ -2575,16 +2581,13 @@ class SearchEngine:
         projects only the ``docs`` blob plus ``bits`` — bit i set when
         the block's term matches leaf i (``ir.leaves`` order), computed
         by Catalyst so no Python code walks the leaves per block."""
-        conds = [self._leaf_condition(x) for x in ir.leaves(node)]
-        bits = reduce(
-            lambda a, b: a.bitwiseOR(b),
-            [
-                F.when(c, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-                for i, c in enumerate(conds)
-            ],
+        conds = [f"({self._leaf_sql(x)})" for x in ir.leaves(node)]
+        bits = " | ".join(
+            f"CASE WHEN {c} THEN {1 << i}L ELSE 0L END"
+            for i, c in enumerate(conds)
         )
-        return self.postings.where(reduce(lambda a, b: a | b, conds)).select(
-            "docs", bits.alias("bits")
+        return self.postings.where(" OR ".join(conds)).selectExpr(
+            "docs", f"{bits} AS bits"
         )
 
     def _driver_doc_ids(self, node: ir.Node) -> np.ndarray | None:

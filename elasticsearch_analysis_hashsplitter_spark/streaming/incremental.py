@@ -624,11 +624,13 @@ def upsert_docs(
     Cost model (why this is batch-oriented, like ES bulk): at ~0.25 s a
     Spark job, the job count, not the data, sets an upsert's time:
 
+    * tokenize: 1 job, overlapped with every index-side step up to
+      the segment write (the batch ids, the collision probe and the
+      purge below run one after another beside it);
     * batch ids: 1 job (0 for a local relation), collected once and
       held on the driver at 8 B/id like the tombstone set; the row
       count and the duplicate check run there in numpy;
     * collision probe: 1 map-only docstats job (:func:`_keys_of_ids`);
-    * tokenize: 1 job, overlapped with the purge;
     * purge, only when ids collide or tombstones are pending: 1 probe
       for the victim slices plus ~2 jobs per victim slice — it decodes
       ONLY the slices holding purged docs (the rest are hardlinked, the
@@ -640,12 +642,13 @@ def upsert_docs(
       batch (:func:`adaptive_num_partitions`);
     * :func:`refresh_stats`: 4 jobs.
 
-    An insert-only batch costs 10-11 jobs, an empty one only the purge
-    and the refresh. Segment count grows by one per upsert batch;
-    ``maybe_compact`` remains the merge policy. Not transactional
-    (neither is an ES bulk): a crash between the purge and the append
-    leaves collided ids deleted-but-not-yet-reindexed; re-running the
-    same upsert completes it.
+    An insert-only batch costs 10-11 jobs, an empty one only the
+    tokenize of no rows, the purge and the refresh. Segment count grows
+    by one per upsert batch; ``maybe_compact`` remains the merge
+    policy. Not transactional (neither is an ES bulk): a crash between
+    the purge and the append leaves collided ids
+    deleted-but-not-yet-reindexed; re-running the same upsert completes
+    it.
 
     Reader contract (same as ``maybe_compact``): any purge swaps the
     index directory, so a ``SearchEngine`` opened BEFORE the upsert
@@ -668,44 +671,43 @@ def upsert_docs(
     from ..operators.search import SearchEngine  # noqa: PLC0415 (lazy: avoid cycle)
 
     catalog.recover_compaction(index_dir)
-    ids = docs_df.select(F.col(id_col).cast("long")).toArrow().column(0)
-    if ids.null_count:
-        raise ValueError(f"null {id_col} within the upsert batch")
-    ids = ids.to_numpy(zero_copy_only=False)
-    n_rows = int(ids.size)
-    uniq, counts = np.unique(ids, return_counts=True)
-    if uniq.size != n_rows:
-        raise ValueError(
-            f"duplicate {id_col}={int(uniq[counts > 1][0])} within the "
-            "upsert batch: which row should win is ambiguous — dedupe first"
-        )
-    eng = SearchEngine.open(spark, index_dir)
-    limit = eng.max_deleted_in_memory - eng.deleted_count
-    # docstats can hold several rows per doc_id (append-mode
-    # re-ingest): one tombstone per id, never per row
-    collided = np.sort(_keys_of_ids(
-        eng.docstats.select("doc_id"), spark.sparkContext.broadcast(uniq),
-        "doc_id",
-    ).to_numpy()) if n_rows else uniq
-    if collided.size > limit:
-        raise ValueError(
-            f"upsert batch replaces more than {limit} existing docs; "
-            "split the batch (the purge's tombstone set is driver-held)"
-        )
+
     def tokenize_batch():
-        # the tokenizer reads only the batch, never the index — it can
-        # run concurrently with the whole delete+purge phase below
-        # (guide §2.6); the segment write then reads the warm
-        # checkpoint. A crash after the purge with the tokenize failed
-        # is the same documented window as before (ids deleted, not
-        # yet reindexed; re-running the upsert completes it).
-        if not n_rows:
-            return None
+        # the tokenizer reads only the batch, never the index — it runs
+        # concurrently with every index-side step, from the id collect
+        # to the purge (guide §2.6); the segment write then reads the
+        # warm checkpoint. A crash after the purge with the tokenize
+        # failed is the same documented window as before (ids deleted,
+        # not yet reindexed; re-running the upsert completes it).
         return tokenize_corpus(
             docs_df, cfg, id_col, text_col
         ).localCheckpoint()
 
     def delete_and_purge():
+        ids = docs_df.select(F.col(id_col).cast("long")).toArrow().column(0)
+        if ids.null_count:
+            raise ValueError(f"null {id_col} within the upsert batch")
+        ids = ids.to_numpy(zero_copy_only=False)
+        uniq, counts = np.unique(ids, return_counts=True)
+        if uniq.size != ids.size:
+            raise ValueError(
+                f"duplicate {id_col}={int(uniq[counts > 1][0])} within the "
+                "upsert batch: which row should win is ambiguous — dedupe "
+                "first"
+            )
+        eng = SearchEngine.open(spark, index_dir)
+        limit = eng.max_deleted_in_memory - eng.deleted_count
+        # docstats can hold several rows per doc_id (append-mode
+        # re-ingest): one tombstone per id, never per row
+        collided = np.sort(_keys_of_ids(
+            eng.docstats.select("doc_id"),
+            spark.sparkContext.broadcast(uniq), "doc_id",
+        ).to_numpy()) if ids.size else uniq
+        if collided.size > limit:
+            raise ValueError(
+                f"upsert batch replaces more than {limit} existing docs; "
+                "split the batch (the purge's tombstone set is driver-held)"
+            )
         if collided.size:
             eng.delete_docs(collided)
         if catalog.read_deletes(index_dir).size:
@@ -719,8 +721,14 @@ def upsert_docs(
             # staleness, healed by re-running the upsert.
             purge_in_place(spark, index_dir, cfg, rebuild_lexicon=False,
                            refresh=False)
+        return int(ids.size), collided
 
-    pre_tok, _ = run_jobs_concurrently(tokenize_batch, delete_and_purge)
+    # a refused batch (null or duplicate ids, too many collisions)
+    # raises from delete_and_purge before any write; its exception
+    # propagates once the tokenize job has finished
+    pre_tok, (n_rows, collided) = run_jobs_concurrently(
+        tokenize_batch, delete_and_purge
+    )
     # completion is marked by the slice MANIFEST (written last in
     # _write_segment): an upsert_N slice without one is a crashed
     # half-write — reuse its key so mode=overwrite replaces the orphan

@@ -161,3 +161,52 @@ def test_small_index_filters_run_one_job_and_collect_with_none(
     assert rows == [] and n == 0
     rows, n = jobs_during(lambda: eng._empty_scored().collect())
     assert rows == [] and n == 0
+
+
+@pytest.mark.parametrize("escaped_literals", ["false", "true"])
+def test_scan_literals_survive_quotes_backslashes_and_parser_mode(
+    spark, monkeypatch, escaped_literals
+):
+    """The postings scan is SQL text: a term, prefix, pattern or range
+    bound holding a quote, a backslash, a regex or LIKE metacharacter
+    or a non-ASCII letter must select exactly the values it names,
+    whatever ``spark.sql.parser.escapedStringLiterals`` says."""
+    import random
+
+    rng = random.Random(5)
+    alphabet = "ab'\\%_.[é"
+    values = ["".join(rng.choice(alphabet) for _ in range(32))
+              for _ in range(60)]
+    eng = SearchEngine.from_corpus(
+        spark.createDataFrame(
+            pd.DataFrame({"doc_id": range(len(values)), "content": values}),
+            "doc_id long, content string",
+        ),
+        CFG, num_partitions=2,
+    )
+    prev = spark.conf.get("spark.sql.parser.escapedStringLiterals")
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped_literals)
+    try:
+        for i in (3, 17, 41):
+            v = values[i]
+            pat = v[:3] + "?" + v[4:9] + "*"
+            hi = v[:10] + "é" * 22
+            cases = [
+                ("term", qc.field_query(v, CFG, scored=False),
+                 lambda x: x == v),
+                ("prefix", qc.prefix_query(v[:5], CFG),
+                 lambda x: x.startswith(v[:5])),
+                ("wildcard", qc.wildcard_query(pat, CFG),
+                 lambda x: fnmatch.fnmatchcase(x, pat)),
+                ("range", qc.range_filter(v, hi, True, True, CFG),
+                 lambda x: v <= x <= hi),
+            ]
+            for name, node, pred in cases:
+                want = [d for d, x in enumerate(values) if pred(x)]
+                assert i in want, name
+                assert _ids(eng.docs(node)) == want, (name, i)
+                with monkeypatch.context() as m:
+                    m.setattr(eng, "_DRIVER_MAX_POSTINGS", 0)
+                    assert _ids(eng.docs(node)) == want, (name, i)
+    finally:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", prev)

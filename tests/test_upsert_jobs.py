@@ -185,6 +185,11 @@ def test_duplicate_or_null_id_refused(spark, tmp_path):
             CFG,
         )
     assert catalog.list_postings_slices(idx) == ["0"]
+    # the batch's tokenize job starts beside the id checks: a refusal
+    # must not leave it running past the call
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
 
 
 def test_collisions_past_limit_refused(spark, tmp_path, monkeypatch):
