@@ -119,7 +119,7 @@ def encode_block(term: str, doc_ids: np.ndarray, tfs: np.ndarray,
                  dls: np.ndarray) -> dict:
     """One posting-block row (``catalog.BLOCK_SCHEMA``) from a term's
     docID-sorted, non-empty (doc_id, tf, dl) arrays: the docID span, df,
-    the prune bounds max_tf and min_dl, and the three encoded streams."""
+    the block bounds max_tf and min_dl, and the three encoded streams."""
     return {
         "term": term,
         "min_doc": int(doc_ids[0]),

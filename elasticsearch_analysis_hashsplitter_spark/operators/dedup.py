@@ -607,6 +607,14 @@ def dedup_clusters(
     Raises RuntimeError if the loop exits before converging (unreachable
     for any component of diameter < 2^max_iterations, but a silent wrong
     answer is never acceptable — the r2 advisor's ask).
+
+    Fault tolerance: the edge table and each iteration's labels are
+    ``localCheckpoint`` blocks, stored once on the executor that built
+    them and not recomputable from lineage. Losing an executor during
+    the call (a crash, or a dynamic-allocation decommission) fails the
+    job instead of recomputing; rerun the call. The blocks are released
+    when the driver garbage-collects the result, so a long-lived
+    session running many calls holds executor storage until then.
     """
     a, b = id_cols
     edges = pairs.select(

@@ -166,8 +166,7 @@ class MultiIndexEngine:
     ) -> DataFrame:
         """Disjunctive BM25 top-k across all indexes (docs matching ANY
         analyzed chunk term). Each index runs its exhaustive single
-        scan + single shuffle OR plan (:meth:`SearchEngine.search_any`
-        never theta-prunes)."""
+        scan + single shuffle OR plan (:meth:`SearchEngine.search_any`)."""
         node = qc.field_query(value, self.cfg, scored=True)
         if isinstance(node, ir.MatchNone):
             return self._empty()

@@ -264,7 +264,7 @@ class Percolator:
                 )
             )
         if enum_entries:
-            # few enumeration leaves -> a when-array beats a theta join:
+            # few enumeration leaves -> a when-array beats a non-equi join:
             # stays inside whole-stage codegen, no extra join operator
             elems = [
                 F.when(

@@ -14,8 +14,8 @@ Spark-first physical strategy (SURVEY.md §3.2 "Spark equivalent"):
   a single query is a batch of one): it decodes (tf, dl) streams
   embedded in the blocks — no join against docstats — and prunes blocks
   of non-rarest terms by docID overlap with the rarest term (a
-  conjunctive candidate must appear in the rarest term's postings), or,
-  for a disjunctive top-k, by a block-max bound against the k-th score.
+  conjunctive candidate must appear in the rarest term's postings); a
+  disjunctive read decodes every block of its terms.
   Final top-k is ORDER BY score DESC, doc_id ASC LIMIT k, which Spark
   executes as per-partition top-k + driver merge (TakeOrderedAndProject).
 """
@@ -233,6 +233,14 @@ def _sql_str(s: str) -> str:
     return f"CAST(X'{s.encode().hex()}' AS STRING)"
 
 
+def _term_in(terms) -> str:
+    """``term IN (...)`` over ``terms`` as SQL text, each literal via
+    :func:`_sql_str`: one expression string, where a Column ``isin``
+    costs a few py4j round trips per term. It still reaches the
+    parquet scan as a pushed ``In`` filter."""
+    return f"term IN ({', '.join(_sql_str(t) for t in terms)})"
+
+
 def _arrow_frame(
     spark: SparkSession, schema: T.StructType, columns: dict | None = None
 ) -> DataFrame:
@@ -365,7 +373,7 @@ class SearchEngine:
             )
         except Exception:
             pass
-        #: driver-side (term -> (df, max_tf, min_dl)) cache for the serving path:
+        #: driver-side (term -> df) cache for the serving path:
         #: repeated queries skip the lexicon point-read job entirely.
         #: Bounded (never the whole lexicon — at corpus scale that is
         #: billions of terms); LRU eviction, chosen by the r5
@@ -441,18 +449,6 @@ class SearchEngine:
         #: parquet on every call instead of scanning the persisted
         #: layout (caught by the r5 scaling probe).
         self._layout_epoch = 0
-        #: cost-based switch for the disjunctive theta prune of BATCH
-        #: reads (single reads never theta-prune, see
-        #: :meth:`bm25_scores`): below this TOTAL posting count the
-        #: exhaustive single-pass OR beats the prune, whose anchor
-        #: bootstrap is one more driver job over the anchor terms'
-        #: postings. Measured on the generated code corpus (local[4]):
-        #: a 4-query hash-OR-hot batch at 20k docs (~0.17M postings)
-        #: ran 0.81 s stood down vs 1.12 s pruned; single rare-OR-hot
-        #: reads at 200k docs (1.2-1.4M postings) ran 1.20-1.24 s
-        #: exhaustive vs 1.80 s pruned. Tests that exercise the
-        #: pruning machinery set this to 0.
-        self.disjunctive_exhaustive_cutoff = 1_000_000
         #: tombstoned doc ids (sorted unique int64 numpy array, or None
         #: when the index has none) — the Lucene liveDocs analogue
         #: (SURVEY §1.1: Lucene serves deletes as in-RAM liveness
@@ -464,11 +460,11 @@ class SearchEngine:
         #: surviving docs' scores are bit-identical before and after a
         #: delete — only membership changes.
         self._deleted: np.ndarray | None = None
-        #: lazily-created Spark broadcast of ``_deleted`` for kernels
-        #: that rank INSIDE a task (sharded local top-k, batch theta
-        #: bootstrap) — a post-hoc driver filter there would be
-        #: unsound, a deleted doc could displace a live one from a
-        #: task-local top-k before the filter ever saw it.
+        #: lazily-created Spark broadcast of ``_deleted`` for the kernel
+        #: that ranks INSIDE a task (sharded local top-k) — a post-hoc
+        #: driver filter there would be unsound, a deleted doc could
+        #: displace a live one from a task-local top-k before the
+        #: filter ever saw it.
         self._deleted_bc = None
         #: anti-join frame for the DataFrame-level filter (cached per
         #: deletes epoch)
@@ -515,7 +511,7 @@ class SearchEngine:
         missing = [t for t in want if t not in found]
         if missing:
             rows = _block_ranges_frame_by_term(
-                self.postings.where(F.col("term").isin(missing)), cap
+                self.postings.where(_term_in(missing)), cap
             ).collect()
             acc: dict[str, list] = {}
             for r in rows:
@@ -573,7 +569,7 @@ class SearchEngine:
         missing = [t for t in eligible if t not in found]
         if missing:
             rows = (
-                self.postings.where(F.col("term").isin(missing))
+                self.postings.where(_term_in(missing))
                 .select("term", "docs")
                 .mapInPandas(_decode_docs_with_term, schema=_TERM_DOC_SCHEMA)
                 .collect()
@@ -1193,7 +1189,7 @@ class SearchEngine:
             (F.col("lo").isNull() | (col >= F.col("lo")))
             & (F.col("hi").isNull() | (col < F.col("hi")))
         )
-        # broadcast theta-join against the k-row bounds table (a doc
+        # broadcast non-equi join against the k-row bounds table (a doc
         # may land in several overlapping ranges, per ES)
         agg = (
             matched.join(F.broadcast(bounds), in_range, "inner")
@@ -1439,9 +1435,8 @@ class SearchEngine:
         document (exactly ES's coordinating-node work); df stats are
         cached lexicon point-reads; the query half is the untruncated
         disjunctive plan (:meth:`bm25_scores`) — one scan + one
-        shuffle. The theta prune must not run here: its theta would
-        bound the k-th score INCLUDING the excluded source doc, which is
-        near-guaranteed to rank first.
+        shuffle. It is not truncated to k before the source doc is
+        excluded, because that doc is near-guaranteed to rank first.
         """
         from ..functions.tokenize import analyze
 
@@ -1482,12 +1477,10 @@ class SearchEngine:
         )
 
     def _term_stats(self, terms: list[str]) -> list:
-        """(term, df, max_tf, min_dl) rows for a few query terms — from
-        the driver-side cache when warm, else pruned point reads of the
-        lexicon. Absent terms are cached as absent, so a
-        repeated miss costs no job either. ``min_dl`` is None on indexes
-        built before the column existed (bounds fall back to the dl->0
-        limit)."""
+        """(term, df) rows for a few query terms — from the driver-side
+        cache when warm, else one pruned point read of the lexicon.
+        Absent terms are cached as absent, so a repeated miss costs no
+        job either."""
         distinct_terms = sorted(set(terms))
         with self._cache_lock:
             snap = {
@@ -1497,39 +1490,22 @@ class SearchEngine:
             }
         missing = [t for t in distinct_terms if t not in snap]
         if missing:
-            has_mdl = "min_dl" in self.lexicon.columns
-            cols = ["term", "df", "max_tf"] + (["min_dl"] if has_mdl else [])
-            rows = (
-                self.lexicon.where(F.col("term").isin(missing))
-                .select(*cols)
-                .collect()
-            )
             found = {
-                r["term"]: (
-                    r["df"],
-                    r["max_tf"],
-                    r["min_dl"] if has_mdl else None,
-                )
-                for r in rows
+                r["term"]: r["df"]
+                for r in self.lexicon.where(_term_in(missing))
+                .select("term", "df")
+                .collect()
             }
             with self._cache_lock:
                 for t in missing:
                     self._term_stats_cache[t] = found.get(t)
             for t in missing:
                 snap[t] = found.get(t)
-        out = []
-        for t in distinct_terms:
-            hit = snap.get(t)
-            if hit is not None:
-                out.append(
-                    {
-                        "term": t,
-                        "df": hit[0],
-                        "max_tf": hit[1],
-                        "min_dl": hit[2],
-                    }
-                )
-        return out
+        return [
+            {"term": t, "df": snap[t]}
+            for t in distinct_terms
+            if snap.get(t) is not None
+        ]
 
     @classmethod
     def from_corpus(
@@ -1743,8 +1719,7 @@ class SearchEngine:
     ) -> DataFrame:
         """Disjunctive BM25 top-k (docs matching ANY chunk term of the
         analyzed value): :meth:`bm25_topk` with ``conjunctive=False``,
-        one exhaustive scan + one shuffle OR — single reads do not
-        theta-prune (see :meth:`bm25_scores`).
+        one exhaustive scan + one shuffle OR (see :meth:`bm25_scores`).
 
         ``after``: search_after pagination. ``must_not`` / ``filter`` /
         ``min_should_match``: ES bool must_not, the filtered-query
@@ -2881,10 +2856,8 @@ class SearchEngine:
         local postings.
 
         Planned as a batch of one by :func:`_batch_scores` with no
-        ``k``, so only the conjunctive anchor prune can run: a
-        disjunctive read is always the exhaustive single-pass OR (the
-        theta prune costs a bootstrap job and, measured above its
-        cutoff, dropped nothing — see ``disjunctive_exhaustive_cutoff``).
+        ``k``; only a conjunctive read can prune (the anchor prune), a
+        disjunctive read is always the exhaustive single-pass OR.
         An exhaustive read within ``_DRIVER_MAX_POSTINGS`` is scored on
         the driver, eagerly, and comes back as a local frame.
         """
@@ -3131,8 +3104,8 @@ def _shard_split_fn(bounds: np.ndarray):
     block at the doc-shard boundaries (postings are docID-sorted, so
     one searchsorted per block), re-encode each piece, and tag it with
     its shard id. Sub-block min/max_doc, df, max_tf, min_dl are
-    recomputed from the slice so every consumer bound (range prune,
-    block-max) stays as tight as the original block's."""
+    recomputed from the slice, so the range prune's docID bounds stay
+    as tight as the original block's."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -3169,107 +3142,6 @@ def _shard_split_fn(bounds: np.ndarray):
     return fn
 
 
-def _batch_anchor_theta(
-    engine: SearchEngine,
-    anchors: dict[int, str],
-    anchor_w_idf: dict[int, float],
-    k: int,
-) -> dict[int, float]:
-    """Per-query score thresholds for the disjunctive batch prune, from
-    ONE shuffle-free job over the anchor terms' blocks only.
-
-    theta_q = the k-th largest anchor-term contribution among q's anchor
-    docs. Soundness as a prune threshold: those k docs are real and
-    distinct (a doc appears in exactly one block of a term), and each
-    full query score >= its anchor contribution, so >= k docs score
-    >= theta_q — the true k-th full score is >= theta_q. The kernel
-    keeps a running top-k per anchor TERM accumulated across every
-    Arrow batch of its partition (r4 judge item #5: the previous
-    per-batch emit collected <= k * |queries| rows PER BATCH, unbounded
-    in batch count at 100x scale), so the driver merges
-    <= k * |anchor terms| * n_partitions rows — bounded by the
-    partition count, not data size; exact k-th of the union, no
-    shuffle, no window. Queries with fewer than k anchor postings get
-    -inf (prune off)."""
-    rows = _anchor_theta_collect(engine, set(anchors.values()), k)
-    by_t: dict[str, list] = {}
-    for r in rows:
-        by_t.setdefault(r["term"], []).append(r["norm"])
-    theta = {}
-    for qi, t in anchors.items():
-        cs = by_t.get(t, [])
-        theta[qi] = (
-            float(
-                anchor_w_idf[qi]
-                * np.partition(np.asarray(cs), len(cs) - k)[len(cs) - k]
-            )
-            if len(cs) >= k
-            else float("-inf")
-        )
-    return theta
-
-
-def _anchor_theta_collect(engine: SearchEngine, terms, k: int) -> list:
-    """Collect each anchor term's global top-k tf/dl BM25 norm factors
-    as <= k * |terms| * n_partitions driver rows (per-partition running
-    top-k across Arrow batches — see :func:`_batch_anchor_theta`)."""
-    a_terms = sorted(set(terms))
-    k1, b = engine.cfg.bm25_k1, engine.cfg.bm25_b
-    avgdl = engine.stats["avgdl"] or 1.0
-    # theta soundness under deletes: a tombstoned doc's norm must not
-    # enter the top-k pool — its theta could exceed the true k-th LIVE
-    # score and prune live docs. Decoding doc ids only happens on
-    # indexes that actually have tombstones; the delete-free plan is
-    # byte-identical to before.
-    del_bc = engine._deleted_broadcast()
-    cols = ["term", "tfs", "dls"] + (["docs"] if del_bc else [])
-
-    def boot_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[str, np.ndarray] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for term, sub in pdf.groupby("term", sort=False):
-                norms = [acc[term]] if term in acc else []
-                dblobs = sub["docs"] if del_bc else sub["tfs"]
-                for tblob, lblob, dblob in zip(
-                    sub["tfs"], sub["dls"], dblobs
-                ):
-                    n = bm25.norm(
-                        decode_counts(tblob), decode_counts(lblob),
-                        k1, b, avgdl,
-                    )
-                    if del_bc is not None:
-                        n = n[_live_mask(decode_doc_ids(dblob),
-                                         del_bc.value)]
-                    norms.append(n)
-                norm = np.concatenate(norms)
-                if norm.size > k:
-                    norm = np.partition(norm, norm.size - k)[
-                        norm.size - k:
-                    ]
-                acc[term] = norm
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(
-                        [
-                            np.full(v.size, t, dtype=object)
-                            for t, v in acc.items()
-                        ]
-                    ),
-                    "norm": np.concatenate(list(acc.values())),
-                }
-            )
-
-    return (
-        engine.postings.where(F.col("term").isin(a_terms))
-        .select(*cols)
-        .mapInPandas(boot_fn, schema="term string, norm double")
-        .collect()
-    )
-
-
 def _batch_scores(
     engine: SearchEngine,
     queries: dict[str, list[str]],
@@ -3295,8 +3167,9 @@ def _batch_scores(
 
     ``scores`` comes from one of three plans:
 
-    * driver — when no prune runs (the cost-based stand-down below, or
-      ``prune=False``), the plan is not the sharded one, and the
+    * driver — when no prune runs (a disjunctive read, the cost-based
+      stand-down below, or ``prune=False``), the plan is not the
+      sharded one, and the
       active queries' terms hold at most
       ``SearchEngine._DRIVER_MAX_POSTINGS`` postings (their lexicon
       ``df`` sum — known from the term-stats cache, so the test costs
@@ -3320,9 +3193,8 @@ def _batch_scores(
     returned frame emits <= k rows per (query, partition) from ONE
     shuffle-free stage (schema ``qidx, doc_id, score``), and the
     caller merges. Same prune machinery either way: the sub-block
-    stats were recomputed at split time, so range masks and block-max
-    thresholds stay sound. The sharded plan needs ``k`` and takes no
-    ``min_should_match``.
+    stats were recomputed at split time, so range masks stay sound.
+    The sharded plan needs ``k`` and takes no ``min_should_match``.
 
     Per-query jobs pay scheduler + Python-worker round-trips per query;
     at serving scale (training-data mining, dedup-by-search) the right
@@ -3330,50 +3202,30 @@ def _batch_scores(
     (query, doc) pairs in the same vectorized kernel, and ranks with one
     window. Throughput scales with cluster size instead of query count.
 
-    Block skipping, with a max-over-queries bound per term — a block
-    survives iff SOME query still needs it:
-
-    * conjunctive: per query, candidates must contain the rarest
-      ("anchor") term, so term t's block is decoded for q only if t is
-      q's anchor or the block's docID range overlaps q's anchor ranges
-      (collected for ALL anchors in one job via
-      :meth:`SearchEngine._ranges_for_each_term`). A coarse Catalyst
-      prefilter (anchor terms OR the union of all anchor ranges) prunes
-      I/O before the kernel's exact per-query masks prune the (query x
-      posting) emit. Membership is local, so this prune also runs under
-      ``global_stats`` and with no ``k``.
-    * disjunctive (needs ``k``): per-query theta from a shuffle-free
-      anchor-only bootstrap (:func:`_batch_anchor_theta`), then the
-      block-max bound: term t's block survives for q iff
-      ``w_qt*idf_t*f(block max_tf, min_dl) + sum_ub(q, t'!=t) >=
-      theta_q``. The max-over-queries form pushes into Catalyst as a
-      single per-term threshold ``f_block >= g_t`` with
-      ``g_t = min_q (theta_q - rest_ub)/(w_qt*idf_t)``; the kernel then
-      re-applies the exact per-query mask. Soundness: a doc appears in
-      exactly one block per term, so any doc whose contribution is
-      dropped has max possible score < theta_q <= the true k-th score,
-      and every true top-k doc's blocks all survive — the top-k is
-      exactly the unpruned one (pinned by the forced-prune
-      rank-identity tests); only scores BELOW it may be understated,
-      which is why theta needs a truncating caller — the batch reads
-      (:func:`bm25_topk_batch`, :func:`bm25_topk_batch_collect`).
-      ``k=None`` (single and untruncated reads) or 0, ``global_stats``
-      (the bounds are engine-local), ``min_should_match > 1`` (theta
-      bounds the unconstrained disjunction) and ``boost <= 0`` turn it
-      off.
+    Block skipping (``prune``, conjunctive reads only): per query,
+    candidates must contain the rarest ("anchor") term, so term t's
+    block is decoded for q only if t is q's anchor or the block's docID
+    range overlaps q's anchor ranges (collected for ALL anchors in one
+    job via :meth:`SearchEngine._ranges_for_each_term`) — a block
+    survives iff SOME query still needs it. A coarse Catalyst prefilter
+    (anchor terms OR the union of all anchor ranges) prunes I/O before
+    the kernel's exact per-query masks prune the (query x posting)
+    emit. Membership is local, so this prune also runs under
+    ``global_stats`` and with no ``k``. A disjunctive read always runs
+    the exhaustive plan: every doc holding any query term is a
+    candidate.
 
     ``queries``: query_id -> bag of chunk terms (weights by repetition,
     times ``boost``). ``min_should_match``: a disjunctive match must
     hold at least that many distinct query terms.
 
-    Cost-based stand-down (r4 judge): each prune only engages past
-    ``engine.conjunctive_exhaustive_cutoff`` /
-    ``engine.disjunctive_exhaustive_cutoff`` TOTAL postings across the
-    batch's terms — below it the anchor-id fetch (or theta bootstrap)
-    job plus the kernel's per-block per-query masks cost more than the
-    shuffle rows they save (official r4 qps_selective: pruned 0.95x
-    exhaustive at ~1.4M total postings), while the 4M rare-AND-hot
-    probe (>> cutoff) keeps its 5x.
+    Cost-based stand-down (r4 judge): the prune only engages past
+    ``engine.conjunctive_exhaustive_cutoff`` TOTAL postings across the
+    batch's terms — below it the anchor-id fetch job plus the kernel's
+    per-block per-query masks cost more than the shuffle rows they
+    save (official r4 qps_selective: pruned 0.95x exhaustive at ~1.4M
+    total postings), while the 4M rare-AND-hot probe (>> cutoff) keeps
+    its 5x.
     """
     if local_topk and (k is None or min_should_match > 1):
         raise ValueError(
@@ -3390,33 +3242,14 @@ def _batch_scores(
         # nothing here — docs never span shards).
         n_docs = global_stats["n_docs"]
         avgdl = global_stats["avgdl"] or 1.0
-    use_theta = (
-        not conjunctive
-        and k is not None
-        and k > 0
-        and global_stats is None
-        and min_should_match <= 1
-        and boost > 0
-    )
     k1, b = engine.cfg.bm25_k1, engine.cfg.bm25_b
 
     all_terms = sorted({t for ts in queries.values() for t in ts})
     if not all_terms:
         return None, [], {}
-    info = {
-        r["term"]: (r["df"], r["max_tf"], r["min_dl"])
-        for r in engine._term_stats(all_terms)
-    }
+    df = {r["term"]: r["df"] for r in engine._term_stats(all_terms)}
     idf_dfs = global_stats["dfs"] if global_stats is not None else {}
-    idf = {
-        t: bm25.idf(n_docs, idf_dfs.get(t, df))
-        for t, (df, _, _) in info.items()
-    }
-    # sound per-posting bound factor of each term
-    ub_factor = {
-        t: bm25.bound(mtf, mdl, k1, b, avgdl)
-        for t, (_, mtf, mdl) in info.items()
-    }
+    idf = {t: bm25.idf(n_docs, idf_dfs.get(t, d)) for t, d in df.items()}
 
     # Active queries: weights over terms present in the index. A
     # conjunctive query with an absent MUST term, or a query with fewer
@@ -3428,7 +3261,7 @@ def _batch_scores(
         reps: dict[str, int] = {}
         for t in queries[qid]:
             reps[t] = reps.get(t, 0) + 1
-        present = {t: n for t, n in reps.items() if t in info}
+        present = {t: n for t, n in reps.items() if t in df}
         if (
             not present
             or (conjunctive and len(present) < len(reps))
@@ -3446,28 +3279,21 @@ def _batch_scores(
     anchors: dict[int, str] = {}  # qidx -> anchor term
     q_ranges: list = [None] * len(active)  # qidx -> (los, his) arrays
     q_ids: list = [None] * len(active)  # qidx -> exact anchor doc ids
-    theta: dict[int, float] = {}
     # postings of the batch's terms: the lexicon df sums, already in
-    # ``info`` (term-stats cache), so sizing the read costs no job
+    # ``df`` (term-stats cache), so sizing the read costs no job
     total_postings = sum(
-        info[t][0] for t in {t for q in active for t in q_w[q]}
+        df[t] for t in {t for q in active for t in q_w[q]}
     )
-    if not (conjunctive or use_theta):
-        prune = False
-    if prune:
-        # cost-based stand-down: when the whole batch's postings are
-        # few, one exhaustive pass (already single-shuffle via the
-        # bitmask aggregation) beats paying the anchor-id fetch or
-        # theta job and the kernel's per-block masks — leave
-        # ``anchors`` empty so the scan shape is byte-identical to
-        # prune=False
-        cutoff = (
-            engine.conjunctive_exhaustive_cutoff
-            if conjunctive
-            else engine.disjunctive_exhaustive_cutoff
-        )
-        if total_postings <= cutoff:
-            prune = False
+    # cost-based stand-down: when the whole batch's postings are few,
+    # one exhaustive pass (already single-shuffle via the bitmask
+    # aggregation) beats paying the anchor-id fetch and the kernel's
+    # per-block masks — leave ``anchors`` empty so the scan shape is
+    # byte-identical to prune=False
+    prune = (
+        prune
+        and conjunctive
+        and total_postings > engine.conjunctive_exhaustive_cutoff
+    )
     # the exhaustive plan of a small read runs on the driver (see the
     # return below); the pruned and the sharded plans stay distributed
     on_driver = (
@@ -3475,7 +3301,7 @@ def _batch_scores(
         and not prune
         and total_postings <= engine._DRIVER_MAX_POSTINGS
     )
-    if prune and conjunctive:
+    if prune:
         # Three anchor tiers per multi-term query (selectivity decides;
         # a hot anchor's ranges cover the whole docID space and masks
         # are pure overhead — measured +18% on a 64-query all-hot
@@ -3489,17 +3315,17 @@ def _batch_scores(
         for q in active:
             if len(q_w[q]) < 2:
                 continue  # nothing to prune against its own anchor
-            at = min(q_w[q], key=lambda t: (info[t][0], t))
+            at = min(q_w[q], key=lambda t: (df[t], t))
             qi = qidx_of[q]
             if (
-                info[at][0] <= _ANCHOR_IDS_CUTOFF
+                df[at] <= _ANCHOR_IDS_CUTOFF
                 # the posting filter can only drop the df gap: skip the
                 # id fetch for balanced-df queries
-                and max(info[t][0] for t in q_w[q]) >= 4 * info[at][0]
+                and max(df[t] for t in q_w[q]) >= 4 * df[at]
             ):
                 anchors[qi] = at
                 id_qs[qi] = at
-            elif info[at][0] <= _ANCHOR_DF_FRAC * n_local:
+            elif df[at] <= _ANCHOR_DF_FRAC * n_local:
                 anchors[qi] = at
         if id_qs:
             ids_map = engine._term_doc_ids_many(set(id_qs.values()))
@@ -3532,30 +3358,6 @@ def _batch_scores(
                         (r["max_doc"] for r in ivs), dtype=np.int64
                     ),
                 )
-    elif prune:
-        # Dense-query exemption (measured 2.06 s exhaustive vs 3.05 s
-        # "pruned" for 8 all-dense queries at 1M files): when every
-        # term of a query has df > n/2, nearly every doc is a candidate
-        # and theta lands too low to drop blocks, so the bootstrap is
-        # pure overhead. Only sparse-mix queries get a theta; if none
-        # qualify the bootstrap job is skipped entirely.
-        for q in active:
-            if min(info[t][0] for t in q_w[q]) > 0.5 * n_local:
-                continue
-            ub = {t: w * ub_factor[t] for t, w in q_w[q].items()}
-            at = max(ub, key=lambda t: (ub[t], t))
-            # theta_q <= ub_at, and a block of t survives while its
-            # bound plus the other terms' summed bounds reach theta_q:
-            # when those of at's siblings alone reach ub_at (a word of
-            # several chunk terms), no block can drop — skip the query
-            if sum(ub.values()) - ub[at] >= ub[at]:
-                continue
-            anchors[qidx_of[q]] = at
-        if anchors:
-            anchor_w_idf = {
-                qi: q_w[active[qi]][t] for qi, t in anchors.items()
-            }
-            theta = _batch_anchor_theta(engine, anchors, anchor_w_idf, k)
 
     # Integer indices end to end: the scoring kernel emits int32
     # query/term ids instead of per-posting PYTHON STRING arrays
@@ -3576,21 +3378,11 @@ def _batch_scores(
     per_term: dict[int, dict] = {}
     for q in active:
         qi = qidx_of[q]
-        total_ub = sum(w * ub_factor[t] for t, w in q_w[q].items())
         local_idx = {t: i for i, t in enumerate(sorted(q_w[q]))}
         for t, w in q_w[q].items():
-            ub_t = w * ub_factor[t]
             m = per_term.setdefault(
                 term_idx[t],
-                {
-                    "q": [],
-                    "w": [],
-                    "midx": [],
-                    "pass": [],
-                    "ids": [],
-                    "rest": [],
-                    "th": [],
-                },
+                {"q": [], "w": [], "midx": [], "pass": [], "ids": []},
             )
             m["q"].append(qi)
             m["w"].append(w)
@@ -3601,8 +3393,6 @@ def _batch_scores(
             m["ids"].append(
                 q_ids[qi] if anchors.get(qi) != t else None
             )
-            m["rest"].append(total_ub - ub_t)
-            m["th"].append(theta.get(qi, float("-inf")))
     per_term = {
         ti: {
             "q": np.asarray(m["q"], dtype=np.int32),
@@ -3613,33 +3403,15 @@ def _batch_scores(
             "bulk": np.asarray(
                 [i is None for i in m["ids"]], dtype=bool
             ),
-            "rest": np.asarray(m["rest"], dtype=np.float64),
-            "th": np.asarray(m["th"], dtype=np.float64),
-            # no query prunes this term -> the kernel skips mask work.
-            # disjunctive: a query can only ever drop one of t's blocks
-            # when theta_q > rest_ub_q (f_block > 0 always), so a hot
-            # term whose every query is below that line stays unmasked
-            "masked": (
-                not all(m["pass"])
-                if conjunctive
-                else bool(
-                    np.any(
-                        np.isfinite(np.asarray(m["th"]))
-                        & (
-                            np.asarray(m["th"])
-                            > np.asarray(m["rest"])
-                        )
-                    )
-                )
-            ),
+            # no query prunes this term -> the kernel skips mask work
+            "masked": not all(m["pass"]),
         }
         for ti, m in per_term.items()
     }
 
     src = source if source is not None else engine.postings
-    blocks = src.where(F.col("term").isin(term_list))
-    has_mdl = "min_dl" in src.columns
-    if prune and conjunctive and anchors:
+    blocks = src.where(_term_in(term_list))
+    if prune and anchors:
         # coarse Catalyst prefilter: any conjunctive candidate of a
         # pruned query lies inside ITS anchor's intervals (block ranges
         # or exact-id point intervals), hence inside the union; terms
@@ -3676,27 +3448,7 @@ def _batch_scores(
                 ],
             )
             blocks = blocks.where(
-                F.col("term").isin(sorted(exempt)) | overlap
-            )
-    elif prune and theta:
-        # exact per-term block-max threshold (the max-over-queries bound
-        # folded into min-over-queries on the f_block scale)
-        g: dict[str, float] = {}
-        for ti, m in per_term.items():
-            finite = np.isfinite(m["th"])
-            if not finite.all():
-                continue  # some query needs every block of this term
-            g[term_list[ti]] = float(
-                np.min((m["th"] - m["rest"]) / m["w"])
-            )
-        g = {t: v for t, v in g.items() if v > 0.0}
-        if g:
-            gmap = F.create_map(
-                *[x for t, v in sorted(g.items()) for x in (F.lit(t), F.lit(v))]
-            )
-            f_block = bm25.block_bound(k1, b, avgdl, has_mdl)
-            blocks = blocks.where(
-                f_block >= F.coalesce(gmap[F.col("term")], F.lit(-1e300))
+                F.expr(_term_in(sorted(exempt))) | overlap
             )
 
     # block metadata reaches the kernel only when some term is actually
@@ -3705,9 +3457,7 @@ def _batch_scores(
     any_masked = prune and any(m["masked"] for m in per_term.values())
     cols = ["term", "docs", "tfs", "dls"]
     if any_masked:
-        cols = ["term", "min_doc", "max_doc", "max_tf"] + (
-            ["min_dl"] if has_mdl else []
-        ) + ["docs", "tfs", "dls"]
+        cols = ["term", "min_doc", "max_doc", "docs", "tfs", "dls"]
 
     def _score_pdf(pdf: pd.DataFrame):
         """Per-Arrow-batch scoring body shared by the shuffle plan
@@ -3723,7 +3473,7 @@ def _batch_scores(
             nrows = len(sub)
             if not (prune and m["masked"]):
                 mask = None  # no query prunes this term
-            elif conjunctive:
+            else:
                 # per-query row mask: always-pass rows (anchors and
                 # unpruned queries) skip the test; exact-id queries
                 # need an anchor doc inside the block's docID span;
@@ -3753,18 +3503,6 @@ def _batch_scores(
                     ok = i0 >= 0
                     ok[ok] = his[i0[ok]] >= lo_r[ok]
                     mask[j, :] = ok
-            else:
-                fb = bm25.norm(
-                    sub["max_tf"].to_numpy().astype(np.float64),
-                    sub["min_dl"].to_numpy().astype(np.float64)
-                    if has_mdl
-                    else np.zeros(nrows),
-                    k1, b, avgdl,
-                )
-                mask = (
-                    np.outer(w_arr, fb) + m["rest"][:, None]
-                    >= m["th"][:, None]
-                )
             bulk = m["bulk"]
             all_bulk = bool(bulk.all())
             for r, (dblob, tblob, lblob) in enumerate(
@@ -3987,7 +3725,6 @@ def _batch_plan_key(
         conjunctive,
         prune,
         engine.conjunctive_exhaustive_cutoff,
-        engine.disjunctive_exhaustive_cutoff,
         engine._DRIVER_MAX_POSTINGS,
         engine._deletes_epoch,
         gs_key,
@@ -4008,8 +3745,7 @@ def bm25_topk_batch(
     Returns (query_id, doc_id, score, rank) with rank 1..k per query,
     ordering identical to :meth:`SearchEngine.bm25_topk` per query.
     ``global_stats`` scores with coordinator (dfs) weights — the
-    multi-index batch path; turns the theta prune off (see
-    :func:`_batch_scores`).
+    multi-index batch path (see :func:`_batch_scores`).
 
     Repeated identical calls return the SAME DataFrame object from a
     per-engine plan cache: Spark caches the analyzed/optimized plan and

@@ -49,9 +49,9 @@ BLOCK_SCHEMA = T.StructType(
         T.StructField("max_doc", T.LongType(), False),
         T.StructField("df", T.LongType(), False),
         T.StructField("max_tf", T.IntegerType(), False),
-        # block-min document length: BM25 contribution grows as dl
-        # shrinks, so min_dl yields a SOUND per-term upper bound that is
-        # much tighter than the dl->0 limit (the block-max prune prunes more)
+        # block-min document length (with max_tf, a BM25 upper bound of
+        # the block). No query reads either; they stay in the on-disk
+        # format until a format change drops them
         T.StructField("min_dl", T.LongType(), False),
         T.StructField("docs", T.BinaryType(), False),
         T.StructField("tfs", T.BinaryType(), False),
@@ -381,8 +381,9 @@ def _read(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """``path``'s parquet under its known ``schema``, with no
     schema-inference job. ``min_dl`` leaves the schema when files
     written before it lack it: pinned, it would read as nulls there,
-    and the ``"min_dl" in columns`` checks would build null prune
-    bounds. Slice subdirectories (slice=k) still surface as a
+    and the writers that keep the column whenever a frame has it
+    (``build.lexicon_frame``, ``build.filter_blocks``) would write
+    those nulls back. Slice subdirectories (slice=k) still surface as a
     partition column via parquet partition discovery."""
     if "min_dl" in schema.names and not _has_min_dl(path):
         schema = T.StructType([f for f in schema if f.name != "min_dl"])

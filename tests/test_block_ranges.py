@@ -50,8 +50,7 @@ def narrow(spark):
     eng = SearchEngine.from_corpus(
         df, CFG, num_partitions=4, block_size=4
     )
-    eng.disjunctive_exhaustive_cutoff = 0  # force the pruned paths
-    eng.conjunctive_exhaustive_cutoff = 0
+    eng.conjunctive_exhaustive_cutoff = 0  # force the pruned path
     return eng, OracleIndex(docs, CFG)
 
 

@@ -96,16 +96,14 @@ def test_scores_stale_and_ranks_promote(spark):
 
 
 def test_disjunctive_prune_sound_under_deletes(spark):
-    """Force the theta prune (cutoff 0) and check the pruned
-    disjunctive batch top-k is rank-identical to the exhaustive
-    single-pass OR after deletes — i.e. theta bootstrapped from LIVE
-    docs only."""
+    """After deletes, the disjunctive batch top-k (``prune=True``, the
+    batch default) is rank-identical to the single-read OR and holds
+    no deleted doc."""
     eng = _engine(spark)
     full = _topk(eng.bm25_topk(["Ajoin", "Ascan"], k=24, conjunctive=False))
-    # delete the strongest-term docs most likely to anchor theta
+    # delete the strongest docs
     victims = [d for d, _ in full[:2]]
     eng.delete_docs(victims)
-    eng.disjunctive_exhaustive_cutoff = 0
     rows = bm25_topk_batch(
         eng, {"q": ["Ajoin", "Ascan"]}, k=5, conjunctive=False
     ).collect()
@@ -127,7 +125,6 @@ def test_batch_paths_match_single_under_deletes(spark, conjunctive):
     eng.delete_docs(_ids(eng.term("join"))[:4])
     # force every prune tier so the masks run through the kernels
     eng.conjunctive_exhaustive_cutoff = 0
-    eng.disjunctive_exhaustive_cutoff = 0
     queries = {
         "a": ["Ajoin", "Amerg"],
         "b": ["Ajoin", "Ascan"],
@@ -251,10 +248,7 @@ def test_compact_purges_tombstones(spark, tmp_path):
             assert gs == pytest.approx(es, rel=1e-9)
     # per-block prune metadata was recomputed over survivors
     lex = {r["term"]: r for r in purged.lexicon.collect()}
-    flex = {
-        r["term"]: r
-        for r in fresh._term_stats(sorted(lex))
-    }
+    flex = {r["term"]: r for r in fresh.lexicon.collect()}
     assert set(lex) == set(flex)
     for t, r in lex.items():
         assert r["df"] == flex[t]["df"], t

@@ -22,9 +22,12 @@ from elasticsearch_analysis_hashsplitter_spark.operators.build import (
 )
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
+    bm25_topk_batch_collect,
 )
 from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
 from elasticsearch_analysis_hashsplitter_spark.plans import ir
+
+from .oracle import OracleIndex
 
 CFG = HashSplitterConfig(chunk_length=4, size=32)
 N_DOCS = 1500
@@ -170,7 +173,10 @@ def test_scan_literals_survive_quotes_backslashes_and_parser_mode(
     """The postings scan is SQL text: a term, prefix, pattern or range
     bound holding a quote, a backslash, a regex or LIKE metacharacter
     or a non-ASCII letter must select exactly the values it names,
-    whatever ``spark.sql.parser.escapedStringLiterals`` says."""
+    whatever ``spark.sql.parser.escapedStringLiterals`` says. The
+    scored reads' ``term IN`` scans of the lexicon and the postings
+    (``search``, ``search_any`` and a served batch) must score exactly
+    like the oracle over the same values."""
     import random
 
     rng = random.Random(5)
@@ -184,6 +190,13 @@ def test_scan_literals_survive_quotes_backslashes_and_parser_mode(
         ),
         CFG, num_partitions=2,
     )
+    orc = OracleIndex(dict(enumerate(values)), CFG)
+
+    def same(got, want, what):
+        assert [d for d, _ in got] == [d for d, _ in want], what
+        for (d, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, rel=1e-9), (what, d)
+
     prev = spark.conf.get("spark.sql.parser.escapedStringLiterals")
     spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped_literals)
     try:
@@ -208,5 +221,23 @@ def test_scan_literals_survive_quotes_backslashes_and_parser_mode(
                 with monkeypatch.context() as m:
                     m.setattr(eng, "_DRIVER_MAX_POSTINGS", 0)
                     assert _ids(eng.docs(node)) == want, (name, i)
+        qmap = {
+            str(i): list(qc.field_query(values[i], CFG).terms)
+            for i in (3, 17, 41)
+        }
+        for bound in (eng._DRIVER_MAX_POSTINGS, 0):
+            with monkeypatch.context() as m:
+                m.setattr(eng, "_DRIVER_MAX_POSTINGS", bound)
+                for q, terms in qmap.items():
+                    for conj, read in ((True, eng.search),
+                                       (False, eng.search_any)):
+                        got = [(r["doc_id"], r["score"])
+                               for r in read(values[int(q)], k=5).collect()]
+                        same(got, orc.bm25_topk(terms, 5, conj),
+                             (q, conj, bound))
+                served = bm25_topk_batch_collect(eng, qmap, k=5)
+                for q, terms in qmap.items():
+                    same(served[q], orc.bm25_topk(terms, 5),
+                         ("served", q, bound))
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", prev)

@@ -69,6 +69,21 @@ def test_term_filter_pushes_down(disk_engine, monkeypatch):
     assert "EqualTo(term,Aspar)" in plan
 
 
+def test_scored_term_list_pushes_down(disk_engine, monkeypatch):
+    """The scored reads select their terms with one SQL ``term IN``
+    expression; it must reach the parquet scan as a pushed ``In``
+    filter, for a short term list and for one past the optimizer's
+    ``InSet`` conversion threshold (10 literals)."""
+    # the distributed plan: small reads otherwise score on the driver
+    monkeypatch.setattr(disk_engine, "_DRIVER_MAX_POSTINGS", 0)
+    for value in ("spark join", " ".join(f"doc{i}" for i in range(12))):
+        terms = list(qc.field_query(value, CFG).terms)
+        plan = _plan(disk_engine.bm25_scores(terms, conjunctive=False))
+        pushed = [ln for ln in plan.splitlines()
+                  if "PushedFilters" in ln and "In(term, [" in ln]
+        assert pushed, (value, plan)
+
+
 def test_docset_path_prunes_blob_columns(disk_engine, monkeypatch):
     plan = _docset_scan_plan(
         disk_engine, monkeypatch, lambda: disk_engine.chunk_term("Aspar")

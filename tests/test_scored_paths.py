@@ -10,10 +10,10 @@ planner's three plans: the "driver" engine keeps every default (this
 corpus stays below the prune cutoffs and ``_DRIVER_MAX_POSTINGS``, so
 reads score on the driver); the "exhaustive" engine sets
 ``_DRIVER_MAX_POSTINGS`` to 0 (the distributed exhaustive plan); the
-"pruned" engine also forces both prune cutoffs to 0 (the conjunctive
-anchor prune runs in its exact-id, block-range and dense tiers; single
-disjunctive reads still never theta-prune — that prune belongs to the
-batch reads). Job-count tests pin what each side costs a warm read.
+"pruned" engine also forces the conjunctive prune cutoff to 0 (the
+anchor prune runs in its exact-id, block-range and dense tiers; a
+disjunctive read always runs the exhaustive plan). Job-count tests pin
+what each side costs a warm read.
 """
 
 import numpy as np
@@ -87,7 +87,6 @@ def _fresh(eng: SearchEngine, side: str) -> SearchEngine:
         out._DRIVER_MAX_POSTINGS = 0
     if side == "pruned":
         out.conjunctive_exhaustive_cutoff = 0
-        out.disjunctive_exhaustive_cutoff = 0
     return out
 
 
@@ -133,15 +132,9 @@ def _same(got, want, what):
 
 
 @pytest.mark.parametrize("side", SIDES)
-def test_search_and_search_any_match_oracle(base, side, monkeypatch):
+def test_search_and_search_any_match_oracle(base, side):
     eng, orc = base
     eng = _fresh(eng, side)
-    thetas = []
-    orig = search_mod._batch_anchor_theta
-    monkeypatch.setattr(
-        search_mod, "_batch_anchor_theta",
-        lambda *a: thetas.append(a[1]) or orig(*a),
-    )
     for value in VALUES:
         _same(_rows(eng.search(value, k=6)),
               _oracle(orc, value)[:6], ("search", value))
@@ -149,12 +142,11 @@ def test_search_and_search_any_match_oracle(base, side, monkeypatch):
               _oracle(orc, value, conjunctive=False)[:6],
               ("search_any", value))
     # which prunes ran: the anchor tiers leave their driver caches
-    # behind; no single read bootstraps a theta, whatever the cutoff
+    # behind
     pruned = side == "pruned"
     assert ("Azeph" in eng._term_docs_cache) == pruned  # exact ids
     assert ("Ajoin" in eng._block_ranges_cache) == pruned  # ranges
     assert "Adata" not in eng._block_ranges_cache  # dense: no prune
-    assert not thetas
 
 
 @pytest.mark.parametrize("side", SIDES)
@@ -210,7 +202,7 @@ def test_must_not_filter_and_after(base, side):
 def test_tombstones_masked_with_stale_scores(base, side):
     eng, orc = base
     eng = _fresh(eng, side)
-    # the strongest hits of every value: each would anchor a theta
+    # the strongest hits of every value
     victims = {
         d for v in VALUES for c in (True, False)
         for d, _ in _oracle(orc, v, conjunctive=c)[:2]

@@ -257,14 +257,11 @@ def test_sharded_collect_forced_prune(eng, eng_sharded, conjunctive):
     qmap = _qmap(VALUES)
     saved = (
         eng.conjunctive_exhaustive_cutoff,
-        eng.disjunctive_exhaustive_cutoff,
         eng_sharded.conjunctive_exhaustive_cutoff,
-        eng_sharded.disjunctive_exhaustive_cutoff,
     )
     try:
         for e in (eng, eng_sharded):
             e.conjunctive_exhaustive_cutoff = 0
-            e.disjunctive_exhaustive_cutoff = 0
             e._batch_plan_cache.clear()
         ref = bm25_topk_batch_collect(
             eng, qmap, k=5, conjunctive=conjunctive, prune=True
@@ -275,9 +272,7 @@ def test_sharded_collect_forced_prune(eng, eng_sharded, conjunctive):
     finally:
         (
             eng.conjunctive_exhaustive_cutoff,
-            eng.disjunctive_exhaustive_cutoff,
             eng_sharded.conjunctive_exhaustive_cutoff,
-            eng_sharded.disjunctive_exhaustive_cutoff,
         ) = saved
         for e in (eng, eng_sharded):
             e._batch_plan_cache.clear()
