@@ -50,21 +50,19 @@ _ENGINES: dict[tuple, SearchEngine] = {}
 #: maintenance gates (purge / upsert / update_by_query) each need a
 #: mutable on-disk index of the SAME corpus; they hardlink-clone this
 #: one base build and mutate their own clone (index files are immutable
-#: — every mutation writes new files or swaps directories — so clones
-#: never alias writes). Same in-session reuse pattern as _ENGINES.
+#: — every mutation writes new directories and renames a new
+#: stats.json in — so clones never alias writes). Same in-session reuse
+#: pattern as _ENGINES.
 _BASE_IDX: dict[tuple, str] = {}
 
 
 def _disk_index_clone(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    import shutil
     import tempfile
 
     from elasticsearch_analysis_hashsplitter_spark.operators.build import (
         build_index,
     )
-    from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
-        _link_tree,
-    )
-
     key = (id(spark), sf_dir)
     if key not in _BASE_IDX:
         base = os.path.join(tempfile.mkdtemp(prefix="hs_gate_base_"), "idx")
@@ -72,7 +70,7 @@ def _disk_index_clone(spark: SparkSession, sf_dir: str, prefix: str) -> str:
         build_index(docs, TOK_CFG, base, id_col="doc_id", text_col="text")
         _BASE_IDX[key] = base
     dst = os.path.join(tempfile.mkdtemp(prefix=prefix), "idx")
-    _link_tree(_BASE_IDX[key], dst)
+    shutil.copytree(_BASE_IDX[key], dst, copy_function=os.link)
     return dst
 
 
@@ -1351,8 +1349,10 @@ def _q_streaming_term(spark, sf_dir):
     equal the batch answer (oracle: same chunks CTE as term_query)."""
     import tempfile
 
-    from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
+    from elasticsearch_analysis_hashsplitter_spark.operators.build import (
         refresh_stats,
+    )
+    from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
         stream_index,
     )
 

@@ -14,18 +14,19 @@ Pipeline (one wide shuffle, of encoded blocks):
        re-encoded into full blocks; fragments of >= block_size/2 pass
        through, so one term's blocks may have interleaved docID ranges
        (the block format permits it: every block's min/max stays exact)
-    -> parquet postings + docstats, then one lexicon + stats pass
-       (:func:`refresh_stats`, shared with every later mutation)
+    -> parquet postings + docstats, then one lexicon + stats pass and
+       the commit (:func:`_commit`, shared with every later mutation)
 
 Resumability: the corpus can be built in ``n_slices`` deterministic
-doc-hash slices, each written + manifested atomically; a re-run skips
-slices whose manifest entry exists (per-partition lineage + metrics).
+doc-hash slices. Each finished slice is committed as ``pending`` (kept,
+read by nobody); the last commit publishes them all, so a re-run after a
+crash builds only the slices not yet committed.
 """
 
 from __future__ import annotations
 
+import os
 import threading
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -363,13 +364,16 @@ def build_index(
     block_size: int = DEFAULT_BLOCK_SIZE,
     n_slices: int = 1,
 ) -> dict:
-    """Full index build; returns the persisted stats (see
+    """Full index build; returns the committed stats (see
     :func:`refresh_stats`) plus this run's ``block_size``, ``n_slices``
     and ``built_slices``.
 
     With ``n_slices > 1`` the corpus is split by ``pmod(xxhash64(doc_id))``
-    and each slice is built + manifested independently: a rerun after a
-    failure skips completed slices (checkpoint resume, north_rule).
+    and each slice is written on its own and committed as ``pending``;
+    one commit after the last publishes them all. Readers see nothing of
+    a build until then. A rerun skips the slices the index holds, live
+    or pending, so a build that crashed after slice k of n builds only
+    the rest.
     """
     spark = docs.sparkSession
     if num_partitions is None:
@@ -385,11 +389,17 @@ def build_index(
     tokenized = tokenize_corpus(docs, cfg, id_col, text_col)
     dle = dl_expr(cfg, text_col)
 
-    built_slices = 0
+    base = catalog.begin_write(index_dir)
+    pending = list(base.get("pending", ()))
+    held = {catalog.key_stem(k) for k in base["slices"] + pending}
+    # a first build names its slices 0..n-1; any later one tags them
+    # with the version of its first commit, so no key comes back
+    suffix = f"_v{catalog.next_version(base)}" if base.get("version") else ""
+    n_built = 0
     for s in range(n_slices):
-        if catalog.manifest_exists(index_dir, s):
+        if str(s) in held:
             continue
-        t0 = time.time()
+        key = f"{s}{suffix}"
         part = (
             tokenized
             if n_slices == 1
@@ -425,31 +435,26 @@ def build_index(
         # the cheap docstats scan wait out the full tokenize+merge
         run_jobs_concurrently(
             lambda: blocks.write.mode("overwrite").parquet(
-                catalog.postings_path(index_dir, s)
+                catalog.postings_path(index_dir, key)
             ),
             lambda: stats_src.write.mode("overwrite").parquet(
-                catalog.docstats_path(index_dir, s)
+                catalog.docstats_path(index_dir, key)
             ),
         )
-        catalog.write_manifest(
-            index_dir,
-            s,
-            {
-                "slice": s,
-                "n_slices": n_slices,
-                "seconds": round(time.time() - t0, 3),
-                "num_partitions": max(1, num_partitions // n_slices),
-                "block_size": block_size,
-            },
-        )
-        built_slices += 1
+        pending.append(key)
+        n_built += 1
+        if s < n_slices - 1:  # the last slice goes in the commit below
+            base = catalog.commit(index_dir, base, {
+                **catalog.carry(base), "config": cfg.to_json(),
+                "pending": pending,
+            })
 
-    stats = refresh_stats(spark, index_dir, cfg)
+    stats = _commit(spark, index_dir, cfg, base, base["slices"] + pending)
     return {
         **stats,
         "block_size": block_size,
         "n_slices": n_slices,
-        "built_slices": built_slices,
+        "built_slices": n_built,
     }
 
 
@@ -476,62 +481,80 @@ def docstats_summary(docstats: DataFrame) -> dict:
 
 
 def lexicon_frame(postings: DataFrame) -> DataFrame:
-    """The lexicon of a posting-block frame: one ``(term, df, max_tf,
-    min_dl)`` row per term (``min_dl`` only when the blocks carry it —
-    pre-min_dl indexes lack it). Written by :func:`refresh_stats`, and
-    the in-memory lexicon of engines with no ``lexicon/`` directory. A
-    ``term IN (...)`` filter on it pushes below the aggregate, so a
-    point read scans only the queried terms' blocks."""
-    aggs = [F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")]
-    if "min_dl" in postings.columns:
-        aggs.append(F.min("min_dl").alias("min_dl"))
-    return postings.groupBy("term").agg(*aggs)
+    """The lexicon of a posting-block frame: one ``(term, df)`` row per
+    term. Written by :func:`_commit`, and the in-memory lexicon of
+    engines whose commit names none. A ``term IN (...)`` filter on it
+    pushes below the aggregate, so a point read scans only the queried
+    terms' blocks."""
+    return postings.groupBy("term").agg(F.sum("df").alias("df"))
+
+
+def _write_lexicon(spark: SparkSession, index_dir: str, slices: list[str],
+                   name: str) -> None:
+    # column-pruned scan: the binary blobs are never read.
+    # term-sorted lexicon FILES: the aggregation's own exchange
+    # already hash-partitions on term, so an in-partition sort is
+    # all it takes for per-query point reads (`term IN (...)`) to
+    # prune parquet row groups via min/max, and AQE coalescing sets
+    # the file count from the lexicon's actual size. An explicit
+    # repartition to any other count costs a second exchange (one
+    # more job per refresh). Hash instead of range partitioning
+    # (r6): repartitionByRange's sampling pass re-executes the full
+    # groupBy child, doubling the aggregation; the cost is
+    # file-LEVEL pruning (a point read checks every file's footer).
+    (
+        lexicon_frame(catalog.read_postings(spark, index_dir, slices))
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(os.path.join(index_dir, name))
+    )
+
+
+def _commit(spark: SparkSession, index_dir: str, cfg: HashSplitterConfig,
+            base: dict, slices: list[str], purged=(),
+            rebuild_lexicon: bool = True) -> dict:
+    """Commit ``slices`` as the index's live set over ``base`` (the
+    commit ``catalog.begin_write`` returned): write their lexicon to a
+    fresh directory, compute the scalar stats over their docstats, and
+    write the commit record naming both, plus the tombstone files the
+    write ``purged`` (``catalog.commit``). Returns the record.
+
+    ``rebuild_lexicon=False`` skips the full-postings lexicon pass: the
+    commit then names no lexicon, and engines aggregate it from the
+    postings until a later commit writes one."""
+    lexicon = (
+        f"lexicon_v{catalog.next_version(base)}" if rebuild_lexicon else None
+    )
+
+    def summarize() -> dict:
+        return docstats_summary(
+            catalog.read_docstats(spark, index_dir, slices)
+        )
+
+    if rebuild_lexicon:
+        # lexicon (postings scan) and scalar stats (docstats scan) are
+        # independent jobs — overlap them (guide §2.6)
+        _, stats = run_jobs_concurrently(
+            lambda: _write_lexicon(spark, index_dir, slices, lexicon),
+            summarize,
+        )
+    else:
+        stats = summarize()
+    stats.update(config=cfg.to_json(), slices=sorted(slices),
+                 lexicon=lexicon, purged=sorted(purged))
+    return catalog.commit(index_dir, base, stats)
 
 
 def refresh_stats(spark: SparkSession, index_dir: str,
                   cfg: HashSplitterConfig,
                   rebuild_lexicon: bool = True) -> dict:
-    """Write the lexicon and ``stats.json`` from an index's postings and
-    docstats — the one writer behind a build and every later refresh
-    (the 'refresh' making appended or purged segments visible with
-    correct idf/avgdl). Returns the stats it wrote.
-
-    ``rebuild_lexicon=False`` skips the full-postings lexicon pass and
-    only rewrites the scalar stats — for intermediate states whose
-    caller runs a full refresh right after (``upsert_docs``: the purge
-    and the append would otherwise each pay the pass)."""
-
-    def write_lexicon() -> None:
-        # column-pruned scan: the binary blobs are never read.
-        # term-sorted lexicon FILES: the aggregation's own exchange
-        # already hash-partitions on term, so an in-partition sort is
-        # all it takes for per-query point reads (`term IN (...)`) to
-        # prune parquet row groups via min/max, and AQE coalescing sets
-        # the file count from the lexicon's actual size. An explicit
-        # repartition to any other count costs a second exchange (one
-        # more job per refresh). Hash instead of range partitioning
-        # (r6): repartitionByRange's sampling pass re-executes the full
-        # groupBy child, doubling the aggregation; the cost is
-        # file-LEVEL pruning (a point read checks every file's footer).
-        (
-            lexicon_frame(catalog.read_postings(spark, index_dir))
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .parquet(catalog.lexicon_path(index_dir))
-        )
-
-    def summarize() -> dict:
-        return docstats_summary(catalog.read_docstats(spark, index_dir))
-
-    if rebuild_lexicon:
-        # lexicon (postings scan) and scalar stats (docstats scan) are
-        # independent jobs — overlap them (guide §2.6)
-        _, stats = run_jobs_concurrently(write_lexicon, summarize)
-    else:
-        stats = summarize()
-    stats["config"] = cfg.to_json()
-    catalog.write_stats(index_dir, stats)
-    return stats
+    """Recompute the lexicon and the scalar stats of the index's live
+    slices and commit them — the 'refresh' of an index whose stats went
+    stale (after streamed segments, see ``stream_index``). Returns the
+    commit record. ``rebuild_lexicon=False``: see :func:`_commit`."""
+    base = catalog.begin_write(index_dir)
+    return _commit(spark, index_dir, cfg, base, base["slices"],
+                   rebuild_lexicon=rebuild_lexicon)
 
 
 def filter_blocks(blocks: DataFrame, keep) -> DataFrame:
@@ -540,12 +563,9 @@ def filter_blocks(blocks: DataFrame, keep) -> DataFrame:
     :meth:`~.search.SearchEngine.doc_subset`). ``keep(ids)`` maps a
     block's sorted int64 doc ids to a boolean mask. Blocks left empty
     are dropped, untouched blocks pass through as they are, and the
-    rest get min/max_doc, df, max_tf and min_dl recomputed over the
-    survivors so every prune bound stays tight. ``blocks`` holds the
-    ``catalog.BLOCK_SCHEMA`` columns, without ``min_dl`` on indexes
-    built before it."""
-    cols = blocks.columns
-    schema = T.StructType([catalog.BLOCK_SCHEMA[c] for c in cols])
+    rest get min/max_doc and df recomputed over the survivors so the
+    range prune's docID bounds stay tight. ``blocks`` holds the
+    ``catalog.BLOCK_SCHEMA`` columns."""
 
     def rewrite(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -566,9 +586,9 @@ def filter_blocks(blocks: DataFrame, keep) -> DataFrame:
                     )
                 )
             if rows:
-                yield pd.DataFrame(rows, columns=cols)
+                yield pd.DataFrame(rows, columns=catalog.BLOCK_SCHEMA.names)
 
-    return blocks.mapInPandas(rewrite, schema=schema)
+    return blocks.mapInPandas(rewrite, schema=catalog.BLOCK_SCHEMA)
 
 
 def verify_content_sha256(

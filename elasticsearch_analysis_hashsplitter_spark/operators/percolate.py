@@ -54,14 +54,14 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import HashSplitterConfig
 from ..functions.tokenize import analyze_series
+from ..plans import compile as qc
 from ..plans import ir
-from ..plans.pattern import glob_to_regex, literal_prefix
 
 #: per-query leaf-count cap — masks live in one int64 (same limit as the
 #: forward engine's bitmask path, SearchEngine._docs_inner)
@@ -96,41 +96,6 @@ def _descore(node: ir.Node) -> ir.Node:
     if isinstance(node, ir.Not):
         return ir.Not(_descore(node.child))
     return node
-
-
-def _leaf_condition(leaf: ir.Node, cfg: HashSplitterConfig) -> Column:
-    """Enumeration-leaf predicate over a ``term`` column — the same
-    bounds the forward engine pushes into its postings scan
-    (``SearchEngine._leaf_sql``), here applied to document terms."""
-    term = F.col("term")
-    if isinstance(leaf, ir.TermPrefixLen):
-        c = F.length(term).between(leaf.min_len, leaf.max_len)
-        if leaf.prefix:
-            c = term.startswith(leaf.prefix) & c
-        return c
-    if isinstance(leaf, ir.TermRangeLen):
-        c = F.length(term).between(leaf.min_len, leaf.max_len)
-        if leaf.lower is not None:
-            c = c & (
-                (term >= leaf.lower)
-                if leaf.include_lower
-                else (term > leaf.lower)
-            )
-        if leaf.upper is not None:
-            c = c & (
-                (term <= leaf.upper)
-                if leaf.include_upper
-                else (term < leaf.upper)
-            )
-        return c
-    if isinstance(leaf, ir.TermPattern):
-        rx = "^" + glob_to_regex(leaf.pattern, cfg) + "$"
-        pre = literal_prefix(leaf.pattern, cfg)
-        c = term.rlike(rx)
-        if pre:
-            c = term.startswith(pre) & c
-        return c
-    raise TypeError(f"not an enumeration leaf: {leaf!r}")
 
 
 class Percolator:
@@ -268,7 +233,7 @@ class Percolator:
             # stays inside whole-stage codegen, no extra join operator
             elems = [
                 F.when(
-                    _leaf_condition(leaf, self.cfg),
+                    F.expr(qc.leaf_sql(leaf, self.cfg)),
                     F.struct(
                         F.lit(qid).alias("qid"),
                         F.lit(bitval).cast("long").alias("bitval"),

@@ -26,7 +26,6 @@ import re
 import threading
 from collections.abc import Iterator
 from functools import reduce
-from urllib.parse import unquote
 
 import numpy as np
 import pandas as pd
@@ -42,7 +41,6 @@ from ..functions import bm25
 from ..functions.codec import decode_counts, decode_doc_ids, encode_block
 from ..plans import compile as qc
 from ..plans import ir
-from ..plans.pattern import glob_to_regex, literal_prefix
 from ..sources import catalog
 from .build import lexicon_frame
 
@@ -224,21 +222,12 @@ def _zero_bits_match(tree: tuple) -> bool:
     return bool(ir.eval_bits(tree, lambda i: np.zeros(1, dtype=bool))[0])
 
 
-def _sql_str(s: str) -> str:
-    """``s`` as a Spark SQL string literal that reads the same under
-    every parser setting (``spark.sql.parser.escapedStringLiterals``
-    changes what a backslash means): its UTF-8 bytes as a binary
-    literal, cast to string. The optimizer folds the cast, so the scan
-    still pushes ``term = 'x'`` and ``StringStartsWith`` to parquet."""
-    return f"CAST(X'{s.encode().hex()}' AS STRING)"
-
-
 def _term_in(terms) -> str:
     """``term IN (...)`` over ``terms`` as SQL text, each literal via
-    :func:`_sql_str`: one expression string, where a Column ``isin``
-    costs a few py4j round trips per term. It still reaches the
-    parquet scan as a pushed ``In`` filter."""
-    return f"term IN ({', '.join(_sql_str(t) for t in terms)})"
+    :func:`~..plans.compile.sql_str`: one expression string, where a
+    Column ``isin`` costs a few py4j round trips per term. It still
+    reaches the parquet scan as a pushed ``In`` filter."""
+    return f"term IN ({', '.join(qc.sql_str(t) for t in terms)})"
 
 
 def _arrow_frame(
@@ -315,22 +304,6 @@ class _LruCache:
         self._d.clear()
 
 
-def _df_slice_keys(df: DataFrame) -> set[str]:
-    """Slice partition keys covered by a file-backed DataFrame's OWN
-    snapshot (``inputFiles`` — the listing Spark fixed at read time).
-    Used instead of re-listing the directory so the layout's coverage
-    set can never drift from what the DataFrame actually scans: a
-    segment appended between ``open`` and ``enable_serving_layout``
-    must count as NOT covered (it isn't in the snapshot), and a fresh
-    listing would silently claim it."""
-    keys: set[str] = set()
-    for p in df.inputFiles():
-        m = re.search(r"/slice=([^/]+)/", p)
-        if m:
-            keys.add(unquote(m.group(1)))
-    return keys
-
-
 class SearchEngine:
     """Query executor over a built index.
 
@@ -352,10 +325,9 @@ class SearchEngine:
         self.docstats = docstats
         self.stats = stats
         self.cfg = cfg
-        #: per-term (df, max_tf, min_dl) — the on-disk lexicon, or the
-        #: same aggregation over the postings when there is none
-        #: (from_corpus / doc_subset engines, indexes with no
-        #: ``lexicon/`` directory)
+        #: per-term df — the committed lexicon, or the same aggregation
+        #: over the postings when there is none (from_corpus /
+        #: doc_subset engines, commits that name no lexicon)
         self.lexicon = (
             lexicon if lexicon is not None else lexicon_frame(postings)
         )
@@ -431,9 +403,12 @@ class SearchEngine:
         #: complete index over a doc subset; queries fan out and merge).
         self.sharded: DataFrame | None = None
         #: the index directory this engine was opened from (None for
-        #: from_corpus engines); refresh() re-lists it for appended
+        #: from_corpus engines); refresh() re-opens it for appended
         #: segments
         self.index_dir: str | None = None
+        #: the live slice keys of the commit this engine was opened at
+        #: (empty for from_corpus engines): its snapshot
+        self._slices: list[str] = []
         #: independently persisted layout pieces (one per
         #: enable/refresh increment) whose union is ``sharded``; each
         #: shards its own doc population with its own quantile bounds
@@ -588,32 +563,28 @@ class SearchEngine:
 
     @classmethod
     def open(cls, spark: SparkSession, index_dir: str) -> "SearchEngine":
-        import os
-
-        if not os.path.exists(catalog.stats_file(index_dir)):
-            # a crash mid-compaction-swap leaves the index dir absent
-            # with intact siblings; repair before giving up
-            if not catalog.recover_compaction(index_dir):
-                raise FileNotFoundError(
-                    f"no hashsplitter index at {index_dir!r} "
-                    "(missing stats.json — was build_index run?)"
-                )
-        stats = catalog.read_stats(index_dir)
-        lexicon = (
-            catalog.read_lexicon(spark, index_dir)
-            if os.path.isdir(catalog.lexicon_path(index_dir))
-            else None
-        )
+        # one read of the commit fixes the whole snapshot: the slices,
+        # the lexicon and the tombstones in force
+        stats = catalog.read_commit(index_dir)
+        if "n_docs" not in stats:
+            raise FileNotFoundError(
+                f"no hashsplitter index at {index_dir!r} (no committed "
+                "stats — was build_index or refresh_stats run?)"
+            )
+        slices = stats["slices"]
         eng = cls(
             spark,
-            catalog.read_postings(spark, index_dir),
-            catalog.read_docstats(spark, index_dir),
+            catalog.read_postings(spark, index_dir, slices),
+            catalog.read_docstats(spark, index_dir, slices),
             stats,
             HashSplitterConfig.from_json(stats["config"]),
-            lexicon=lexicon,
+            lexicon=catalog.read_lexicon(spark, index_dir, stats),
         )
         eng.index_dir = index_dir
-        deleted = catalog.read_deletes(index_dir)
+        eng._slices = list(slices)
+        deleted = catalog.read_deletes(
+            index_dir, catalog.list_delete_files(index_dir, stats)
+        )
         if deleted.size:
             eng._deleted = deleted
         return eng
@@ -671,9 +642,7 @@ class SearchEngine:
         self.sharded = piece
         self._layout_pieces = [piece]
         self._layout_shards = n_shards
-        self._layout_slices = (
-            _df_slice_keys(self.postings) if self.index_dir else set()
-        )
+        self._layout_slices = set(self._slices)
         self._layout_epoch += 1
         return self
 
@@ -745,11 +714,11 @@ class SearchEngine:
                 del self._batch_plan_cache[key]
 
     def refresh(self) -> "SearchEngine":
-        """Pick up segments appended since :meth:`open` — ES's refresh
-        operation (new segments become searchable; SURVEY §3.1 step 4)
-        for a long-lived serving engine.
+        """Pick up every write committed since :meth:`open` — ES's
+        refresh operation (new segments become searchable; SURVEY §3.1
+        step 4) for a long-lived serving engine.
 
-        Returns a NEW engine over the current file listing — fresh
+        Returns a NEW engine over the current commit — fresh
         snapshot, stats, and caches, which is forced: every append
         moves the GLOBAL n_docs/avgdl/df, so every cached
         score-bearing value in the old engine is stale by
@@ -773,24 +742,27 @@ class SearchEngine:
         "skip_existing")`` or naturally unique ids): an append-mode
         re-ingest of an existing doc_id leaves the copies in different
         pieces, where the full relayout (and the shuffle plan) would
-        merge their contributions into one score. Compaction rewrites
-        slices; a layout whose covered slices are gone falls back to a
-        full rebuild at the same shard count.
+        merge their contributions into one score. Compaction and purges
+        (every upsert that replaces a doc) rewrite slices under new
+        keys, and no key is ever reused (``sources/catalog.py``), so a
+        covered key that is still live holds the files the piece was
+        split from; a layout whose covered slices are no longer all live
+        falls back to a full rebuild at the same shard count.
         """
         if self.index_dir is None:
             raise ValueError(
                 "refresh() requires an engine opened with "
                 "SearchEngine.open (from_corpus engines have no "
-                "on-disk listing to refresh from)"
+                "on-disk commit to refresh from)"
             )
         new = SearchEngine.open(self.spark, self.index_dir)
         if self.sharded is None:
             return new
         n_shards = self._layout_shards or 1
-        current = _df_slice_keys(new.postings)
+        current = set(new._slices)
         if not (self._layout_slices <= current):
-            # covered slices were compacted/rewritten: the persisted
-            # pieces describe files that no longer exist
+            # covered slices were compacted or purged: the persisted
+            # pieces hold postings the index no longer has
             self.disable_serving_layout()
             new.enable_serving_layout(n_shards)
             return new
@@ -1576,9 +1548,8 @@ class SearchEngine:
 
         The postings are derived by one map-only Arrow pass over this
         engine's (typically cached) blocks: decode, mask, re-encode,
-        with every per-block bound (min/max doc, df, max_tf, min_dl)
-        recomputed over the survivors so the prune machinery stays
-        tight — the same kernel discipline as the tombstone purge.
+        with every per-block bound (min/max doc, df) recomputed over
+        the survivors so the prune machinery stays tight — the same kernel discipline as the tombstone purge.
         Compared to ``from_corpus`` over the filtered corpus this skips
         the tokenizer AND the term shuffle outright (guide §2.4); the
         blocks it emits are already per-term sorted runs.
@@ -2397,37 +2368,6 @@ class SearchEngine:
     # ------------------------------------------------------------------
     # Doc-set evaluation (filter paths)
     # ------------------------------------------------------------------
-    def _leaf_sql(self, leaf: ir.Node) -> str:
-        """The leaf's predicate over ``term`` as Spark SQL text: a
-        filter read builds its whole scan from two strings instead of a
-        few py4j round trips per Column operation, which cost more than
-        the scan job itself on a small index."""
-        if isinstance(leaf, ir.TermEq):
-            return f"term = {_sql_str(leaf.term)}"
-        if isinstance(leaf, ir.TermPrefixLen):
-            c = f"length(term) BETWEEN {leaf.min_len} AND {leaf.max_len}"
-            if leaf.prefix:
-                c = f"startswith(term, {_sql_str(leaf.prefix)}) AND {c}"
-            return c
-        if isinstance(leaf, ir.TermRangeLen):
-            c = f"length(term) BETWEEN {leaf.min_len} AND {leaf.max_len}"
-            if leaf.lower is not None:
-                op = ">=" if leaf.include_lower else ">"
-                c += f" AND term {op} {_sql_str(leaf.lower)}"
-            if leaf.upper is not None:
-                op = "<=" if leaf.include_upper else "<"
-                c += f" AND term {op} {_sql_str(leaf.upper)}"
-            return c
-        if isinstance(leaf, ir.TermPattern):
-            rx = "^" + glob_to_regex(leaf.pattern, self.cfg) + "$"
-            pre = literal_prefix(leaf.pattern, self.cfg)
-            c = f"term RLIKE {_sql_str(rx)}"
-            if pre:
-                # literal-prefix pushdown: sargable on the term-sorted files
-                c = f"startswith(term, {_sql_str(pre)}) AND {c}"
-            return c
-        raise TypeError(f"not a leaf: {leaf!r}")
-
     #: above this, a DocIds leaf joins instead of inlining literals —
     #: a 500k-literal In() expression explodes analysis/codegen on the
     #: driver, while a broadcast semi join of the id list is flat
@@ -2556,7 +2496,7 @@ class SearchEngine:
         projects only the ``docs`` blob plus ``bits`` — bit i set when
         the block's term matches leaf i (``ir.leaves`` order), computed
         by Catalyst so no Python code walks the leaves per block."""
-        conds = [f"({self._leaf_sql(x)})" for x in ir.leaves(node)]
+        conds = [f"({qc.leaf_sql(x, self.cfg)})" for x in ir.leaves(node)]
         bits = " | ".join(
             f"CASE WHEN {c} THEN {1 << i}L ELSE 0L END"
             for i, c in enumerate(conds)
@@ -3103,8 +3043,8 @@ def _shard_split_fn(bounds: np.ndarray):
     :meth:`SearchEngine.enable_serving_layout`: split each posting
     block at the doc-shard boundaries (postings are docID-sorted, so
     one searchsorted per block), re-encode each piece, and tag it with
-    its shard id. Sub-block min/max_doc, df, max_tf, min_dl are
-    recomputed from the slice, so the range prune's docID bounds stay
+    its shard id. Sub-block min/max_doc and df are recomputed from the
+    slice, so the range prune's docID bounds stay
     as tight as the original block's."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -3707,7 +3647,9 @@ def _batch_plan_key(
     engine, queries, k, conjunctive, prune, global_stats=None,
 ):
     # the stand-down knobs and the driver bound are part of the
-    # compiled plan's shape; the deletes epoch too — a plan compiled
+    # compiled plan's shape; ``prune`` only where it changes the plan
+    # (a disjunctive read is one exhaustive pass either way, so both
+    # flags share one entry); the deletes epoch too — a plan compiled
     # before a delete_docs call
     # embeds the OLD tombstone mask (literal/broadcast/kernel closure)
     # and must never serve afterwards. Coordinator (dfs) weights embed
@@ -3723,7 +3665,7 @@ def _batch_plan_key(
         tuple(sorted((q, tuple(ts)) for q, ts in queries.items())),
         k,
         conjunctive,
-        prune,
+        prune and conjunctive,
         engine.conjunctive_exhaustive_cutoff,
         engine._DRIVER_MAX_POSTINGS,
         engine._deletes_epoch,

@@ -12,7 +12,7 @@ index/mapper/hashsplitter/HashSplitterFieldMapper.java):
   raw positioned-chunk term (HashSplitterTermQueryParser.java:96-97)
 
 All of this is pure driver-side Python; the produced IR leaves become
-Catalyst-friendly predicates over the postings table.
+Catalyst-friendly predicates over the postings table (:func:`leaf_sql`).
 
 Documented divergences from the reference (intended-behavior fixes):
 1. rangeFilter [null,null] with ``size % chunk_length != 0`` uses prefix
@@ -52,7 +52,7 @@ from .ir import (
     TermRangeLen,
     simplify,
 )
-from .pattern import search_chunks
+from .pattern import glob_to_regex, literal_prefix, search_chunks
 
 
 def _analyze_query_value(value: str, cfg: HashSplitterConfig) -> list[str]:
@@ -382,3 +382,45 @@ def range_filter(
         )
 
     return simplify(top)
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal that reads the same under
+    every parser setting (``spark.sql.parser.escapedStringLiterals``
+    changes what a backslash means): its UTF-8 bytes as a binary
+    literal, cast to string. The optimizer folds the cast, so a scan
+    still pushes ``term = 'x'`` and ``StringStartsWith`` to parquet."""
+    return f"CAST(X'{s.encode().hex()}' AS STRING)"
+
+
+def leaf_sql(leaf: Node, cfg: HashSplitterConfig) -> str:
+    """An IR leaf's predicate over a ``term`` column as Spark SQL text —
+    the one translation behind the postings scans of the filter paths
+    and the percolator's document-term match. A scan built from one
+    string skips the few py4j round trips per Column operation, which
+    cost more than the scan job itself on a small index."""
+    if isinstance(leaf, TermEq):
+        return f"term = {sql_str(leaf.term)}"
+    if isinstance(leaf, TermPrefixLen):
+        c = f"length(term) BETWEEN {leaf.min_len} AND {leaf.max_len}"
+        if leaf.prefix:
+            c = f"startswith(term, {sql_str(leaf.prefix)}) AND {c}"
+        return c
+    if isinstance(leaf, TermRangeLen):
+        c = f"length(term) BETWEEN {leaf.min_len} AND {leaf.max_len}"
+        if leaf.lower is not None:
+            op = ">=" if leaf.include_lower else ">"
+            c += f" AND term {op} {sql_str(leaf.lower)}"
+        if leaf.upper is not None:
+            op = "<=" if leaf.include_upper else "<"
+            c += f" AND term {op} {sql_str(leaf.upper)}"
+        return c
+    if isinstance(leaf, TermPattern):
+        rx = "^" + glob_to_regex(leaf.pattern, cfg) + "$"
+        pre = literal_prefix(leaf.pattern, cfg)
+        c = f"term RLIKE {sql_str(rx)}"
+        if pre:
+            # literal-prefix pushdown: sargable on the term-sorted files
+            c = f"startswith(term, {sql_str(pre)}) AND {c}"
+        return c
+    raise TypeError(f"not a leaf: {leaf!r}")

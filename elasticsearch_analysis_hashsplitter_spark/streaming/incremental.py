@@ -9,10 +9,11 @@ directory that :class:`~..operators.search.SearchEngine` reads uniformly
 ``compact_index`` is the explicit merge when segment counts grow.
 
 Flow: ``readStream`` (file source, schema-pinned) -> foreachBatch ->
-tokenize + block build (same code path as the batch build) -> append
-postings/docstats under ``slice=stream_<epoch>`` + manifest entry ->
-stats.json refresh. Checkpointing is Spark's own (exactly-once file
-source progress) plus the engine manifest lineage.
+tokenize + block build (same code path as the batch build) -> write
+postings/docstats under ``slice=stream_<epoch>_v<N>`` -> commit the
+slice (``stats.json``, see ``sources/catalog.py``). Checkpointing is
+Spark's own (exactly-once file source progress); a replayed batch whose
+slice is already committed is skipped.
 
 Doc identity: the default mode is **append-only** — re-ingesting a
 doc_id appends a second segment with its postings AND a second docstats
@@ -28,22 +29,24 @@ stats — so "update" is delete + purge + re-ingest (packaged as
 ``upsert_docs``), never last-write-wins shadowing (a tombstoned doc_id
 stays masked, including any re-ingested copy, until a purge clears the
 tombstone).
+
+Every writer here follows the catalog's one protocol: ``begin_write``,
+new directories only, then one commit (``build._commit``).
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import HashSplitterConfig
 from ..operators.build import (
+    _commit,
     adaptive_num_partitions,
     build_postings_blocks_segmented,
     filter_blocks,
-    refresh_stats,
     run_jobs_concurrently,
     run_jobs_pool,
     tokenize_corpus,
@@ -53,17 +56,20 @@ from ..sources import catalog
 
 def _write_segment(
     batch_df: DataFrame,
-    batch_id: int,
+    slice_key: str,
     cfg: HashSplitterConfig,
     index_dir: str,
     id_col: str,
     text_col: str,
     num_partitions: int | None = None,
     on_duplicate: str = "append",
-    slice_key: str | None = None,
     pre_tokenized: DataFrame | None = None,
-) -> None:
-    """``pre_tokenized``: an already-materialized tokenize_corpus frame
+) -> str | None:
+    """Write the batch's postings and docstats under the new slice
+    ``slice_key`` without committing it; returns the key, or None for
+    an empty batch (nothing written).
+
+    ``pre_tokenized``: an already-materialized tokenize_corpus frame
     over ``batch_df`` (upsert_docs starts tokenizing concurrently with
     its purge — the tokenizer never reads the index, so the two
     overlap); only valid with ``on_duplicate='append'`` since the
@@ -94,19 +100,14 @@ def _write_segment(
             .where(F.col("__rn") == 1)
             .drop("__rn")
         )
-        try:
-            existing = catalog.read_docstats(
-                batch_df.sparkSession, index_dir
-            ).select(F.col("doc_id").alias("__existing_id"))
-        except Exception:  # no docstats yet (first segment)
-            existing = None
-        if existing is not None:
-            batch_df = batch_df.join(
-                existing,
-                F.col(id_col).cast("long") == F.col("__existing_id"),
-                "left_anti",
-            )
-    t0 = time.time()
+        existing = catalog.read_docstats(
+            batch_df.sparkSession, index_dir
+        ).select(F.col("doc_id").alias("__existing_id"))
+        batch_df = batch_df.join(
+            existing,
+            F.col(id_col).cast("long") == F.col("__existing_id"),
+            "left_anti",
+        )
     # Single evaluation per micro-batch (r3 judge): the postings write
     # and the docstats write are two actions, and the old
     # ``batch_df.take(1)`` emptiness probe was a third — each one
@@ -120,15 +121,10 @@ def _write_segment(
             batch_df, cfg, id_col, text_col
         ).localCheckpoint()
         if tokenized.isEmpty():
-            return
-    if slice_key is None:
-        slice_key = f"stream_{batch_id}"
+            return None
     blocks = build_postings_blocks_segmented(tokenized, num_partitions)
     # both sinks read the materialized (checkpointed) batch — independent
-    # jobs, overlapped (guide §2.6); the manifest below still lands last.
-    # The two sinks are unordered, so a crash can leave a docstats slice
-    # with no postings slice: slice membership is keyed on the postings
-    # listing and the manifest, never on docstats alone.
+    # jobs, overlapped (guide §2.6); the caller's commit lands after both
     run_jobs_concurrently(
         lambda: blocks.write.mode("overwrite").parquet(
             catalog.postings_path(index_dir, slice_key)
@@ -137,16 +133,36 @@ def _write_segment(
         .write.mode("overwrite")
         .parquet(catalog.docstats_path(index_dir, slice_key)),
     )
-    catalog.write_manifest(
-        index_dir,
-        slice_key,  # type: ignore[arg-type]
-        {
-            "slice": slice_key,
-            "batch_id": batch_id,
-            "seconds": round(time.time() - t0, 3),
-            "kind": "stream_segment",
-        },
+    return slice_key
+
+
+def _append_segment(
+    batch_df: DataFrame,
+    batch_id: int,
+    cfg: HashSplitterConfig,
+    index_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "content",
+    num_partitions: int | None = None,
+    on_duplicate: str = "append",
+) -> None:
+    """One micro-batch: write its segment and commit it with the
+    index's stats and lexicon carried as they are — no stats job, so a
+    batch costs O(batch); ``refresh_stats`` brings both up to date. A
+    replayed batch whose segment is already committed is skipped."""
+    base = catalog.begin_write(index_dir)
+    stem = f"stream_{batch_id}"
+    if stem in map(catalog.key_stem, base["slices"]):
+        return
+    key = _write_segment(
+        batch_df, f"{stem}_v{catalog.next_version(base)}", cfg, index_dir,
+        id_col, text_col, num_partitions, on_duplicate,
     )
+    if key is not None:
+        catalog.commit(index_dir, base, {
+            **catalog.carry(base), "config": cfg.to_json(),
+            "slices": base["slices"] + [key],
+        })
 
 
 def stream_index(
@@ -164,8 +180,11 @@ def stream_index(
 ):
     """Start (and with availableNow, drain) the incremental index stream.
 
-    Returns the StreamingQuery; callers should ``awaitTermination()`` and
-    then :func:`refresh_stats`.
+    Returns the StreamingQuery. Each micro-batch commits its segment
+    and carries the index's stats and lexicon as they were; callers
+    should ``awaitTermination()`` and then ``refresh_stats`` (in
+    ``operators.build``), which recomputes both. An index that had no
+    stats before the stream opens only after that refresh.
 
     ``num_partitions``: each segment's shuffle width; ``None`` derives
     it from the micro-batch's size (:func:`adaptive_num_partitions`).
@@ -183,7 +202,7 @@ def stream_index(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _write_segment(
+        _append_segment(
             batch_df, batch_id, cfg, index_dir, id_col, text_col,
             num_partitions, on_duplicate,
         )
@@ -220,28 +239,73 @@ def _without_ids(frame: DataFrame, ids_bc) -> DataFrame:
     return frame.mapInArrow(keep, frame.schema)
 
 
-def _keys_of_ids(frame: DataFrame, ids_bc, key: str):
-    """The distinct ``key`` values (an Arrow array) of ``frame``'s rows
-    whose ``doc_id`` is in the broadcast sorted id set: batch ids →
-    indexed ids, tombstones → their slices. One map-only job with no
-    exchange, so the plan is the same size whatever the set's size;
-    each batch is deduped before it leaves the executor."""
+def _slices_of_ids(spark: SparkSession, index_dir: str, slices, ids):
+    """The distinct ``(doc_id, slice)`` pairs (an Arrow table) of the
+    docstats rows in ``slices`` whose doc id is in the sorted array
+    ``ids``: batch ids → collisions, tombstones → the slices a purge
+    rewrites. One map-only job with no exchange, so the plan is the
+    same size whatever the set's size; each batch is deduped before it
+    leaves the executor."""
     import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql import types as T
 
     from ..operators.search import _live_mask
+
+    ids_bc = spark.sparkContext.broadcast(ids)
+    frame = catalog.read_docstats(spark, index_dir, slices).select(
+        "doc_id", F.col("slice").cast("string")
+    )
 
     def hits(batches):
         for b in batches:
             d = b.column("doc_id").to_numpy(zero_copy_only=False)
-            held = pa.array(~_live_mask(d, ids_bc.value))
-            yield pa.RecordBatch.from_arrays(
-                [pc.unique(b.column(key).filter(held))], [key]
+            t = pa.Table.from_batches([b]).filter(
+                pa.array(~_live_mask(d, ids_bc.value))
             )
+            yield from t.group_by(t.column_names).aggregate([]).to_batches()
 
-    out = frame.mapInArrow(hits, T.StructType([frame.schema[key]]))
-    return pc.unique(out.toArrow().column(0))
+    out = frame.mapInArrow(hits, frame.schema).toArrow()
+    return out.group_by(out.column_names).aggregate([])
+
+
+def _rewrite_victims(spark: SparkSession, index_dir: str, base: dict,
+                     victims, deleted) -> list[str]:
+    """Rewrite each victim slice under a fresh key with the doc ids in
+    ``deleted`` dropped from its postings and docstats; returns
+    ``base``'s live slices with the victims replaced. Shuffle-free: the
+    purge kernel (:func:`_purge_blocks`) is a map-only
+    decode→mask→re-encode pass, so the cost is O(victim-slice bytes)."""
+    del_bc = spark.sparkContext.broadcast(deleted)
+    version = catalog.next_version(base)
+    renamed = {k: f"{catalog.key_stem(k)}_v{version}" for k in victims}
+
+    def rewrite(k: str, new: str) -> None:
+        # the slice's postings rewrite and docstats filter are
+        # independent sinks (guide §2.6)
+        run_jobs_concurrently(
+            lambda: _purge_blocks(
+                catalog.block_columns(
+                    catalog.read_postings(spark, index_dir, [k])
+                ),
+                del_bc,
+            ).write.mode("overwrite").parquet(
+                catalog.postings_path(index_dir, new)
+            ),
+            lambda: _without_ids(
+                catalog.read_docstats(spark, index_dir, [k]).select(
+                    *catalog.DOCSTATS_SCHEMA.names
+                ),
+                del_bc,
+            ).write.mode("overwrite").parquet(
+                catalog.docstats_path(index_dir, new)
+            ),
+        )
+
+    # a few victim rewrites in flight (guide §2.6): each is independent
+    run_jobs_pool(
+        [lambda k=k, new=new: rewrite(k, new) for k, new in renamed.items()],
+        max_workers=4,
+    )
+    return [renamed.get(k, k) for k in base["slices"]]
 
 
 def compact_index(
@@ -250,108 +314,75 @@ def compact_index(
     out_dir: str,
     cfg: HashSplitterConfig,
     num_partitions: int = 8,
-    layout: str = "hash",
 ) -> dict:
-    """Segment merge: rewrite all postings slices into one slice
-    (decode-free: block rows are re-partitioned and kept — they are
-    already per-term sorted runs; only the file layout and lexicon/stats
-    are rebuilt).
+    """Segment merge: rewrite all live slices of ``index_dir`` into one
+    slice of the index at ``out_dir`` and commit it there (decode-free:
+    block rows are re-partitioned and kept — they are already per-term
+    sorted runs; only the file layout and lexicon/stats are rebuilt).
+    ``out_dir`` may be ``index_dir`` itself (:func:`maybe_compact`).
 
-    ``layout`` — where a hot term's blocks LAND, measured both ways in
-    a 1M-doc interleaved A/B (BENCH.md "Compacted-layout A/B"):
-
-    * ``"hash"`` (default): hash-partition each block row on
-      ``(term, min_doc)``, term-sorted within partitions. A hot term's
-      blocks spread across ~all partitions, so the decode of a dense
-      query runs as ~num_partitions parallel tasks — warm hot-term BM25
-      measured 1.8x faster than the range layout at 1M docs (2.6 vs
-      4.6 s), matching the segmented ingest layout's speed while still
-      merging fragments and cutting file count. Row-group min/max on
-      the sorted ``term`` column keeps point-lookup pruning (each file
-      skips row groups without the term).
-    * ``"range"``: ``repartitionByRange`` on (term, min_doc) — globally
-      term-ordered files, strongest FILE-level pruning (a rare-term
-      lookup touches one file instead of every file's footer). Costs a
-      sampling pass, and concentrates a hot term's blocks into 1-2
-      partitions, serializing exactly the decode the cluster should
-      parallelize — prefer it only for point-lookup-dominated indexes.
+    Each block row is hash-partitioned on ``(term, min_doc)`` and
+    term-sorted within its partition: a hot term's blocks spread across
+    ~all partitions, so the decode of a dense query runs as
+    ~num_partitions parallel tasks (1.8x faster on warm hot-term BM25
+    than a term-range layout at 1M docs, BENCH.md "Compacted-layout
+    A/B"), while row-group min/max on the sorted ``term`` column keeps
+    point-lookup pruning.
     """
-    if layout not in ("hash", "range"):
-        raise ValueError(f"layout: {layout!r} (expected 'hash' or 'range')")
-    postings = catalog.block_columns(catalog.read_postings(spark, index_dir))
-    deleted = catalog.read_deletes(index_dir)
-    docstats = catalog.read_docstats(spark, index_dir).select(
-        "doc_id", "dl", "content_sha256"
+    base = catalog.begin_write(out_dir)
+    in_place = os.path.abspath(out_dir) == os.path.abspath(index_dir)
+    src = base if in_place else catalog.read_commit(index_dir)
+    # the tombstones applied are exactly the files named here: one
+    # written while the compaction runs stays in force
+    names = catalog.list_delete_files(index_dir, src)
+    deleted = catalog.read_deletes(index_dir, names)
+    postings = catalog.block_columns(
+        catalog.read_postings(spark, index_dir, src["slices"])
+    )
+    docstats = catalog.read_docstats(spark, index_dir, src["slices"]).select(
+        *catalog.DOCSTATS_SCHEMA.names
     )
     if deleted.size:
         # Purge pass (Lucene's expunge-deletes-at-merge): tombstoned
-        # postings are physically dropped, per-block df/max_tf/min_dl
-        # and docID bounds recomputed, emptied blocks removed, and
-        # docstats filtered — refresh_stats below then rebuilds the
-        # lexicon and the n_docs/avgdl scalars from the purged data, so
-        # the compacted index scores exactly like a fresh build over
-        # the live corpus, and its deletes/ dir is empty. This is the
-        # one decode pass compaction pays, and only on indexes that
-        # actually hold tombstones.
+        # postings are physically dropped, per-block df and docID bounds
+        # recomputed, emptied blocks removed, and docstats filtered —
+        # the commit below then rebuilds the lexicon and the
+        # n_docs/avgdl scalars from the purged data, so the compacted
+        # index scores exactly like a fresh build over the live corpus.
+        # This is the one decode pass compaction pays, and only on
+        # indexes that actually hold tombstones.
         del_bc = spark.sparkContext.broadcast(deleted)
         postings = _purge_blocks(postings, del_bc)
         docstats = _without_ids(docstats, del_bc)
-    shuffled = (
-        postings.repartitionByRange(num_partitions, "term", "min_doc")
-        if layout == "range"
-        else postings.repartition(num_partitions, "term", "min_doc")
-    )
+    key = f"compacted_v{catalog.next_version(base)}"
     # postings merge and docstats rewrite are independent sinks —
-    # overlapped (guide §2.6); refresh_stats below reads both back
+    # overlapped (guide §2.6); the commit below reads both back
     run_jobs_concurrently(
         lambda: (
-            shuffled.sortWithinPartitions("term", "min_doc")
+            postings.repartition(num_partitions, "term", "min_doc")
+            .sortWithinPartitions("term", "min_doc")
             .write.mode("overwrite")
-            .parquet(catalog.postings_path(out_dir) + "/slice=compacted")
+            .parquet(catalog.postings_path(out_dir, key))
         ),
         lambda: docstats.write.mode("overwrite").parquet(
-            catalog.docstats_path(out_dir) + "/slice=compacted"
+            catalog.docstats_path(out_dir, key)
         ),
     )
-    catalog.write_manifest(out_dir, "compacted", {"kind": "compaction"})  # type: ignore[arg-type]
-    return refresh_stats(spark, out_dir, cfg)
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """Mirror ``src`` into ``dst`` with hardlinks (same-filesystem
-    metadata ops, no data copy; falls back to a real copy if the link
-    fails, e.g. across devices). Used to carry untouched slices through
-    a purge rewrite byte-identically."""
-    import shutil
-
-    # a dirty destination (failed earlier attempt) must not leave stale
-    # files mixed with the linked ones — Spark's mode=overwrite gives
-    # the rewritten slices the same guarantee
-    shutil.rmtree(dst, ignore_errors=True)
-    for root, _dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        tgt = dst if rel == "." else os.path.join(dst, rel)
-        os.makedirs(tgt, exist_ok=True)
-        for f in files:
-            s, d = os.path.join(root, f), os.path.join(tgt, f)
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
+    # out of place, the tombstones of whatever index ``out_dir`` held
+    # describe that index, not this one
+    purged = names if in_place else catalog.list_delete_files(out_dir, base)
+    return _commit(spark, out_dir, cfg, base, [key], purged=purged)
 
 
 def purge_index(
     spark: SparkSession,
     index_dir: str,
-    out_dir: str,
     cfg: HashSplitterConfig,
-    rebuild_lexicon: bool = True,
-    refresh: bool = True,
 ) -> dict:
     """Slice-preserving expunge: physically drop tombstoned postings
     while keeping the segment layout (``compact_index`` is the segment
     MERGE; this is the pure Lucene expunge-deletes, without changing
-    segment count).
+    segment count), committed in place.
 
     Scale shape — the two properties that make per-batch upserts viable
     on a large index:
@@ -360,139 +391,28 @@ def purge_index(
       ingest/build/upsert batch writes its docs' postings AND docstats
       under one ``slice=`` key), so the slice-partitioned docstats give
       EXACT tombstone→slice membership from one map-only probe
-      (:func:`_keys_of_ids`);
-      slices holding no tombstoned doc are hardlinked into the output
-      unchanged (metadata-only, byte-identical — pinned by inode in
-      tests). A targeted update batch (e.g. re-ingesting yesterday's
-      crawl) rewrites only the segments that held those docs, not the
-      index.
-    * **Zero shuffles.** The purge kernel (:func:`_purge_blocks`) is a
-      map-only decode→mask→re-encode pass, and each victim slice is
-      rewritten under its own key — no repartition, no global merge, so
-      the rewrite cost is O(victim-slice bytes) with full scan
-      parallelism.
+      (:func:`_slices_of_ids`); each victim is rewritten under a fresh
+      key, and slices holding no tombstoned doc stay live as they are —
+      not read, not copied. A targeted update batch (e.g. re-ingesting
+      yesterday's crawl) rewrites only the segments that held those
+      docs, not the index.
+    * **Zero shuffles** (:func:`_rewrite_victims`).
 
-    Stats/lexicon are recomputed over the surviving postings
-    (:func:`refresh_stats`), so the purged index scores exactly like a
-    fresh build over the live corpus — the same guarantee as the
-    compaction purge pass, minus the merge. Use :func:`purge_in_place`
-    for the crash-safe in-place form.
+    The commit recomputes the lexicon and stats over the surviving
+    postings, so the purged index scores exactly like a fresh build over
+    the live corpus — the same guarantee as the compaction purge pass,
+    minus the merge. Returns the commit record.
     """
-    if not refresh and rebuild_lexicon:
-        raise ValueError(
-            "refresh=False implies rebuild_lexicon=False (the carried "
-            "stats/lexicon pair is only consistent as a pair)"
-        )
-    deleted = catalog.read_deletes(index_dir)
+    base = catalog.begin_write(index_dir)
+    names = catalog.list_delete_files(index_dir, base)
+    deleted = catalog.read_deletes(index_dir, names)
     if not deleted.size:
         raise ValueError("purge_index: index holds no tombstones")
-    del_bc = spark.sparkContext.broadcast(deleted)
-    all_keys = [str(k) for k in catalog.list_postings_slices(index_dir)]
-    docstats = catalog.read_docstats(spark, index_dir)
-    if "slice" in docstats.columns:
-        keyed = docstats.select("doc_id", F.col("slice").cast("string"))
-        victim_keys = set(_keys_of_ids(keyed, del_bc, "slice").to_pylist())
-    else:  # legacy un-sliced docstats: no membership — purge every slice
-        victim_keys = set(all_keys)
-
-    def rewrite_victim(k: str) -> None:
-        sinks = [
-            lambda: _purge_blocks(
-                catalog.block_columns(
-                    catalog.read_postings(spark, index_dir, k)
-                ),
-                del_bc,
-            ).write.mode("overwrite").parquet(
-                catalog.postings_path(out_dir, k)
-            )
-        ]
-        if os.path.isdir(catalog.docstats_path(index_dir, k)):
-            sinks.append(
-                lambda: _without_ids(
-                    catalog.read_docstats(spark, index_dir, k), del_bc
-                ).write.mode("overwrite").parquet(
-                    catalog.docstats_path(out_dir, k)
-                )
-            )
-        # the slice's postings rewrite and docstats filter are
-        # independent sinks (guide §2.6); the manifest still lands
-        # strictly after both, preserving the completion marker. The
-        # sinks are unordered, so a crash can leave a docstats slice
-        # with no postings slice: slice membership is keyed on the
-        # postings listing and the manifest, never on docstats alone.
-        run_jobs_concurrently(*sinks)
-        catalog.write_manifest(
-            out_dir, k,  # type: ignore[arg-type]
-            {"slice": k, "kind": "purge"},
-        )
-
-    victim_thunks = []
-    for k in all_keys:
-        if k in victim_keys:
-            victim_thunks.append(lambda k=k: rewrite_victim(k))
-        else:
-            _link_tree(catalog.postings_path(index_dir, k),
-                       catalog.postings_path(out_dir, k))
-            doc_src = catalog.docstats_path(index_dir, k)
-            if os.path.isdir(doc_src):
-                _link_tree(doc_src, catalog.docstats_path(out_dir, k))
-            mf = catalog.manifest_file(index_dir, k)  # type: ignore[arg-type]
-            if os.path.exists(mf):
-                dst_mf = catalog.manifest_file(out_dir, k)  # type: ignore[arg-type]
-                os.makedirs(os.path.dirname(dst_mf), exist_ok=True)
-                try:
-                    os.link(mf, dst_mf)
-                except OSError:  # cross-device: copy, never drop lineage
-                    import shutil
-
-                    shutil.copy2(mf, dst_mf)
-    # rewrite victim slices with a few jobs in flight (guide §2.6):
-    # each slice's rewrite is independent of every other's
-    run_jobs_pool(victim_thunks, max_workers=4)
-    if "slice" not in docstats.columns:
-        # legacy layout: one un-sliced docstats table, filtered whole
-        _without_ids(docstats, del_bc).write.mode(
-            "overwrite"
-        ).parquet(catalog.docstats_path(out_dir))
-    if not rebuild_lexicon and os.path.isdir(catalog.lexicon_path(index_dir)):
-        # carry the source lexicon (hardlinks): its df is an upper
-        # bound over the purged postings — the exact stale-stats state
-        # tombstoned serving already runs in, self-consistent for both
-        # scoring and prune bounds — so the swapped index stays fully
-        # formed until the caller's full refresh rebuilds it
-        _link_tree(catalog.lexicon_path(index_dir),
-                   catalog.lexicon_path(out_dir))
-    if not refresh:
-        # carry the source stats.json too (same staleness class as the
-        # lexicon carry: counts are upper bounds over the purged
-        # postings, self-consistent for scoring) — for callers that run
-        # a full refresh_stats right after (upsert_docs), the
-        # intermediate docstats aggregation job buys nothing
-        import shutil
-
-        shutil.copy2(catalog.stats_file(index_dir),
-                     catalog.stats_file(out_dir))
-        return catalog.read_stats(out_dir)
-    return refresh_stats(spark, out_dir, cfg,
-                         rebuild_lexicon=rebuild_lexicon)
-
-
-def purge_in_place(
-    spark: SparkSession,
-    index_dir: str,
-    cfg: HashSplitterConfig,
-    rebuild_lexicon: bool = True,
-    refresh: bool = True,
-) -> dict:
-    """Crash-safe in-place :func:`purge_index` (the swap protocol of
-    :func:`maybe_compact`); the purge half of :func:`upsert_docs`."""
-    return _rewrite_in_place(
-        index_dir,
-        lambda tmp: purge_index(
-            spark, index_dir, tmp, cfg, rebuild_lexicon=rebuild_lexicon,
-            refresh=refresh,
-        ),
-    )
+    victims = _slices_of_ids(
+        spark, index_dir, base["slices"], deleted
+    ).column("slice").to_pylist()
+    slices = _rewrite_victims(spark, index_dir, base, set(victims), deleted)
+    return _commit(spark, index_dir, cfg, base, slices, purged=names)
 
 
 def maybe_compact(
@@ -501,97 +421,21 @@ def maybe_compact(
     cfg: HashSplitterConfig,
     max_slices: int = 8,
     num_partitions: int = 8,
-    layout: str = "hash",
 ) -> dict | None:
-    """Compaction policy: rewrite the index in place when the slice count
-    exceeds ``max_slices``. Tombstones ride along: whenever compaction
-    fires, ``compact_index`` purges any accumulated deletes (postings
-    dropped, stats recomputed, deletes/ emptied — Lucene's
-    expunge-at-merge). Each streamed micro-batch adds a segment;
-    every segment adds per-file open/footer costs and more fragmented
-    term runs — read amplification grows with segment count exactly as
-    with Lucene segments, and this is the merge policy.
-
-    Crash-safe in-place swap (r2 advisor — the old per-subdirectory swap
-    had a window where the index was missing some subdirs with no
-    automatic recovery): compact to a sibling tmp dir, move non-core
-    entries (e.g. a co-located streaming checkpoint) into it, then swap
-    the WHOLE directory with two atomic renames. The only non-healthy
-    state a crash can leave is "index dir absent, both siblings intact",
-    which :func:`catalog.recover_compaction` repairs automatically — it
-    runs at the top of this function and in ``SearchEngine.open``.
-    Single-writer; concurrent readers see either the old or the new
-    index except during the one-rename gap (on object stores prefer
-    :func:`compact_index` to a new location plus a catalog pointer
-    swap). Returns the refreshed stats, or None when no compaction was
-    needed.
+    """Compaction policy: compact the index in place
+    (:func:`compact_index` with ``out_dir=index_dir``) when the slice
+    count exceeds ``max_slices``. Tombstones ride along: whenever
+    compaction fires, any accumulated deletes are purged (postings
+    dropped, stats recomputed — Lucene's expunge-at-merge). Each
+    streamed micro-batch adds a segment; every segment adds per-file
+    open/footer costs and more fragmented term runs — read amplification
+    grows with segment count exactly as with Lucene segments, and this
+    is the merge policy. Returns the commit record, or None when no
+    compaction was needed.
     """
-    catalog.recover_compaction(index_dir)
-    slices = catalog.list_postings_slices(index_dir)
-    if len(slices) <= max_slices:
+    if len(catalog.list_postings_slices(index_dir)) <= max_slices:
         return None
-    return _compact_in_place(spark, index_dir, cfg, num_partitions, layout)
-
-
-def _compact_in_place(
-    spark: SparkSession,
-    index_dir: str,
-    cfg: HashSplitterConfig,
-    num_partitions: int = 8,
-    layout: str = "hash",
-) -> dict:
-    """The crash-safe in-place rewrite half of :func:`maybe_compact`
-    (see its docstring for the swap protocol)."""
-    return _rewrite_in_place(
-        index_dir,
-        lambda tmp: compact_index(
-            spark, index_dir, tmp, cfg, num_partitions, layout=layout
-        ),
-    )
-
-
-def _rewrite_in_place(index_dir: str, rewrite) -> dict:
-    """Crash-safe in-place rewrite protocol shared by compaction and
-    tombstone purge (see :func:`maybe_compact` for the swap analysis):
-    ``rewrite(tmp_dir)`` must build a complete replacement index in the
-    sibling tmp dir and return its stats."""
-    import shutil
-
-    # a prior swap may have crashed in the one-rename gap (index_dir
-    # absent, both siblings intact) — repair FIRST: the rmtrees below
-    # would otherwise destroy the only surviving copies of the index
-    catalog.recover_compaction(index_dir)
-    base = index_dir.rstrip("/")
-    tmp, bak = base + ".compact_tmp", base + ".pre_compact"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(bak, ignore_errors=True)
-    # tombstone files present BEFORE the rewrite starts are definitely
-    # applied by it (the rewrite reads the dir strictly later); any file
-    # that appears during the rewrite must survive the swap or its doc
-    # silently resurrects
-    applied = set(catalog.list_delete_files(index_dir))
-    stats = rewrite(tmp)
-    # carry over anything that is not part of the index itself; a crash
-    # in this loop leaves index_dir healthy and recover_compaction moves
-    # these entries back out of the stale tmp
-    for name in os.listdir(index_dir):
-        if name not in catalog.CORE_ENTRIES:
-            os.rename(os.path.join(index_dir, name), os.path.join(tmp, name))
-    # carry tombstones written while the rewrite ran (a delete racing a
-    # compaction). Files in the pre-rewrite snapshot stay behind —
-    # purged. A carried file the rewrite DID already apply only re-masks
-    # absent ids (no-op) until the next compaction drops it.
-    for name in catalog.list_delete_files(index_dir):
-        if name not in applied:
-            os.makedirs(catalog.deletes_path(tmp), exist_ok=True)
-            os.rename(
-                os.path.join(catalog.deletes_path(index_dir), name),
-                os.path.join(catalog.deletes_path(tmp), name),
-            )
-    os.rename(index_dir, bak)  # atomic
-    os.rename(tmp, index_dir)  # atomic — the only gap a crash can hit
-    shutil.rmtree(bak, ignore_errors=True)
-    return stats
+    return compact_index(spark, index_dir, index_dir, cfg, num_partitions)
 
 
 def upsert_docs(
@@ -609,17 +453,17 @@ def upsert_docs(
     Semantics follow ES/Lucene exactly — an update IS delete +
     reindex (there is no in-place mutation of immutable segments):
 
-    1. ids that already exist (or already hold tombstones) are
-       tombstoned and physically purged by one in-place
-       :func:`purge_in_place` (slice-preserving expunge, crash-safe
-       directory swap), so the old versions can never mask or
-       double-score their replacements;
-    2. the whole batch is appended as one new segment (O(batch), the
+    1. ids that already exist, and pending tombstones, are purged: each
+       slice holding one is rewritten under a fresh key without it
+       (slice-preserving expunge, :func:`_rewrite_victims`), so the old
+       versions can never mask or double-score their replacements;
+    2. the whole batch is written as one new segment (O(batch), the
        streaming ingest path);
-    3. ``refresh_stats`` makes it visible with fresh n_docs/avgdl/df —
-       after which the index scores exactly like a fresh build over the
+    3. one commit publishes both with fresh n_docs/avgdl/df — after
+       which the index scores exactly like a fresh build over the
        updated corpus (that identity is the ``bm25_topk_upserted``
-       correctness gate).
+       correctness gate). A crash anywhere before the commit leaves
+       the index as it was; re-running the upsert completes it.
 
     Cost model (why this is batch-oriented, like ES bulk): at ~0.25 s a
     Spark job, the job count, not the data, sets an upsert's time:
@@ -630,60 +474,44 @@ def upsert_docs(
     * batch ids: 1 job (0 for a local relation), collected once and
       held on the driver at 8 B/id like the tombstone set; the row
       count and the duplicate check run there in numpy;
-    * collision probe: 1 map-only docstats job (:func:`_keys_of_ids`);
-    * purge, only when ids collide or tombstones are pending: 1 probe
-      for the victim slices plus ~2 jobs per victim slice — it decodes
-      ONLY the slices holding purged docs (the rest are hardlinked, the
-      rewrite is shuffle-free), so replacing docs from one ingest
-      segment rewrites that segment, not the index;
+    * collision probe: 1 map-only docstats job (:func:`_slices_of_ids`)
+      giving both the collided ids and the slices to rewrite;
+    * purge, only when ids collide or tombstones are pending: ~2 jobs
+      per victim slice — it decodes ONLY the slices holding purged docs
+      (the rest stay as they are, the rewrite is shuffle-free), so
+      replacing docs from one ingest segment rewrites that segment,
+      not the index;
     * segment write: 3 jobs, plus 1 when the batch has fewer
       partitions than the segment (a round-robin exchange);
       ``num_partitions=None`` derives the segment's width from the
       batch (:func:`adaptive_num_partitions`);
-    * :func:`refresh_stats`: 4 jobs.
+    * commit: the lexicon and the stats, 4 jobs.
 
     An insert-only batch costs 10-11 jobs, an empty one only the
-    tokenize of no rows, the purge and the refresh. Segment count grows
+    tokenize of no rows, the purge and the commit. Segment count grows
     by one per upsert batch; ``maybe_compact`` remains the merge
-    policy. Not transactional (neither is an ES bulk): a crash between
-    the purge and the append leaves collided ids
-    deleted-but-not-yet-reindexed; re-running the same upsert completes
-    it.
-
-    Reader contract (same as ``maybe_compact``): any purge swaps the
-    index directory, so a ``SearchEngine`` opened BEFORE the upsert
-    holds a stale file listing — re-``open`` (or ``refresh()``) it
-    afterwards; the ES analogue is that updates only become visible
-    through a refresh anyway. (:func:`update_by_query` materializes its
-    own update frame for exactly this reason.)
-
-    ``docs_df`` must not be derived from the index being upserted
-    (e.g. a frame over its postings or docstats): the batch is
-    tokenized while the purge swaps and removes the index directory,
-    so such a frame's reads race that swap. Materialize it first
-    (``localCheckpoint()``), as :func:`update_by_query` does.
+    policy. Engines opened before the upsert keep answering from their
+    snapshot; ``refresh()`` or a new ``open`` sees the upsert.
 
     Returns ``{"upserted": total rows, "replaced": ids that existed,
-    "stats": refreshed stats}``.
+    "stats": the commit record}``.
     """
     import numpy as np
 
     from ..operators.search import SearchEngine  # noqa: PLC0415 (lazy: avoid cycle)
 
-    catalog.recover_compaction(index_dir)
+    base = catalog.begin_write(index_dir)
 
     def tokenize_batch():
         # the tokenizer reads only the batch, never the index — it runs
         # concurrently with every index-side step, from the id collect
         # to the purge (guide §2.6); the segment write then reads the
-        # warm checkpoint. A crash after the purge with the tokenize
-        # failed is the same documented window as before (ids deleted,
-        # not yet reindexed; re-running the upsert completes it).
+        # warm checkpoint
         return tokenize_corpus(
             docs_df, cfg, id_col, text_col
         ).localCheckpoint()
 
-    def delete_and_purge():
+    def purge_collisions():
         ids = docs_df.select(F.col(id_col).cast("long")).toArrow().column(0)
         if ids.null_count:
             raise ValueError(f"null {id_col} within the upsert batch")
@@ -696,56 +524,47 @@ def upsert_docs(
                 "first"
             )
         eng = SearchEngine.open(spark, index_dir)
-        limit = eng.max_deleted_in_memory - eng.deleted_count
+        # purge BEFORE the re-ingest: a tombstone masks its doc_id in
+        # EVERY segment, including a newly appended replacement
+        names = catalog.list_delete_files(index_dir, base)
+        pending = catalog.read_deletes(index_dir, names)
+        probe = np.union1d(uniq, pending)
+        pairs = (
+            _slices_of_ids(spark, index_dir, base["slices"], probe)
+            if probe.size else None
+        )
         # docstats can hold several rows per doc_id (append-mode
-        # re-ingest): one tombstone per id, never per row
-        collided = np.sort(_keys_of_ids(
-            eng.docstats.select("doc_id"),
-            spark.sparkContext.broadcast(uniq), "doc_id",
-        ).to_numpy()) if ids.size else uniq
+        # re-ingest): one collision per id, never per row
+        collided = uniq[:0] if pairs is None else np.intersect1d(
+            pairs.column("doc_id").to_numpy(), uniq
+        )
+        limit = eng.max_deleted_in_memory - pending.size
         if collided.size > limit:
             raise ValueError(
                 f"upsert batch replaces more than {limit} existing docs; "
                 "split the batch (the purge's tombstone set is driver-held)"
             )
-        if collided.size:
-            eng.delete_docs(collided)
-        if catalog.read_deletes(index_dir).size:
-            # purge BEFORE the re-ingest: a tombstone masks its doc_id
-            # in EVERY segment, including a newly appended replacement.
-            # The purge carries the source lexicon AND stats.json
-            # instead of recomputing either — the final refresh below
-            # redoes both anyway (one full-postings pass + one docstats
-            # pass per upsert, not two); in the crash window between
-            # the two they are stale-high, exactly Lucene's pre-merge
-            # staleness, healed by re-running the upsert.
-            purge_in_place(spark, index_dir, cfg, rebuild_lexicon=False,
-                           refresh=False)
-        return int(ids.size), collided
+        slices = base["slices"]
+        if pairs is not None and pairs.num_rows:
+            slices = _rewrite_victims(
+                spark, index_dir, base,
+                set(pairs.column("slice").to_pylist()),
+                np.union1d(pending, collided),
+            )
+        return int(ids.size), collided, slices, names
 
     # a refused batch (null or duplicate ids, too many collisions)
-    # raises from delete_and_purge before any write; its exception
+    # raises from purge_collisions before any write; its exception
     # propagates once the tokenize job has finished
-    pre_tok, (n_rows, collided) = run_jobs_concurrently(
-        tokenize_batch, delete_and_purge
+    pre_tok, (n_rows, collided, slices, names) = run_jobs_concurrently(
+        tokenize_batch, purge_collisions
     )
-    # completion is marked by the slice MANIFEST (written last in
-    # _write_segment): an upsert_N slice without one is a crashed
-    # half-write — reuse its key so mode=overwrite replaces the orphan
-    # instead of double-indexing the batch next to it
-    taken = set(catalog.list_postings_slices(index_dir))
-    n = 0
-    while (
-        f"upsert_{n}" in taken
-        and catalog.manifest_exists(index_dir, f"upsert_{n}")  # type: ignore[arg-type]
-    ):
-        n += 1
-    if n_rows:  # an empty batch pays only the purge and the refresh
-        _write_segment(
-            docs_df, n, cfg, index_dir, id_col, text_col, num_partitions,
-            slice_key=f"upsert_{n}", pre_tokenized=pre_tok,
-        )
-    stats = refresh_stats(spark, index_dir, cfg)
+    if n_rows:  # an empty batch pays only the purge and the commit
+        slices = slices + [_write_segment(
+            docs_df, f"upsert_{catalog.next_version(base)}", cfg, index_dir,
+            id_col, text_col, num_partitions, pre_tokenized=pre_tok,
+        )]
+    stats = _commit(spark, index_dir, cfg, base, slices, purged=names)
     return {
         "upserted": n_rows,
         "replaced": int(collided.size),
@@ -798,9 +617,8 @@ def update_by_query(
         hits["doc_id"].alias(id_col),
         new_text.cast("string").alias(text_col),
     )
-    # materialize BEFORE the upsert: the frame's lineage reads the
-    # index's own posting files, which the purge's directory swap
-    # deletes — re-evaluating it afterwards would read vanished files
+    # materialize once: the emptiness check and the upsert's id collect
+    # and tokenize would each re-run the doc-set query otherwise
     updates = updates.localCheckpoint()
     if updates.isEmpty():
         return {"matched": 0, "upserted": 0, "replaced": 0,

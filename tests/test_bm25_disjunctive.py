@@ -2,7 +2,7 @@
 score-identical to the pure oracle, on the batch reads (which run the
 same exhaustive plan whatever ``prune`` says) and on single reads
 (``test_search_any_api``), across corpora with strong rare terms, weak
-common terms, one-posting blocks and no ``min_dl`` column."""
+common terms and one-posting blocks."""
 
 import re
 
@@ -175,7 +175,8 @@ def test_disjunctive_batch_prune_flag_changes_nothing(
     and runs exactly what ``prune=False`` does (the same formatted plan
     up to expression, exchange and RDD ids; the same number of Spark
     jobs), on the one-posting-block index where a block-level prune
-    would have the most blocks to drop."""
+    would have the most blocks to drop — and both flags share one
+    plan-cache entry."""
     eng, orc = narrow_setup
     # the distributed plan: small reads otherwise score on the driver
     monkeypatch.setattr(eng, "_DRIVER_MAX_POSTINGS", 0)
@@ -196,6 +197,11 @@ def test_disjunctive_batch_prune_flag_changes_nothing(
         frames[p] = bm25_topk_batch(eng, qmap, k=3, conjunctive=False,
                                     prune=p)
     assert plan(frames[True]) == plan(frames[False])
+    # unplanned twice: the second flag hits the first flag's entry
+    eng._batch_plan_cache.clear()
+    shared = [bm25_topk_batch(eng, qmap, k=3, conjunctive=False, prune=p)
+              for p in (True, False)]
+    assert len(eng._batch_plan_cache) == 1 and shared[0] is shared[1]
     # each frame runs once: a second run of a frame reuses its shuffle
     runs = {p: _jobs(eng.spark, frames[p].collect) for p in (True, False)}
     assert runs[True][0] == runs[False][0]
@@ -207,31 +213,3 @@ def test_disjunctive_batch_prune_flag_changes_nothing(
                  if r["query_id"] == q)
             )
             assert [d for _, d, _ in got] == [d for d, _ in want], (q, p)
-
-
-def test_pre_min_dl_index_still_exact(spark):
-    """Back-compat: an index whose postings/lexicon lack the min_dl
-    column (r1 layout) must still answer conjunctive AND disjunctive
-    queries exactly."""
-    docs = _corpus()
-    df = spark.createDataFrame(
-        list(docs.items()), "doc_id long, content string"
-    )
-    eng = SearchEngine.from_corpus(df, CFG, num_partitions=4, block_size=1)
-    eng.postings = eng.postings.drop("min_dl")
-    eng.lexicon = eng.lexicon.drop("min_dl")
-    eng._term_stats_cache.clear()
-    orc = OracleIndex(docs, CFG)
-    for query, k in [("zephyr data", 5), ("zephyr quixotic data", 5)]:
-        terms = list(qc.field_query(query, CFG).terms)
-        expected = orc.bm25_topk(terms, k=k, conjunctive=False)
-        got = _pruned_topk(eng, terms, k)
-        assert [d for d, _ in got] == [d for d, _ in expected], query
-        for (gd, gs), (_, es) in zip(got, expected):
-            assert gs == pytest.approx(es, rel=1e-9), (query, gd)
-        conj = [
-            (r["doc_id"], r["score"])
-            for r in eng.bm25_topk(terms, k=k).collect()
-        ]
-        exp_conj = orc.bm25_topk(terms, k=k, conjunctive=True)
-        assert [d for d, _ in conj] == [d for d, _ in exp_conj], query

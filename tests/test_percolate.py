@@ -229,3 +229,48 @@ def test_single_shuffle_plan(spark, perc):
     shuffles = re.findall(r"Exchange (hashpartitioning|rangepartitioning)",
                           plan)
     assert len(shuffles) == 1, plan
+
+
+@pytest.mark.parametrize("escaped_literals", ["false", "true"])
+def test_enumeration_literals_survive_quotes_backslashes_and_parser_mode(
+    spark, escaped_literals
+):
+    """Prefix, wildcard and range leaves reach the document-term match
+    as SQL text (``compile.leaf_sql``): literals holding a quote or a
+    backslash must select exactly the values they name, whatever
+    ``spark.sql.parser.escapedStringLiterals`` says."""
+    import fnmatch
+    import random
+
+    cfg = HashSplitterConfig(chunk_length=4, size=32, apply_input_cap=False)
+    rng = random.Random(11)
+    values = ["".join(rng.choice("ab'\\") for _ in range(32))
+              for _ in range(40)]
+    v = values[7]
+    pat = v[:3] + "?" + v[4:9] + "*"
+    hi = v[:10] + "b" * 22
+    cases = {
+        "prefix": (qc.prefix_query(v[:5], cfg),
+                   lambda x: x.startswith(v[:5])),
+        "wildcard": (qc.wildcard_query(pat, cfg),
+                     lambda x: fnmatch.fnmatchcase(x, pat)),
+        "range": (qc.range_filter(v, hi, True, True, cfg),
+                  lambda x: v <= x <= hi),
+    }
+    assert all("'" in s and "\\" in s for s in (v[:5], pat, hi))
+    p = Percolator(spark, cfg)
+    for name, (node, _) in cases.items():
+        p.register(name, node)
+    docs = spark.createDataFrame(list(enumerate(values)),
+                                 "doc_id long, text string")
+    want = {(d, name) for name, (_, pred) in cases.items()
+            for d, x in enumerate(values) if pred(x)}
+    assert {(7, name) for name in cases} <= want
+    prev = spark.conf.get("spark.sql.parser.escapedStringLiterals")
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped_literals)
+    try:
+        got = {(r.doc_id, r.query_name)
+               for r in p.percolate(docs, text_col="text").collect()}
+    finally:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", prev)
+    assert got == want

@@ -373,6 +373,7 @@ def test_open_without_lexicon_dir_aggregates_postings(spark, tmp_path):
     """An index directory with no ``lexicon/`` opens with no job and
     reads term stats from the postings' own aggregation
     (``build.lexicon_frame``): the same answers as with the lexicon."""
+    import os
     import shutil
 
     from elasticsearch_analysis_hashsplitter_spark.operators.build import (
@@ -389,7 +390,7 @@ def test_open_without_lexicon_dir_aggregates_postings(spark, tmp_path):
     )
     orc = OracleIndex(DOCS, CFG)
     with_lex = _rows(SearchEngine.open(spark, idx).search("spar join", k=6))
-    shutil.rmtree(catalog.lexicon_path(idx))
+    shutil.rmtree(os.path.join(idx, catalog.read_commit(idx)["lexicon"]))
     n, eng = _jobs(spark, lambda: SearchEngine.open(spark, idx))
     assert n == 0
     assert eng.lexicon.columns == catalog.LEXICON_SCHEMA.names

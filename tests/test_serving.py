@@ -406,9 +406,11 @@ def test_relayout_invalidates_sharded_plan_cache(spark):
 from elasticsearch_analysis_hashsplitter_spark.config import (  # noqa: E402
     HashSplitterConfig,
 )
+from elasticsearch_analysis_hashsplitter_spark.operators.build import (  # noqa: E402
+    refresh_stats,
+)
 from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (  # noqa: E402
     maybe_compact,
-    refresh_stats,
     stream_index,
 )
 
@@ -510,13 +512,14 @@ def test_refresh_after_compaction_rebuilds_layout(spark, tmp_path):
     old = SearchEngine.open(spark, idx)
     old.enable_serving_layout(3)
     _ingest(spark, tmp_path, S_BATCH2, 1)
-    assert maybe_compact(spark, idx, SCFG, max_slices=1) is not None
+    compacted = maybe_compact(spark, idx, SCFG, max_slices=1)
+    assert compacted is not None
 
     new = old.refresh()
     assert old.sharded is None
     assert len(new._layout_pieces) == 1  # full rebuild, not carry-forward
     assert new._layout_shards == 3
-    assert new._layout_slices == {"compacted"}
+    assert new._layout_slices == set(compacted["slices"])
 
     full = SearchEngine.open(spark, idx)
     got = _sharded_answers(new, S_QUERIES)

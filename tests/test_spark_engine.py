@@ -220,7 +220,7 @@ def test_build_open_resume_and_sha(spark, tmp_path):
     # integrity invariant: 100% of rows
     assert verify_content_sha256(docs, spark, idx_dir) == 0
 
-    # resume: a second run skips all slices (manifests exist)
+    # resume: a second run skips all slices (the commit holds them)
     stats2 = build_index(
         docs, TOKEN_CFG, idx_dir, num_partitions=4, n_slices=3
     )
@@ -228,26 +228,45 @@ def test_build_open_resume_and_sha(spark, tmp_path):
     assert stats2["n_docs"] == len(SMALL_CORPUS)
 
 
-def test_resume_after_partial_failure(spark, tmp_path):
-    """A crashed slice (missing manifest) — and only it — is rebuilt on
-    rerun; query results equal a clean one-shot build."""
+def test_resume_after_partial_failure(spark, tmp_path, monkeypatch):
+    """A build that crashes while writing its last slice: the index
+    does not open (finished slices are committed only as pending). The
+    rerun deletes the half-written slice, builds only it, and answers
+    like a clean one-shot build, with no directory outside the commit
+    left behind."""
     import os
-    import shutil
 
+    from elasticsearch_analysis_hashsplitter_spark.operators import build
     from elasticsearch_analysis_hashsplitter_spark.sources import catalog
 
     idx_dir = str(tmp_path / "idx_partial")
     docs = _corpus_df(spark, SMALL_CORPUS)
-    build_index(docs, TOKEN_CFG, idx_dir, num_partitions=4, n_slices=3)
+    real = build.run_jobs_concurrently
+    calls = []
 
-    # simulate a mid-build crash of slice 1: manifest + data gone
-    os.remove(catalog.manifest_file(idx_dir, 1))
-    shutil.rmtree(catalog.postings_path(idx_dir, 1))
-    shutil.rmtree(catalog.docstats_path(idx_dir) + "/slice=1")
+    def crash(*thunks):
+        calls.append(1)
+        if len(calls) == 3:  # slice 2: one sink lands, then the crash
+            thunks[0]()
+            raise RuntimeError("crash in slice 2")
+        return real(*thunks)
+
+    with monkeypatch.context() as m:
+        m.setattr(build, "run_jobs_concurrently", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            build_index(docs, TOKEN_CFG, idx_dir, num_partitions=4,
+                        n_slices=3)
+    assert os.path.isdir(catalog.postings_path(idx_dir, 2))
+    assert catalog.read_stats(idx_dir)["pending"] == ["0", "1"]
+    with pytest.raises(FileNotFoundError):
+        SearchEngine.open(spark, idx_dir)
 
     stats = build_index(docs, TOKEN_CFG, idx_dir, num_partitions=4, n_slices=3)
     assert stats["built_slices"] == 1  # only the crashed slice
     assert stats["n_docs"] == len(SMALL_CORPUS)
+    assert sorted(os.listdir(catalog.postings_path(idx_dir))) == [
+        "slice=0", "slice=1", "slice=2_v3",
+    ]
 
     eng = SearchEngine.open(spark, idx_dir)
     oracle = OracleIndex(dict(enumerate(SMALL_CORPUS)), TOKEN_CFG)

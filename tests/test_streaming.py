@@ -10,9 +10,11 @@ from elasticsearch_analysis_hashsplitter_spark.config import HashSplitterConfig
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
 )
+from elasticsearch_analysis_hashsplitter_spark.operators.build import (
+    refresh_stats,
+)
 from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
     compact_index,
-    refresh_stats,
     stream_index,
 )
 
@@ -80,24 +82,16 @@ def test_stream_segments_match_batch(spark, tmp_path):
     ]
     assert stream_top == batch_top
 
-    # compaction preserves everything — under BOTH file layouts (the
-    # default hash spread and the term-range layout; the 1M A/B in
-    # BENCH.md picks the default, this pins that neither changes
-    # answers) and an unknown layout is refused
-    for layout in ("hash", "range"):
-        cidx = str(tmp_path / f"cidx_{layout}")
-        compact_index(spark, idx, cidx, CFG, num_partitions=2, layout=layout)
-        ceng = SearchEngine.open(spark, cidx)
-        assert ceng.stats["n_docs"] == 5
-        comp_top = [
-            (r.doc_id, round(r.score, 9))
-            for r in ceng.search("spark", 5).collect()
-        ]
-        assert comp_top == stream_top
-    with pytest.raises(ValueError, match="layout"):
-        compact_index(
-            spark, idx, str(tmp_path / "cx"), CFG, layout="zigzag"
-        )
+    # compaction preserves everything
+    cidx = str(tmp_path / "cidx")
+    compact_index(spark, idx, cidx, CFG, num_partitions=2)
+    ceng = SearchEngine.open(spark, cidx)
+    assert ceng.stats["n_docs"] == 5
+    comp_top = [
+        (r.doc_id, round(r.score, 9))
+        for r in ceng.search("spark", 5).collect()
+    ]
+    assert comp_top == stream_top
 
 
 def test_stream_skip_existing_dedups_reingest(spark, tmp_path):
@@ -184,7 +178,9 @@ def test_maybe_compact_policy(spark, tmp_path):
     assert maybe_compact(spark, idx, CFG, max_slices=8) is None  # below cap
     stats = maybe_compact(spark, idx, CFG, max_slices=4)
     assert stats is not None
-    assert catalog.list_postings_slices(idx) == ["compacted"]
+    assert catalog.list_postings_slices(idx) == [
+        f"compacted_v{stats['version']}"
+    ]
 
     eng2 = SearchEngine.open(spark, idx)
     assert sorted(r.doc_id for r in eng2.term("spark").collect()) == before
@@ -198,18 +194,18 @@ def test_maybe_compact_policy(spark, tmp_path):
     assert maybe_compact(spark, idx, CFG, max_slices=4) is None
 
 
-def test_compaction_crash_recovery(spark, tmp_path):
-    """Every crash state the whole-dir swap can leave must self-repair:
-    (a) gap state — index dir absent, .pre_compact + .compact_tmp intact
-    -> recovery completes the compaction from tmp; (b) pre-swap crash —
-    healthy index + stale siblings -> cleanup, non-core entries return;
-    (c) only .pre_compact left -> restore the original."""
-    import shutil
-
+def test_compaction_crash_recovery(spark, tmp_path, monkeypatch):
+    """A compaction that crashes after writing its slice, before the
+    commit, leaves the index answering as before; the next writer
+    deletes the orphan slice, and re-running the compaction completes
+    it. Entries the index does not own survive both."""
     from elasticsearch_analysis_hashsplitter_spark.operators.build import (
         build_index,
     )
     from elasticsearch_analysis_hashsplitter_spark.sources import catalog
+    from elasticsearch_analysis_hashsplitter_spark.streaming import (
+        incremental,
+    )
 
     idx = str(tmp_path / "idx_r")
     docs = spark.createDataFrame(
@@ -217,34 +213,35 @@ def test_compaction_crash_recovery(spark, tmp_path):
         "doc_id long, content string",
     )
     build_index(docs, CFG, idx, n_slices=2, num_partitions=2)
+    (tmp_path / "idx_r" / "marker.txt").write_text("x")
     want = sorted(
         r.doc_id for r in SearchEngine.open(spark, idx).term("spark").collect()
     )
-    bak, tmp = idx + ".pre_compact", idx + ".compact_tmp"
 
-    # (a) gap state: both siblings intact, index dir gone
-    shutil.copytree(idx, tmp)
-    (tmp_path / "idx_r.compact_tmp" / "marker.txt").write_text("x")
-    os.rename(idx, bak)
-    eng = SearchEngine.open(spark, idx)  # open() runs recovery
-    assert sorted(r.doc_id for r in eng.term("spark").collect()) == want
-    assert os.path.exists(os.path.join(idx, "marker.txt"))  # tmp preferred
-    assert not os.path.exists(bak) and not os.path.exists(tmp)
+    def crash(*a, **kw):
+        raise RuntimeError("crash before the commit")
 
-    # (b) healthy index + stale tmp holding a moved-out non-core entry
-    shutil.copytree(idx, tmp)
-    os.rename(os.path.join(idx, "marker.txt"), os.path.join(tmp, "marker2.txt"))
-    assert catalog.recover_compaction(idx) is False
-    assert os.path.exists(os.path.join(idx, "marker2.txt"))
-    assert not os.path.exists(tmp)
-
-    # (c) only .pre_compact
-    os.rename(idx, bak)
-    assert catalog.recover_compaction(idx) is True
+    key = f"compacted_v{catalog.read_stats(idx)['version'] + 1}"
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "_commit", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            incremental.maybe_compact(spark, idx, CFG, max_slices=1,
+                                      num_partitions=2)
+    assert os.path.isdir(catalog.postings_path(idx, key))
+    assert catalog.list_postings_slices(idx) == ["0", "1"]
     assert sorted(
-        r.doc_id
-        for r in SearchEngine.open(spark, idx).term("spark").collect()
+        r.doc_id for r in SearchEngine.open(spark, idx).term("spark").collect()
     ) == want
+
+    assert incremental.maybe_compact(spark, idx, CFG, max_slices=1,
+                                     num_partitions=2) is not None
+    assert catalog.list_postings_slices(idx) == [key]
+    assert sorted(
+        r.doc_id for r in SearchEngine.open(spark, idx).term("spark").collect()
+    ) == want
+    assert os.path.exists(os.path.join(idx, "marker.txt"))
+    # the commit is written under a temp name and renamed in
+    assert not os.path.exists(catalog.stats_file(idx) + ".tmp")
 
 
 def test_write_segment_evaluates_source_once(spark, tmp_path):
@@ -254,7 +251,7 @@ def test_write_segment_evaluates_source_once(spark, tmp_path):
     the source must be read exactly once: an accumulator counting source
     rows ends at n_rows, not 2-3x n_rows."""
     from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
-        _write_segment,
+        _append_segment,
     )
 
     rows = [(i, f"spark join doc{i}") for i in range(30)]
@@ -269,7 +266,7 @@ def test_write_segment_evaluates_source_once(spark, tmp_path):
         rows, "doc_id long, content string"
     ).mapInPandas(count_rows, schema="doc_id long, content string")
     idx = str(tmp_path / "idx_once")
-    _write_segment(src, 0, CFG, idx, "doc_id", "content", 2)
+    _append_segment(src, 0, CFG, idx, num_partitions=2)
     assert acc.value == len(rows), (
         f"source evaluated {acc.value / len(rows):.1f}x"
     )
@@ -277,52 +274,6 @@ def test_write_segment_evaluates_source_once(spark, tmp_path):
     eng = SearchEngine.open(spark, idx)
     assert eng.stats["n_docs"] == len(rows)
     assert eng.term("spark").count() == len(rows)
-
-
-def test_concurrent_readers_recover_compaction(spark, tmp_path):
-    """Two readers hitting the one-rename compaction gap simultaneously
-    (r3 advisor): both run recover_compaction; the rename loser must
-    treat 'someone else recovered' as success instead of surfacing an
-    OSError, and the repaired index must be intact. Also: a truncated
-    stats.json (crash mid-write with the old non-atomic writer) must not
-    mark a dir healthy — write_stats is now temp+rename atomic."""
-    import concurrent.futures as cf
-    import shutil
-
-    from elasticsearch_analysis_hashsplitter_spark.operators.build import (
-        build_index,
-    )
-    from elasticsearch_analysis_hashsplitter_spark.sources import catalog
-
-    idx = str(tmp_path / "idx_cc")
-    docs = spark.createDataFrame(
-        [(i, f"spark join doc{i}") for i in range(10)],
-        "doc_id long, content string",
-    )
-    build_index(docs, CFG, idx, n_slices=1, num_partitions=2)
-    want = sorted(
-        r.doc_id for r in SearchEngine.open(spark, idx).term("spark").collect()
-    )
-
-    # gap state: index dir absent, both siblings intact
-    shutil.copytree(idx, idx + ".compact_tmp")
-    os.rename(idx, idx + ".pre_compact")
-    with cf.ThreadPoolExecutor(max_workers=4) as ex:
-        results = list(
-            ex.map(lambda _: catalog.recover_compaction(idx), range(4))
-        )
-    assert any(results)  # at least one reader observed the restore
-    assert os.path.exists(catalog.stats_file(idx))
-    assert not os.path.exists(idx + ".pre_compact")
-    assert not os.path.exists(idx + ".compact_tmp")
-    assert sorted(
-        r.doc_id for r in SearchEngine.open(spark, idx).term("spark").collect()
-    ) == want
-
-    # atomic stats write: no .tmp litter, file parses
-    catalog.write_stats(idx, catalog.read_stats(idx))
-    assert not os.path.exists(catalog.stats_file(idx) + ".tmp")
-    assert catalog.read_stats(idx)["n_docs"] == 10
 
 
 def test_skip_existing_within_batch_duplicate_is_consistent(spark, tmp_path):

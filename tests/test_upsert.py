@@ -118,17 +118,19 @@ def test_pure_insert_skips_the_merge(spark, tmp_path):
     )
     assert res["replaced"] == 0
     after = set(catalog.list_postings_slices(idx))
-    assert after == before | {"upsert_0"}  # no compaction rewrite
+    # no compaction rewrite: one segment named by the upsert's commit
+    assert after == before | {f"upsert_{res['stats']['version']}"}
     assert 300 in _ids(SearchEngine.open(spark, idx).term("join pure"))
 
 
 def test_collision_purges_in_segment_layout(spark, tmp_path):
     """A replacement upsert purges the old version WITHOUT merging
-    segments (purge_index, not compact_index): the build slice keeps
-    its key, the batch appends its own segment."""
+    segments (the purge, not compact_index): the build slice is
+    rewritten under a fresh key (the upsert is commit 2), the batch
+    appends its own segment."""
     idx = _build(spark, str(tmp_path / "idx"))
     upsert_docs(spark, idx, _df(spark, [(0, "join newz")]), CFG)
-    assert set(catalog.list_postings_slices(idx)) == {"0", "upsert_0"}
+    assert set(catalog.list_postings_slices(idx)) == {"0_v2", "upsert_2"}
     eng = SearchEngine.open(spark, idx)
     assert _ids(eng.term("newz")) == [0]
     assert 0 not in _ids(eng.term("scan"))  # old postings really purged
@@ -161,19 +163,19 @@ def test_second_upsert_gets_fresh_slice_name(spark, tmp_path):
     upsert_docs(spark, idx, _df(spark, [(400, "aaaa")]), CFG)
     upsert_docs(spark, idx, _df(spark, [(401, "bbbb")]), CFG)
     slices = set(catalog.list_postings_slices(idx))
-    assert {"upsert_0", "upsert_1"} <= slices
+    assert {"upsert_2", "upsert_3"} <= slices
     eng = SearchEngine.open(spark, idx)
     assert _ids(eng.term("aaaa")) == [400]
     assert _ids(eng.term("bbbb")) == [401]
 
 
-# --- slice-preserving purge (purge_index / purge_in_place) -----------
+# --- slice-preserving purge (purge_index) -----------------------------
 
 import os
 
 from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
     compact_index,
-    purge_in_place,
+    purge_index,
 )
 
 
@@ -199,9 +201,8 @@ def _build4(spark, path):
 
 def test_purge_rewrites_only_victim_slices(spark, tmp_path):
     """Tombstones confined to one build slice: that slice is decoded
-    and rewritten, every other slice's files are HARDLINKED through the
-    swap byte-identically (same inode — the strongest no-rewrite
-    proof)."""
+    and rewritten under a fresh key, every other slice stays live as
+    it is (same inodes — the strongest no-rewrite proof)."""
     idx = _build4(spark, str(tmp_path / "idx"))
     by_slice = {
         k: [
@@ -220,15 +221,15 @@ def test_purge_rewrites_only_victim_slices(spark, tmp_path):
     }
     eng = SearchEngine.open(spark, idx)
     eng.delete_docs(victims)
-    purge_in_place(spark, idx, CFG)
+    version = purge_index(spark, idx, CFG)["version"]
+    live = catalog.list_postings_slices(idx)
+    assert sorted(set(live) - set(by_slice)) == [f"{victim_slice}_v{version}"]
+    assert victim_slice not in live
     for k in by_slice:
-        after = _inodes(f"{idx}/postings/slice={k}")
-        if k == victim_slice:
-            assert set(after.values()).isdisjoint(
-                set(before[k].values())
-            ), "victim slice must be rewritten"
-        else:
-            assert after == before[k], f"slice {k} must be hardlinked"
+        if k != victim_slice:
+            assert _inodes(f"{idx}/postings/slice={k}") == before[k], (
+                f"slice {k} must not be rewritten"
+            )
     eng2 = SearchEngine.open(spark, idx)
     assert eng2.deleted_count == 0
     assert eng2.stats["n_docs"] == len(DOCS) - len(victims)
@@ -237,7 +238,7 @@ def test_purge_rewrites_only_victim_slices(spark, tmp_path):
 
 
 def test_purge_matches_compact_purge_scoring(spark, tmp_path):
-    """purge_in_place (slice-preserving) and compact_index (merge +
+    """purge_index (slice-preserving) and compact_index (merge +
     purge) are two physical layouts of the same live corpus: identical
     docs, scores to 1e-9, identical stats."""
     a = _build4(spark, str(tmp_path / "a"))
@@ -245,7 +246,7 @@ def test_purge_matches_compact_purge_scoring(spark, tmp_path):
     victims = [3, 8, 15]
     for p in (a, b):
         SearchEngine.open(spark, p).delete_docs(victims)
-    purge_in_place(spark, a, CFG)
+    purge_index(spark, a, CFG)
     b2 = str(tmp_path / "b2")
     compact_index(spark, b, b2, CFG)
     ea, eb = SearchEngine.open(spark, a), SearchEngine.open(spark, b2)
@@ -281,7 +282,7 @@ def test_purge_survives_fully_deleted_slice(spark, tmp_path):
     victims = by_slice[victim_slice]
     eng = SearchEngine.open(spark, idx)
     eng.delete_docs(victims)
-    purge_in_place(spark, idx, CFG)
+    purge_index(spark, idx, CFG)
     eng2 = SearchEngine.open(spark, idx)
     assert eng2.stats["n_docs"] == len(DOCS) - len(victims)
     assert set(_ids(eng2.term("join"))).isdisjoint(set(victims))
@@ -339,42 +340,37 @@ def test_update_by_query_zero_matches_is_a_noop(spark, tmp_path):
 
 # --- review-pass regressions (crash windows, duplicate docstats) ------
 
-import shutil
 
+def test_upsert_retry_overwrites_orphan_half_segment(spark, tmp_path,
+                                                     monkeypatch):
+    """Crash after the segment's writes, before the commit, then the
+    documented 're-run the same upsert' retry: the crash left the
+    index as it was, and the retry sweeps the orphan and writes the
+    same slice key (named by the commit version, which the crash did
+    not move) instead of double-indexing the batch into a sibling
+    segment."""
+    from elasticsearch_analysis_hashsplitter_spark.streaming import (
+        incremental,
+    )
 
-def test_purge_in_place_recovers_crashed_swap_first(spark, tmp_path):
-    """A prior in-place rewrite crashed in the one-rename gap (index
-    dir absent, both siblings on disk). purge_in_place must run
-    recovery BEFORE its sibling cleanup — the cleanup used to rmtree
-    the only surviving copies of the index."""
-    idx = _build4(spark, str(tmp_path / "idx"))
-    SearchEngine.open(spark, idx).delete_docs([3])
-    os.rename(idx, idx + ".pre_compact")  # the crash window state
-    os.makedirs(os.path.join(idx + ".compact_tmp", "junk"))
-    purge_in_place(spark, idx, CFG)
-    eng = SearchEngine.open(spark, idx)
-    assert eng.stats["n_docs"] == len(DOCS) - 1
-    assert 3 not in _ids(eng.term("join"))
-    assert eng.deleted_count == 0
-
-
-def test_upsert_retry_overwrites_orphan_half_segment(spark, tmp_path):
-    """Crash between the segment's postings write and its docstats/
-    manifest writes, then the documented 're-run the same upsert'
-    retry: completion is keyed on the MANIFEST, so the retry reuses
-    the orphan's slice key (mode=overwrite) instead of double-indexing
-    the batch into a sibling segment."""
     idx = _build(spark, str(tmp_path / "idx"))
     batch = _df(spark, [(0, "join newz"), (500, "newz insert")])
-    upsert_docs(spark, idx, batch, CFG)
-    # rewind to the crash window: postings exist, docstats + manifest
-    # of the batch segment do not
-    os.remove(catalog.manifest_file(idx, "upsert_0"))
-    shutil.rmtree(os.path.join(idx, "docstats", "slice=upsert_0"))
+    real = incremental._write_segment
+
+    def crash(*a, **kw):
+        real(*a, **kw)
+        raise RuntimeError("crash after the segment write")
+
+    monkeypatch.setattr(incremental, "_write_segment", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        upsert_docs(spark, idx, batch, CFG)
+    monkeypatch.undo()
+    assert os.path.isdir(catalog.postings_path(idx, "upsert_2"))
+    assert catalog.list_postings_slices(idx) == ["0"]
     res = upsert_docs(spark, idx, batch, CFG)
     assert res["upserted"] == 2
-    # the orphan key was reused — no upsert_1 stacked next to it
-    assert set(catalog.list_postings_slices(idx)) == {"0", "upsert_0"}
+    # the orphan key was reused — no second segment stacked next to it
+    assert set(catalog.list_postings_slices(idx)) == {"0_v2", "upsert_2"}
     eng = SearchEngine.open(spark, idx)
     assert _ids(eng.term("newz")) == [0, 500]
     assert eng.stats["n_docs"] == len(DOCS) + 1
@@ -397,14 +393,16 @@ def test_upsert_counts_duplicate_docstats_rows_once(spark, tmp_path):
     doc_id (the documented double-count state); the collision probe
     must count the ID once — and the purge then removes every stored
     version."""
-    from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
-        _write_segment,
+    from elasticsearch_analysis_hashsplitter_spark.operators.build import (
         refresh_stats,
+    )
+    from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
+        _append_segment,
     )
 
     idx = _build(spark, str(tmp_path / "idx"))
-    _write_segment(_df(spark, [(1, "join dupe")]), 99, CFG, idx,
-                   "doc_id", "content", 2)
+    _append_segment(_df(spark, [(1, "join dupe")]), 99, CFG, idx,
+                    num_partitions=2)
     refresh_stats(spark, idx, CFG)
     assert SearchEngine.open(spark, idx).stats["n_docs"] == len(DOCS) + 1
     res = upsert_docs(spark, idx, _df(spark, [(1, "upda ted")]), CFG)

@@ -7,27 +7,21 @@ upsert overlaps jobs from pool threads)."""
 
 import os
 
-import pyarrow.parquet as pq
 import pytest
 
 from elasticsearch_analysis_hashsplitter_spark.config import HashSplitterConfig
 from elasticsearch_analysis_hashsplitter_spark.operators.build import (
     build_index,
     docstats_summary,
-    refresh_stats,
     run_jobs_pool,
 )
 from elasticsearch_analysis_hashsplitter_spark.operators.search import (
     SearchEngine,
-    bm25_topk_batch,
 )
-from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
 from elasticsearch_analysis_hashsplitter_spark.sources import catalog
 from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
     upsert_docs,
 )
-
-from .oracle import OracleIndex
 
 CFG = HashSplitterConfig(
     chunk_length=4, token_mode="tokens", apply_input_cap=False
@@ -159,7 +153,8 @@ def test_empty_batch_purges_pending_tombstones(spark, tmp_path):
     eng = SearchEngine.open(spark, idx)
     assert eng.stats["n_docs"] == len(DOCS) - 2
     # no segment for an empty batch
-    assert "upsert_0" not in catalog.list_postings_slices(idx)
+    assert not any(k.startswith("upsert_")
+                   for k in catalog.list_postings_slices(idx))
 
 
 def test_duplicate_or_null_id_refused(spark, tmp_path):
@@ -217,7 +212,7 @@ def test_collisions_past_limit_refused(spark, tmp_path, monkeypatch):
 def _leave_crashed_attempt(index_dir: str, key: str) -> None:
     """What a segment write killed mid-task leaves: a truncated part
     file (no footer) under the committer's hidden ``_temporary``
-    attempt directory of ``slice=<key>``, and no manifest."""
+    attempt directory of ``slice=<key>``, and no commit."""
     src = catalog.postings_path(index_dir, "0")
     part = next(f for f in sorted(os.listdir(src)) if f.endswith(".parquet"))
     with open(os.path.join(src, part), "rb") as fh:
@@ -235,9 +230,8 @@ def test_open_and_upsert_survive_crashed_segment_write(spark, tmp_path):
     """A crashed (or in-flight) segment write must not break ``open``,
     and re-running the upsert reuses the orphan key and completes."""
     idx = _build(spark, str(tmp_path / "idx"))
-    _leave_crashed_attempt(idx, "upsert_0")
+    _leave_crashed_attempt(idx, "upsert_2")
     eng = SearchEngine.open(spark, idx)
-    assert "min_dl" in eng.postings.columns
     assert eng.term("zephyr").count() == sum(
         "zephyr" in t.split() for t in DOCS.values()
     )
@@ -247,69 +241,15 @@ def test_open_and_upsert_survive_crashed_segment_write(spark, tmp_path):
     )
     assert res["replaced"] == 1 and res["upserted"] == 2
     assert res["stats"]["n_docs"] == len(DOCS)  # 3 purged, 900 added
-    assert catalog.manifest_exists(idx, "upsert_0")
-    assert catalog.list_postings_slices(idx) == ["0", "upsert_0"]
+    assert catalog.list_postings_slices(idx) == ["0_v2", "upsert_2"]
     assert not os.path.exists(
-        os.path.join(catalog.postings_path(idx, "upsert_0"), "_temporary")
+        os.path.join(catalog.postings_path(idx, "upsert_2"), "_temporary")
     )
     eng = SearchEngine.open(spark, idx)
     assert sorted(r["doc_id"] for r in eng.term("zephyr").collect()) == sorted(
         [i for i, t in DOCS.items() if "zephyr" in t.split() and i != 3]
         + [7, 900]
     )
-
-
-def _drop_min_dl(postings_dir: str) -> None:
-    """Rewrite every postings file without ``min_dl`` — the layout of
-    indexes built before the column existed (the stale Hadoop ``.crc``
-    sidecars go too)."""
-    for root, _dirs, files in os.walk(postings_dir):
-        for f in files:
-            p = os.path.join(root, f)
-            if f.endswith(".crc"):
-                os.remove(p)
-            elif f.endswith(".parquet"):
-                pq.write_table(pq.read_table(p).drop(["min_dl"]), p)
-
-
-def test_pre_min_dl_index_reads_without_null_bounds(spark, tmp_path):
-    """A pinned schema must not turn a missing ``min_dl`` into nulls
-    in a column it declares non-null. Mixed layouts (an old slice plus
-    a new upsert segment) leave the column out too, and every scored
-    read still matches the oracle."""
-    # doc 300 enters the top-k only through its legacy "zephyr" block
-    legacy = {**DOCS, 300: "zephyr"}
-    idx = _build(spark, str(tmp_path / "idx"), legacy)
-    _drop_min_dl(catalog.postings_path(idx))
-    refresh_stats(spark, idx, CFG)
-    upsert_docs(spark, idx, _df(spark, {500: "data code"}), CFG)
-    assert "min_dl" in pq.read_schema(
-        next(
-            os.path.join(catalog.postings_path(idx, "upsert_0"), f)
-            for f in os.listdir(catalog.postings_path(idx, "upsert_0"))
-            if f.endswith(".parquet")
-        )
-    ).names
-    eng = SearchEngine.open(spark, idx)
-    assert "min_dl" not in eng.postings.columns
-    assert "min_dl" not in eng.lexicon.columns
-    assert "slice" in eng.postings.columns
-    orc = OracleIndex({**legacy, 500: "data code"}, CFG)
-    for query, k in (("zephyr quixo", 3), ("zephyr data", 5), ("zephyr", 3)):
-        terms = list(qc.field_query(query, CFG, scored=True).terms)
-        batch = bm25_topk_batch(
-            eng, {"q": terms}, k=k, conjunctive=False
-        ).orderBy("rank")
-        for conj, got in (
-            (False, batch),
-            (False, eng.search_any(query, k=k)),
-            (True, eng.search(query, k=k)),
-        ):
-            want = orc.bm25_topk(terms, k=k, conjunctive=conj)
-            rows = [(r["doc_id"], r["score"]) for r in got.collect()]
-            assert [d for d, _ in rows] == [d for d, _ in want], query
-            for (_, gs), (_, ws) in zip(rows, want):
-                assert gs == pytest.approx(ws, rel=1e-9), query
 
 
 def test_pool_workers_inherit_local_properties(spark):

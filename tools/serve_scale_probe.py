@@ -88,8 +88,10 @@ def main():
         bm25_topk_batch_collect,
     )
     from elasticsearch_analysis_hashsplitter_spark.plans import compile as qc
-    from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
+    from elasticsearch_analysis_hashsplitter_spark.operators.build import (
         refresh_stats,
+    )
+    from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
         stream_index,
     )
 

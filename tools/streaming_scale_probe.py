@@ -93,9 +93,11 @@ def main():
         SearchEngine,
     )
     from elasticsearch_analysis_hashsplitter_spark.sources import catalog
+    from elasticsearch_analysis_hashsplitter_spark.operators.build import (
+        refresh_stats,
+    )
     from elasticsearch_analysis_hashsplitter_spark.streaming.incremental import (
         maybe_compact,
-        refresh_stats,
         stream_index,
     )
 
@@ -118,7 +120,7 @@ def main():
         # ---- 1. wave-by-wave ingest ---------------------------------
         # Each wave: land parquet (untimed — that's the upstream
         # producer), then drain with availableNow (timed — tokenize +
-        # segment write + manifest). One stream_index call per wave so
+        # segment write + commit). One stream_index call per wave so
         # the timed region is exactly the ingest work for that wave.
         waves = []
         for w in range(args.waves):

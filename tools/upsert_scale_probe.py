@@ -136,7 +136,7 @@ def main():
 
         # 2a. TARGETED replacements: same batch size, but every victim
         # sits in ONE build slice — the purge must decode only that
-        # slice and hardlink the rest (inode-verified), the workload
+        # slice and leave the rest untouched (inode-verified), the workload
         # shape of "re-ingest yesterday's crawl"
         def slice_inodes(k):
             return dir_inodes(os.path.join(idx, "postings", f"slice={k}"))
